@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.corpus.Corpus
-import graft.pipeline.Extraction
+import graft.pipeline.{Extraction, TableIO}
 import graft.plans.ExtractDocs
 
 /** Dumps the executed physical plans of the headline queries (the concrete
@@ -59,6 +59,14 @@ object PlanDump {
       "Single embarrassingly parallel stage: Scan → ColumnarToRow → " +
       "ExtractDocs. No exchange anywhere — assembly happens inside the node.",
       ExtractDocs.over(spark, corpus))
+
+    dump("Commit data plan (TableIO.extractForCommit)",
+      "What `TableIO.commitDocs`/`upsertDocs` write: Scan → ExtractDocs at " +
+      "input-split parallelism, then ONE `REBALANCE_PARTITIONS_BY_NONE` " +
+      "exchange so AQE sizes the output files. No page shuffle, no " +
+      "aggregate: the per-task lineage is counted inside the node.",
+      TableIO.extractForCommit(Extraction.readInput(spark, corpus),
+        spark.sparkContext.collectionAccumulator[graft.plans.TaskLineage]("plan-dump")))
 
     dump("Page fan-out + salted assembly (Extraction.run)",
       "The expensive-parse topology: hash exchange spreads pages, the salted " +

@@ -258,9 +258,12 @@ object DocParser {
     Extracted(docId, spans.toSeq, md, html, conf)
   }
 
+  /** Split + per-page parse, before assembly. */
+  def parsePages(spans: Seq[InSpan]): Seq[PageResult] =
+    splitPages(spans).map { case (n, s) => PageParser.parse(n, s) }
+
   /** Full sequential parse of one document. */
-  def parseDoc(doc: Doc): Extracted =
-    assemble(doc.doc_id, splitPages(doc.spans).map { case (n, s) => PageParser.parse(n, s) })
+  def parseDoc(doc: Doc): Extracted = assemble(doc.doc_id, parsePages(doc.spans))
 
   /** Page-range sequential parse (pdf_processor.iter_pages(start, end)
     * analog) — the oracle counterpart of the pipeline's pageRange filter.

@@ -4,7 +4,6 @@ import graft.model._
 import graft.parse.{PageParser, DocParser}
 import org.apache.spark.sql.{SparkSession, DataFrame, Dataset, Column}
 import org.apache.spark.sql.functions._
-import org.apache.spark.TaskContext
 
 /** One parsed page row flowing between the parse and assembly stages. */
 final case class PageRes(
@@ -14,17 +13,15 @@ final case class PageRes(
     md: String,
     html: String,
     failed: Boolean,
-    conf_pm: Int,          // page avg confidence, per-mille (ocr_engine.py:690–695)
-    part_id: Int,
-    wall_ms: Long)
+    conf_pm: Int)          // page avg confidence, per-mille (ocr_engine.py:690–695)
 
-/** The distributed extraction pipeline (SURVEY.md §3.1 Spark restatement):
+/** The page fan-out extraction pipeline (SURVEY.md §3.1 Spark restatement):
   *
-  *   read snapshot → repartitionByRange(doc_id) → flatMap to pages →
-  *   repartitionByRange(doc_id, page_no)   (mega-doc pages fan out — the
+  *   read snapshot → flatMap to pages →
+  *   repartition(doc_id, page_no)          (mega-doc pages fan out — the
   *   reference's own Electron client chunks 5000-page docs the same way,
   *   parallelProcessor.js:131–260) →
-  *   mapPartitions(parse)                  (pooled parser: the regex tables in
+  *   map(parse)                            (pooled parser: the regex tables in
   *   graft.parse.Typo are compiled once per JVM, the analog of the reference's
   *   per-worker singleton model init, tasks.py:59–87) →
   *   salted two-phase assembly             (partial sort_array/collect_list per
@@ -34,6 +31,11 @@ final case class PageRes(
   * Everything after the parse stage is Catalyst built-ins (collect_list,
   * sort_array, flatten, transform), so map-side partial aggregation, AQE
   * coalescing and whole-stage codegen all apply.
+  *
+  * Commits do not run this topology: `TableIO` writes the zero-shuffle
+  * [[graft.plans.ExtractDocs]] node's output, which at the kernel's measured
+  * parse cost beats the fan-out's shuffles. The fan-out remains for the
+  * totals/billing gates and the golden comparisons that exercise it.
   */
 object Extraction {
 
@@ -45,18 +47,6 @@ object Extraction {
   def readInput(spark: SparkSession, path: String): Dataset[Doc] = {
     import spark.implicits._
     spark.read.parquet(path).select("doc_id", "spans").as[Doc]
-  }
-
-  /** North-rule input clustering: explicit repartitionByRange on doc_id for
-    * inputs that are not already doc_id-clustered (an Iceberg table sorted on
-    * doc_id would make this a no-op; our corpus writes are generated
-    * doc_id-contiguous, so the pipeline leaves this off by default — the range
-    * exchange costs a sampling pass over the scan, which is only worth paying
-    * for genuinely unclustered input).
-    */
-  def clusterByDocId(docs: Dataset[Doc], numPartitions: Int): Dataset[Doc] = {
-    import docs.sparkSession.implicits._
-    docs.repartitionByRange(numPartitions, col("doc_id")).as[Doc]
   }
 
   /** Stage 1+2: fan docs out into parsed pages.
@@ -82,15 +72,9 @@ object Extraction {
       .repartition(numPartitions, col("doc_id"), col("page_no"))
       .as[(String, Int, Seq[InSpan])]
 
-    tasks.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      it.map { case (docId, pageNo, pageSpans) =>
-        val t0 = System.nanoTime()
-        val r = PageParser.parse(pageNo, pageSpans)
-        val ms = (System.nanoTime() - t0) / 1000000
-        PageRes(docId, r.pageNo, r.spans, r.markdown, r.html, r.parseFailed,
-          r.confPm, pid, ms)
-      }
+    tasks.map { case (docId, pageNo, pageSpans) =>
+      val r = PageParser.parse(pageNo, pageSpans)
+      PageRes(docId, r.pageNo, r.spans, r.markdown, r.html, r.parseFailed, r.confPm)
     }
   }
 
@@ -156,43 +140,21 @@ object Extraction {
   /** Doc-local, ZERO-shuffle pipeline: parse and assemble each document
     * whole inside `mapPartitions`.
     *
-    * Topology choice (measured, BENCH.md): the fan-out path shuffles every
-    * raw span once and every parsed span twice; that is the right trade when
-    * per-page work is expensive (the reference's GPU OCR is ~2 s/page —
-    * 5000-page docs would serialize for hours). Our deterministic parse is
-    * ~0.5 ms/page, so a 5000-page mega-doc costs ~2.5 s serial — cheaper than
-    * shuffling 100 TB of raw spans. Both modes produce identical output
-    * (ExtractionGoldenSpec); pick by parse-cost regime.
+    * Topology choice (measured): the fan-out path shuffles every raw span
+    * once and every parsed span twice; that is the right trade when per-page
+    * work is expensive (the reference's GPU OCR is ~2 s/page — 5000-page
+    * docs would serialize for hours). Our deterministic parse measures
+    * ~131 µs/page on one thread (perfbench kernel harness, 4-vCPU VM), and a
+    * 200-page mega-doc parses in 0.024 s, so even a 5000-page one costs well
+    * under a second serial — cheaper than shuffling 100 TB of raw spans.
+    * Both modes produce identical output (ExtractionGoldenSpec); pick by
+    * parse-cost regime.
     */
   def runDocLocal(spark: SparkSession, inputPath: String): DataFrame = {
     import spark.implicits._
     readInput(spark, inputPath)
       .mapPartitions(_.map(DocParser.parseDoc))
       .toDF("doc_id", "spans", "markdown", "html", "conf_pm")
-  }
-
-  /** Per-partition lineage + extraction metrics (FIXTURES.md §3) from a parsed
-    * page dataset — the OPERATIONAL lineage surface (one row per task, doc
-    * ranges included), aggregated from the persisted parse output inside
-    * `TableIO.runAndCommit`. The corpus-total metrics ride the extraction job
-    * itself via [[metricsTotalsObserved]] (no second pass).
-    */
-  def metrics(parsed: Dataset[PageRes], runId: String, snapshotId: String): DataFrame = {
-    parsed.toDF()
-      .groupBy(col("part_id").as("partition_id"))
-      .agg(
-        min(col("doc_id")).as("doc_lo"),
-        max(col("doc_id")).as("doc_hi"),
-        count(lit(1)).as("pages_parsed"),
-        sum(size(col("spans"))).as("spans_emitted"),
-        sum(when(col("failed"), 1L).otherwise(0L)).as("parse_failures"),
-        sum(col("conf_pm").cast("long")).as("sum_conf_pm"),
-        sum(col("wall_ms")).as("wall_ms"))
-      .withColumn("run_id", lit(runId))
-      .withColumn("snapshot_id", lit(snapshotId))
-      .select("run_id", "snapshot_id", "partition_id", "doc_lo", "doc_hi",
-        "pages_parsed", "spans_emitted", "parse_failures", "sum_conf_pm",
-        "wall_ms")
   }
 
   /** Per-page pricing (tasks.py:379, config.py:116: 50 KRW/page) and the
@@ -220,8 +182,8 @@ object Extraction {
     if (total <= 0) 0 else ((done.toDouble / total) * 90).toInt
 
   /** Deterministic totals over the metrics table (the driver-oracled view;
-    * the per-partition rows above are the operational lineage surface, whose
-    * grouping depends on the physical partitioning).
+    * the per-task lineage rows `TableIO` commits are the operational
+    * surface, whose grouping depends on the physical partitioning).
     */
   def metricsTotals(metricsDf: DataFrame): DataFrame = {
     metricsDf.agg(

@@ -1,8 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{SparkSession, DataFrame, SaveMode}
+import graft.model.Doc
+import graft.plans.{ExtractDocs, TaskLineage}
+import org.apache.spark.sql.{SparkSession, DataFrame, Dataset, Encoders, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.CollectionAccumulator
+import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
@@ -13,7 +17,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *
   * Layout:
   *   <root>/snap-<id>/data/      parquet output (doc_id, spans, markdown)
-  *   <root>/snap-<id>/metrics/   parquet metrics (per-partition lineage)
+  *   <root>/snap-<id>/metrics/   parquet metrics (per-task lineage)
   *   <root>/snap-<id>/manifest.json   commit marker, written ATOMICALLY last
   *
   * A snapshot without a manifest is uncommitted garbage and is never read —
@@ -185,22 +189,20 @@ object TableIO {
     * snapshot id, or None if nothing was left to process.
     */
   def runAndCommit(spark: SparkSession, inputPath: String, outRoot: String,
-                   runId: String, numPartitions: Int = 0): Option[String] =
-    commitDocs(spark, Extraction.readInput(spark, inputPath), outRoot, runId,
-      numPartitions)
+                   runId: String): Option[String] =
+    commitDocs(spark, Extraction.readInput(spark, inputPath), outRoot, runId)
 
-  /** Extract + commit an in-memory document Dataset (the streaming
-    * `foreachBatch` entry point — the micro-batch plan flows straight into
-    * the parse without a staging materialization, halving batch write I/O
-    * and removing any staging-dir cleanup concern on DFS).
+  /** Extract + commit a document Dataset: a table scan, or a streaming
+    * `foreachBatch` micro-batch whose plan flows straight into the parse
+    * without a staging materialization. Docs already committed under
+    * `outRoot` are left-anti-joined away first.
     */
-  def commitDocs(spark: SparkSession, docs: org.apache.spark.sql.Dataset[graft.model.Doc],
-                 outRoot: String, runId: String,
-                 numPartitions: Int = 0): Option[String] = {
+  def commitDocs(spark: SparkSession, docs: Dataset[Doc],
+                 outRoot: String, runId: String): Option[String] = {
     val remaining = readCommitted(spark, outRoot) match {
       case Some(done) =>
         docs.join(done.select("doc_id"), Seq("doc_id"), "left_anti")
-          .as[graft.model.Doc](org.apache.spark.sql.Encoders.product[graft.model.Doc])
+          .as[Doc](Encoders.product[Doc])
       case None => docs
     }
     if (remaining.isEmpty) return None
@@ -209,20 +211,44 @@ object TableIO {
     val snapshotId = nextId(snaps, runId)
     val dir = new Path(outRoot, s"snap-$snapshotId")
     fsFor(dir).mkdirs(dir)
-
-    val n = if (numPartitions > 0) numPartitions
-            else spark.sparkContext.defaultParallelism * 2
-    val parsed = Extraction.parsePages(remaining, n)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      Extraction.assemble(parsed)
-        .write.mode(SaveMode.Overwrite).parquet(new Path(dir, "data").toString)
-      Extraction.metrics(parsed, runId, snapshotId)
-        .write.mode(SaveMode.Overwrite).parquet(new Path(dir, "metrics").toString)
-    } finally parsed.unpersist()
-
+    writeExtraction(spark, remaining, dir, runId, snapshotId)
     writeManifest(dir, snapshotId, runId, headOf(snaps).map(_.id))
     Some(snapshotId)
+  }
+
+  /** The data plan of an extraction commit: the [[ExtractDocs]] node over
+    * `docs`, reporting per-task lineage into `lineage`, under a REBALANCE
+    * hint. The parse runs at the input's split parallelism with no page
+    * shuffle; the one exchange lets AQE size the output files (without it
+    * every input split writes its own small file).
+    */
+  def extractForCommit(docs: Dataset[Doc],
+                       lineage: CollectionAccumulator[TaskLineage]): DataFrame =
+    ExtractDocs.of(docs.toDF(), Some(lineage)).hint("rebalance")
+
+  /** One pass of the node writes the snapshot's data; the lineage it counted
+    * on the way becomes the metrics table, built on the driver afterwards.
+    */
+  private def writeExtraction(spark: SparkSession, docs: Dataset[Doc], dir: Path,
+                              runId: String, snapshotId: String): Unit = {
+    val lineage = spark.sparkContext.collectionAccumulator[TaskLineage]("extract lineage")
+    extractForCommit(docs, lineage)
+      .write.mode(SaveMode.Overwrite).parquet(new Path(dir, "data").toString)
+    lineageMetrics(spark, lineage.value.asScala.toSeq, runId, snapshotId)
+      .coalesce(1)
+      .write.mode(SaveMode.Overwrite).parquet(new Path(dir, "metrics").toString)
+  }
+
+  /** Per-task lineage reports → the metrics table (FIXTURES.md §3): one row
+    * per partition id. A retried or speculative task reports its partition
+    * again with the same counts, so duplicates are dropped, never summed.
+    */
+  def lineageMetrics(spark: SparkSession, reports: Seq[TaskLineage], runId: String,
+                     snapshotId: String): DataFrame = {
+    import spark.implicits._
+    reports.groupBy(_.partition_id).values.map(_.head).toSeq.sortBy(_.partition_id)
+      .toDF()
+      .select(lit(runId).as("run_id"), lit(snapshotId).as("snapshot_id"), col("*"))
   }
 
   /** Raw-HTML analog of [[commitDocs]]: main-content-extract the web pages
@@ -304,25 +330,14 @@ object TableIO {
     * Tombstones hide rows of strictly older snapshots only, so the
     * snapshot's own data survives its own deletes.
     */
-  def upsertDocs(spark: SparkSession, docs: org.apache.spark.sql.Dataset[graft.model.Doc],
-                 outRoot: String, runId: String,
-                 numPartitions: Int = 0): Option[String] = {
+  def upsertDocs(spark: SparkSession, docs: Dataset[Doc],
+                 outRoot: String, runId: String): Option[String] = {
     if (docs.isEmpty) return None
     val snaps = committedSnapshots(outRoot)
     val snapshotId = nextId(snaps, runId)
     val dir = new Path(outRoot, s"snap-$snapshotId")
     fsFor(dir).mkdirs(dir)
-
-    val n = if (numPartitions > 0) numPartitions
-            else spark.sparkContext.defaultParallelism * 2
-    val parsed = Extraction.parsePages(docs, n)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      Extraction.assemble(parsed)
-        .write.mode(SaveMode.Overwrite).parquet(new Path(dir, "data").toString)
-      Extraction.metrics(parsed, runId, snapshotId)
-        .write.mode(SaveMode.Overwrite).parquet(new Path(dir, "metrics").toString)
-    } finally parsed.unpersist()
+    writeExtraction(spark, docs, dir, runId, snapshotId)
     docs.select(col("doc_id")).distinct()
       .write.mode(SaveMode.Overwrite).parquet(new Path(dir, "deletes").toString)
 

@@ -58,8 +58,9 @@ object WebExtraction {
   def assemble(parsed: Dataset[WebRes]): DataFrame =
     parsed.toDF().select(col("doc_id"), col("spans"))
 
-  /** Per-partition lineage rows, mirroring [[Extraction.metrics]] (§3 of
-    * FIXTURES.md) for the web surface: pages in, spans out, failures, wall.
+  /** Per-partition lineage rows, mirroring the PDF commit's metrics table
+    * (§3 of FIXTURES.md, [[TableIO.lineageMetrics]]) for the web surface:
+    * pages in, spans out, failures, wall.
     */
   def metrics(parsed: Dataset[WebRes], runId: String, snapshotId: String): DataFrame = {
     parsed.toDF()

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.pipeline.{Extraction, TableIO}
+import graft.pipeline.TableIO
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.Trigger
@@ -10,8 +10,8 @@ import org.apache.spark.sql.streaming.Trigger
   * no event time, no watermarks needed).
   *
   * `readStream` over the input table directory; each micro-batch runs the
-  * SAME batch extraction (parse + salted assembly) inside `foreachBatch` and
-  * commits one TableIO snapshot. `Trigger.AvailableNow` drains everything
+  * SAME batch commit (the `ExtractDocs` node, via `TableIO.commitDocs`)
+  * inside `foreachBatch` and commits one TableIO snapshot. `Trigger.AvailableNow` drains everything
   * currently present and stops — the "process the snapshot, resumably" mode
   * the north rule asks for; a continuous trigger turns the same job into a
   * tailing ingester. Spark's streaming checkpoint (source offsets) plus

@@ -39,6 +39,23 @@ class CustomPlanSpec extends AnyFunSuite with Matchers {
     }
   }
 
+  test("SQL metrics: one pass counts the oracle's pages, spans and parse failures") {
+    val path = Corpus.ensure(spark, "sf0.001")
+    val df = ExtractDocs.over(spark, path)
+    df.collect()
+    val node = df.queryExecution.executedPlan.collectFirst {
+      case e: graft.plans.ExtractDocsExec => e }.get
+    def metric(k: String): Long = node.metrics(k).value
+
+    val spec = CorpusGen.specFor("sf0.001")
+    val stats = CorpusGen.genAll(spec).map(Oracle.pageStats).toSeq
+    metric("pages") shouldBe stats.map(_._1).sum
+    metric("spans") shouldBe stats.map(_._2).sum
+    metric("parseFailures") shouldBe stats.map(_._3).sum
+    metric("parseFailures") should be > 0L
+    metric("parseTime") should be > 0L
+  }
+
   test("doc_id predicate is pushed through the custom node into the parquet scan") {
     import org.apache.spark.sql.functions._
     val path = Corpus.ensure(spark, "sf0.001")

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 import graft.corpus.Corpus
-import graft.pipeline.Extraction
+import graft.pipeline.{Extraction, TableIO}
 import org.apache.spark.sql.functions._
 
 /** Physical-plan assertions: the scale properties the architecture claims
@@ -30,6 +30,16 @@ class PlanSpec extends AnyFunSuite with Matchers {
     // 1: hash page fan-out, 2: partial (doc_id, salt) agg, 3: final doc agg
     val exchanges = plan.toString.linesIterator.count(_.contains("Exchange"))
     exchanges shouldBe 3
+  }
+
+  test("commit data plan: the node under one rebalance exchange, no aggregate") {
+    val lineage = spark.sparkContext.collectionAccumulator[graft.plans.TaskLineage]("plan-spec")
+    val df = TableIO.extractForCommit(Extraction.readInput(spark, corpusPath), lineage)
+    val plan = df.queryExecution.executedPlan.toString
+    plan should include("ExtractDocs")
+    plan should include("REBALANCE_PARTITIONS")
+    plan.linesIterator.count(_.contains("Exchange")) shouldBe 1
+    plan should not include "Aggregate"
   }
 
   test("unsalted assembly saves one exchange (two total)") {

@@ -31,12 +31,12 @@ class ResumeSpec extends AnyFunSuite with Matchers {
     // run 1 sees only a prefix of the input (simulates a kill after a
     // committed snapshot: committed work is visible, the rest never ran)
     writeInput(s"$tmp/input1", first)
-    val s1 = TableIO.runAndCommit(spark, s"$tmp/input1", s"$tmp/out", "run1", 4)
+    val s1 = TableIO.runAndCommit(spark, s"$tmp/input1", s"$tmp/out", "run1")
     s1.isDefined shouldBe true
 
     // run 2 sees the FULL input and must skip the committed doc_ids
     writeInput(s"$tmp/input", all)
-    val s2 = TableIO.runAndCommit(spark, s"$tmp/input", s"$tmp/out", "run2", 4)
+    val s2 = TableIO.runAndCommit(spark, s"$tmp/input", s"$tmp/out", "run2")
     s2.isDefined shouldBe true
 
     // snapshot 2's data contains exactly the remainder
@@ -54,7 +54,7 @@ class ResumeSpec extends AnyFunSuite with Matchers {
     for ((id, g) <- golden) withClue(s"doc $id: ") { got(id) shouldBe g }
 
     // a third run over the same input is a no-op (idempotent)
-    TableIO.runAndCommit(spark, s"$tmp/input", s"$tmp/out", "run3", 4) shouldBe None
+    TableIO.runAndCommit(spark, s"$tmp/input", s"$tmp/out", "run3") shouldBe None
 
     // time travel: AS OF snapshot 1 sees only run 1's docs; AS OF snapshot 2
     // sees the full table; unknown ids resolve to nothing
@@ -65,14 +65,61 @@ class ResumeSpec extends AnyFunSuite with Matchers {
     TableIO.readAsOf(spark, s"$tmp/out", "no-such-snapshot") shouldBe None
   }
 
+  test("mixed writers: a fan-out snapshot under node commits reads back as one golden table") {
+    val tmp = Files.createTempDirectory("graft-mixed").toString
+    val all = CorpusGen.genAll(spec).toSeq
+    writeInput(s"$tmp/input1", all.take(25))
+    writeInput(s"$tmp/input", all)
+
+    // snapshot 1 is the page fan-out's output, committed as plain data
+    val s1 = TableIO.commitData(spark,
+      Extraction.assemble(Extraction.parsePages(Extraction.readInput(spark, s"$tmp/input1"), 4)),
+      s"$tmp/out", "fanout")
+    // the resume runs through the node and commits only the remainder
+    val s2 = TableIO.runAndCommit(spark, s"$tmp/input", s"$tmp/out", "node").get
+    spark.read.parquet(s"$tmp/out/snap-$s2/data").count() shouldBe (all.size - 25L)
+    TableIO.readAsOf(spark, s"$tmp/out", s1).get.count() shouldBe 25L
+
+    val committed = TableIO.readCommitted(spark, s"$tmp/out").get
+    committed.groupBy("doc_id").count().filter($"count" > 1).count() shouldBe 0
+    val got = committed.select($"doc_id", $"spans", $"markdown", $"html", $"conf_pm")
+      .as[(String, Seq[OutSpan], String, String, Long)].collect().map(t => t._1 -> t).toMap
+    got.keySet shouldBe all.map(_.doc_id).toSet
+    for (d <- all; g = Oracle.golden(d)) withClue(s"doc ${d.doc_id}: ") {
+      got(d.doc_id) shouldBe ((g.doc_id, g.spans, g.markdown, g.html, g.conf_pm))
+    }
+  }
+
+  test("lineage: duplicate task reports count once; empty tasks write no row") {
+    // a retried or speculative task reports its partition twice
+    val r = graft.plans.TaskLineage(3, "doc-a", "doc-c", 5L, 40L, 1L, 4500L, 7L)
+    val reports = Seq(r, r.copy(partition_id = 1, doc_lo = "doc-d", doc_hi = "doc-d"), r)
+    val rows = TableIO.lineageMetrics(spark, reports, "run", "snap")
+      .select("partition_id", "doc_lo", "pages_parsed").as[(Int, String, Long)].collect()
+    rows.toSeq shouldBe Seq((1, "doc-d", 5L), (3, "doc-a", 5L))
+
+    // 3 docs over 8 input slices: five node tasks parse nothing
+    val tmp = Files.createTempDirectory("graft-lineage").toString
+    val few = CorpusGen.genAll(spec).toSeq.take(3)
+    TableIO.commitDocs(spark, spark.createDataset(spark.sparkContext.parallelize(few, 8)),
+      s"$tmp/out", "sparse").isDefined shouldBe true
+    val m = TableIO.readMetrics(spark, s"$tmp/out").get
+    m.count() shouldBe 3L
+    m.where($"doc_lo" =!= $"doc_hi" || $"pages_parsed" === 0L).count() shouldBe 0L
+    val stats = few.map(Oracle.pageStats)
+    m.agg(sum($"pages_parsed"), sum($"spans_emitted"), sum($"parse_failures"),
+        sum($"sum_conf_pm")).as[(Long, Long, Long, Long)].head() shouldBe
+      ((stats.map(_._1).sum, stats.map(_._2).sum, stats.map(_._3).sum, stats.map(_._4).sum))
+  }
+
   test("compaction: full-rewrite snapshot preserves rows, bounds files, keeps time travel until expiry") {
     val tmp = Files.createTempDirectory("graft-compact").toString
     val all = CorpusGen.genAll(spec).toSeq
     val (first, rest) = all.splitAt(25)
     writeInput(s"$tmp/input1", first)
-    val s1 = TableIO.runAndCommit(spark, s"$tmp/input1", s"$tmp/out", "run1", 4).get
+    val s1 = TableIO.runAndCommit(spark, s"$tmp/input1", s"$tmp/out", "run1").get
     writeInput(s"$tmp/input", all)
-    TableIO.runAndCommit(spark, s"$tmp/input", s"$tmp/out", "run2", 4).get
+    TableIO.runAndCommit(spark, s"$tmp/input", s"$tmp/out", "run2").get
 
     val before = TableIO.readCommitted(spark, s"$tmp/out").get
       .select($"doc_id", $"spans").as[(String, Seq[OutSpan])].collect().toMap
@@ -93,10 +140,10 @@ class ResumeSpec extends AnyFunSuite with Matchers {
       .select("doc_id").as[String].collect().sorted shouldBe
       first.map(_.doc_id).sorted.toArray
     // resume against the compacted table still skips committed docs
-    TableIO.runAndCommit(spark, s"$tmp/input", s"$tmp/out", "run3", 4) shouldBe None
+    TableIO.runAndCommit(spark, s"$tmp/input", s"$tmp/out", "run3") shouldBe None
     // a genuinely new doc commits on top of the compacted snapshot
     writeInput(s"$tmp/input2", rest.take(1).map(d => d.copy(doc_id = d.doc_id + "-new")))
-    val s4 = TableIO.runAndCommit(spark, s"$tmp/input2", s"$tmp/out", "run4", 4).get
+    val s4 = TableIO.runAndCommit(spark, s"$tmp/input2", s"$tmp/out", "run4").get
     TableIO.readCommitted(spark, s"$tmp/out").get.count() shouldBe (all.size + 1L)
     TableIO.liveSnapshots(s"$tmp/out").map(_.id) shouldBe Seq(c, s4)
     // expiry removes the replaced snapshots; live table unaffected,
@@ -116,12 +163,12 @@ class ResumeSpec extends AnyFunSuite with Matchers {
 
     // phase 1 commits the true evens + a STALE version of every odd doc
     writeInput(s"$tmp/input1", evens ++ odds.map(stale))
-    val s1 = TableIO.runAndCommit(spark, s"$tmp/input1", s"$tmp/out", "run1", 4).get
+    val s1 = TableIO.runAndCommit(spark, s"$tmp/input1", s"$tmp/out", "run1").get
     // upsert replaces the odd docs with their true extraction
     writeInput(s"$tmp/input2", odds)
     TableIO.upsertDocs(spark,
       graft.pipeline.Extraction.readInput(spark, s"$tmp/input2"),
-      s"$tmp/out", "run2", 4).get
+      s"$tmp/out", "run2").get
 
     val golden = all.map(d => d.doc_id -> Oracle.golden(d).spans).toMap
     def table() = TableIO.readCommitted(spark, s"$tmp/out").get
@@ -142,7 +189,7 @@ class ResumeSpec extends AnyFunSuite with Matchers {
     afterDel.keySet shouldBe (golden.keySet -- victims)
     // resume over the full input re-extracts EXACTLY the deleted docs
     writeInput(s"$tmp/input", all)
-    TableIO.runAndCommit(spark, s"$tmp/input", s"$tmp/out", "run3", 4).get
+    TableIO.runAndCommit(spark, s"$tmp/input", s"$tmp/out", "run3").get
     table().keySet shouldBe golden.keySet
     // compaction + expiry physically purge tombstones and stale bytes
     TableIO.compact(spark, s"$tmp/out", "opt", rowsPerFile = 20L).get
@@ -162,8 +209,8 @@ class ResumeSpec extends AnyFunSuite with Matchers {
     val (first, rest) = all.splitAt(25)
     writeInput(s"$tmp/input1", first)
     writeInput(s"$tmp/input", all)
-    TableIO.runAndCommit(spark, s"$tmp/input1", s"$tmp/out", "run1", 4).get
-    TableIO.runAndCommit(spark, s"$tmp/input", s"$tmp/out", "run2", 4).get
+    TableIO.runAndCommit(spark, s"$tmp/input1", s"$tmp/out", "run1").get
+    TableIO.runAndCommit(spark, s"$tmp/input", s"$tmp/out", "run2").get
     // compact (full rewrite) then EXPIRE the two replaced snapshots: the
     // committed set is now the single compacted snapshot with a high index
     TableIO.compact(spark, s"$tmp/out", "opt", rowsPerFile = 1000L).get
@@ -174,13 +221,13 @@ class ResumeSpec extends AnyFunSuite with Matchers {
     // later resume re-extract (and re-commit) it forever
     writeInput(s"$tmp/input2",
       rest.take(1).map(d => d.copy(doc_id = d.doc_id + "-post-expiry")))
-    val s4 = TableIO.runAndCommit(spark, s"$tmp/input2", s"$tmp/out", "run4", 4).get
+    val s4 = TableIO.runAndCommit(spark, s"$tmp/input2", s"$tmp/out", "run4").get
     s4.takeWhile(_.isDigit).toLong should be > 2L // monotonic, not count-derived
     val live = TableIO.readCommitted(spark, s"$tmp/out").get
     live.count() shouldBe (all.size + 1L)
     live.where($"doc_id".endsWith("-post-expiry")).count() shouldBe 1L
     // and the resume anti-join sees it: a re-run over the same input is a no-op
-    TableIO.runAndCommit(spark, s"$tmp/input2", s"$tmp/out", "run5", 4) shouldBe None
+    TableIO.runAndCommit(spark, s"$tmp/input2", s"$tmp/out", "run5") shouldBe None
     // head selection is by lineage: the new head's parent is the compacted id
     val snaps = TableIO.committedSnapshots(s"$tmp/out")
     val head = snaps.find(_.id == s4).get
@@ -217,7 +264,7 @@ class ResumeSpec extends AnyFunSuite with Matchers {
     spark.createDataset(all).write.mode(SaveMode.Overwrite).parquet(dir.toString)
     TableIO.readCommitted(spark, s"$tmp/out") shouldBe None
     // resume ignores it and processes everything
-    val s = TableIO.runAndCommit(spark, s"$tmp/input", s"$tmp/out", "r", 2)
+    val s = TableIO.runAndCommit(spark, s"$tmp/input", s"$tmp/out", "r")
     s.isDefined shouldBe true
     TableIO.readCommitted(spark, s"$tmp/out").get.count() shouldBe 5
   }
@@ -226,7 +273,7 @@ class ResumeSpec extends AnyFunSuite with Matchers {
     val tmp = Files.createTempDirectory("graft-metrics").toString
     val all = CorpusGen.genAll(spec).toSeq
     writeInput(s"$tmp/input", all)
-    TableIO.runAndCommit(spark, s"$tmp/input", s"$tmp/out", "mrun", 4)
+    TableIO.runAndCommit(spark, s"$tmp/input", s"$tmp/out", "mrun")
     val m = TableIO.readMetrics(spark, s"$tmp/out").get
     m.columns shouldBe Array("run_id", "snapshot_id", "partition_id", "doc_lo",
       "doc_hi", "pages_parsed", "spans_emitted", "parse_failures",
