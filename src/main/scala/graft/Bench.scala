@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.corpus.Corpus
-import graft.pipeline.Extraction
 
 /** Driver-contract benchmark: runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR at local[SPARK_GRAFT_CPUS], prints ONE JSON line.
@@ -52,8 +51,8 @@ object Bench {
       graft.oracle.OpsGolden.ensure(spark, sfDir)
     }
 
-    // headline: end-to-end extraction throughput via the fastest
-    // oracle-equal physical mode (BENCH.md shoot-out: the custom plan node).
+    // headline: end-to-end extraction throughput of the one PDF extraction
+    // path, the custom plan node.
     // One untimed pass warms the JIT (the C2-compiled parse is ~5x the
     // interpreted speed — BENCH.md methodology), then best of 2 timed runs.
     def extractOnce(): (Long, Long, Double) = {
@@ -131,16 +130,16 @@ object Bench {
 /** Extraction-only benchmark for the two-parallelism scaling evidence
   * (BASELINE.md: throughput at local[N] vs local[4N] on the SAME input).
   * Usage: runMain graft.ExtractBench <corpusPath> [repeats] [mode]
-  * mode: fanout (page fan-out + salted assembly) | doclocal (zero-shuffle
-  * typed Dataset) | custom (zero-shuffle custom plan node, no Encoder
-  * round-trip) | web (raw-HTML main-content extraction over the wild-web
-  * pages table — pass the web parquet dir, e.g. data/web/sf0.1)
+  * mode: custom (default; the PDF extraction node) | web (raw-HTML
+  * main-content extraction over the wild-web pages table — pass the web
+  * parquet dir, e.g. data/web/sf0.1)
   */
 object ExtractBench {
   def main(args: Array[String]): Unit = {
     val corpusPath = args.headOption.getOrElse(Corpus.corpusPath("sf0.1"))
     val repeats = if (args.length > 1) args(1).toInt else 1
-    val mode = if (args.length > 2) args(2) else "fanout"
+    val mode = if (args.length > 2) args(2) else "custom"
+    require(mode == "custom" || mode == "web", s"unknown mode '$mode' (custom | web)")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", (cpus.toInt * 4).toString)
     val spark = SparkSession.builder()
@@ -149,8 +148,8 @@ object ExtractBench {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "16g"))
-      // input-split size controls task granularity for the zero-shuffle
-      // modes (no exchange to rebalance them downstream)
+      // input-split size controls task granularity (no exchange
+      // rebalances the zero-shuffle extraction downstream)
       .config("spark.sql.files.maxPartitionBytes",
         sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "128m"))
       .config("spark.ui.enabled", "false")
@@ -162,18 +161,15 @@ object ExtractBench {
 
     for (r <- 1 to repeats) {
       val t0 = System.nanoTime()
-      val out = mode match {
-        case "doclocal" => Extraction.runDocLocal(spark, corpusPath)
-        case "custom" => graft.plans.ExtractDocs.over(spark, corpusPath)
-        case "web" =>
+      val out =
+        if (mode == "web") {
           import spark.implicits._
           graft.pipeline.WebExtraction.assemble(
             graft.pipeline.WebExtraction.parse(
               spark.read.parquet(corpusPath)
                 .select(col("doc_id").cast("string"), col("html"))
                 .as[(String, String)]))
-        case _ => Extraction.run(spark, corpusPath)
-      }
+        } else graft.plans.ExtractDocs.over(spark, corpusPath)
       val row = out.agg(count(lit(1)), sum(size(col("spans")))).head()
       val (docs, spans) = (row.getLong(0), row.getLong(1))
       val sec = (System.nanoTime() - t0) / 1e9

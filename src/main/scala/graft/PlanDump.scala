@@ -68,12 +68,6 @@ object PlanDump {
       TableIO.extractForCommit(Extraction.readInput(spark, corpus),
         spark.sparkContext.collectionAccumulator[graft.plans.TaskLineage]("plan-dump")))
 
-    dump("Page fan-out + salted assembly (Extraction.run)",
-      "The expensive-parse topology: hash exchange spreads pages, the salted " +
-      "partial `sort_array(collect_list(...))` runs map-side (partial_ " +
-      "functions before the exchange), final concat per doc after.",
-      Extraction.run(spark, corpus))
-
     dump("Broadcast dimension join + top-k (q_top_customers)",
       "Fact side aggregates partially before the exchange; the customer " +
       "dimension goes through `BroadcastExchange` + `BroadcastHashJoin` " +

@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.corpus.Corpus
-import graft.pipeline.Extraction
+import graft.pipeline.{Extraction, TableIO}
+import graft.plans.{ExtractDocs, TaskLineage}
+import scala.jdk.CollectionConverters._
 import graft.ops.{TextOps, Dedup, Similarity, Multimodal, Packing, Sketches, UrlOps, Retrieval, Graph}
 
 /** Driver contract — see SURVEY.md §7 + SPEC.md.
@@ -86,8 +88,8 @@ object SparkEntry {
     fnv64(sp.kind + "\u001f" + sp.text + "\u001f" + sp.media_ref)
 
   /** Extraction over the synthesized corpus at the scale matching sfDir,
-    * via the fastest oracle-equal physical mode (custom plan node). The
-    * fan-out mode keeps its own DuckDB-gated query (`x_extract_spans`).
+    * through the one PDF extraction path, the [[graft.plans.ExtractDocs]]
+    * node.
     */
   private def extracted(spark: SparkSession, sfDir: String): DataFrame = {
     val sf = Corpus.sfName(sfDir)
@@ -95,31 +97,19 @@ object SparkEntry {
     // materialize oracle outputs for the driver's oracle SQL at the
     // correctness-gate scales; bench scale skips the sequential oracle
     if (sf != "sf0.1") Corpus.ensureGolden(spark, sf)
-    graft.plans.ExtractDocs.over(spark, path)
-  }
-
-  /** Fan-out + salted-assembly extraction (the expensive-parse topology),
-    * kept on its own DuckDB-gated query so both physical modes stay under
-    * the driver's oracle.
-    */
-  private def extractedFanout(spark: SparkSession, sfDir: String): DataFrame = {
-    val sf = Corpus.sfName(sfDir)
-    val path = Corpus.ensure(spark, sf)
-    if (sf != "sf0.1") Corpus.ensureGolden(spark, sf)
-    Extraction.run(spark, path)
+    ExtractDocs.over(spark, path)
   }
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    Extraction.explodeSpans(
-      Extraction.run(spark, Corpus.ensure(spark, "sf0.001")))
+    Extraction.explodeSpans(extracted(spark, "sf0.001"))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- extraction engine (north rule) --------------------------------
     "x_extract_spans" -> ((s, dir) =>
-      Extraction.explodeSpans(extractedFanout(s, dir))),
-    // same extraction via the custom LogicalPlan+Strategy+SparkPlan node
-    // (graft.plans.ExtractDocs) — gated by the same golden-spans oracle
+      Extraction.explodeSpans(extracted(s, dir))),
+    // the same spans under the custom-node name, gated by the same
+    // golden-spans oracle
     "x_extract_spans_custom" -> ((s, dir) =>
       Extraction.explodeSpans(extracted(s, dir))),
     "x_extract_markdown" -> ((s, dir) =>
@@ -195,29 +185,32 @@ object SparkEntry {
           .cast("long").as("total_failures"),
         floor(sum(col("conf_pm")) / count(lit(1))).cast("long").as("avg_conf_pm"))),
     // deterministic corpus totals (pages parsed, spans emitted, failures,
-    // confidence mass, price) riding the extraction job via observe() —
-    // ONE job parses, assembles and accumulates the metrics (no second pass)
+    // confidence mass, price) counted by the node while it parses: ONE pass
+    // to the noop sink, its per-task lineage deduplicated by partition id
+    // exactly as a commit's metrics table is
     "x_extract_metrics" -> ((s, dir) => {
       val sf = Corpus.sfName(dir)
       if (sf != "sf0.1") Corpus.ensureGolden(s, sf)
-      val parsed = Extraction.parsePages(
-        Extraction.readInput(s, Corpus.ensure(s, sf)),
-        s.sparkContext.defaultParallelism * 2)
-      Extraction.metricsTotalsObserved(parsed)
+      val lineage = s.sparkContext.collectionAccumulator[TaskLineage]("x_extract_metrics")
+      ExtractDocs.of(Extraction.readInput(s, Corpus.ensure(s, sf)).toDF(), Some(lineage))
+        .write.format("noop").mode("overwrite").save()
+      Extraction.metricsTotals(
+        TableIO.lineageMetrics(s, lineage.value.asScala.toSeq, "x_extract_metrics", ""))
     }),
 
     // published bulk-pricing tiers (README.md:227–232) as a per-doc billing
-    // rollup: pages from ONE parse pass (map-side-combined count per doc),
+    // rollup: pages per doc are exactly the pages the parser parses
+    // (`DocParser.splitPages`), counted in one typed map with no shuffle;
     // tier unit via codegen'd when/otherwise mirroring Extraction.bulkUnitKrw;
     // the oracle recomputes pages INDEPENDENTLY from the raw corpus table
     // (page_break spans), not from any engine output
     "x_billing_tiers" -> ((s, dir) => {
+      import s.implicits._
       val sf = Corpus.sfName(dir)
-      val parsed = Extraction.parsePages(
-        Extraction.readInput(s, Corpus.ensure(s, sf)),
-        s.sparkContext.defaultParallelism * 2)
-      parsed.toDF().groupBy(col("doc_id"))
-        .agg(count(lit(1)).cast("long").as("pages"))
+      Extraction.readInput(s, Corpus.ensure(s, sf))
+        .map(d => (d.doc_id, graft.parse.DocParser.splitPages(d.spans).size.toLong))
+        .toDF("doc_id", "pages")
+        .where(col("pages") > 0)
         .withColumn("unit_krw",
           when(col("pages") >= 1000, 35L)
             .when(col("pages") >= 500, 40L)
@@ -2021,7 +2014,9 @@ object SparkEntry {
     // page-break NUMBER ('page:N' parsed as int, so 'page:1' and 'page: 1'
     // are ONE page), plus the implicit page 1 when any non-break span
     // precedes the first break (or the doc has spans but no breaks at all);
-    // docs with zero spans drop out of both sides
+    // docs with zero spans drop out of both sides. A doc with a malformed
+    // break number bills as the one failed page the engine makes of it,
+    // where this CAST would raise; the corpus plants none
     "x_billing_tiers" ->
       ("WITH sp AS (SELECT doc_id, unnest(spans) AS s FROM read_parquet('/root/repo/data/corpus/sf0.01/*.parquet')), " +
         "brk AS (SELECT doc_id, s.\"offset\" AS off, CAST(trim(CASE WHEN s.text LIKE 'page:%' THEN substr(s.text, 6) ELSE s.text END) AS BIGINT) AS pno FROM sp WHERE s.kind = 'page_break'), " +

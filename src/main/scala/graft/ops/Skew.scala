@@ -7,10 +7,8 @@ import org.apache.spark.sql.functions._
   * sort-merge joins at runtime, but two cases still need EXPLICIT salting at
   * 100 TB: aggregation pipelines where one reducer key owns a macroscopic
   * corpus fraction (AQE cannot split a single aggregate key), and joins
-  * whose skewed side must stay co-partitioned with later stages. The
-  * extraction pipeline salts mega-documents this way
-  * (pipeline/Extraction.scala); this object exposes the same discipline as
-  * reusable operators over any key.
+  * whose skewed side must stay co-partitioned with later stages. This
+  * object exposes that discipline as reusable operators over any key.
   */
 object Skew {
 

@@ -210,28 +210,47 @@ object PageParser {
 }
 
 /** Document-level parse: page split + per-page parse + in-order assembly.
-  * The SEQUENTIAL form — the pipeline re-expresses the split/assembly with
-  * Spark operators and reuses only `PageParser.parse` per page.
+  * The SEQUENTIAL form, and the kernel the [[graft.plans.ExtractDocs]] node
+  * runs once per document.
   */
 object DocParser {
 
   /** Split a doc's spans into (pageNo, spans) groups in offset order
     * (SPEC.md §2).
+    *
+    * Failure containment (tasks.py:301–314): a `page:<n>` break whose number
+    * is not a non-negative int leaves the page structure unknowable, so the
+    * whole doc becomes [[MalformedDoc]] — one page that `PageParser.parse`
+    * turns into a single error span, counted as one parse failure — instead
+    * of an exception that aborts the job. Every caller (the node, the
+    * oracle, the failure counts) sees that same page.
     */
   def splitPages(spans: Seq[InSpan]): Seq[(Int, Seq[InSpan])] = {
     val sorted = spans.sortBy(_.offset)
     val pages = scala.collection.mutable.LinkedHashMap.empty[Int, scala.collection.mutable.ArrayBuffer[InSpan]]
     var current = 1
+    var malformed = false
     sorted.foreach { s =>
       if (s.kind == Kind.PageBreak) {
-        current = s.text.stripPrefix("page:").trim.toInt
-        pages.getOrElseUpdate(current, scala.collection.mutable.ArrayBuffer.empty)
+        val n = s.text.stripPrefix("page:").trim.toIntOption.getOrElse(-1)
+        if (n < 0) malformed = true
+        else {
+          current = n
+          pages.getOrElseUpdate(current, scala.collection.mutable.ArrayBuffer.empty)
+        }
       } else {
         pages.getOrElseUpdate(current, scala.collection.mutable.ArrayBuffer.empty) += s
       }
     }
-    pages.iterator.map { case (n, b) => (n, b.toSeq) }.toSeq
+    if (malformed) MalformedDoc
+    else pages.iterator.map { case (n, b) => (n, b.toSeq) }.toSeq
   }
+
+  /** The split of a doc with a malformed page break: page 0 holding one
+    * poisoned line, which fails the page before any parsing.
+    */
+  val MalformedDoc: Seq[(Int, Seq[InSpan])] =
+    Seq((0, Seq(InSpan(Kind.PdfLine, PageParser.ParseFailMarker, "", 0))))
 
   /** Assemble per-page results into the document output (SPEC.md §7–8):
     * pages ascend, `order` renumbered globally, markdown joined with page
@@ -265,11 +284,9 @@ object DocParser {
   /** Full sequential parse of one document. */
   def parseDoc(doc: Doc): Extracted = assemble(doc.doc_id, parsePages(doc.spans))
 
-  /** Page-range sequential parse (pdf_processor.iter_pages(start, end)
-    * analog) — the oracle counterpart of the pipeline's pageRange filter.
-    * Contract note: a doc with NO pages in range yields an EMPTY Extracted
-    * here, while the pipeline emits no row for it at all — comparators must
-    * filter empty docs before pairing (as ExtractionGoldenSpec does).
+  /** Page-range parse (pdf_processor.iter_pages(start, end) analog,
+    * SURVEY §2.2): only pages numbered `start..end` are parsed and
+    * assembled; a doc with no page in range yields an empty Extracted.
     */
   def parseDocRange(doc: Doc, start: Int, end: Int): Extracted =
     assemble(doc.doc_id,

@@ -1,160 +1,27 @@
 package graft.pipeline
 
-import graft.model._
-import graft.parse.{PageParser, DocParser}
-import org.apache.spark.sql.{SparkSession, DataFrame, Dataset, Column}
+import graft.model.Doc
+import org.apache.spark.sql.{SparkSession, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-/** One parsed page row flowing between the parse and assembly stages. */
-final case class PageRes(
-    doc_id: String,
-    page_no: Int,
-    spans: Seq[OutSpan],   // order = WITHIN-page index
-    md: String,
-    html: String,
-    failed: Boolean,
-    conf_pm: Int)          // page avg confidence, per-mille (ocr_engine.py:690–695)
-
-/** The page fan-out extraction pipeline (SURVEY.md §3.1 Spark restatement):
+/** Extraction helpers around the one PDF extraction path, the
+  * [[graft.plans.ExtractDocs]] node: input reading, the exploded per-span
+  * view, the deterministic totals over a metrics table, and the pricing
+  * policy.
   *
-  *   read snapshot → flatMap to pages →
-  *   repartition(doc_id, page_no)          (mega-doc pages fan out — the
-  *   reference's own Electron client chunks 5000-page docs the same way,
-  *   parallelProcessor.js:131–260) →
-  *   map(parse)                            (pooled parser: the regex tables in
-  *   graft.parse.Typo are compiled once per JVM, the analog of the reference's
-  *   per-worker singleton model init, tasks.py:59–87) →
-  *   salted two-phase assembly             (partial sort_array/collect_list per
-  *   (doc_id, salt) bucket, then a tiny final concat per doc — SURVEY §2.3) →
-  *   output (doc_id, spans, markdown).
-  *
-  * Everything after the parse stage is Catalyst built-ins (collect_list,
-  * sort_array, flatten, transform), so map-side partial aggregation, AQE
-  * coalescing and whole-stage codegen all apply.
-  *
-  * Commits do not run this topology: `TableIO` writes the zero-shuffle
-  * [[graft.plans.ExtractDocs]] node's output, which at the kernel's measured
-  * parse cost beats the fan-out's shuffles. The fan-out remains for the
-  * totals/billing gates and the golden comparisons that exercise it.
+  * The node parses and assembles each document whole inside one task
+  * (`DocParser`), at the input's split parallelism with no page shuffle.
+  * The reference fans pages out because its GPU OCR costs ~2 s per page
+  * (tasks.py:261–314, parallelProcessor.js:131–260); this kernel costs
+  * ~131 µs per page on one thread and parses a 200-page mega-doc in
+  * 0.024 s (perfbench kernel harness, 4-vCPU VM), so shuffling pages costs
+  * more than it spreads.
   */
 object Extraction {
-
-  /** Pages per salt bucket for the two-phase skewed-doc assembly. With
-    * 5000-page mega-docs this bounds any single partial group to 64 pages.
-    */
-  val PagesPerSaltBucket = 64
 
   def readInput(spark: SparkSession, path: String): Dataset[Doc] = {
     import spark.implicits._
     spark.read.parquet(path).select("doc_id", "spans").as[Doc]
-  }
-
-  /** Stage 1+2: fan docs out into parsed pages.
-    *
-    * The page fan-out is HASH-repartitioned on (doc_id, page_no): a 5000-page
-    * mega-doc's pages spread uniformly over the cluster without the sampling
-    * job a range exchange would run (range sampling re-executes the fan-out —
-    * measured 2× cost and high variance at sf0.1). Assembly hashes by doc_id
-    * anyway, so page contiguity buys nothing here.
-    */
-  def parsePages(docs: Dataset[Doc], numPartitions: Int,
-                 pageRange: Option[(Int, Int)] = None): Dataset[PageRes] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val allTasks = docs.flatMap { d =>
-      DocParser.splitPages(d.spans).map { case (n, s) => (d.doc_id, n, s) }
-    }.toDF("doc_id", "page_no", "page_spans")
-    // page-range predicate (pdf_processor.iter_pages(start, end) analog,
-    // SURVEY §2.2) applies BEFORE the shuffle and the expensive parse —
-    // out-of-range pages are never repartitioned or parsed
-    val tasks = pageRange.fold(allTasks) { case (lo, hi) =>
-        allTasks.where(col("page_no").between(lo, hi)) }
-      .repartition(numPartitions, col("doc_id"), col("page_no"))
-      .as[(String, Int, Seq[InSpan])]
-
-    tasks.map { case (docId, pageNo, pageSpans) =>
-      val r = PageParser.parse(pageNo, pageSpans)
-      PageRes(docId, r.pageNo, r.spans, r.markdown, r.html, r.parseFailed, r.confPm)
-    }
-  }
-
-  /** Stage 3: salted two-phase page→document assembly (SPEC.md §7–8). */
-  def assemble(parsed: Dataset[PageRes], salted: Boolean = true): DataFrame = {
-    val pageStruct = struct(col("page_no"), col("spans"), col("md"), col("html"),
-      col("conf_pm"))
-
-    val perDoc =
-      if (salted) {
-        // phase 1: partial per (doc_id, salt) — bounded group size, map-side combine
-        val partial = parsed.toDF()
-          .withColumn("salt", (col("page_no") / lit(PagesPerSaltBucket)).cast("int"))
-          .groupBy(col("doc_id"), col("salt"))
-          .agg(sort_array(collect_list(pageStruct)).as("bucket"))
-        // phase 2: tiny final concat of ordered buckets per doc
-        partial
-          .groupBy(col("doc_id"))
-          .agg(flatten(transform(
-            sort_array(collect_list(struct(col("salt"), col("bucket")))),
-            b => b.getField("bucket"))).as("pages"))
-      } else {
-        parsed.toDF()
-          .groupBy(col("doc_id"))
-          .agg(sort_array(collect_list(pageStruct)).as("pages"))
-      }
-
-    perDoc.select(
-      col("doc_id"),
-      transform(
-        flatten(transform(col("pages"), p => p.getField("spans"))),
-        (s, i) => struct(
-          s.getField("kind").as("kind"),
-          s.getField("text").as("text"),
-          s.getField("media_ref").as("media_ref"),
-          i.cast("int").as("order"))).as("spans"),
-      array_join(
-        transform(col("pages"), p =>
-          concat(lit("## 페이지 "), p.getField("page_no").cast("string"),
-            lit("\n\n"), p.getField("md"))),
-        "\n\n---\n\n").as("markdown"),
-      array_join(
-        transform(col("pages"), p =>
-          concat(lit("<div class=\"page-section\" data-page=\""),
-            p.getField("page_no").cast("string"), lit("\">\n"),
-            p.getField("html"), lit("\n</div>"))),
-        "\n").as("html"),
-      // doc avg confidence = floor(mean of page confs) — sums fit a double
-      // exactly (≤ 1000 per page), so floor() is integer-exact
-      floor(aggregate(col("pages"), lit(0L),
-          (acc, p) => acc + p.getField("conf_pm")) / size(col("pages")))
-        .cast("long").as("conf_pm"))
-  }
-
-  /** Full pipeline: input path → extracted (doc_id, spans, markdown). */
-  def run(spark: SparkSession, inputPath: String,
-          numPartitions: Int = 0, salted: Boolean = true): DataFrame = {
-    val n = if (numPartitions > 0) numPartitions
-            else spark.sparkContext.defaultParallelism * 2
-    assemble(parsePages(readInput(spark, inputPath), n), salted)
-  }
-
-  /** Doc-local, ZERO-shuffle pipeline: parse and assemble each document
-    * whole inside `mapPartitions`.
-    *
-    * Topology choice (measured): the fan-out path shuffles every raw span
-    * once and every parsed span twice; that is the right trade when per-page
-    * work is expensive (the reference's GPU OCR is ~2 s/page — 5000-page
-    * docs would serialize for hours). Our deterministic parse measures
-    * ~131 µs/page on one thread (perfbench kernel harness, 4-vCPU VM), and a
-    * 200-page mega-doc parses in 0.024 s, so even a 5000-page one costs well
-    * under a second serial — cheaper than shuffling 100 TB of raw spans.
-    * Both modes produce identical output (ExtractionGoldenSpec); pick by
-    * parse-cost regime.
-    */
-  def runDocLocal(spark: SparkSession, inputPath: String): DataFrame = {
-    import spark.implicits._
-    readInput(spark, inputPath)
-      .mapPartitions(_.map(DocParser.parseDoc))
-      .toDF("doc_id", "spans", "markdown", "html", "conf_pm")
   }
 
   /** Per-page pricing (tasks.py:379, config.py:116: 50 KRW/page) and the
@@ -192,36 +59,6 @@ object Extraction {
       sum(col("parse_failures")).cast("long").as("total_failures"),
       sum(col("sum_conf_pm")).cast("long").as("sum_conf_pm"),
       (sum(col("pages_parsed")) * PricePerPageKrw).cast("long").as("price_krw"))
-  }
-
-  /** Deterministic corpus totals computed WITH `observe()` on the parse
-    * stage of a single extraction job: the page-level aggregates accumulate
-    * as the job's own tasks stream past (a `CollectMetrics` node over the
-    * parsed pages — map-side, zero extra shuffle, zero recompute), while the
-    * job's real action is the assembled document output (written to the
-    * `noop` sink here; a caller with a data sink gets the metrics for free
-    * on its own write). Returns a one-row DataFrame with the exact
-    * [[metricsTotals]] schema. At 100 TB this is the difference between one
-    * pass and two over every parsed page.
-    */
-  def metricsTotalsObserved(parsed: Dataset[PageRes]): DataFrame = {
-    val spark = parsed.sparkSession
-    import spark.implicits._
-    val obs = org.apache.spark.sql.Observation()
-    val observed = parsed.toDF().observe(obs,
-      count(lit(1)).cast("long").as("total_pages"),
-      sum(size(col("spans"))).cast("long").as("total_spans"),
-      sum(when(col("failed"), 1L).otherwise(0L)).cast("long").as("total_failures"),
-      sum(col("conf_pm").cast("long")).cast("long").as("sum_conf_pm"))
-    assemble(observed.as[PageRes])
-      .write.format("noop").mode("overwrite").save()
-    val m = obs.get
-    // sums observe as null on an empty input — surface 0 like metricsTotals
-    def l(k: String): Long = Option(m(k)).map(_.asInstanceOf[Long]).getOrElse(0L)
-    Seq((l("total_pages"), l("total_spans"), l("total_failures"),
-        l("sum_conf_pm"), l("total_pages") * PricePerPageKrw))
-      .toDF("total_pages", "total_spans", "total_failures", "sum_conf_pm",
-        "price_krw")
   }
 
   /** Exploded per-span view (the comparator/driver-facing shape). */

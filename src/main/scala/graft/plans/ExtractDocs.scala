@@ -21,8 +21,10 @@ import org.apache.spark.util.CollectionAccumulator
   * custom-operator ladder (compose built-ins > Expression > LogicalPlan +
   * Strategy + SparkPlan > mapPartitions). The physical node consumes the
   * input table's InternalRows DIRECTLY (no Doc/InSpan Encoder round-trip —
-  * the typed doc-local path deserializes every span through `mapobjects`,
-  * which this skips) and emits output rows in one map, zero shuffles.
+  * a typed `Dataset[Doc]` map deserializes every span through `mapobjects`,
+  * which this skips) and emits output rows in one map, zero shuffles. It is
+  * the only PDF extraction path: the gates, the commits and the streaming
+  * ingest all run it.
   *
   * Child contract: output columns (doc_id STRING, spans ARRAY<STRUCT<kind,
   * text, media_ref STRING, offset INT>>) in that order — any plan: a parquet

@@ -5,13 +5,13 @@ import org.scalatest.matchers.should.Matchers
 import graft.model._
 import graft.corpus.CorpusGen
 import graft.oracle.Oracle
-import graft.pipeline.Extraction
-import org.apache.spark.sql.functions._
+import graft.parse.DocParser
+import graft.plans.ExtractDocs
 
-/** The north-rule gate (SURVEY.md §5.2.1): the distributed pipeline must
+/** The north-rule gate (SURVEY.md §5.2.1): the extraction node must
   * reproduce the sequential oracle's span sequences EXACTLY under
-  * (kind, text, media_ref, order) equality per doc_id, plus markdown equality,
-  * at multiple partition counts and with salting on and off.
+  * (kind, text, media_ref, order) equality per doc_id, plus markdown and
+  * html equality, at multiple partition counts.
   */
 class ExtractionGoldenSpec extends AnyFunSuite with Matchers {
 
@@ -24,8 +24,8 @@ class ExtractionGoldenSpec extends AnyFunSuite with Matchers {
   private lazy val golden: Map[String, Extracted] =
     CorpusGen.genAll(spec).map(d => d.doc_id -> Oracle.golden(d)).toMap
 
-  private def assertMatchesGolden(numPartitions: Int, salted: Boolean): Unit = {
-    val out = Extraction.assemble(Extraction.parsePages(docs, numPartitions), salted)
+  private def assertMatchesGolden(numPartitions: Int): Unit = {
+    val out = ExtractDocs.of(docs.toDF().repartition(numPartitions))
       .select($"doc_id", $"spans", $"markdown", $"html")
       .as[(String, Seq[OutSpan], String, String)]
       .collect()
@@ -40,23 +40,18 @@ class ExtractionGoldenSpec extends AnyFunSuite with Matchers {
     }
   }
 
-  test("golden span-sequence + markdown equality (sf0.001, salted, 8 partitions)") {
-    assertMatchesGolden(8, salted = true)
+  test("golden span-sequence + markdown equality (sf0.001, 8 partitions)") {
+    assertMatchesGolden(8)
   }
 
   test("partitioning invariance: identical output at 1, 3 and 17 partitions") {
-    assertMatchesGolden(1, salted = true)
-    assertMatchesGolden(3, salted = true)
-    assertMatchesGolden(17, salted = true)
+    assertMatchesGolden(1)
+    assertMatchesGolden(3)
+    assertMatchesGolden(17)
   }
 
-  test("salted two-phase assembly == unsalted assembly") {
-    assertMatchesGolden(8, salted = false)
-  }
-
-  test("doc-local zero-shuffle mode == fan-out mode == golden") {
-    val out = docs.mapPartitions(_.map(graft.parse.DocParser.parseDoc))
-      .collect().map(e => e.doc_id -> e).toMap
+  test("DocParser.parseDoc, the node's kernel, == golden") {
+    val out = CorpusGen.genAll(spec).map(DocParser.parseDoc).map(e => e.doc_id -> e).toMap
     out.keySet shouldBe golden.keySet
     for ((id, g) <- golden) {
       withClue(s"doc $id: ") {
@@ -105,33 +100,76 @@ class ExtractionGoldenSpec extends AnyFunSuite with Matchers {
     all.exists(_.kind == Kind.InvisibleTable) shouldBe true
   }
 
-  test("page-range filter: pipeline range == oracle range, pre-parse predicate") {
-    val (lo, hi) = (5, 7) // some docs have < 5 pages -> range excludes them
-    val expected = CorpusGen.genAll(spec)
-      .map(d => graft.parse.DocParser.parseDocRange(d, lo, hi))
-      .filter(_.spans.nonEmpty)
-      .map(e => e.doc_id -> ((e.spans, e.markdown))).toMap
-    val out = Extraction.assemble(
-        Extraction.parsePages(docs, 8, pageRange = Some((lo, hi))))
-      .select($"doc_id", $"spans", $"markdown")
-      .as[(String, Seq[OutSpan], String)]
-      .collect().map(t => t._1 -> ((t._2, t._3))).toMap
-    out.keySet shouldBe expected.keySet
-    for ((id, (spans, md)) <- expected) {
-      withClue(s"doc $id: ") { out(id)._1 shouldBe spans; out(id)._2 shouldBe md }
+  test("page-range parse: parseDocRange keeps only the in-range page sections") {
+    val (lo, hi) = (9, 11) // sf0.001 docs have 8–10 pages, the mega-doc 64
+    val all = CorpusGen.genAll(spec).toSeq
+    // each page section of a doc's markdown, keyed by page number
+    def sections(md: String): Map[Int, String] =
+      md.split("\n\n---\n\n").map { sec =>
+        sec.stripPrefix("## 페이지 ").takeWhile(_ != '\n').toInt -> sec
+      }.toMap
+    var inRange = 0
+    for (d <- all) withClue(s"doc ${d.doc_id}: ") {
+      val r = DocParser.parseDocRange(d, lo, hi)
+      val pages = DocParser.splitPages(d.spans).map(_._1).filter(n => n >= lo && n <= hi)
+      if (pages.isEmpty) r.spans shouldBe empty
+      else {
+        inRange += 1
+        val full = sections(golden(d.doc_id).markdown)
+        sections(r.markdown) shouldBe pages.map(n => n -> full(n)).toMap
+        r.spans.map(_.order) shouldBe r.spans.indices
+      }
     }
     // the range genuinely excludes pages: the 64-page mega-doc keeps
     // exactly hi-lo+1 page headers, and in-range page numbering survives
-    val megaMd = out(CorpusGen.docId(0))._2
+    val megaMd = DocParser.parseDocRange(all.head, lo, hi).markdown
+    all.head.doc_id shouldBe CorpusGen.docId(0)
     "## 페이지 ".r.findAllIn(megaMd).length shouldBe (hi - lo + 1)
     megaMd should include(s"## 페이지 $lo")
     megaMd should not include s"## 페이지 ${hi + 1}"
-    expected should not be empty
+    // docs with fewer than lo pages yield no spans
+    all.exists(d => DocParser.splitPages(d.spans).size < lo) shouldBe true
+    inRange should be > 0
   }
 
   test("error pages: poisoned lines become single error spans, never abort") {
     val errs = golden.values.flatMap(_.spans).filter(_.kind == Kind.Error)
     // ~0.5% of ~1000 pages — the corpus should have planted at least one
     errs.foreach(_.text should startWith("[처리 실패:"))
+  }
+
+  test("malformed page number: one bad doc becomes an error span, never aborts node or commit") {
+    // 8 failure-free docs, plus one whose page-2 break reads `page:abc`
+    val clean = CorpusGen.genAll(spec).filter(d => Oracle.pageStats(d)._3 == 0L).toSeq
+    val good = clean.slice(1, 9)
+    val src = clean.find(d => DocParser.splitPages(d.spans).size >= 2).get
+    val bad = Doc("doc-bad", src.spans.map(s =>
+      if (s.kind == Kind.PageBreak && s.text == "page:2") s.copy(text = "page:abc") else s))
+    val negative = src.spans.map(s =>
+      if (s.kind == Kind.PageBreak && s.text == "page:2") s.copy(text = "page:-2") else s)
+    DocParser.splitPages(bad.spans) shouldBe DocParser.MalformedDoc
+    DocParser.splitPages(negative) shouldBe DocParser.MalformedDoc
+    Oracle.pageStats(bad)._3 shouldBe 1L
+
+    val tmp = java.nio.file.Files.createTempDirectory("graft-malformed").toString
+    spark.createDataset(good :+ bad).write.parquet(s"$tmp/input")
+    def check(rows: Map[String, Seq[OutSpan]]): Unit = {
+      rows.keySet shouldBe (good :+ bad).map(_.doc_id).toSet
+      for (d <- good) withClue(s"doc ${d.doc_id}: ") { rows(d.doc_id) shouldBe Oracle.golden(d).spans }
+      rows(bad.doc_id).map(_.kind) shouldBe Seq(Kind.Error)
+    }
+
+    val df = ExtractDocs.over(spark, s"$tmp/input").select($"doc_id", $"spans")
+      .as[(String, Seq[OutSpan])]
+    check(df.collect().toMap)
+    df.queryExecution.executedPlan.collectFirst {
+      case e: graft.plans.ExtractDocsExec => e.metrics("parseFailures").value }.get shouldBe 1L
+
+    graft.pipeline.TableIO.runAndCommit(spark, s"$tmp/input", s"$tmp/out", "run1")
+      .isDefined shouldBe true
+    check(graft.pipeline.TableIO.readCommitted(spark, s"$tmp/out").get
+      .select($"doc_id", $"spans").as[(String, Seq[OutSpan])].collect().toMap)
+    graft.pipeline.TableIO.readMetrics(spark, s"$tmp/out").get
+      .agg(org.apache.spark.sql.functions.sum($"parse_failures")).as[Long].head() shouldBe 1L
   }
 }

@@ -5,8 +5,9 @@ import org.scalatest.matchers.should.Matchers
 import graft.model._
 import graft.corpus.CorpusGen
 import graft.oracle.Oracle
-import graft.pipeline.{Extraction, TableIO}
-import org.apache.spark.sql.SaveMode
+import graft.pipeline.TableIO
+import org.apache.spark.sql.{Row, SaveMode}
+import org.apache.spark.sql.types._
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -68,12 +69,24 @@ class ResumeSpec extends AnyFunSuite with Matchers {
   test("mixed writers: a fan-out snapshot under node commits reads back as one golden table") {
     val tmp = Files.createTempDirectory("graft-mixed").toString
     val all = CorpusGen.genAll(spec).toSeq
-    writeInput(s"$tmp/input1", all.take(25))
     writeInput(s"$tmp/input", all)
 
-    // snapshot 1 is the page fan-out's output, committed as plain data
+    // snapshot 1 holds golden rows under the exact output schema of the
+    // (since removed) page fan-out writer, as tables written by it hold them
+    val fanoutSchema = StructType(Seq(
+      StructField("doc_id", StringType),
+      StructField("spans", ArrayType(StructType(Seq(
+        StructField("kind", StringType), StructField("text", StringType),
+        StructField("media_ref", StringType),
+        StructField("order", IntegerType, nullable = false))), containsNull = false)),
+      StructField("markdown", StringType, nullable = false),
+      StructField("html", StringType, nullable = false),
+      StructField("conf_pm", LongType)))
+    val fanoutRows = all.take(25).map(Oracle.golden).map(g => Row(g.doc_id,
+      g.spans.map(sp => Row(sp.kind, sp.text, sp.media_ref, sp.order)), g.markdown,
+      g.html, g.conf_pm))
     val s1 = TableIO.commitData(spark,
-      Extraction.assemble(Extraction.parsePages(Extraction.readInput(spark, s"$tmp/input1"), 4)),
+      spark.createDataFrame(spark.sparkContext.parallelize(fanoutRows, 4), fanoutSchema),
       s"$tmp/out", "fanout")
     // the resume runs through the node and commits only the remainder
     val s2 = TableIO.runAndCommit(spark, s"$tmp/input", s"$tmp/out", "node").get

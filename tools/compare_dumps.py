@@ -3,10 +3,12 @@
 
 Usage: python3 tools/compare_dumps.py <dirA> <dirB>
 
-Compares every query subdirectory present in BOTH Verify dump dirs after a
+Compares every query subdirectory of two Verify dump dirs after a
 column-name + row sort (the driver's canonicalization): bit-identical
 engine output at two parallelism levels is the engine-wide payoff of the
 integer-micro-unit / content-hash / total-order determinism discipline.
+A query present in only one dump is a mismatch: a gate dropped on one
+side must fail the comparison, not shrink it.
 """
 import sys
 import os
@@ -24,13 +26,21 @@ def canon(qdir: str) -> str:
     rows = sorted(df.astype(str).values.tolist())
     return "\n".join("\x1f".join(r) for r in rows)
 
-names = sorted(set(os.listdir(a_dir)) & set(os.listdir(b_dir)))
-names = [n for n in names if os.path.isdir(os.path.join(a_dir, n))]
+def queries(d: str) -> set:
+    return {n for n in os.listdir(d) if os.path.isdir(os.path.join(d, n))}
+
+a_names, b_names = queries(a_dir), queries(b_dir)
+names = sorted(a_names | b_names)
 mism = 0
 for n in names:
-    same = canon(os.path.join(a_dir, n)) == canon(os.path.join(b_dir, n))
-    if not same:
-        mism += 1
+    if n not in b_names:
+        print(f"MISSING {n} (only in {a_dir})")
+    elif n not in a_names:
+        print(f"MISSING {n} (only in {b_dir})")
+    elif canon(os.path.join(a_dir, n)) == canon(os.path.join(b_dir, n)):
+        continue
+    else:
         print(f"MISMATCH {n}")
+    mism += 1
 print(f"{len(names) - mism}/{len(names)} queries bit-identical, {mism} mismatches")
 sys.exit(1 if mism else 0)
