@@ -1798,7 +1798,8 @@ object OpsGolden {
 
   private def exists(p: String): Boolean = Files.exists(Paths.get(p, "_SUCCESS"))
 
-  private val names = Seq("ngram", "minhash", "simhash", "clusters", "ann_brute",
+  /** The goldens `ensure` writes, one dir each under `golden_ops/<sf>/`. */
+  val names = Seq("ngram", "minhash", "simhash", "clusters", "ann_brute",
     "ann_lsh", "ann_ivf", "ann_ivf_km", "ann_q8", "embdup", "media",
     "decontam", "packing", "chunkpack", "manifest", "semdedup", "bpe", "lm",
     "bpeenc", "nb", "dsir", "moji", "frames", "srckl", "bm25", "phash",

@@ -9,10 +9,15 @@ engine output at two parallelism levels is the engine-wide payoff of the
 integer-micro-unit / content-hash / total-order determinism discipline.
 A query present in only one dump is a mismatch: a gate dropped on one
 side must fail the comparison, not shrink it.
+
+When both dumps carry `oracle_sql.json`, every oracle's SQL text is
+compared too: an oracle that differs, or exists in only one dump, is a
+mismatch.
 """
 import sys
 import os
 import glob
+import json
 
 import pandas as pd
 
@@ -29,18 +34,31 @@ def canon(qdir: str) -> str:
 def queries(d: str) -> set:
     return {n for n in os.listdir(d) if os.path.isdir(os.path.join(d, n))}
 
-a_names, b_names = queries(a_dir), queries(b_dir)
-names = sorted(a_names | b_names)
-mism = 0
-for n in names:
-    if n not in b_names:
-        print(f"MISSING {n} (only in {a_dir})")
-    elif n not in a_names:
-        print(f"MISSING {n} (only in {b_dir})")
-    elif canon(os.path.join(a_dir, n)) == canon(os.path.join(b_dir, n)):
-        continue
-    else:
-        print(f"MISMATCH {n}")
-    mism += 1
-print(f"{len(names) - mism}/{len(names)} queries bit-identical, {mism} mismatches")
+def compare(what: str, a_names, b_names, same, label: str) -> int:
+    """Print every name missing from one side or differing; return their count."""
+    names = sorted(set(a_names) | set(b_names))
+    mism = 0
+    for n in names:
+        if n not in b_names:
+            print(f"{what}MISSING {n} (only in {a_dir})")
+        elif n not in a_names:
+            print(f"{what}MISSING {n} (only in {b_dir})")
+        elif same(n):
+            continue
+        else:
+            print(f"{what}MISMATCH {n}")
+        mism += 1
+    print(f"{len(names) - mism}/{len(names)} {label}, {mism} mismatches")
+    return mism
+
+mism = compare("", queries(a_dir), queries(b_dir),
+               lambda n: canon(os.path.join(a_dir, n)) == canon(os.path.join(b_dir, n)),
+               "queries bit-identical")
+
+a_sql, b_sql = (os.path.join(d, "oracle_sql.json") for d in (a_dir, b_dir))
+if os.path.exists(a_sql) and os.path.exists(b_sql):
+    with open(a_sql) as fa, open(b_sql) as fb:
+        a_or, b_or = json.load(fa), json.load(fb)
+    mism += compare("ORACLE ", a_or, b_or, lambda n: a_or[n] == b_or[n],
+                    "oracles identical")
 sys.exit(1 if mism else 0)
