@@ -229,7 +229,7 @@ object SparkEntry {
         "CAST(count(*) FILTER (WHERE media_ref != '') AS BIGINT) AS n_media, " +
         "CAST(count(DISTINCT kind) AS BIGINT) AS n_kinds, " +
         "CAST(sum(length(text)) AS BIGINT) AS sum_text_chars " +
-        "FROM read_parquet('/root/repo/data/golden_spans/sf0.01/*.parquet') GROUP BY 1") { (s, dir) =>
+        s"FROM read_parquet('${Corpus.Root}/golden_spans/sf0.01/*.parquet') GROUP BY 1") { (s, dir) =>
       extracted(s, dir).select(col("doc_id"),
         size(col("spans")).cast("long").as("n_spans"),
         size(filter(col("spans"), x => x.getField("media_ref") =!= ""))
@@ -278,7 +278,7 @@ object SparkEntry {
       // docs with zero spans drop out of both sides. A doc with a malformed
       // break number bills as the one failed page the engine makes of it,
       // where this CAST would raise; the corpus plants none
-      "WITH sp AS (SELECT doc_id, unnest(spans) AS s FROM read_parquet('/root/repo/data/corpus/sf0.01/*.parquet')), " +
+      s"WITH sp AS (SELECT doc_id, unnest(spans) AS s FROM read_parquet('${Corpus.Root}/corpus/sf0.01/*.parquet')), " +
         "brk AS (SELECT doc_id, s.\"offset\" AS off, CAST(trim(CASE WHEN s.text LIKE 'page:%' THEN substr(s.text, 6) ELSE s.text END) AS BIGINT) AS pno FROM sp WHERE s.kind = 'page_break'), " +
         "firstbrk AS (SELECT doc_id, min(off) AS first_off FROM brk GROUP BY doc_id), " +
         "imp AS (SELECT sp.doc_id, CAST(1 AS BIGINT) AS pno FROM sp LEFT JOIN firstbrk f ON sp.doc_id = f.doc_id " +
@@ -334,7 +334,7 @@ object SparkEntry {
         "CAST(count(*) FILTER (WHERE kind = 'heading') AS BIGINT) AS n_heading, " +
         "CAST(count(*) FILTER (WHERE kind = 'media') AS BIGINT) AS n_media, " +
         "CAST(coalesce(sum(length(text)), 0) AS BIGINT) AS main_chars " +
-        "FROM read_parquet('/root/repo/data/golden_web/sf0.01/*.parquet') GROUP BY doc_id") { (s, dir) =>
+        s"FROM read_parquet('${Corpus.Root}/golden_web/sf0.01/*.parquet') GROUP BY doc_id") { (s, dir) =>
       import s.implicits._
       val sf = Corpus.sfName(dir)
       s.read.parquet(Corpus.ensureWeb(s, sf))
@@ -384,7 +384,7 @@ object SparkEntry {
         "CAST(count(*) FILTER (WHERE from_content) AS BIGINT) AS n_content_refs, " +
         "CAST(count(*) FILTER (WHERE NOT nofollow) AS BIGINT) AS n_follow_refs, " +
         "CAST(count(DISTINCT doc_id) AS BIGINT) AS n_pages " +
-        "FROM read_parquet('/root/repo/data/golden_web_links/sf0.01/*.parquet') GROUP BY href") { (s, dir) =>
+        s"FROM read_parquet('${Corpus.Root}/golden_web_links/sf0.01/*.parquet') GROUP BY href") { (s, dir) =>
       import s.implicits._
       val sf = Corpus.sfName(dir)
       val perPage = s.read.parquet(Corpus.ensureWebLinks(s, sf))
@@ -512,8 +512,8 @@ object SparkEntry {
       // division, matching the engine's `div`
       "WITH b AS (SELECT m.doc_id, regexp_extract(m.url, '^https://([^/]+)', 1) AS host, " +
         "t.is_content, length(replace(t.text, ' ', '')) >= 80 AS base_keep " +
-        "FROM read_parquet('/root/repo/data/golden_web_blocks/sf0.01/*.parquet') t " +
-        "JOIN read_parquet('/root/repo/data/golden_web_meta/sf0.01/*.parquet') m USING (doc_id)), " +
+        s"FROM read_parquet('${Corpus.Root}/golden_web_blocks/sf0.01/*.parquet') t " +
+        s"JOIN read_parquet('${Corpus.Root}/golden_web_meta/sf0.01/*.parquet') m USING (doc_id)), " +
         "c AS (SELECT host, CAST(count(*) AS BIGINT) AS n_blocks, " +
         "CAST(count(*) FILTER (WHERE base_keep AND is_content) AS BIGINT) AS tp, " +
         "CAST(count(*) FILTER (WHERE base_keep AND NOT is_content) AS BIGINT) AS fp, " +
@@ -569,7 +569,7 @@ object SparkEntry {
       // cross join for the four operating points, identical integer score
       // arithmetic
       "WITH b AS (SELECT t.is_content, length(replace(t.text, ' ', '')) AS nws " +
-        "FROM read_parquet('/root/repo/data/golden_web_blocks/sf0.01/*.parquet') t), " +
+        s"FROM read_parquet('${Corpus.Root}/golden_web_blocks/sf0.01/*.parquet') t), " +
         "c AS (SELECT th.threshold, CAST(count(*) AS BIGINT) AS n_blocks, " +
         "CAST(count(*) FILTER (WHERE nws >= th.threshold AND is_content) AS BIGINT) AS tp, " +
         "CAST(count(*) FILTER (WHERE nws >= th.threshold AND NOT is_content) AS BIGINT) AS fp, " +
@@ -627,9 +627,9 @@ object SparkEntry {
       // template rollup over the same planted truth: per-(host, block text)
       // page counts over ≥ 5 pages, with the content-block tally the plant
       // decided at layout time
-      "WITH b AS (SELECT doc_id, text, is_content FROM read_parquet('/root/repo/data/golden_web_blocks/sf0.01/*.parquet') WHERE text <> ''), " +
+      s"WITH b AS (SELECT doc_id, text, is_content FROM read_parquet('${Corpus.Root}/golden_web_blocks/sf0.01/*.parquet') WHERE text <> ''), " +
         "m AS (SELECT doc_id, split_part(replace(url, 'https://', ''), '/', 1) AS host " +
-        "FROM read_parquet('/root/repo/data/golden_web_meta/sf0.01/*.parquet')), " +
+        s"FROM read_parquet('${Corpus.Root}/golden_web_meta/sf0.01/*.parquet')), " +
         "p AS (SELECT m.host, b.text, b.doc_id, count(*) AS nb, " +
         "count(*) FILTER (WHERE b.is_content) AS nc " +
         "FROM b JOIN m USING (doc_id) GROUP BY 1, 2, 3) " +
@@ -673,14 +673,14 @@ object SparkEntry {
       // page, then host aggregate) — every generated page plants at least one
       // span and one chrome link, so the inner joins lose nothing
       "WITH m AS (SELECT doc_id, split_part(replace(url, 'https://', ''), '/', 1) AS host, noindex " +
-        "FROM read_parquet('/root/repo/data/golden_web_meta/sf0.01/*.parquet')), " +
+        s"FROM read_parquet('${Corpus.Root}/golden_web_meta/sf0.01/*.parquet')), " +
         "s AS (SELECT doc_id, count(*) AS n_spans, " +
         "count(*) FILTER (WHERE kind = 'media') AS n_media, " +
         "coalesce(sum(length(text)), 0) AS chars " +
-        "FROM read_parquet('/root/repo/data/golden_web/sf0.01/*.parquet') GROUP BY doc_id), " +
+        s"FROM read_parquet('${Corpus.Root}/golden_web/sf0.01/*.parquet') GROUP BY doc_id), " +
         "l AS (SELECT doc_id, count(*) FILTER (WHERE from_content) AS n_content, " +
         "count(*) FILTER (WHERE NOT nofollow) AS n_follow " +
-        "FROM read_parquet('/root/repo/data/golden_web_links/sf0.01/*.parquet') GROUP BY doc_id) " +
+        s"FROM read_parquet('${Corpus.Root}/golden_web_links/sf0.01/*.parquet') GROUP BY doc_id) " +
         "SELECT m.host, CAST(count(*) AS BIGINT) AS n_pages, " +
         "CAST(count(*) FILTER (WHERE m.noindex) AS BIGINT) AS n_noindex, " +
         "CAST(sum(s.n_spans) AS BIGINT) AS n_spans, " +
@@ -739,7 +739,7 @@ object SparkEntry {
       "SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS total_pages, " +
         "CAST(count(*) AS BIGINT) AS total_spans, " +
         "CAST(0 AS BIGINT) AS total_failures " +
-        "FROM read_parquet('/root/repo/data/golden_web/sf0.01/*.parquet')") { (s, dir) =>
+        s"FROM read_parquet('${Corpus.Root}/golden_web/sf0.01/*.parquet')") { (s, dir) =>
       Gates.webMetricsTotals(s, dir)
     },
     // two-phase AvailableNow streaming ingest of the raw crawl through ONE
@@ -764,7 +764,7 @@ object SparkEntry {
       // (kind/text/media_ref joined by control chars in ord order) → md5
       // groups; the planted re-posts land in n_docs=2 groups
       "WITH sig AS (SELECT doc_id, string_agg(kind || chr(31) || text || chr(31) || media_ref, chr(30) ORDER BY ord) AS s " +
-        "FROM read_parquet('/root/repo/data/golden_web/sf0.01/*.parquet') GROUP BY doc_id) " +
+        s"FROM read_parquet('${Corpus.Root}/golden_web/sf0.01/*.parquet') GROUP BY doc_id) " +
         "SELECT md5(s) AS content_md5, CAST(count(*) AS BIGINT) AS n_docs, min(doc_id) AS keep_id " +
         "FROM sig GROUP BY md5(s)") { (s, dir) =>
       import s.implicits._
@@ -796,7 +796,7 @@ object SparkEntry {
       // recover exactly this set (no band luck: the posting-list path is
       // deterministic)
       "SELECT CAST(substr(dup_src, 5) AS BIGINT) AS a, CAST(substr(doc_id, 5) AS BIGINT) AS b " +
-        "FROM read_parquet('/root/repo/data/golden_web_meta/sf0.01/*.parquet') WHERE dup_kind <> ''") { (s, dir) =>
+        s"FROM read_parquet('${Corpus.Root}/golden_web_meta/sf0.01/*.parquet') WHERE dup_kind <> ''") { (s, dir) =>
       import s.implicits._
       val sf = Corpus.sfName(dir)
       val sigs = s.read.parquet(Corpus.ensureWeb(s, sf))
@@ -837,12 +837,12 @@ object SparkEntry {
     // publisher's opt-out, honored before any content work).
     Gate.of("q_web_indexable",
       // noindex admission rollup: planted flags x planted span counts
-      "WITH s AS (SELECT doc_id, count(*) AS n FROM read_parquet('/root/repo/data/golden_web/sf0.01/*.parquet') GROUP BY doc_id) " +
+      s"WITH s AS (SELECT doc_id, count(*) AS n FROM read_parquet('${Corpus.Root}/golden_web/sf0.01/*.parquet') GROUP BY doc_id) " +
         "SELECT CAST(count(*) AS BIGINT) AS total_pages, " +
         "CAST(count(*) FILTER (WHERE noindex) AS BIGINT) AS n_noindex, " +
         "CAST(count(*) FILTER (WHERE NOT noindex) AS BIGINT) AS n_indexable, " +
         "CAST(coalesce(sum(n) FILTER (WHERE NOT noindex), 0) AS BIGINT) AS indexable_spans " +
-        "FROM read_parquet('/root/repo/data/golden_web_meta/sf0.01/*.parquet') m JOIN s USING (doc_id)") { (s, dir) =>
+        s"FROM read_parquet('${Corpus.Root}/golden_web_meta/sf0.01/*.parquet') m JOIN s USING (doc_id)") { (s, dir) =>
       import s.implicits._
       val sf = Corpus.sfName(dir)
       s.read.parquet(Corpus.ensureWebMeta(s, sf))
@@ -877,7 +877,7 @@ object SparkEntry {
       "WITH p AS (SELECT doc_id, url, " +
         "regexp_extract(url, '^https://([^/]+)', 1) AS host, " +
         "regexp_extract(url, '^https://[^/]+(/.*)$', 1) AS path " +
-        "FROM read_parquet('/root/repo/data/web/sf0.01/*.parquet')) " +
+        s"FROM read_parquet('${Corpus.Root}/web/sf0.01/*.parquet')) " +
         "SELECT doc_id, url, " +
         "CASE WHEN host = 'repost-archive.example' THEN path LIKE '/p/1%' " +
         "WHEN host = 'portal-3.law.example' THEN path NOT LIKE '%3' " +
@@ -903,7 +903,7 @@ object SparkEntry {
       // The traps (stale.xml, cross-host entries) are correctly ABSENT here
       // -- if the engine leaked them, rows/hash break.
       "WITH crawled AS (SELECT url, CAST(regexp_extract(url, '([0-9]+)$', 1) AS BIGINT) AS id " +
-        "FROM read_parquet('/root/repo/data/web/sf0.01/*.parquet')), " +
+        s"FROM read_parquet('${Corpus.Root}/web/sf0.01/*.parquet')), " +
         "frontier AS (" +
         "SELECT 'https://portal-' || k || '.law.example/case/' || CAST(900000000 + k*10 + j AS VARCHAR) AS url, " +
         "900000000 + k*10 + j AS id " +
@@ -942,9 +942,9 @@ object SparkEntry {
         "regexp_extract(url, '^https://([^/]+)', 1) AS host, " +
         "regexp_extract(url, '^https://[^/]+(/.*)$', 1) AS path, " +
         "CAST(regexp_extract(url, '([0-9]+)$', 1) AS BIGINT) AS id " +
-        "FROM read_parquet('/root/repo/data/web/sf0.01/*.parquet')), " +
-        "m AS (SELECT doc_id, noindex, soft404 FROM read_parquet('/root/repo/data/golden_web_meta/sf0.01/*.parquet')), " +
-        "sp AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM read_parquet('/root/repo/data/golden_web/sf0.01/*.parquet') GROUP BY 1), " +
+        s"FROM read_parquet('${Corpus.Root}/web/sf0.01/*.parquet')), " +
+        s"m AS (SELECT doc_id, noindex, soft404 FROM read_parquet('${Corpus.Root}/golden_web_meta/sf0.01/*.parquet')), " +
+        s"sp AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM read_parquet('${Corpus.Root}/golden_web/sf0.01/*.parquet') GROUP BY 1), " +
         "j AS (SELECT p.host, " +
         "CASE WHEN p.host = 'repost-archive.example' THEN p.path LIKE '/p/1%' " +
         "WHEN p.host = 'portal-3.law.example' THEN p.path NOT LIKE '%3' " +
@@ -1003,10 +1003,10 @@ object SparkEntry {
       // source's number); resolution joins the crawl's own /case/ urls
       "WITH cites AS (SELECT doc_id, CAST(regexp_extract(text, '2026가합([0-9]+)호', 1) AS BIGINT) AS cited, " +
         "CAST(count(*) AS BIGINT) AS mentions " +
-        "FROM read_parquet('/root/repo/data/golden_web/sf0.01/*.parquet') " +
+        s"FROM read_parquet('${Corpus.Root}/golden_web/sf0.01/*.parquet') " +
         "WHERE kind <> 'media' AND regexp_matches(text, '2026가합[0-9]+호') GROUP BY 1, 2), " +
         "targets AS (SELECT CAST(regexp_extract(url, '/case/([0-9]+)$', 1) AS BIGINT) AS cited, doc_id AS target_id " +
-        "FROM read_parquet('/root/repo/data/web/sf0.01/*.parquet') WHERE regexp_matches(url, '/case/[0-9]+$')) " +
+        s"FROM read_parquet('${Corpus.Root}/web/sf0.01/*.parquet') WHERE regexp_matches(url, '/case/[0-9]+$$')) " +
         "SELECT c.doc_id, c.cited, c.mentions, coalesce(t.target_id, '') AS target_id, " +
         "coalesce(t.target_id = c.doc_id, FALSE) AS self_cite " +
         "FROM cites c LEFT JOIN targets t USING (cited)") { (s, dir) =>
@@ -1027,7 +1027,7 @@ object SparkEntry {
       // files are rendered from the same per-doc generator, so the range-
       // split reader must reproduce every row byte for byte, exactly once
       "SELECT doc_id, url, md5(html) AS html_md5 " +
-        "FROM read_parquet('/root/repo/data/web/sf0.01/*.parquet')") { (s, dir) =>
+        s"FROM read_parquet('${Corpus.Root}/web/sf0.01/*.parquet')") { (s, dir) =>
       val sf = Corpus.sfName(dir)
       val warcDir = Corpus.ensureWarc(s, sf)
       graft.sources.Warc.readPages(s, warcDir, maxSplitBytes = 256L << 10)
@@ -1047,7 +1047,7 @@ object SparkEntry {
       // canonicals are hygiene, not edges); the resolved target is the
       // planted source, and content equality holds iff the re-post is exact
       "SELECT doc_id, dup_src AS canonical_id, dup_kind = 'exact' AS same_content " +
-        "FROM read_parquet('/root/repo/data/golden_web_meta/sf0.01/*.parquet') " +
+        s"FROM read_parquet('${Corpus.Root}/golden_web_meta/sf0.01/*.parquet') " +
         "WHERE canonical <> '' AND canonical <> url") { (s, dir) =>
       import s.implicits._
       val sf = Corpus.sfName(dir)
@@ -1080,7 +1080,7 @@ object SparkEntry {
       // pointers (heads = members with no prev), restating head / position /
       // length with zero knowledge of the engine's pointer doubling
       "WITH RECURSIVE m AS (SELECT doc_id, url, prev_url, next_url " +
-        "FROM read_parquet('/root/repo/data/golden_web_meta/sf0.01/*.parquet') " +
+        s"FROM read_parquet('${Corpus.Root}/golden_web_meta/sf0.01/*.parquet') " +
         "WHERE prev_url <> '' OR next_url <> ''), " +
         "chain AS (" +
         "SELECT doc_id, url, next_url, url AS head_url, CAST(0 AS BIGINT) AS pos " +
@@ -1108,7 +1108,7 @@ object SparkEntry {
       // reciprocal clusters (one-sided plants get none) — admitting a
       // one-sided declarer or dropping a validated member breaks the hash
       "SELECT doc_id, alt_group AS grp, alt_lang AS lang " +
-        "FROM read_parquet('/root/repo/data/golden_web_meta/sf0.01/*.parquet') " +
+        s"FROM read_parquet('${Corpus.Root}/golden_web_meta/sf0.01/*.parquet') " +
         "WHERE alt_group <> ''") { (s, dir) =>
       import s.implicits._
       val sf = Corpus.sfName(dir)
@@ -1128,7 +1128,7 @@ object SparkEntry {
       // title (the generator emits it JSON-escaped — the gate thereby pins
       // the engine's unescape round-trip too)
       "SELECT doc_id, 'NewsArticle' AS ld_type, title AS headline, published " +
-        "FROM read_parquet('/root/repo/data/golden_web_meta/sf0.01/*.parquet') " +
+        s"FROM read_parquet('${Corpus.Root}/golden_web_meta/sf0.01/*.parquet') " +
         "WHERE published <> ''") { (s, dir) =>
       import s.implicits._
       val sf = Corpus.sfName(dir)
@@ -1148,7 +1148,7 @@ object SparkEntry {
       // chain-document truth: the recursive pointer walk joined to the
       // planted span truth, renumbered by the same (pos, ord) total order
       "WITH RECURSIVE m AS (SELECT doc_id, url, prev_url, next_url " +
-        "FROM read_parquet('/root/repo/data/golden_web_meta/sf0.01/*.parquet') " +
+        s"FROM read_parquet('${Corpus.Root}/golden_web_meta/sf0.01/*.parquet') " +
         "WHERE prev_url <> '' OR next_url <> ''), " +
         "chain AS (" +
         "SELECT doc_id, url, next_url, url AS head_url, CAST(0 AS BIGINT) AS pos " +
@@ -1158,7 +1158,7 @@ object SparkEntry {
         "FROM chain c JOIN m ON m.url = c.next_url) " +
         "SELECT c.head_url, s.kind, s.text, s.media_ref, " +
         "CAST(row_number() OVER (PARTITION BY c.head_url ORDER BY c.pos, s.ord) - 1 AS BIGINT) AS ord " +
-        "FROM chain c JOIN read_parquet('/root/repo/data/golden_web/sf0.01/*.parquet') s " +
+        s"FROM chain c JOIN read_parquet('${Corpus.Root}/golden_web/sf0.01/*.parquet') s " +
         "ON s.doc_id = c.doc_id") { (s, dir) =>
       import s.implicits._
       val sf = Corpus.sfName(dir)
@@ -1181,7 +1181,7 @@ object SparkEntry {
       // language-pick truth: the preferred-then-lexicographic total order
       // restated over the planted reciprocal-group truth
       "SELECT alt_group AS grp, doc_id, alt_lang AS lang " +
-        "FROM read_parquet('/root/repo/data/golden_web_meta/sf0.01/*.parquet') " +
+        s"FROM read_parquet('${Corpus.Root}/golden_web_meta/sf0.01/*.parquet') " +
         "WHERE alt_group <> '' " +
         "QUALIFY row_number() OVER (PARTITION BY alt_group " +
         "ORDER BY (alt_lang <> 'ko'), alt_lang, doc_id) = 1") { (s, dir) =>
@@ -1201,7 +1201,7 @@ object SparkEntry {
       // freshness truth: planted publication dates bucketed by (host, month)
       "SELECT regexp_extract(url, '^https://([^/]+)', 1) AS host, " +
         "substr(published, 1, 7) AS month, CAST(count(*) AS BIGINT) AS n_pages " +
-        "FROM read_parquet('/root/repo/data/golden_web_meta/sf0.01/*.parquet') " +
+        s"FROM read_parquet('${Corpus.Root}/golden_web_meta/sf0.01/*.parquet') " +
         "WHERE published <> '' GROUP BY 1, 2") { (s, dir) =>
       import s.implicits._
       val sf = Corpus.sfName(dir)
@@ -1232,7 +1232,7 @@ object SparkEntry {
       "WITH m AS (SELECT doc_id, url, prev_url, next_url, alt_group, published, " +
         "CAST(substr(doc_id, 5) AS BIGINT) AS id, " +
         "regexp_extract(url, '^https://([^/]+)', 1) AS host " +
-        "FROM read_parquet('/root/repo/data/golden_web_meta/sf0.01/*.parquet')), " +
+        s"FROM read_parquet('${Corpus.Root}/golden_web_meta/sf0.01/*.parquet')), " +
         "tot AS (SELECT count(*) AS docs FROM m), " +
         "d AS (SELECT m.*, CASE WHEN id % 73 IN (4, 5) THEN id - (id % 73 - 4) " +
         "ELSE -1 END AS base FROM m), " +
@@ -1294,7 +1294,7 @@ object SparkEntry {
     },
     // Iceberg VERSION-AS-OF analog: time-travel scan of snapshot 1 only
     Gate.of("q_snapshot_asof",
-      "SELECT doc_id, kind, text, media_ref, ord FROM read_parquet('/root/repo/data/golden_spans/sf0.01/*.parquet') " +
+      s"SELECT doc_id, kind, text, media_ref, ord FROM read_parquet('${Corpus.Root}/golden_spans/sf0.01/*.parquet') " +
         "WHERE substr(doc_id, 13, 1) IN ('0','2','4','6','8')") { (s, dir) =>
       Gates.snapshotAsOf(s, dir)
     },
@@ -1682,8 +1682,8 @@ object SparkEntry {
     // the verify step (found ⊆ truth), recall is what (k, bands) trades;
     // the oracle recomputes the same confusion counts over the two goldens
     Gate.onOpsGolden("q_near_dup_eval",
-      "WITH t AS (SELECT a, b FROM read_parquet('/root/repo/data/golden_ops/sf0.01/ngram/*.parquet')), " +
-        "f AS (SELECT a, b FROM read_parquet('/root/repo/data/golden_ops/sf0.01/minhash/*.parquet')), " +
+      s"WITH t AS (SELECT a, b FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/ngram/*.parquet')), " +
+        s"f AS (SELECT a, b FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/minhash/*.parquet')), " +
         "n AS (SELECT (SELECT count(*) FROM t) AS n_true, " +
         "(SELECT count(*) FROM f) AS n_found, " +
         "(SELECT count(*) FROM t JOIN f USING (a, b)) AS n_correct) " +
@@ -1698,7 +1698,7 @@ object SparkEntry {
     // set (small, the dedup stage's output) is explicitly broadcast into
     // the doc-metadata joins, so the corpus-sized side never reshuffles.
     Gate.onOpsGolden("q_dup_source_matrix",
-      "WITH p AS (SELECT a, b FROM read_parquet('/root/repo/data/golden_ops/sf0.01/minhash/*.parquet')), " +
+      s"WITH p AS (SELECT a, b FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/minhash/*.parquet')), " +
         "j AS (SELECT least(da.source, db.source) AS source_lo, greatest(da.source, db.source) AS source_hi " +
         "FROM p JOIN documents da ON p.a = da.doc_id JOIN documents db ON p.b = db.doc_id) " +
         "SELECT source_lo, source_hi, CAST(count(*) AS BIGINT) AS n_pairs FROM j GROUP BY 1, 2") { (s, dir) =>
@@ -1841,7 +1841,7 @@ object SparkEntry {
       "SELECT d.source, CAST(count(*) AS BIGINT) AS n_docs, " +
         "CAST(sum(p.rank_micro) AS BIGINT) AS sum_rank_micro, " +
         "CAST(max(p.rank_micro) AS BIGINT) AS max_rank_micro " +
-        "FROM read_parquet('/root/repo/data/golden_ops/sf0.01/pagerank/*.parquet') p " +
+        s"FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/pagerank/*.parquet') p " +
         "JOIN documents d USING (doc_id) GROUP BY 1") { (s, dir) =>
       val docs = docsTable(s, dir)
       val pr = Graph.pageRank(docs.select(col("doc_id")), Graph.linkEdges(docs))
@@ -2185,7 +2185,7 @@ object SparkEntry {
       // plain ANSI aggregates (integer // division == Spark div on the
       // non-negative sums here)
       "WITH e AS (SELECT doc_id, n_words, n_pieces " +
-        "FROM read_parquet('/root/repo/data/golden_ops/sf0.01/bpeenc/*.parquet')), " +
+        s"FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/bpeenc/*.parquet')), " +
         "s AS (SELECT CAST(doc_id AS BIGINT) AS doc_id, source, " +
         "CAST(length(text) AS BIGINT) AS n_chars FROM documents) " +
         "SELECT source, CAST(count(*) AS BIGINT) AS n_docs, " +
@@ -2296,7 +2296,7 @@ object SparkEntry {
     // quality-aware canonical keeper: within each minhash near-dup cluster
     // keep the LONGEST member (ties → lowest id), not the lowest id
     Gate.onOpsGolden("q_dedup_best_keeper",
-      "WITH c AS (SELECT doc_id, cluster_id FROM read_parquet('/root/repo/data/golden_ops/sf0.01/clusters/*.parquet')), " +
+      s"WITH c AS (SELECT doc_id, cluster_id FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/clusters/*.parquet')), " +
         "j AS (SELECT c.doc_id, c.cluster_id, length(d.text) AS sc FROM c JOIN documents d USING (doc_id)), " +
         "r AS (SELECT doc_id, cluster_id, row_number() OVER (PARTITION BY cluster_id ORDER BY sc DESC, doc_id ASC) AS rn FROM j) " +
         "SELECT doc_id, cluster_id, CAST(CASE WHEN rn = 1 THEN 1 ELSE 0 END AS BIGINT) AS keep FROM r") { (s, dir) =>
@@ -2397,7 +2397,7 @@ object SparkEntry {
     // ranked candidates; DuckDB recomputes relevance from raw text over
     // the bm25 golden
     Gate.onOpsGolden("q_retrieval_mrr",
-      "WITH r AS (SELECT q_id, doc_id, rank FROM read_parquet('/root/repo/data/golden_ops/sf0.01/bm25/*.parquet')), " +
+      s"WITH r AS (SELECT q_id, doc_id, rank FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/bm25/*.parquet')), " +
         "q AS (SELECT * FROM (VALUES (0, 'join hash batch'), (1, 'customer filter'), " +
         "(2, 'scan column row'), (3, 'slow small join'), (4, 'zzz_absent'), " +
         "(5, 'hash hash join')) t(q_id, qtext)), " +
@@ -2467,8 +2467,8 @@ object SparkEntry {
     // deterministically from the corpus here); the DuckDB oracle
     // recomputes the whole fusion in ANSI SQL over the two goldens
     Gate.onOpsGolden("q_hybrid_rrf_topk",
-      "WITH s AS (SELECT q_id, doc_id, rank FROM read_parquet('/root/repo/data/golden_ops/sf0.01/bm25/*.parquet')), " +
-        "d AS (SELECT q_id, n_id AS doc_id, rank FROM read_parquet('/root/repo/data/golden_ops/sf0.01/ann_brute/*.parquet')), " +
+      s"WITH s AS (SELECT q_id, doc_id, rank FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/bm25/*.parquet')), " +
+        s"d AS (SELECT q_id, n_id AS doc_id, rank FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/ann_brute/*.parquet')), " +
         "u AS (SELECT q_id, doc_id, 1000000 // (60 + rank) AS c FROM s " +
         "UNION ALL SELECT q_id, doc_id, 1000000 // (60 + rank) AS c FROM d), " +
         "f AS (SELECT q_id, doc_id, sum(c) AS rrf_micro FROM u GROUP BY 1, 2), " +
@@ -2520,7 +2520,7 @@ object SparkEntry {
         "len(list_filter(toks, x -> list_contains(['slow', 'broken', 'stale'], lower(x)))) AS nb FROM t), " +
         "g AS (SELECT doc_id, n, sumlen * 1000 // greatest(n, 1) AS meanpm, " +
         "CASE WHEN n > 0 THEN nb * 1000 // n ELSE 0 END AS blockedpm FROM s), " +
-        "m AS (SELECT doc_id, nb_label FROM read_parquet('/root/repo/data/golden_ops/sf0.01/nb/*.parquet')) " +
+        s"m AS (SELECT doc_id, nb_label FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/nb/*.parquet')) " +
         "SELECT CAST(g.doc_id AS BIGINT) AS doc_id, " +
         "(m.nb_label = 1 AND g.blockedpm <= 25 AND g.n >= 10 AND g.meanpm BETWEEN 3000 AND 10000) AS keep " +
         "FROM g JOIN m ON g.doc_id = m.doc_id") { (s, dir) =>
@@ -2574,7 +2574,7 @@ object SparkEntry {
     // bucket rule in SQL over the lm golden
     Gate.onOpsGolden("q_ccnet_buckets",
       "WITH lp AS (SELECT doc_id, (lp_micro_per_tok + 100000000) // 1000 AS lp_bin " +
-        "FROM read_parquet('/root/repo/data/golden_ops/sf0.01/lm/*.parquet')), " +
+        s"FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/lm/*.parquet')), " +
         "s AS (SELECT l.doc_id, d.source, l.lp_bin FROM lp l JOIN documents d USING (doc_id)), " +
         "rle AS (SELECT source, lp_bin, count(*) AS cnt FROM s GROUP BY 1, 2), " +
         "n AS (SELECT source, sum(cnt) AS n_docs FROM rle GROUP BY 1), " +
@@ -2727,7 +2727,7 @@ object SparkEntry {
     // gated individually elsewhere, composed here under one oracle.
     Gate.onOpsGolden("q_training_manifest",
       "WITH s AS (SELECT seq_id, count(*) AS n_items, sum(n_tokens) AS sum_tokens " +
-        "FROM read_parquet('/root/repo/data/golden_ops/sf0.01/manifest/*.parquet') GROUP BY 1), " +
+        s"FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/manifest/*.parquet') GROUP BY 1), " +
         "h AS (SELECT seq_id, n_items, sum_tokens, md5('shard:' || seq_id) AS ord FROM s) " +
         "SELECT seq_id, CAST(n_items AS BIGINT) AS n_items, CAST(sum_tokens AS BIGINT) AS sum_tokens, " +
         "CAST(('0x' || substr(ord, 1, 8))::BIGINT % 8 AS BIGINT) AS shard, " +
@@ -2749,7 +2749,7 @@ object SparkEntry {
     // deterministic training-order shard manifest over the packed sequences
     Gate.onOpsGolden("q_train_shards",
       "WITH s AS (SELECT seq_id, count(*) AS n_items, sum(n_tokens) AS sum_tokens " +
-        "FROM read_parquet('/root/repo/data/golden_ops/sf0.01/packing/*.parquet') GROUP BY 1), " +
+        s"FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/packing/*.parquet') GROUP BY 1), " +
         "h AS (SELECT seq_id, n_items, sum_tokens, md5('shard:' || seq_id) AS ord FROM s) " +
         "SELECT seq_id, CAST(n_items AS BIGINT) AS n_items, CAST(sum_tokens AS BIGINT) AS sum_tokens, " +
         "CAST(('0x' || substr(ord, 1, 8))::BIGINT % 8 AS BIGINT) AS shard, " +
@@ -2836,7 +2836,7 @@ object SparkEntry {
     // anchor/positive/collision skip — the embedding-trainer feed; DuckDB
     // recomputes the whole derivation over the embdup golden
     Gate.onOpsGolden("q_contrastive_pairs",
-      "WITH p AS (SELECT a AS anchor, b AS positive FROM read_parquet('/root/repo/data/golden_ops/sf0.01/embdup/*.parquet')), " +
+      s"WITH p AS (SELECT a AS anchor, b AS positive FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/embdup/*.parquet')), " +
         "nv AS (SELECT count(*) AS n FROM embeddings), " +
         "an AS (SELECT DISTINCT anchor FROM p), " +
         "cand AS (SELECT an.anchor, r.j, " +
@@ -2891,7 +2891,7 @@ object SparkEntry {
       "SELECT media_ref, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs, " +
         "CAST(count(*) AS BIGINT) AS n_spans, CAST(min(n_bytes) AS BIGINT) AS n_bytes, " +
         "min(doc_id) AS keep_doc " +
-        "FROM read_parquet('/root/repo/data/golden_ops/sf0.01/media/*.parquet') GROUP BY 1") { (s, dir) =>
+        s"FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/media/*.parquet') GROUP BY 1") { (s, dir) =>
       val sf = Corpus.sfName(dir)
       Multimodal.mediaReuse(Multimodal.fromCorpus(s, Corpus.ensure(s, sf)))
     },
@@ -2926,7 +2926,7 @@ object SparkEntry {
     Gate.onOpsGolden("q_media_frames",
       "SELECT doc_id, media_ref, CAST(n_frames AS INT) AS n_frames, " +
         "CAST(frame_no AS INT) AS frame_no, frame_md5, pooled_micro " +
-        "FROM read_parquet('/root/repo/data/golden_ops/sf0.01/frames/*.parquet')") { (s, dir) =>
+        s"FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/frames/*.parquet')") { (s, dir) =>
       val sf = Corpus.sfName(dir)
       Multimodal.frameSample(Multimodal.fromCorpus(s, Corpus.ensure(s, sf)))
         .toDF()
