@@ -9,14 +9,27 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.parse.Typo
 
+/** The row-level body of [[FixTyposExpr]], shared by interpreted eval and
+  * generated code: a text the cascade leaves unchanged comes back as the
+  * input `UTF8String` itself, with no re-encode.
+  */
+object TypoRuntime {
+  def fix(in: UTF8String): UTF8String = {
+    val s = in.toString
+    val out = Typo.fixTypos(s)
+    if (out eq s) in else UTF8String.fromString(out)
+  }
+}
+
 /** `fix_typos` as a native Catalyst expression (SURVEY.md §2.10 / §4's
   * optional codegen-friendly hot path).
   *
   * The heavy lifting stays in the pooled `graft.parse.Typo` kernel (compiled
-  * regexes are JVM singletons); `doGenCode` emits a static call so the
-  * expression participates in WHOLE-STAGE CODEGEN instead of falling back to
-  * interpreted eval — preference tier (b) of the custom-operator ladder:
-  * compose built-ins > custom Expression > custom plan node > mapPartitions.
+  * regexes are JVM singletons, matchers are pooled per thread); `doGenCode`
+  * emits a static call to [[TypoRuntime]] so the expression participates in
+  * WHOLE-STAGE CODEGEN instead of falling back to interpreted eval —
+  * preference tier (b) of the custom-operator ladder: compose built-ins >
+  * custom Expression > custom plan node > mapPartitions.
   */
 case class FixTyposExpr(child: Expression) extends UnaryExpression {
   override def dataType: DataType = StringType
@@ -29,11 +42,10 @@ case class FixTyposExpr(child: Expression) extends UnaryExpression {
   override def prettyName: String = "fix_typos"
 
   override def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(Typo.fixTypos(input.asInstanceOf[UTF8String].toString))
+    TypoRuntime.fix(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"UTF8String.fromString(graft.parse.Typo.fixTypos($c.toString()))")
+    defineCodeGen(ctx, ev, c => s"graft.functions.TypoRuntime.fix($c)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -23,10 +23,12 @@ object WebExtraction {
 
   /** Per-page result with partition lineage. `failed` pages carry one
     * `error` span (reference tasks.py:301–314 containment semantics: a
-    * poisoned page becomes a metric tick, never a job abort).
+    * poisoned page becomes a metric tick, never a job abort). The wall time
+    * stays in nanoseconds until [[metrics]] sums it: a page takes well under
+    * a millisecond, so flooring each page to whole ms would count most as 0.
     */
   final case class WebRes(doc_id: String, spans: Seq[OutSpan], failed: Boolean,
-                          part_id: Int, wall_ms: Long)
+                          part_id: Int, wall_ns: Long)
 
   /** Parse raw pages in place (no shuffle). [[MainContent.extract]] is total
     * on any string, so the catch arm is pure containment discipline — it
@@ -41,11 +43,11 @@ object WebExtraction {
         val t0 = System.nanoTime()
         try {
           val spans = MainContent.extract(html)
-          WebRes(id, spans, failed = false, pid, (System.nanoTime() - t0) / 1000000L)
+          WebRes(id, spans, failed = false, pid, System.nanoTime() - t0)
         } catch {
           case scala.util.control.NonFatal(e) =>
             WebRes(id, Seq(OutSpan("error", e.getClass.getSimpleName, "", 0)),
-              failed = true, pid, (System.nanoTime() - t0) / 1000000L)
+              failed = true, pid, System.nanoTime() - t0)
         }
       }
     }
@@ -71,7 +73,7 @@ object WebExtraction {
         count(lit(1)).as("pages_parsed"),
         sum(size(col("spans"))).as("spans_emitted"),
         sum(when(col("failed"), 1L).otherwise(0L)).as("parse_failures"),
-        sum(col("wall_ms")).as("wall_ms"))
+        expr("sum(wall_ns) div 1000000").as("wall_ms"))
       .withColumn("run_id", lit(runId))
       .withColumn("snapshot_id", lit(snapshotId))
       .select("run_id", "snapshot_id", "partition_id", "doc_lo", "doc_hi",

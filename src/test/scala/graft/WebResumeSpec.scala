@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 import graft.model.OutSpan
 import graft.corpus.{CorpusGen, WebGen}
-import graft.pipeline.TableIO
+import graft.pipeline.{TableIO, WebExtraction}
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -72,6 +72,15 @@ class WebResumeSpec extends AnyFunSuite with Matchers {
     m.select("doc_lo").as[String].collect().foreach(_ should startWith("web-"))
     // both snapshots contributed lineage rows
     m.select("snapshot_id").distinct().count() shouldBe 2L
+  }
+
+  test("web metrics sum page nanoseconds before flooring to wall_ms") {
+    // four 600 µs pages: 2.4 ms in all, but 0 if each page were floored first
+    val rows = (0 until 4).map(i => WebExtraction.WebRes(s"web-$i", Seq.empty,
+      failed = false, part_id = 0, wall_ns = 600000L))
+    val m = WebExtraction.metrics(rows.toDS(), "r", "s")
+    m.schema("wall_ms").dataType shouldBe org.apache.spark.sql.types.LongType
+    m.select($"wall_ms").as[Long].collect() shouldBe Array(2L)
   }
 
   test("empty-content pages still commit (resume can never re-extract them forever)") {
