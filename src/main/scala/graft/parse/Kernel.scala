@@ -229,9 +229,35 @@ object Tables {
 object Html {
 
   /** `_escape_html` (html_generator.py:530–537): & first, then < > " '. */
-  def escape(s: String): String =
-    s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-      .replace("\"", "&quot;").replace("'", "&#x27;")
+  def escape(s: String): String = {
+    val sb = new java.lang.StringBuilder(s.length + 16)
+    escape(s, sb)
+    if (sb.length == s.length) s else sb.toString
+  }
+
+  /** [[escape]] appended to `out`. The reference's chained replaces escape
+    * `&` first, so no replacement is escaped again: it is a per-char map.
+    */
+  def escape(s: String, out: java.lang.StringBuilder): Unit = {
+    var from = 0
+    var i = 0
+    while (i < s.length) {
+      val rep = s.charAt(i) match {
+        case '&' => "&amp;"
+        case '<' => "&lt;"
+        case '>' => "&gt;"
+        case '"' => "&quot;"
+        case '\'' => "&#x27;"
+        case _ => null
+      }
+      if (rep != null) {
+        out.append(s, from, i).append(rep)
+        from = i + 1
+      }
+      i += 1
+    }
+    out.append(s, from, s.length)
+  }
 
   /** Size class from line height (font = 0.75·h; thresholds 20/16/10 pt —
     * html_generator.py:408–456). Exact integer forms on 3h.
@@ -249,31 +275,45 @@ object Html {
     * separator rows skipped, cells escaped.
     */
   def mdTableToHtml(md: String, cls: String): String = {
+    val sb = new java.lang.StringBuilder
+    mdTableToHtml(md, cls, sb)
+    sb.toString
+  }
+
+  /** [[mdTableToHtml]] appended to `out`. */
+  def mdTableToHtml(md: String, cls: String, out: java.lang.StringBuilder): Unit = {
     val rows = md.split("\n", -1).iterator
       .map(_.trim)
       .filter(l => l.nonEmpty && SepRow.findFirstIn(l).isEmpty)
-      .map { l =>
-        val stripped = {
-          val a = if (l.startsWith("|")) l.substring(1) else l
-          if (a.endsWith("|")) a.substring(0, a.length - 1) else a
-        }
-        stripped.split("\\|", -1).map(c => escape(c.trim)).toSeq
+    out.append("<table class=\"").append(cls).append("\">")
+    var t = "th"
+    rows.foreach { l =>
+      val a = if (l.startsWith("|")) 1 else 0
+      val b = if (l.length > a && l.endsWith("|")) l.length - 1 else l.length
+      out.append("<tr>")
+      l.substring(a, b).split("\\|", -1).foreach { c =>
+        out.append('<').append(t).append('>')
+        escape(c.trim, out)
+        out.append("</").append(t).append('>')
       }
-      .toSeq
-    if (rows.isEmpty) return s"""<table class="$cls"></table>"""
-    val sb = new StringBuilder(s"""<table class="$cls">""")
-    rows.zipWithIndex.foreach { case (cells, i) =>
-      val t = if (i == 0) "th" else "td"
-      sb.append("<tr>")
-      cells.foreach(c => sb.append(s"<$t>$c</$t>"))
-      sb.append("</tr>")
+      out.append("</tr>")
+      t = "td"
     }
-    sb.append("</table>").toString
+    out.append("</table>")
   }
 
   /** Spacing divs before a text line (html_generator.py:378–406). */
-  def spacingDivs(gap: Int): String =
-    "<div class=\"empty-line\"></div>" * Style.emptyLines(gap)
+  def spacingDivs(gap: Int): String = {
+    val sb = new java.lang.StringBuilder
+    spacingDivs(gap, sb)
+    sb.toString
+  }
+
+  /** [[spacingDivs]] appended to `out`. */
+  def spacingDivs(gap: Int, out: java.lang.StringBuilder): Unit = {
+    var n = Style.emptyLines(gap)
+    while (n > 0) { out.append("<div class=\"empty-line\"></div>"); n -= 1 }
+  }
 }
 
 /** DOM-heuristic boilerplate scoring (north rule; SURVEY.md §7.5).

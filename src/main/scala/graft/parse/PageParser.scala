@@ -25,6 +25,15 @@ object PageParser {
                                  gap: Int = 0, h: Int = 0,
                                  htmlStyle: String = HtmlText.Normal)
 
+  /** Reading order (SPEC.md §4): band, then y, x and input offset. */
+  private val ReadingOrder: Ordering[Keyed] = (a, b) => {
+    var c = Integer.compare(a.band, b.band)
+    if (c == 0) c = Integer.compare(a.y, b.y)
+    if (c == 0) c = Integer.compare(a.x, b.x)
+    if (c == 0) c = Integer.compare(a.offset, b.offset)
+    c
+  }
+
   def parse(pageNo: Int, spans: Seq[InSpan]): PageResult = {
     try parseInner(pageNo, spans)
     catch {
@@ -56,11 +65,7 @@ object PageParser {
 
     spans.foreach { s =>
       s.kind match {
-        case Kind.PdfLine =>
-          val p = s.text.split("\\|", 8)
-          require(p.length == 8, s"bad pdf_line: ${s.text}")
-          lines += Line(p(0).toInt, p(1).toInt, p(2).toInt, p(3).toInt,
-            p(4).toInt, p(5).toInt, p(6).toInt, p(7), s.offset)
+        case Kind.PdfLine => lines += liftLine(s.text, s.offset)
         case Kind.PdfRegion =>
           val p = s.text.split("\\|", 7)
           require(p.length == 7, s"bad pdf_region: ${s.text}")
@@ -158,55 +163,118 @@ object PageParser {
     }
 
     // ---- reading order (SPEC.md §4) ---------------------------------------
-    val ordered = keyed.sortBy(k => (k.band, k.y, k.x, k.offset)).toSeq
-    val out = ordered.zipWithIndex.map { case (k, i) =>
+    val ordered = keyed.sorted(ReadingOrder)
+    val out = Vector.tabulate(ordered.length) { i =>
+      val k = ordered(i)
       OutSpan(k.kind, k.text, k.mediaRef, i)
     }
 
     // ---- page markdown (ocr_engine.py:703–739; SPEC.md §7) ----------------
-    val md = ordered.map { k =>
+    val md = new java.lang.StringBuilder
+    var i = 0
+    while (i < ordered.length) {
+      val k = ordered(i)
+      if (i > 0) md.append("\n\n")
       k.kind match {
-        case Kind.Table | Kind.InvisibleTable => s"\n${k.text}\n"
-        case Kind.Media => s"![${k.text}](${k.mediaRef})"
-        case Kind.H1 => (if (k.indented) "> # " else "# ") + k.text
-        case Kind.H2 => (if (k.indented) "> ## " else "## ") + k.text
-        case _ => (if (k.indented) "> " else "") + k.text
+        case Kind.Table | Kind.InvisibleTable => md.append('\n').append(k.text).append('\n')
+        case Kind.Media => md.append("![").append(k.text).append("](").append(k.mediaRef).append(')')
+        case Kind.H1 => md.append(if (k.indented) "> # " else "# ").append(k.text)
+        case Kind.H2 => md.append(if (k.indented) "> ## " else "## ").append(k.text)
+        case _ => md.append(if (k.indented) "> " else "").append(k.text)
       }
-    }.mkString("\n\n")
+      i += 1
+    }
 
     // ---- page HTML (html_generator.py:304–456; SPEC.md §7b) ---------------
     // Text-line tags come from the HTML-path classifier (detect_text_style,
     // html_generator.py:241–302): h1/h2/h3 headings, `bold` → <strong>
     // paragraph (html_generator.py:357–361), normal → plain paragraph. The
     // class dialect (align-*/indented/size-*) is SPEC.md §7b's restatement.
-    val html = ordered.map { k =>
+    val html = new java.lang.StringBuilder
+    i = 0
+    while (i < ordered.length) {
+      val k = ordered(i)
+      if (i > 0) html.append('\n')
       k.kind match {
-        case Kind.Table => Html.mdTableToHtml(k.text, "ocr-table")
-        case Kind.InvisibleTable => Html.mdTableToHtml(k.text, "invisible-table")
+        case Kind.Table => Html.mdTableToHtml(k.text, "ocr-table", html)
+        case Kind.InvisibleTable => Html.mdTableToHtml(k.text, "invisible-table", html)
         case Kind.Media =>
-          val cap = Html.escape(k.text)
-          s"""<figure><img src="${k.mediaRef}" alt="$cap"/><figcaption>$cap</figcaption></figure>"""
-        case _ if k.band == 3 => s"<p>${Html.escape(k.text)}</p>"
+          html.append("<figure><img src=\"").append(k.mediaRef).append("\" alt=\"")
+          Html.escape(k.text, html)
+          html.append("\"/><figcaption>")
+          Html.escape(k.text, html)
+          html.append("</figcaption></figure>")
+        case _ if k.band == 3 =>
+          html.append("<p>")
+          Html.escape(k.text, html)
+          html.append("</p>")
         case _ => // text line: styled via the html-path classifier
-          val cls = s"align-${k.align}" +
-            (if (k.indented) " indented" else "") + Html.sizeClass(k.h)
-          val body0 = Html.escape(k.plain)
-          val (tag, body) = k.htmlStyle match {
-            case HtmlText.Heading1 | HtmlText.Heading2 | HtmlText.Heading3 =>
-              (k.htmlStyle, body0)
-            case HtmlText.Bold => ("p", s"<strong>$body0</strong>")
-            case _ => ("p", body0)
+          val tag = k.htmlStyle match {
+            case HtmlText.Heading1 | HtmlText.Heading2 | HtmlText.Heading3 => k.htmlStyle
+            case _ => "p"
           }
-          Html.spacingDivs(k.gap) + s"""<$tag class="$cls">$body</$tag>"""
+          val strong = k.htmlStyle == HtmlText.Bold
+          Html.spacingDivs(k.gap, html)
+          html.append('<').append(tag).append(" class=\"align-").append(k.align)
+            .append(if (k.indented) " indented" else "").append(Html.sizeClass(k.h))
+            .append("\">").append(if (strong) "<strong>" else "")
+          Html.escape(k.plain, html)
+          html.append(if (strong) "</strong></" else "</").append(tag).append('>')
       }
-    }.mkString("\n")
+      i += 1
+    }
 
     // page confidence over ALL OCR lines of the page, pre-masking — the
     // reference averages the raw engine output (ocr_engine.py:690–695)
     val confPm = Style.pageConfPm(lines.map(_.confPm).toSeq)
 
-    PageResult(pageNo, out, md, html, parseFailed = false, confPm = confPm)
+    PageResult(pageNo, out, md.toString, html.toString, parseFailed = false, confPm = confPm)
   }
+
+  /** A `pdf_line` payload `y|x|w|h|density|stroke|conf|raw` as a [[Line]].
+    * When the seven numbers are plain runs of 1–9 ASCII digits they are read
+    * in place; any other text takes `split("\\|", 8)` + `toInt`, so it
+    * lifts, or fails, exactly as that does (a sign, a non-ASCII digit, an
+    * overflow or a missing field).
+    */
+  private[graft] def liftLine(text: String, offset: Int): Line = {
+    val y = field(text, 0)
+    val x = next(text, y)
+    val w = next(text, x)
+    val h = next(text, w)
+    val d = next(text, h)
+    val st = next(text, d)
+    val c = next(text, st)
+    if (c < 0) {
+      val p = text.split("\\|", 8)
+      require(p.length == 8, s"bad pdf_line: $text")
+      Line(p(0).toInt, p(1).toInt, p(2).toInt, p(3).toInt,
+        p(4).toInt, p(5).toInt, p(6).toInt, p(7), offset)
+    } else Line(value(y), value(x), value(w), value(h), value(d), value(st), value(c),
+      text.substring(c.toInt + 1), offset)
+  }
+
+  /** The field of 1–9 ASCII digits at `from`, ended by `|`, as
+    * `(value << 32) | (index of that '|')`; -1 for any other field.
+    */
+  private def field(t: String, from: Int): Long = {
+    var v = 0L
+    var i = from
+    while (i < t.length) {
+      val c = t.charAt(i)
+      if (c == '|') return if (i == from) -1L else (v << 32) | i
+      if (c < '0' || c > '9' || i - from == 9) return -1L
+      v = v * 10 + (c - '0')
+      i += 1
+    }
+    -1L
+  }
+
+  /** The field after the one `prev` read, or -1 once a field failed. */
+  private def next(t: String, prev: Long): Long =
+    if (prev < 0) prev else field(t, prev.toInt + 1)
+
+  private def value(f: Long): Int = (f >>> 32).toInt
 }
 
 /** Document-level parse: page split + per-page parse + in-order assembly.
@@ -226,25 +294,26 @@ object DocParser {
     * oracle, the failure counts) sees that same page.
     */
   def splitPages(spans: Seq[InSpan]): Seq[(Int, Seq[InSpan])] = {
-    val sorted = spans.sortBy(_.offset)
+    val sorted = spans.sorted(ByOffset)
     val pages = scala.collection.mutable.LinkedHashMap.empty[Int, scala.collection.mutable.ArrayBuffer[InSpan]]
-    var current = 1
+    var current: scala.collection.mutable.ArrayBuffer[InSpan] = null // page 1 until a break
     var malformed = false
     sorted.foreach { s =>
       if (s.kind == Kind.PageBreak) {
         val n = s.text.stripPrefix("page:").trim.toIntOption.getOrElse(-1)
         if (n < 0) malformed = true
-        else {
-          current = n
-          pages.getOrElseUpdate(current, scala.collection.mutable.ArrayBuffer.empty)
-        }
+        else current = pages.getOrElseUpdate(n, scala.collection.mutable.ArrayBuffer.empty)
       } else {
-        pages.getOrElseUpdate(current, scala.collection.mutable.ArrayBuffer.empty) += s
+        if (current == null)
+          current = pages.getOrElseUpdate(1, scala.collection.mutable.ArrayBuffer.empty)
+        current += s
       }
     }
     if (malformed) MalformedDoc
     else pages.iterator.map { case (n, b) => (n, b.toSeq) }.toSeq
   }
+
+  private val ByOffset: Ordering[InSpan] = (a, b) => Integer.compare(a.offset, b.offset)
 
   /** The split of a doc with a malformed page break: page 0 holding one
     * poisoned line, which fails the page before any parsing.
@@ -252,34 +321,74 @@ object DocParser {
   val MalformedDoc: Seq[(Int, Seq[InSpan])] =
     Seq((0, Seq(InSpan(Kind.PdfLine, PageParser.ParseFailMarker, "", 0))))
 
-  /** Assemble per-page results into the document output (SPEC.md §7–8):
-    * pages ascend, `order` renumbered globally, markdown joined with page
-    * headers + `---` separators (tasks.py:289–317).
+  /** Assemble per-page results into the document output (SPEC.md §7–8)
+    * with the doc layout below, built into Strings.
     */
   def assemble(docId: String, pages: Seq[PageResult]): Extracted = {
-    val sorted = pages.sortBy(_.pageNo)
-    var order = 0
-    val spans = scala.collection.mutable.ArrayBuffer.empty[OutSpan]
-    sorted.foreach { p =>
-      p.spans.foreach { s =>
-        spans += s.copy(order = order)
-        order += 1
-      }
-    }
-    val md = sorted.map(p => s"## 페이지 ${p.pageNo}\n\n${p.markdown}").mkString("\n\n---\n\n")
-    val html = sorted.map(p =>
-      s"""<div class="page-section" data-page="${p.pageNo}">\n${p.html}\n</div>""")
-      .mkString("\n")
-    // doc avg confidence = mean of page confidences (tasks.py:365–368),
-    // floored to per-mille; non-negative ints so / floors exactly
-    val conf = if (sorted.isEmpty) 0L
-               else sorted.map(_.confPm.toLong).sum / sorted.length
-    Extracted(docId, spans.toSeq, md, html, conf)
+    val sorted = inPageOrder(pages)
+    val spans = Vector.newBuilder[OutSpan]
+    foreachSpan(sorted)((s, order) => spans += s.copy(order = order))
+    // sized for the whole text (page text + at most 64 layout chars a page),
+    // so neither builder grows
+    val md = new java.lang.StringBuilder(sorted.map(_.markdown.length + 64).sum)
+    writeMarkdown(sorted, md)
+    val html = new java.lang.StringBuilder(sorted.map(_.html.length + 64).sum)
+    writeHtml(sorted, html)
+    Extracted(docId, spans.result(), md.toString, html.toString, confPm(sorted))
   }
 
+  // ---- the doc layout (SPEC.md §7–8, tasks.py:289–317) ---------------------
+  // Defined once, over pages in page order, and written to any Appendable:
+  // [[assemble]] builds Strings with it, the ExtractDocs node writes it
+  // straight into its UTF-8 row buffer.
+
+  /** The pages in assembly order: ascending page number. */
+  def inPageOrder(pages: Seq[PageResult]): Seq[PageResult] = pages.sortBy(_.pageNo)
+
+  /** Each span of the doc with its global `order`: pages ascend, and each
+    * page keeps its own span order.
+    */
+  def foreachSpan(sorted: Seq[PageResult])(f: (OutSpan, Int) => Unit): Unit = {
+    var order = 0
+    sorted.foreach(_.spans.foreach { s => f(s, order); order += 1 })
+  }
+
+  /** The doc markdown: each page under a `## 페이지 n` header, pages joined
+    * by `---` separators.
+    */
+  def writeMarkdown(sorted: Seq[PageResult], out: Appendable): Unit = {
+    var first = true
+    sorted.foreach { p =>
+      if (!first) out.append("\n\n---\n\n")
+      out.append("## 페이지 ").append(Integer.toString(p.pageNo)).append("\n\n")
+        .append(p.markdown)
+      first = false
+    }
+  }
+
+  /** The doc html: each page in a `page-section` div, one per line. */
+  def writeHtml(sorted: Seq[PageResult], out: Appendable): Unit = {
+    var first = true
+    sorted.foreach { p =>
+      if (!first) out.append("\n")
+      out.append("<div class=\"page-section\" data-page=\"").append(Integer.toString(p.pageNo))
+        .append("\">\n").append(p.html).append("\n</div>")
+      first = false
+    }
+  }
+
+  /** Doc confidence: the mean of the page confidences (tasks.py:365–368),
+    * floored to per-mille; non-negative ints, so `/` floors exactly.
+    */
+  def confPm(sorted: Seq[PageResult]): Long =
+    if (sorted.isEmpty) 0L else sorted.map(_.confPm.toLong).sum / sorted.length
+
   /** Split + per-page parse, before assembly. */
-  def parsePages(spans: Seq[InSpan]): Seq[PageResult] =
-    splitPages(spans).map { case (n, s) => PageParser.parse(n, s) }
+  def parsePages(spans: Seq[InSpan]): Seq[PageResult] = parseSplit(splitPages(spans))
+
+  /** Per-page parse of a split (a [[splitPages]] result or [[MalformedDoc]]). */
+  def parseSplit(split: Seq[(Int, Seq[InSpan])]): Seq[PageResult] =
+    split.map { case (n, s) => PageParser.parse(n, s) }
 
   /** Full sequential parse of one document. */
   def parseDoc(doc: Doc): Extracted = assemble(doc.doc_id, parsePages(doc.spans))

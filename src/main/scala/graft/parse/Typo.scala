@@ -30,27 +30,57 @@ object Typo {
     '−' -> '-', '–' -> '-', '—' -> '-',
     '．' -> '.', '，' -> ',')
 
-  /** One step's pattern table. Patterns are shared; a Matcher is not
-    * thread-safe, so each thread gets its own set (Spark task threads are
-    * long-lived, so this is a per-worker pool).
+  // Literals a pattern needs before it can match, as bits of `literals(t)`.
+  private final val Je = 1 // 제
+  private final val Won = 2 // 원
+  // a BMP digit or any surrogate: `\d` under UNICODE_CHARACTER_CLASS also
+  // matches supplementary-plane digits, which only their surrogates show
+  private final val Digit = 4
+
+  /** The [[Je]], [[Won]] and [[Digit]] bits `t` holds. */
+  private def literals(t: String): Int = {
+    var bits = 0
+    var i = 0
+    while (i < t.length) {
+      val c = t.charAt(i)
+      if (c == '제') bits |= Je
+      else if (c == '원') bits |= Won
+      else if (Character.isDigit(c) || Character.isSurrogate(c)) bits |= Digit
+      i += 1
+    }
+    bits
+  }
+
+  /** One step's pattern table. Each entry is (pattern, replacement, needs):
+    * `needs` holds the literal bits every match of the pattern contains, so
+    * a pattern whose bits the text lacks is skipped; the bits are read again
+    * after each rewrite. Patterns are shared; a Matcher is not thread-safe,
+    * so each thread gets its own set (Spark task threads are long-lived, so
+    * this is a per-worker pool).
     */
-  private final class Table(entries: Seq[(String, String)], flags: Int = 0) {
+  private final class Table(entries: Seq[(String, String, Int)], flags: Int = 0) {
     // UNICODE_CHARACTER_CLASS: Python's `\s`/`\d` are Unicode-aware by default
     // (e.g. \s matches U+3000 ideographic space); Java's are ASCII-only without
     // this flag. Required for vector parity.
-    private val patterns = entries.map { case (p, _) =>
+    private val patterns = entries.map { case (p, _, _) =>
       Pattern.compile(p, flags | Pattern.UNICODE_CHARACTER_CLASS)
     }.toArray
     private val replacements = entries.map(_._2).toArray
+    private val needs = entries.map(_._3).toArray
+    private val gated = needs.exists(_ != 0)
     private val matchers =
       ThreadLocal.withInitial[Array[Matcher]](() => patterns.map(_.matcher("")))
 
     def subAll(text: String): String = {
       val ms = matchers.get()
       var t = text
+      var have = if (gated) literals(t) else 0
       var i = 0
       while (i < ms.length) {
-        t = ms(i).reset(t).replaceAll(replacements(i))
+        if ((have & needs(i)) == needs(i)) {
+          val r = ms(i).reset(t).replaceAll(replacements(i))
+          if (r ne t) { t = r; if (gated) have = literals(t) }
+        }
         i += 1
       }
       t
@@ -59,46 +89,46 @@ object Typo {
 
   /** PARTY_SEQUENCE_PATTERNS (ocr_engine.py:102–115). */
   private val partySeq = new Table(Seq(
-    ("""(갑|甲)\s*[,、]\s*[ZzE2](?=\s*[,、]|\s*$|\s+)""", "$1, 乙"),
-    ("""(갑|甲)\s+[ZzE2](?=\s|$)""", "$1 乙"),
-    ("""(을|乙)\s*[,、]\s*[Cc](?=\s*[,、]|\s*$|\s+)""", "$1, 丙"),
-    ("""(을|乙)\s+[Cc](?=\s|$)""", "$1 丙"),
-    ("""(병|丙)\s*[,、]\s*[Tt](?=\s*[,、]|\s*$|\s+)""", "$1, 丁"),
-    ("""(병|丙)\s+[Tt](?=\s|$)""", "$1 丁"),
-    ("""(갑|甲)\s*(과|와|및|,)\s*[ZzE2]""", "$1$2 乙"),
-    ("""[ZzE2]\s*(과|와|및|,)\s*(갑|甲)""", "乙$1 $2")))
+    ("""(갑|甲)\s*[,、]\s*[ZzE2](?=\s*[,、]|\s*$|\s+)""", "$1, 乙", 0),
+    ("""(갑|甲)\s+[ZzE2](?=\s|$)""", "$1 乙", 0),
+    ("""(을|乙)\s*[,、]\s*[Cc](?=\s*[,、]|\s*$|\s+)""", "$1, 丙", 0),
+    ("""(을|乙)\s+[Cc](?=\s|$)""", "$1 丙", 0),
+    ("""(병|丙)\s*[,、]\s*[Tt](?=\s*[,、]|\s*$|\s+)""", "$1, 丁", 0),
+    ("""(병|丙)\s+[Tt](?=\s|$)""", "$1 丁", 0),
+    ("""(갑|甲)\s*(과|와|및|,)\s*[ZzE2]""", "$1$2 乙", 0),
+    ("""[ZzE2]\s*(과|와|및|,)\s*(갑|甲)""", "乙$1 $2", 0)))
 
   /** NUMBER_LETTER_PATTERNS (ocr_engine.py:120–140). */
   private val numberLetter = new Table(Seq(
-    ("""(제\s*\d+)[oO](\d*\s*조)""", "$10$2"),
-    ("""(제\s*\d+\s*조\s*제?\s*\d*)[oO](\d*\s*항)""", "$10$2"),
-    ("""(제\s*\d+\s*조\s*제?\s*\d*\s*항?\s*제?\s*\d*)[oO](\d*\s*호)""", "$10$2"),
-    ("""(\d)[oO](\d)""", "$10$2"),
-    ("""(\d)[oO]([,\.])""", "$10$2"),
-    ("""([,\.])[oO](\d)""", "$10$2"),
-    ("""(19|20)\s*[oO]\s*(\d)\s*년""", "$10$2년"),
-    ("""(19|20)\s*(\d)\s*[oO]\s*년""", "$1$20년"),
-    ("""(제\s*)[lI](\d*\s*조)""", "$11$2"),
-    ("""(제\s*\d+)[lI](\s*조)""", "$11$2"),
-    ("""([lI])(\d\s*월)""", "1$2"),
-    ("""(\d)[lI](\s*월)""", "$11$2"),
-    ("""([lI])(\d\s*일)""", "1$2"),
-    ("""(\d)[lI](\s*일)""", "$11$2")))
+    ("""(제\s*\d+)[oO](\d*\s*조)""", "$10$2", Je | Digit),
+    ("""(제\s*\d+\s*조\s*제?\s*\d*)[oO](\d*\s*항)""", "$10$2", Je | Digit),
+    ("""(제\s*\d+\s*조\s*제?\s*\d*\s*항?\s*제?\s*\d*)[oO](\d*\s*호)""", "$10$2", Je | Digit),
+    ("""(\d)[oO](\d)""", "$10$2", Digit),
+    ("""(\d)[oO]([,\.])""", "$10$2", Digit),
+    ("""([,\.])[oO](\d)""", "$10$2", Digit),
+    ("""(19|20)\s*[oO]\s*(\d)\s*년""", "$10$2년", Digit),
+    ("""(19|20)\s*(\d)\s*[oO]\s*년""", "$1$20년", Digit),
+    ("""(제\s*)[lI](\d*\s*조)""", "$11$2", Je),
+    ("""(제\s*\d+)[lI](\s*조)""", "$11$2", Je | Digit),
+    ("""([lI])(\d\s*월)""", "1$2", Digit),
+    ("""(\d)[lI](\s*월)""", "$11$2", Digit),
+    ("""([lI])(\d\s*일)""", "1$2", Digit),
+    ("""(\d)[lI](\s*일)""", "$11$2", Digit)))
 
   /** ROMAN_NUMERAL_PATTERNS (ocr_engine.py:145–166), MULTILINE like the
     * reference's `flags=re.MULTILINE`.
     */
   private val romanPatterns = new Table(Seq(
-    ("""^([IⅠ])\.(\s)""", "Ⅰ.$2"),
-    ("""^(II|[IⅠ]{2})\.(\s)""", "Ⅱ.$2"),
-    ("""^(III|[IⅠ]{3})\.(\s)""", "Ⅲ.$2"),
-    ("""^(IV)\.(\s)""", "Ⅳ.$2"),
-    ("""^([VⅤ])\.(\s)""", "Ⅴ.$2"),
-    ("""\(([IⅠ])\)""", "(Ⅰ)"),
-    ("""\((II|[IⅠ]{2})\)""", "(Ⅱ)"),
-    ("""\((III|[IⅠ]{3})\)""", "(Ⅲ)"),
-    ("""\((IV)\)""", "(Ⅳ)"),
-    ("""\(([VⅤ])\)""", "(Ⅴ)")), Pattern.MULTILINE)
+    ("""^([IⅠ])\.(\s)""", "Ⅰ.$2", 0),
+    ("""^(II|[IⅠ]{2})\.(\s)""", "Ⅱ.$2", 0),
+    ("""^(III|[IⅠ]{3})\.(\s)""", "Ⅲ.$2", 0),
+    ("""^(IV)\.(\s)""", "Ⅳ.$2", 0),
+    ("""^([VⅤ])\.(\s)""", "Ⅴ.$2", 0),
+    ("""\(([IⅠ])\)""", "(Ⅰ)", 0),
+    ("""\((II|[IⅠ]{2})\)""", "(Ⅱ)", 0),
+    ("""\((III|[IⅠ]{3})\)""", "(Ⅲ)", 0),
+    ("""\((IV)\)""", "(Ⅳ)", 0),
+    ("""\(([VⅤ])\)""", "(Ⅴ)", 0)), Pattern.MULTILINE)
 
   private val romanMap: Map[String, String] = Map(
     "I" -> "Ⅰ", "II" -> "Ⅱ", "III" -> "Ⅲ", "IV" -> "Ⅳ", "V" -> "Ⅴ",
@@ -111,14 +141,14 @@ object Typo {
     * omitted here (the differential spec against TypoReference pins this).
     */
   private val legalTerm = new Table(Seq(
-    ("""제\s+(\d+)\s*조""", "제$1조"),
-    ("""제\s*(\d+)\s+조""", "제$1조"),
-    ("""제\s+(\d+)\s*항""", "제$1항"),
-    ("""제\s*(\d+)\s+항""", "제$1항"),
-    ("""제\s+(\d+)\s*호""", "제$1호"),
-    ("""제\s*(\d+)\s+호""", "제$1호"),
-    ("""(\d)\s*원(?!\s*고|\s*피)""", "$1원"),
-    ("""(\d{4})\s*[.·]\s*(\d{1,2})\s*[.·]\s*(\d{1,2})""", "$1. $2. $3.")))
+    ("""제\s+(\d+)\s*조""", "제$1조", Je | Digit),
+    ("""제\s*(\d+)\s+조""", "제$1조", Je | Digit),
+    ("""제\s+(\d+)\s*항""", "제$1항", Je | Digit),
+    ("""제\s*(\d+)\s+항""", "제$1항", Je | Digit),
+    ("""제\s+(\d+)\s*호""", "제$1호", Je | Digit),
+    ("""제\s*(\d+)\s+호""", "제$1호", Je | Digit),
+    ("""(\d)\s*원(?!\s*고|\s*피)""", "$1원", Won | Digit),
+    ("""(\d{4})\s*[.·]\s*(\d{1,2})\s*[.·]\s*(\d{1,2})""", "$1. $2. $3.", Digit)))
 
   private val allowedBefore = Set(",", "및", "또는", "그리고")
 
@@ -126,17 +156,6 @@ object Typo {
     var i = 0
     while (i < t.length) {
       if (chars.indexOf(t.charAt(i)) >= 0) return true
-      i += 1
-    }
-    false
-  }
-
-  /** The step-5 gate: 제, 원, 피 or a BMP digit. */
-  private def hasLegalTrigger(t: String): Boolean = {
-    var i = 0
-    while (i < t.length) {
-      val c = t.charAt(i)
-      if (c == '제' || c == '원' || c == '피' || Character.isDigit(c)) return true
       i += 1
     }
     false
@@ -154,20 +173,18 @@ object Typo {
     }
     // Step 2: party-sequence correction, gated on 갑/甲/을/乙/병/丙 presence
     if (containsAny(t, "갑甲을乙병丙")) t = partySeq.subAll(t)
-    // Steps 3–5 run behind cheap character-presence gates: each gate is true
+    // Steps 3–4 run behind cheap character-presence gates: each gate is true
     // whenever ANY pattern of the step could match (every NUMBER_LETTER
-    // pattern contains [oOlI]; every ROMAN pattern contains I/V/Ⅰ/Ⅴ; every
-    // LEGAL_TERM pattern contains 제/원 or a digit) — pure fast path, no
-    // behavior change (pinned by the reference-generated vectors). The step-5
-    // gate keeps the earlier cascade's 피 (from the omitted 피고 pattern):
-    // `\d` also matches supplementary-plane digits, which a char test cannot
-    // see, so on such text a narrower gate would change the output.
+    // pattern contains [oOlI]; every ROMAN pattern contains I/V/Ⅰ/Ⅴ) — pure
+    // fast path, no behavior change (pinned by the reference-generated
+    // vectors). Within steps 3 and 5 each pattern also runs only when the
+    // text holds the literals it needs (the `needs` column of its table).
     // Step 3: number/letter confusion
     if (containsAny(t, "oOlI")) t = numberLetter.subAll(t)
     // Step 4: roman numerals (MULTILINE)
     if (containsAny(t, "IVⅠⅤ")) t = romanPatterns.subAll(t)
     // Step 5: legal-term spacing + date normalization
-    if (hasLegalTrigger(t)) t = legalTerm.subAll(t)
+    t = legalTerm.subAll(t)
     // Step 6: word-level roman pass
     wordPass(t)
   }

@@ -1,19 +1,22 @@
 package graft.plans
 
-import graft.model.{InSpan, PageResult}
+import graft.model.{InSpan, Kind, PageResult}
 import graft.parse.DocParser
+import java.nio.charset.StandardCharsets
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.{UnsafeArrayWriter, UnsafeRowWriter}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.CollectionAccumulator
 
@@ -29,6 +32,16 @@ import org.apache.spark.util.CollectionAccumulator
   * Child contract: output columns (doc_id STRING, spans ARRAY<STRUCT<kind,
   * text, media_ref STRING, offset INT>>) in that order — any plan: a parquet
   * scan, a resume's left-anti-joined `Dataset[Doc]`, a streaming micro-batch.
+  * A row whose spans array, a span or a span field is null parses as
+  * [[DocParser.MalformedDoc]]: one error span and one counted parse failure
+  * under its doc_id. A null doc_id still fails the task, because such a row
+  * has no key to carry an error span, and what a resume should do with it is
+  * not settled.
+  *
+  * Output contract: each task writes its rows in place into ONE reused
+  * [[UnsafeRow]], so a row is valid only until the iterator's next `next()`;
+  * a consumer that keeps rows copies them — the contract every projection
+  * to unsafe rows has, which Spark's own operators already honour.
   *
   * `lineage`, when set, receives one [[TaskLineage]] per non-empty task,
   * counted while the task parses (the commit path's metrics source).
@@ -118,11 +131,10 @@ object ExtractStrategy extends SparkStrategy {
   * report, so every page is counted once.
   */
 private final class TaskCounts {
-  var docs, pages, spans, failures, confPm, parseNs = 0L
+  var docs, pages, spans, failures, confPm, parseNs, rowIoNs = 0L
   var docLo, docHi: String = _
 
-  def add(docId: String, pageResults: Seq[PageResult], spansOut: Int,
-          ns: Long): Unit = {
+  def add(docId: String, pageResults: Seq[PageResult], ns: Long): Unit = {
     if (docs == 0 || docId < docLo) docLo = docId
     if (docs == 0 || docId > docHi) docHi = docId
     docs += 1
@@ -130,14 +142,194 @@ private final class TaskCounts {
     pageResults.foreach { p =>
       if (p.parseFailed) failures += 1
       confPm += p.confPm
+      spans += p.spans.length
     }
-    spans += spansOut
     parseNs += ns
   }
 
   def lineage(partitionId: Int): TaskLineage =
     TaskLineage(partitionId, docLo, docHi, pages, spans, failures, confPm,
       parseNs / 1000000)
+}
+
+/** An `Appendable` that encodes the text it is given to UTF-8 in a reused
+  * byte buffer: the bytes equal `String.getBytes(UTF_8)`, Spark's own string
+  * encoding, of everything appended since [[clear]] (an unpaired surrogate
+  * becomes `?`, also when a pair is split over two appends).
+  */
+final class Utf8Sink(initialBytes: Int) extends Appendable {
+  private var buf = new Array[Byte](initialBytes)
+  private var len = 0
+  private var high: Char = 0 // a trailing high surrogate, waiting for its pair
+
+  def clear(): Unit = { len = 0; high = 0 }
+
+  /** The encoded bytes are `bytes(0 until length)`. */
+  def bytes: Array[Byte] = { flush(); buf }
+  def length: Int = { flush(); len }
+
+  /** Drops a buffer that grew past `maxBytes` (after a huge doc). */
+  def shrink(maxBytes: Int): Unit =
+    if (buf.length > maxBytes) buf = new Array[Byte](initialBytes)
+
+  private def flush(): Unit = if (high != 0) { reserve(1); put('?'); high = 0 }
+
+  private def reserve(n: Int): Unit =
+    if (len + n > buf.length)
+      buf = java.util.Arrays.copyOf(buf, math.max(len + n, 2 * buf.length))
+
+  private def put(b: Int): Unit = { buf(len) = b.toByte; len += 1 }
+
+  override def append(c: Char): Appendable = append(String.valueOf(c), 0, 1)
+  override def append(cs: CharSequence): Appendable = append(cs, 0, cs.length)
+
+  override def append(cs: CharSequence, start: Int, end: Int): Appendable = {
+    reserve(3 * (end - start) + 4) // 3 bytes per char at most, 4 for a pair
+    var i = start
+    if (high != 0) {
+      if (i < end && Character.isLowSurrogate(cs.charAt(i))) {
+        putPair(high, cs.charAt(i)); i += 1
+      } else put('?')
+      high = 0
+    }
+    while (i < end) {
+      val c = cs.charAt(i)
+      if (c < 0x80) put(c)
+      else if (c < 0x800) { put(0xc0 | (c >> 6)); put(0x80 | (c & 0x3f)) }
+      else if (!Character.isSurrogate(c)) {
+        put(0xe0 | (c >> 12)); put(0x80 | ((c >> 6) & 0x3f)); put(0x80 | (c & 0x3f))
+      } else if (Character.isLowSurrogate(c)) put('?')
+      else if (i + 1 == end) high = c
+      else if (Character.isLowSurrogate(cs.charAt(i + 1))) { putPair(c, cs.charAt(i + 1)); i += 1 }
+      else put('?')
+      i += 1
+    }
+    this
+  }
+
+  private def putPair(hi: Char, lo: Char): Unit = {
+    val cp = Character.toCodePoint(hi, lo)
+    put(0xf0 | (cp >> 18)); put(0x80 | ((cp >> 12) & 0x3f))
+    put(0x80 | ((cp >> 6) & 0x3f)); put(0x80 | (cp & 0x3f))
+  }
+}
+
+/** The node's row I/O, one per task: reads an input row's spans and writes
+  * the output row in place with Spark's unsafe writers, through one reused
+  * [[UnsafeRow]] and one UTF-8 scratch buffer.
+  */
+private final class RowIo {
+  import RowIo._
+
+  private val utf8 = new Utf8Sink(ScratchBytes)
+  private var row: UnsafeRowWriter = _
+  private var spansOut: UnsafeArrayWriter = _
+  private var spanOut: UnsafeRowWriter = _
+  newWriters()
+
+  private def newWriters(): Unit = {
+    row = new UnsafeRowWriter(ExtractDocs.schema.length, RowBytes)
+    spansOut = new UnsafeArrayWriter(row, 8) // struct elements: offset and size
+    spanOut = new UnsafeRowWriter(spansOut, ExtractDocs.spanType.length)
+  }
+
+  /** The spans of an input row's array, or null when the array, a span or a
+    * span field is null.
+    */
+  def readSpans(arr: ArrayData): IndexedSeq[InSpan] = {
+    val n = arr.numElements()
+    val spans = new Array[InSpan](n)
+    var i = 0
+    while (i < n) {
+      if (arr.isNullAt(i)) return null
+      val s = arr.getStruct(i, 4)
+      if (s.isNullAt(0) || s.isNullAt(1) || s.isNullAt(2) || s.isNullAt(3)) return null
+      spans(i) = InSpan(kind(s.getUTF8String(0)), string(s.getUTF8String(1)),
+        string(s.getUTF8String(2)), s.getInt(3))
+      i += 1
+    }
+    scala.collection.immutable.ArraySeq.unsafeWrapArray(spans)
+  }
+
+  /** The output row of a doc, from its pages in page order. Valid until the
+    * next call.
+    */
+  def write(docId: UTF8String, sorted: Seq[PageResult]): UnsafeRow = {
+    if (row.getBuffer.length > MaxKeptBytes) newWriters()
+    row.reset()
+    row.zeroOutNullBytes()
+    row.write(0, docId)
+    val spansAt = row.cursor()
+    var n = 0
+    sorted.foreach(n += _.spans.length)
+    spansOut.initialize(n)
+    DocParser.foreachSpan(sorted) { (s, order) =>
+      val at = spansOut.cursor()
+      spanOut.resetRowWriter()
+      text(spanOut, 0, s.kind)
+      text(spanOut, 1, s.text)
+      text(spanOut, 2, s.media_ref)
+      spanOut.write(3, order)
+      spansOut.setOffsetAndSizeFromPreviousCursor(order, at)
+    }
+    row.setOffsetAndSizeFromPreviousCursor(1, spansAt)
+    utf8.clear()
+    DocParser.writeMarkdown(sorted, utf8)
+    row.write(2, utf8.bytes, 0, utf8.length)
+    utf8.clear()
+    DocParser.writeHtml(sorted, utf8)
+    row.write(3, utf8.bytes, 0, utf8.length)
+    row.write(4, DocParser.confPm(sorted))
+    utf8.shrink(MaxKeptBytes)
+    row.getRow
+  }
+
+  private def text(w: UnsafeRowWriter, ordinal: Int, s: String): Unit = {
+    utf8.clear()
+    utf8.append(s)
+    w.write(ordinal, utf8.bytes, 0, utf8.length)
+  }
+}
+
+private object RowIo {
+  /** The UTF-8 scratch buffer's starting size. */
+  val ScratchBytes = 16 << 10
+  /** The row buffer's starting size. */
+  val RowBytes = 64 << 10
+  /** A buffer that grew past this for a huge doc is dropped afterwards, so a
+    * task keeps at most this much per buffer.
+    */
+  val MaxKeptBytes = 1 << 20
+
+  private val inputKinds: Array[(UTF8String, String)] =
+    Array(Kind.PdfLine, Kind.PageBreak, Kind.PdfRegion, Kind.HtmlBlock, Kind.Media)
+      .map(k => UTF8String.fromBytes(k.getBytes(StandardCharsets.UTF_8)) -> k)
+
+  /** An input kind as its shared constant, matched on the bytes. */
+  def kind(u: UTF8String): String = {
+    var i = 0
+    while (i < inputKinds.length) {
+      if (inputKinds(i)._1 == u) return inputKinds(i)._2
+      i += 1
+    }
+    string(u)
+  }
+
+  /** `u.toString`, decoded straight from the backing bytes. */
+  def string(u: UTF8String): String =
+    if (u.numBytes == 0) ""
+    else u.getBaseObject match {
+      case b: Array[Byte] =>
+        new String(b, (u.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt, u.numBytes,
+          StandardCharsets.UTF_8)
+      case _ => u.toString
+    }
+
+  private val threads = java.lang.management.ManagementFactory.getThreadMXBean
+    .asInstanceOf[com.sun.management.ThreadMXBean]
+
+  /** Bytes the calling thread has allocated so far. */
+  def threadAllocatedBytes: Long = threads.getCurrentThreadAllocatedBytes
 }
 
 final case class ExtractDocsExec(output: Seq[Attribute], child: SparkPlan,
@@ -155,74 +347,48 @@ final case class ExtractDocsExec(output: Seq[Attribute], child: SparkPlan,
     "pages" -> SQLMetrics.createMetric(sparkContext, "pages parsed"),
     "spans" -> SQLMetrics.createMetric(sparkContext, "spans emitted"),
     "parseFailures" -> SQLMetrics.createMetric(sparkContext, "parse failures"),
-    "parseTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "parse time"))
+    "parseTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "parse time"),
+    "rowIoTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "row decode + encode time"),
+    "allocBytes" -> SQLMetrics.createSizeMetric(sparkContext, "task thread allocated bytes"))
 
   override protected def withNewChildInternal(newChild: SparkPlan): ExtractDocsExec =
     copy(child = newChild)
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val schema = ExtractDocs.schema
-    val (pagesM, spansM, failuresM, parseTimeM) = (longMetric("pages"),
-      longMetric("spans"), longMetric("parseFailures"), longMetric("parseTime"))
+    val (pagesM, spansM, failuresM, parseTimeM, rowIoTimeM, allocM) = (longMetric("pages"),
+      longMetric("spans"), longMetric("parseFailures"), longMetric("parseTime"),
+      longMetric("rowIoTime"), longMetric("allocBytes"))
     val lineage = this.lineage
     child.execute().mapPartitionsWithIndex { (partitionId, rows) =>
-      // physical operators must emit UnsafeRow (collect and exchanges cast
-      // unchecked — a GenericInternalRow segfaults under JIT'd readers)
-      val toUnsafe = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(schema)
+      val alloc0 = RowIo.threadAllocatedBytes
+      val io = new RowIo
       val counts = new TaskCounts
-      // completion listeners run before the task's accumulator updates are
-      // collected, and a failed task's updates are dropped
+      // completion listeners run on the task thread before the task's
+      // accumulator updates are collected, and a failed task's are dropped
       TaskContext.get().addTaskCompletionListener[Unit] { _ =>
         pagesM += counts.pages
         spansM += counts.spans
         failuresM += counts.failures
         parseTimeM += counts.parseNs
+        rowIoTimeM += counts.rowIoNs
+        allocM += RowIo.threadAllocatedBytes - alloc0
         if (counts.docs > 0) lineage.foreach(_.add(counts.lineage(partitionId)))
       }
       rows.map { row =>
-        // manual decode — no Encoder machinery. The child contract is
-        // non-null (doc_id, spans, span fields); violations fail with a
-        // diagnosable message instead of an opaque NPE (ADVICE round 1).
-        require(!row.isNullAt(0) && !row.isNullAt(1),
-          "ExtractDocs child contract: doc_id and spans must be non-null")
-        val docId = row.getUTF8String(0).toString
-        val arr = row.getArray(1)
-        val n = arr.numElements()
-        val spans = new Array[InSpan](n)
-        var i = 0
-        while (i < n) {
-          require(!arr.isNullAt(i),
-            s"ExtractDocs child contract: null span element at $i (doc $docId)")
-          val s = arr.getStruct(i, 4)
-          require(!s.isNullAt(0) && !s.isNullAt(1) && !s.isNullAt(2) &&
-              !s.isNullAt(3),
-            s"ExtractDocs child contract: null span field at $i (doc $docId)")
-          spans(i) = InSpan(
-            s.getUTF8String(0).toString,
-            s.getUTF8String(1).toString,
-            s.getUTF8String(2).toString,
-            s.getInt(3))
-          i += 1
-        }
-        // DocParser.parseDoc in its two steps, so the pages can be counted
+        // manual decode — no Encoder machinery
+        require(!row.isNullAt(0), "ExtractDocs child contract: doc_id must be non-null")
         val t0 = System.nanoTime()
-        val pages = DocParser.parsePages(spans.toIndexedSeq)
-        val e = DocParser.assemble(docId, pages)
-        counts.add(docId, pages, e.spans.length, System.nanoTime() - t0)
-        // manual encode
-        val outSpans = new Array[Any](e.spans.length)
-        var j = 0
-        e.spans.foreach { sp =>
-          outSpans(j) = new GenericInternalRow(Array[Any](
-            UTF8String.fromString(sp.kind), UTF8String.fromString(sp.text),
-            UTF8String.fromString(sp.media_ref), sp.order))
-          j += 1
-        }
-        toUnsafe(new GenericInternalRow(Array[Any](
-          UTF8String.fromString(e.doc_id), new GenericArrayData(outSpans),
-          UTF8String.fromString(e.markdown),
-          UTF8String.fromString(e.html),
-          e.conf_pm))): InternalRow
+        val docId = row.getUTF8String(0)
+        val spans = if (row.isNullAt(1)) null else io.readSpans(row.getArray(1))
+        val t1 = System.nanoTime()
+        val pages = DocParser.inPageOrder(DocParser.parseSplit(
+          if (spans == null) DocParser.MalformedDoc else DocParser.splitPages(spans)))
+        val t2 = System.nanoTime()
+        val out = io.write(docId, pages)
+        val t3 = System.nanoTime()
+        counts.add(RowIo.string(docId), pages, t2 - t1)
+        counts.rowIoNs += (t1 - t0) + (t3 - t2)
+        out: InternalRow
       }
     }
   }

@@ -54,6 +54,9 @@ class CustomPlanSpec extends AnyFunSuite with Matchers {
     metric("parseFailures") shouldBe stats.map(_._3).sum
     metric("parseFailures") should be > 0L
     metric("parseTime") should be > 0L
+    // the node's own cost split: row decode + encode, and task allocation
+    metric("rowIoTime") should be > 0L
+    metric("allocBytes") should be > 0L
   }
 
   test("doc_id predicate is pushed through the custom node into the parquet scan") {

@@ -137,6 +137,25 @@ class TypoSpec extends AnyFunSuite with Matchers {
     assertSameAsReference(Iterator.continually(fuzz(rng)).take(1000000)) shouldBe 1000000
   }
 
+  test("fixTypos == TypoReference on 1M random strings with lone surrogates and supplementary digits") {
+    // `\d` matches these code points too, so the literal gates must let
+    // every surrogate through; lone halves must not pair up by accident
+    val supplementaryDigits = Seq(0x1d7d9, 0x104a0, 0x11066, 0x1e950)
+    supplementaryDigits.foreach(cp => Character.isDigit(cp) shouldBe true)
+    val halves = supplementaryDigits.flatMap(cp => Character.toChars(cp).toSeq)
+    val tokens = fuzzTokens ++ supplementaryDigits.map(cp => new String(Character.toChars(cp))) ++
+      halves.map(_.toString) ++ Seq("제1", "1원", "20", "19")
+    val rng = new Random(20261020L)
+    def gen(): String = {
+      val sb = new StringBuilder
+      val n = rng.nextInt(24)
+      var i = 0
+      while (i < n) { sb ++= tokens(rng.nextInt(tokens.length)); i += 1 }
+      sb.result()
+    }
+    assertSameAsReference(Iterator.continually(gen()).take(1000000)) shouldBe 1000000
+  }
+
   test("4 threads over shuffled inputs give the sequential outputs") {
     val rng = new Random(7L)
     val inputs = (vectors.map(_._1) ++ corpusTexts ++ Seq.fill(20000)(fuzz(rng))).distinct
