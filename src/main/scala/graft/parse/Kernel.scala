@@ -272,15 +272,8 @@ object Html {
   private val SepRow = "^[\\s|:\\-]+$".r
 
   /** markdown_table_to_html (html_generator.py:539–583): first row th,
-    * separator rows skipped, cells escaped.
+    * separator rows skipped, cells escaped; appended to `out`.
     */
-  def mdTableToHtml(md: String, cls: String): String = {
-    val sb = new java.lang.StringBuilder
-    mdTableToHtml(md, cls, sb)
-    sb.toString
-  }
-
-  /** [[mdTableToHtml]] appended to `out`. */
   def mdTableToHtml(md: String, cls: String, out: java.lang.StringBuilder): Unit = {
     val rows = md.split("\n", -1).iterator
       .map(_.trim)
@@ -302,14 +295,9 @@ object Html {
     out.append("</table>")
   }
 
-  /** Spacing divs before a text line (html_generator.py:378–406). */
-  def spacingDivs(gap: Int): String = {
-    val sb = new java.lang.StringBuilder
-    spacingDivs(gap, sb)
-    sb.toString
-  }
-
-  /** [[spacingDivs]] appended to `out`. */
+  /** Spacing divs before a text line (html_generator.py:378–406), appended
+    * to `out`.
+    */
   def spacingDivs(gap: Int, out: java.lang.StringBuilder): Unit = {
     var n = Style.emptyLines(gap)
     while (n > 0) { out.append("<div class=\"empty-line\"></div>"); n -= 1 }

@@ -232,49 +232,24 @@ object PageParser {
   }
 
   /** A `pdf_line` payload `y|x|w|h|density|stroke|conf|raw` as a [[Line]].
-    * When the seven numbers are plain runs of 1–9 ASCII digits they are read
-    * in place; any other text takes `split("\\|", 8)` + `toInt`, so it
-    * lifts, or fails, exactly as that does (a sign, a non-ASCII digit, an
-    * overflow or a missing field).
+    * The seven numbers are parsed in place with `Integer.parseInt` over
+    * their ranges, which accepts exactly the text `String.toInt` does; `raw`
+    * is the rest after the seventh `|`, so it may hold `|` itself.
     */
   private[graft] def liftLine(text: String, offset: Int): Line = {
-    val y = field(text, 0)
-    val x = next(text, y)
-    val w = next(text, x)
-    val h = next(text, w)
-    val d = next(text, h)
-    val st = next(text, d)
-    val c = next(text, st)
-    if (c < 0) {
-      val p = text.split("\\|", 8)
-      require(p.length == 8, s"bad pdf_line: $text")
-      Line(p(0).toInt, p(1).toInt, p(2).toInt, p(3).toInt,
-        p(4).toInt, p(5).toInt, p(6).toInt, p(7), offset)
-    } else Line(value(y), value(x), value(w), value(h), value(d), value(st), value(c),
-      text.substring(c.toInt + 1), offset)
-  }
-
-  /** The field of 1–9 ASCII digits at `from`, ended by `|`, as
-    * `(value << 32) | (index of that '|')`; -1 for any other field.
-    */
-  private def field(t: String, from: Int): Long = {
-    var v = 0L
-    var i = from
-    while (i < t.length) {
-      val c = t.charAt(i)
-      if (c == '|') return if (i == from) -1L else (v << 32) | i
-      if (c < '0' || c > '9' || i - from == 9) return -1L
-      v = v * 10 + (c - '0')
-      i += 1
+    val bars = new Array[Int](7)
+    var from = 0
+    var k = 0
+    while (k < 7 && from >= 0) {
+      val at = text.indexOf('|', from)
+      if (at >= 0) { bars(k) = at; k += 1; from = at + 1 } else from = -1
     }
-    -1L
+    require(k == 7, s"bad pdf_line: $text")
+    def num(i: Int): Int =
+      Integer.parseInt(text, if (i == 0) 0 else bars(i - 1) + 1, bars(i), 10)
+    Line(num(0), num(1), num(2), num(3), num(4), num(5), num(6),
+      text.substring(bars(6) + 1), offset)
   }
-
-  /** The field after the one `prev` read, or -1 once a field failed. */
-  private def next(t: String, prev: Long): Long =
-    if (prev < 0) prev else field(t, prev.toInt + 1)
-
-  private def value(f: Long): Int = (f >>> 32).toInt
 }
 
 /** Document-level parse: page split + per-page parse + in-order assembly.

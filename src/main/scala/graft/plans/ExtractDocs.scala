@@ -68,7 +68,8 @@ final case class ExtractDocs(
 
 /** What one task of an [[ExtractDocs]] pass parsed: the doc_id range it
   * covered, pages, emitted spans, failed pages, page-confidence mass and
-  * parse wall time. Field names are the metrics table's columns.
+  * parse wall time (page split, page parse and doc assembly). Field names
+  * are the metrics table's columns.
   */
 final case class TaskLineage(
     partition_id: Int, doc_lo: String, doc_hi: String, pages_parsed: Long,
@@ -184,6 +185,7 @@ final class Utf8Sink(initialBytes: Int) extends Appendable {
   override def append(cs: CharSequence): Appendable = append(cs, 0, cs.length)
 
   override def append(cs: CharSequence, start: Int, end: Int): Appendable = {
+    if (start == end) return this // keeps a pending high surrogate pending
     reserve(3 * (end - start) + 4) // 3 bytes per char at most, 4 for a pair
     var i = start
     if (high != 0) {
@@ -386,7 +388,10 @@ final case class ExtractDocsExec(output: Seq[Attribute], child: SparkPlan,
         val t2 = System.nanoTime()
         val out = io.write(docId, pages)
         val t3 = System.nanoTime()
-        counts.add(RowIo.string(docId), pages, t2 - t1)
+        // parseTime (and lineage wall_ms) spans split, page parse and the doc
+        // assembly, which the row write now does while it encodes; rowIoTime
+        // is decode plus that write, so the two overlap in the write
+        counts.add(RowIo.string(docId), pages, t3 - t1)
         counts.rowIoNs += (t1 - t0) + (t3 - t2)
         out: InternalRow
       }

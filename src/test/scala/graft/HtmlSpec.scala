@@ -6,6 +6,13 @@ import graft.parse.Html
 
 class HtmlSpec extends AnyFunSuite with Matchers {
 
+  /** What a builder-form helper appends to an empty builder. */
+  private def render(f: java.lang.StringBuilder => Unit): String = {
+    val sb = new java.lang.StringBuilder
+    f(sb)
+    sb.toString
+  }
+
   test("escape: & first, then < > \" ' (html_generator.py:530–537)") {
     Html.escape("""a & <b> "c" 'd'""") shouldBe
       "a &amp; &lt;b&gt; &quot;c&quot; &#x27;d&#x27;"
@@ -23,15 +30,15 @@ class HtmlSpec extends AnyFunSuite with Matchers {
   }
 
   test("markdown table to html: first row th, separators skipped, escaped") {
-    Html.mdTableToHtml("| a | b |\n|---|---|\n| <x> | y |", "ocr-table") shouldBe
+    render(Html.mdTableToHtml("| a | b |\n|---|---|\n| <x> | y |", "ocr-table", _)) shouldBe
       """<table class="ocr-table"><tr><th>a</th><th>b</th></tr><tr><td>&lt;x&gt;</td><td>y</td></tr></table>"""
-    Html.mdTableToHtml("", "ocr-table") shouldBe """<table class="ocr-table"></table>"""
+    render(Html.mdTableToHtml("", "ocr-table", _)) shouldBe """<table class="ocr-table"></table>"""
   }
 
   test("spacing divs follow the empty-line buckets") {
-    Html.spacingDivs(25) shouldBe ""
-    Html.spacingDivs(40) shouldBe "<div class=\"empty-line\"></div>"
-    Html.spacingDivs(60) shouldBe "<div class=\"empty-line\"></div>" * 2
-    Html.spacingDivs(500) shouldBe "<div class=\"empty-line\"></div>" * 5
+    render(Html.spacingDivs(25, _)) shouldBe ""
+    render(Html.spacingDivs(40, _)) shouldBe "<div class=\"empty-line\"></div>"
+    render(Html.spacingDivs(60, _)) shouldBe "<div class=\"empty-line\"></div>" * 2
+    render(Html.spacingDivs(500, _)) shouldBe "<div class=\"empty-line\"></div>" * 5
   }
 }

@@ -163,8 +163,13 @@ and newline</div>""")
   }
 
   test("emitter helpers produce verify-clean fragments") {
-    val t = Html.mdTableToHtml("| a | b |\n|---|---|\n| 1 | 2 |", "ocr-table")
+    def render(f: java.lang.StringBuilder => Unit): String = {
+      val sb = new java.lang.StringBuilder
+      f(sb)
+      sb.toString
+    }
+    val t = render(Html.mdTableToHtml("| a | b |\n|---|---|\n| 1 | 2 |", "ocr-table", _))
     assert(HtmlVerify.verify(t).total == 0)
-    assert(HtmlVerify.verify(Html.spacingDivs(200) + "<p>x</p>").total == 0)
+    assert(HtmlVerify.verify(render(Html.spacingDivs(200, _)) + "<p>x</p>").total == 0)
   }
 }

@@ -43,6 +43,9 @@ class RowIoSpec extends AnyFunSuite with Matchers {
 
   test("Utf8Sink writes the bytes of UTF8String.fromString, lone surrogates as '?'") {
     UTF8String.fromString("a\ud83db").getBytes.toSeq shouldBe "a?b".getBytes.toSeq
+    val pair = new Utf8Sink(16)
+    pair.append("\ud83d").append("").append("\ude00")
+    sinkBytes(pair).toSeq shouldBe "\ud83d\ude00".getBytes("UTF-8").toSeq
     val rng = new Random(11L)
     val sink = new Utf8Sink(16) // most strings outgrow the initial buffer
     for (round <- 0 until 20000) {
@@ -53,10 +56,14 @@ class RowIoSpec extends AnyFunSuite with Matchers {
         sink.append(s)
         sinkBytes(sink).toSeq shouldBe want
         // the same text appended in two pieces, cut anywhere (also inside a
-        // surrogate pair), and char by char
+        // surrogate pair), with and without an empty append at the cut, and
+        // char by char
         val cut = if (s.isEmpty) 0 else rng.nextInt(s.length + 1)
         sink.clear()
         sink.append(s, 0, cut).append(s.substring(cut))
+        sinkBytes(sink).toSeq shouldBe want
+        sink.clear()
+        sink.append(s, 0, cut).append("").append(s, cut, cut).append(s.substring(cut))
         sinkBytes(sink).toSeq shouldBe want
         sink.clear()
         s.foreach(c => sink.append(c))
@@ -82,7 +89,7 @@ class RowIoSpec extends AnyFunSuite with Matchers {
 
   // ---- the pdf_line lift -----------------------------------------------------
 
-  /** The `split` + `toInt` lift, as the kernel had it before the fast path. */
+  /** The `split` + `toInt` lift, as the kernel had it before the in-place lift. */
   private def splitLift(text: String, offset: Int): Line = {
     val p = text.split("\\|", 8)
     require(p.length == 8, s"bad pdf_line: $text")
@@ -94,11 +101,11 @@ class RowIoSpec extends AnyFunSuite with Matchers {
     (Try(PageParser.liftLine(text, 7)), Try(splitLift(text, 7))) match {
       case (scala.util.Success(a), scala.util.Success(b)) => a shouldBe b
       case (scala.util.Failure(a), scala.util.Failure(b)) => a.getClass shouldBe b.getClass
-      case (a, b) => fail(s"fast lift gave $a, split lift gave $b")
+      case (a, b) => fail(s"in-place lift gave $a, split lift gave $b")
     }
   }
 
-  test("pdf_line fast lift == split + toInt lift, or the same failure") {
+  test("pdf_line in-place lift == split + toInt lift, or the same failure") {
     val seven = "10|20|300|40|500|600|900"
     val cases = Seq(
       s"$seven|본문 텍스트", s"$seven|", s"$seven|a|b|c", s"$seven||",
