@@ -19,9 +19,12 @@ import org.apache.spark.sql.functions._
   */
 object Extraction {
 
+  /** The input table at `path` as documents, read with the input contract
+    * ([[graft.plans.ExtractDocs.readInput]]).
+    */
   def readInput(spark: SparkSession, path: String): Dataset[Doc] = {
     import spark.implicits._
-    spark.read.parquet(path).select("doc_id", "spans").as[Doc]
+    graft.plans.ExtractDocs.readInput(spark, path).as[Doc]
   }
 
   /** Per-page pricing (tasks.py:379, config.py:116: 50 KRW/page) and the

@@ -1,9 +1,11 @@
 package graft.pipeline
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.model.Doc
 import graft.plans.{ExtractDocs, TaskLineage}
 import org.apache.spark.sql.{SparkSession, DataFrame, Dataset, Encoders, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.CollectionAccumulator
 import scala.jdk.CollectionConverters._
@@ -17,8 +19,17 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *
   * Layout:
   *   <root>/snap-<id>/data/      parquet output (doc_id, spans, markdown)
+  *   <root>/snap-<id>/deletes/   parquet doc_id tombstones (upserts, deletes)
   *   <root>/snap-<id>/metrics/   parquet metrics (per-task lineage)
-  *   <root>/snap-<id>/manifest.json   commit marker, written ATOMICALLY last
+  *   <root>/snap-<id>/manifest.json   commit marker, written ATOMICALLY last:
+  *     snapshot id, parent, run id, the ids a full rewrite replaces, and the
+  *     Spark schema JSON of each directory the snapshot wrote
+  *
+  * Readers read each directory with the schema its manifest records
+  * (Iceberg and Delta keep the table schema in their metadata the same
+  * way), so planning a scan reads no data file and starts no
+  * schema-inference job. A manifest without schemas, written before they
+  * were recorded, is read by inference.
   *
   * A snapshot without a manifest is uncommitted garbage and is never read —
   * that is the exactly-once story: a killed run leaves no visible output, a
@@ -47,7 +58,10 @@ object TableIO {
     * time-travel chain walks stop there instead of unioning ancestors.
     */
   final case class Snapshot(id: String, dir: Path, parent: Option[String],
-                            replaces: Seq[String] = Nil)
+                            replaces: Seq[String] = Nil,
+                            schemas: Map[String, StructType] = Map.empty)
+
+  private val Json = new ObjectMapper()
 
   /** Session Hadoop conf when a session exists (fs.* settings travel with
     * the job), else a bare default — resolves file:// identically.
@@ -69,17 +83,10 @@ object TableIO {
     if (digits.isEmpty) -1L else digits.toLong
   }
 
-  private def readFully(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      new String(out.toByteArray, "UTF-8")
-    } finally in.close()
-  }
-
+  /** Every committed snapshot of the table at `root`, in allocation order:
+    * ONE listing of the root and one manifest read per snapshot. Each
+    * public entry point below lists once and hands the result on.
+    */
   def committedSnapshots(root: String): Seq[Snapshot] = {
     val r = new Path(root)
     val fs = fsFor(r)
@@ -89,13 +96,14 @@ object TableIO {
         && fs.exists(manifestPath(st.getPath)))
       .map { st =>
         val p = st.getPath
-        val json = readFully(fs, manifestPath(p))
-        val parent = """"parent"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(json).map(_.group(1))
-        val replaces = """"replaces"\s*:\s*\[([^\]]*)\]""".r.findFirstMatchIn(json)
-          .map(_.group(1).split(',').map(_.trim.stripPrefix("\"").stripSuffix("\""))
-            .filter(_.nonEmpty).toSeq)
-          .getOrElse(Nil)
-        Snapshot(p.getName.stripPrefix("snap-"), p, parent, replaces)
+        val in = fs.open(manifestPath(p))
+        val m = try Json.readTree(in) finally in.close()
+        val parent = Option(m.get("parent")).filter(_.isTextual).map(_.asText)
+        val replaces = Option(m.get("replaces")).toSeq.flatMap(_.elements.asScala.map(_.asText))
+        val schemas = Option(m.get("schemas")).toSeq.flatMap(_.properties.asScala)
+          .map(e => e.getKey -> DataType.fromJson(e.getValue.toString).asInstanceOf[StructType])
+          .toMap
+        Snapshot(p.getName.stripPrefix("snap-"), p, parent, replaces, schemas)
       }
       .sortBy(s => (numPrefix(s.id), s.id))
   }
@@ -120,13 +128,13 @@ object TableIO {
     f"$next%06d-$runId"
   }
 
-  /** The snapshot chain visible at `snapshotId`: walk the manifest parent
-    * lineage backwards, stopping at (and including) the first full-rewrite
-    * snapshot — everything it replaced is no longer part of the table at
-    * this version. Oldest first.
+  /** The snapshot chain of `snaps` visible at `snapshotId`: walk the
+    * manifest parent lineage backwards, stopping at (and including) the
+    * first full-rewrite snapshot — everything it replaced is no longer part
+    * of the table at this version. Oldest first.
     */
-  private def chainAsOf(root: String, snapshotId: String): Seq[Snapshot] = {
-    val byId = committedSnapshots(root).map(s => s.id -> s).toMap
+  private def chainAsOf(snaps: Seq[Snapshot], snapshotId: String): Seq[Snapshot] = {
+    val byId = snaps.map(s => s.id -> s).toMap
     var chain = List.empty[Snapshot]
     var cur = byId.get(snapshotId)
     // seen-guard: a corrupted/hand-edited manifest whose parent chain loops
@@ -140,12 +148,12 @@ object TableIO {
     chain
   }
 
-  /** The snapshots whose data constitutes the CURRENT table: the chain of
-    * the lineage head.
-    */
-  def liveSnapshots(root: String): Seq[Snapshot] =
-    headOf(committedSnapshots(root))
-      .map(head => chainAsOf(root, head.id)).getOrElse(Nil)
+  /** The chain of the lineage head of `snaps`: the current table. */
+  private def liveChain(snaps: Seq[Snapshot]): Seq[Snapshot] =
+    headOf(snaps).map(head => chainAsOf(snaps, head.id)).getOrElse(Nil)
+
+  /** The snapshots whose data constitutes the CURRENT table. */
+  def liveSnapshots(root: String): Seq[Snapshot] = liveChain(committedSnapshots(root))
 
   /** Union of the live snapshots' data — the "table scan" — with
     * merge-on-read equality deletes applied: a snapshot's `deletes` parquet
@@ -155,24 +163,37 @@ object TableIO {
     * materializes deletes away (a full rewrite carries no tombstones).
     */
   def readCommitted(spark: SparkSession, root: String): Option[DataFrame] =
-    headOf(committedSnapshots(root))
-      .flatMap(head => readChain(spark, chainAsOf(root, head.id)))
+    readChain(spark, liveChain(committedSnapshots(root)))
+
+  /** Whether snapshot `s` wrote directory `name`: its manifest says so, or,
+    * for a manifest without schemas, the directory exists.
+    */
+  private def wrote(s: Snapshot, name: String): Boolean =
+    if (s.schemas.nonEmpty) s.schemas.contains(name)
+    else fsFor(s.dir).exists(new Path(s.dir, name))
+
+  /** The `name` directories of `snaps`, read with the schema their
+    * manifests recorded (None: inference, for manifests without schemas).
+    * All of `snaps` must carry the same recorded schema for `name`.
+    */
+  private def readDirs(spark: SparkSession, snaps: Seq[Snapshot], name: String): DataFrame = {
+    val reader = snaps.head.schemas.get(name).fold(spark.read)(st => spark.read.schema(st))
+    reader.parquet(snaps.map(s => new Path(s.dir, name).toString): _*)
+  }
 
   private def readChain(spark: SparkSession, chain: Seq[Snapshot]): Option[DataFrame] = {
-    val withData = chain.zipWithIndex
-      .filter { case (s, _) => fsFor(s.dir).exists(new Path(s.dir, "data")) }
+    val withData = chain.zipWithIndex.filter { case (s, _) => wrote(s, "data") }
     if (withData.isEmpty) return None
     // allowMissingColumns = schema evolution (Iceberg add-column analog):
     // snapshots written before a column existed surface it as NULL; readers
     // never rewrite old data to pick up a widened schema
     val data = withData.map { case (s, ord) =>
-      spark.read.parquet(new Path(s.dir, "data").toString)
-        .withColumn("_ord", lit(ord))
+      readDirs(spark, Seq(s), "data").withColumn("_ord", lit(ord))
     }.reduce(_.unionByName(_, allowMissingColumns = true))
     val dels = chain.zipWithIndex
-      .filter { case (s, _) => fsFor(s.dir).exists(new Path(s.dir, "deletes")) }
+      .filter { case (s, _) => wrote(s, "deletes") }
       .map { case (s, ord) =>
-        spark.read.parquet(new Path(s.dir, "deletes").toString)
+        readDirs(spark, Seq(s), "deletes")
           .select(col("doc_id").as("_del_id"), lit(ord).as("_del_ord"))
       }
     val merged =
@@ -195,25 +216,22 @@ object TableIO {
   /** Extract + commit a document Dataset: a table scan, or a streaming
     * `foreachBatch` micro-batch whose plan flows straight into the parse
     * without a staging materialization. Docs already committed under
-    * `outRoot` are left-anti-joined away first.
+    * `outRoot` are left-anti-joined away first; the new snapshot's parent is
+    * the head whose table that anti-join read.
     */
   def commitDocs(spark: SparkSession, docs: Dataset[Doc],
                  outRoot: String, runId: String): Option[String] = {
-    val remaining = readCommitted(spark, outRoot) match {
+    val snaps = committedSnapshots(outRoot)
+    val remaining = readChain(spark, liveChain(snaps)) match {
       case Some(done) =>
         docs.join(done.select("doc_id"), Seq("doc_id"), "left_anti")
           .as[Doc](Encoders.product[Doc])
       case None => docs
     }
     if (remaining.isEmpty) return None
-
-    val snaps = committedSnapshots(outRoot)
-    val snapshotId = nextId(snaps, runId)
-    val dir = new Path(outRoot, s"snap-$snapshotId")
-    fsFor(dir).mkdirs(dir)
-    writeExtraction(spark, remaining, dir, runId, snapshotId)
-    writeManifest(dir, snapshotId, runId, headOf(snaps).map(_.id))
-    Some(snapshotId)
+    Some(commitSnapshot(outRoot, snaps, runId) { (dir, snapshotId) =>
+      writeExtraction(spark, remaining, dir, runId, snapshotId)
+    })
   }
 
   /** The data plan of an extraction commit: the [[ExtractDocs]] node over
@@ -230,13 +248,12 @@ object TableIO {
     * on the way becomes the metrics table, built on the driver afterwards.
     */
   private def writeExtraction(spark: SparkSession, docs: Dataset[Doc], dir: Path,
-                              runId: String, snapshotId: String): Unit = {
+                              runId: String, snapshotId: String): Seq[(String, StructType)] = {
     val lineage = spark.sparkContext.collectionAccumulator[TaskLineage]("extract lineage")
-    extractForCommit(docs, lineage)
-      .write.mode(SaveMode.Overwrite).parquet(new Path(dir, "data").toString)
-    lineageMetrics(spark, lineage.value.asScala.toSeq, runId, snapshotId)
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(new Path(dir, "metrics").toString)
+    val data = writeDir(extractForCommit(docs, lineage), dir, "data")
+    Seq(data, writeDir(
+      lineageMetrics(spark, lineage.value.asScala.toSeq, runId, snapshotId).coalesce(1),
+      dir, "metrics"))
   }
 
   /** Per-task lineage reports → the metrics table (FIXTURES.md §3): one row
@@ -261,30 +278,44 @@ object TableIO {
   def commitWeb(spark: SparkSession, pages: DataFrame, outRoot: String,
                 runId: String): Option[String] = {
     import spark.implicits._
-    val remaining = readCommitted(spark, outRoot) match {
+    val snaps = committedSnapshots(outRoot)
+    val remaining = readChain(spark, liveChain(snaps)) match {
       case Some(done) =>
         pages.join(done.select("doc_id"), Seq("doc_id"), "left_anti")
       case None => pages
     }
     if (remaining.isEmpty) return None
+    Some(commitSnapshot(outRoot, snaps, runId) { (dir, snapshotId) =>
+      val parsed = WebExtraction.parse(
+          remaining.select(col("doc_id").cast("string"), col("html")).as[(String, String)])
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try Seq(writeDir(WebExtraction.assemble(parsed), dir, "data"),
+              writeDir(WebExtraction.metrics(parsed, runId, snapshotId), dir, "metrics"))
+      finally parsed.unpersist()
+    })
+  }
 
-    val snaps = committedSnapshots(outRoot)
+  /** Writes `df` as the snapshot directory `name`; returns the name with the
+    * schema its manifest records.
+    */
+  private def writeDir(df: DataFrame, dir: Path, name: String): (String, StructType) = {
+    df.write.mode(SaveMode.Overwrite).parquet(new Path(dir, name).toString)
+    name -> df.schema
+  }
+
+  /** Allocates the next snapshot id after `snaps`, lets `write` fill the
+    * snapshot directory (returning what it wrote, via [[writeDir]]) and
+    * commits it with the head of `snaps` as parent. Returns the id.
+    */
+  private def commitSnapshot(root: String, snaps: Seq[Snapshot], runId: String,
+                             replaces: Seq[String] = Nil)
+                            (write: (Path, String) => Seq[(String, StructType)]): String = {
     val snapshotId = nextId(snaps, runId)
-    val dir = new Path(outRoot, s"snap-$snapshotId")
+    val dir = new Path(root, s"snap-$snapshotId")
     fsFor(dir).mkdirs(dir)
-
-    val parsed = WebExtraction.parse(
-        remaining.select(col("doc_id").cast("string"), col("html")).as[(String, String)])
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      WebExtraction.assemble(parsed)
-        .write.mode(SaveMode.Overwrite).parquet(new Path(dir, "data").toString)
-      WebExtraction.metrics(parsed, runId, snapshotId)
-        .write.mode(SaveMode.Overwrite).parquet(new Path(dir, "metrics").toString)
-    } finally parsed.unpersist()
-
-    writeManifest(dir, snapshotId, runId, headOf(snaps).map(_.id))
-    Some(snapshotId)
+    val schemas = write(dir, snapshotId)
+    writeManifest(dir, snapshotId, runId, headOf(snaps).map(_.id), replaces, schemas)
+    snapshotId
   }
 
   /** Atomic commit point: manifest written via temp file + rename (atomic on
@@ -292,14 +323,19 @@ object TableIO {
     * same way their committers do).
     */
   private def writeManifest(dir: Path, snapshotId: String, runId: String,
-                            parentId: Option[String],
-                            extraJson: String = ""): Unit = {
-    val parent = parentId.map(p => s""""parent": "$p", """).getOrElse("")
-    val json = s"""{"snapshot_id": "$snapshotId", $parent"run_id": "$runId"$extraJson}"""
+                            parentId: Option[String], replaces: Seq[String],
+                            schemas: Seq[(String, StructType)]): Unit = {
+    val m = Json.createObjectNode()
+    m.put("snapshot_id", snapshotId)
+    parentId.foreach(m.put("parent", _))
+    m.put("run_id", runId)
+    if (replaces.nonEmpty) replaces.foldLeft(m.putArray("replaces"))(_.add(_))
+    val s = m.putObject("schemas")
+    schemas.foreach { case (name, st) => s.set[JsonNode](name, Json.readTree(st.json)) }
     val fs = fsFor(dir)
     val tmp = new Path(dir, "manifest.json.tmp")
     val out = fs.create(tmp, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+    try out.write(Json.writeValueAsBytes(m)) finally out.close()
     if (!fs.rename(tmp, manifestPath(dir)))
       throw new java.io.IOException(s"commit rename failed: $tmp -> ${manifestPath(dir)}")
   }
@@ -312,15 +348,10 @@ object TableIO {
     * the schema never rewrites committed bytes.
     */
   def commitData(spark: SparkSession, df: DataFrame, outRoot: String,
-                 runId: String): String = {
-    val snaps = committedSnapshots(outRoot)
-    val snapshotId = nextId(snaps, runId)
-    val dir = new Path(outRoot, s"snap-$snapshotId")
-    fsFor(dir).mkdirs(dir)
-    df.write.mode(SaveMode.Overwrite).parquet(new Path(dir, "data").toString)
-    writeManifest(dir, snapshotId, runId, headOf(snaps).map(_.id))
-    snapshotId
-  }
+                 runId: String): String =
+    commitSnapshot(outRoot, committedSnapshots(outRoot), runId) { (dir, _) =>
+      Seq(writeDir(df, dir, "data"))
+    }
 
   /** MERGE-style upsert (Iceberg v2 merge-on-read analog): re-extract
     * `docs` and commit ONE snapshot carrying both the new data AND
@@ -333,16 +364,10 @@ object TableIO {
   def upsertDocs(spark: SparkSession, docs: Dataset[Doc],
                  outRoot: String, runId: String): Option[String] = {
     if (docs.isEmpty) return None
-    val snaps = committedSnapshots(outRoot)
-    val snapshotId = nextId(snaps, runId)
-    val dir = new Path(outRoot, s"snap-$snapshotId")
-    fsFor(dir).mkdirs(dir)
-    writeExtraction(spark, docs, dir, runId, snapshotId)
-    docs.select(col("doc_id")).distinct()
-      .write.mode(SaveMode.Overwrite).parquet(new Path(dir, "deletes").toString)
-
-    writeManifest(dir, snapshotId, runId, headOf(snaps).map(_.id))
-    Some(snapshotId)
+    Some(commitSnapshot(outRoot, committedSnapshots(outRoot), runId) { (dir, snapshotId) =>
+      writeExtraction(spark, docs, dir, runId, snapshotId) :+
+        writeDir(docs.select(col("doc_id")).distinct(), dir, "deletes")
+    })
   }
 
   /** Row-level delete (retention / right-to-be-forgotten / bad-batch
@@ -359,12 +384,9 @@ object TableIO {
     if (ids.isEmpty) return None
     val snaps = committedSnapshots(outRoot)
     if (snaps.isEmpty) return None
-    val snapshotId = nextId(snaps, runId)
-    val dir = new Path(outRoot, s"snap-$snapshotId")
-    fsFor(dir).mkdirs(dir)
-    ids.write.mode(SaveMode.Overwrite).parquet(new Path(dir, "deletes").toString)
-    writeManifest(dir, snapshotId, runId, headOf(snaps).map(_.id))
-    Some(snapshotId)
+    Some(commitSnapshot(outRoot, snaps, runId) { (dir, _) =>
+      Seq(writeDir(ids, dir, "deletes"))
+    })
   }
 
   /** Time-travel scan (Iceberg `VERSION AS OF` analog): union of the
@@ -376,7 +398,7 @@ object TableIO {
     */
   def readAsOf(spark: SparkSession, root: String,
                snapshotId: String): Option[DataFrame] =
-    readChain(spark, chainAsOf(root, snapshotId))
+    readChain(spark, chainAsOf(committedSnapshots(root), snapshotId))
 
   /** Small-file compaction (Iceberg `rewrite_data_files` / Delta `OPTIMIZE`
     * analog): rewrite the CURRENT table as one new full-rewrite snapshot
@@ -396,25 +418,17 @@ object TableIO {
   def compact(spark: SparkSession, root: String, runId: String,
               rowsPerFile: Long = 1000000L): Option[String] = {
     require(rowsPerFile >= 1, "rowsPerFile >= 1")
-    val live = liveSnapshots(root)
-    val data = readCommitted(spark, root).getOrElse(return None)
+    val snaps = committedSnapshots(root)
+    val live = liveChain(snaps)
+    val data = readChain(spark, live).getOrElse(return None)
     val rows = data.count()
     if (rows == 0) return None
     val nFiles = math.max(1L, (rows + rowsPerFile - 1) / rowsPerFile).toInt
-
-    val snaps = committedSnapshots(root)
-    val snapshotId = nextId(snaps, runId)
-    val dir = new Path(root, s"snap-$snapshotId")
-    fsFor(dir).mkdirs(dir)
-    data.repartitionByRange(nFiles, col("doc_id"))
-      .sortWithinPartitions(col("doc_id"))
-      .write.mode(SaveMode.Overwrite).parquet(new Path(dir, "data").toString)
     // metrics roll forward untouched (lineage is per original run)
-
-    val replaces = live.map(s => "\"" + s.id + "\"").mkString("[", ", ", "]")
-    writeManifest(dir, snapshotId, runId, headOf(snaps).map(_.id),
-      extraJson = s""", "replaces": $replaces""")
-    Some(snapshotId)
+    Some(commitSnapshot(root, snaps, runId, replaces = live.map(_.id)) { (dir, _) =>
+      Seq(writeDir(data.repartitionByRange(nFiles, col("doc_id"))
+        .sortWithinPartitions(col("doc_id")), dir, "data"))
+    })
   }
 
   /** Snapshot expiration (Iceberg `expire_snapshots` analog): delete the
@@ -424,18 +438,21 @@ object TableIO {
     * expired ids.
     */
   def expireSnapshots(root: String): Seq[String] = {
-    val liveIds = liveSnapshots(root).map(_.id).toSet
-    val expired = committedSnapshots(root).filterNot(s => liveIds(s.id))
+    val snaps = committedSnapshots(root)
+    val liveIds = liveChain(snaps).map(_.id).toSet
+    val expired = snaps.filterNot(s => liveIds(s.id))
     expired.foreach(s => fsFor(s.dir).delete(s.dir, true))
     expired.map(_.id)
   }
 
-  /** All committed metrics rows. */
+  /** All committed metrics rows: one scan per distinct recorded metrics
+    * schema (one in a table written by one pipeline), unioned by name.
+    */
   def readMetrics(spark: SparkSession, root: String): Option[DataFrame] = {
-    val dirs = committedSnapshots(root)
-      .map(s => new Path(s.dir, "metrics"))
-      .filter(p => fsFor(p).exists(p))
-      .map(_.toString)
-    if (dirs.isEmpty) None else Some(spark.read.parquet(dirs: _*))
+    val snaps = committedSnapshots(root).filter(wrote(_, "metrics"))
+    if (snaps.isEmpty) None
+    else Some(snaps.map(_.schemas.get("metrics")).distinct
+      .map(sc => readDirs(spark, snaps.filter(_.schemas.get("metrics") == sc), "metrics"))
+      .reduce(_.unionByName(_, allowMissingColumns = true)))
   }
 }

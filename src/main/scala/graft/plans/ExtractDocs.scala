@@ -3,6 +3,12 @@ package graft.plans
 import graft.model.{InSpan, Kind, PageResult}
 import graft.parse.DocParser
 import java.nio.charset.StandardCharsets
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -14,6 +20,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
@@ -89,7 +96,45 @@ object ExtractDocs {
     StructField("html", StringType),
     StructField("conf_pm", LongType, nullable = false)))
 
-  private val inSpanFields = Seq("kind", "text", "media_ref", "offset")
+  /** The input contract: the `(doc_id, spans)` table every PDF extraction
+    * reads (BASELINE.json input_hint). The node reads the span fields by
+    * ordinal, in this order.
+    */
+  val inputSchema: StructType = StructType(Seq(
+    StructField("doc_id", StringType),
+    StructField("spans", ArrayType(StructType(Seq(
+      StructField("kind", StringType),
+      StructField("text", StringType),
+      StructField("media_ref", StringType),
+      StructField("offset", IntegerType, nullable = false)))))))
+
+  /** Where `got` breaks the contract type `want`, if it does: a contract
+    * field missing (fields are found by name) or of another type.
+    * Nullability is not part of the contract. `inOrder` also requires each
+    * struct to hold exactly the contract's fields in the contract's order.
+    */
+  private def breach(want: DataType, got: DataType, at: String,
+                     inOrder: Boolean): Option[String] = (want, got) match {
+    case (w: StructType, g: StructType) =>
+      if (inOrder && g.fieldNames.toSeq != w.fieldNames.toSeq)
+        Some(s"$at has fields (${g.fieldNames.mkString(", ")})")
+      else w.fields.iterator.map { f =>
+        val path = if (at.isEmpty) f.name else s"$at.${f.name}"
+        g.fields.find(_.name == f.name) match {
+          case Some(gf) => breach(f.dataType, gf.dataType, path, inOrder)
+          case None => Some(s"$path is missing")
+        }
+      }.collectFirst { case Some(b) => b }
+    case (ArrayType(w, _), ArrayType(g, _)) => breach(w, g, s"$at[]", inOrder)
+    case _ if want == got => None
+    case _ => Some(s"$at is ${got.simpleString}, not ${want.simpleString}")
+  }
+
+  private def requireContract(got: StructType, where: String, inOrder: Boolean): Unit =
+    breach(inputSchema, got, "", inOrder).foreach { b =>
+      throw new IllegalArgumentException(
+        s"ExtractDocs input contract: $where must hold ${inputSchema.simpleString}; $b")
+    }
 
   /** Build the extraction DataFrame over any `(doc_id, spans)` DataFrame via
     * the custom node. Registers the strategy on the session (idempotent).
@@ -104,21 +149,57 @@ object ExtractDocs {
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ PushDocIdFilterThroughExtract
     val child = docs.select("doc_id", "spans")
-    // the exec node reads span fields by ordinal
-    val fields = child.schema("spans").dataType match {
-      case ArrayType(st: StructType, _) => st.fieldNames.toSeq
-      case _ => Nil
-    }
-    require(fields == inSpanFields,
-      s"ExtractDocs child contract: spans must be array<struct<${inSpanFields.mkString(",")}>>, " +
-        s"got ${child.schema("spans").dataType.simpleString}")
+    requireContract(child.schema, "the child", inOrder = true) // the node reads by ordinal
     org.apache.spark.sql.GraftColumnBridge.ofRows(spark, ExtractDocs(
       org.apache.spark.sql.GraftColumnBridge.logicalPlan(child), lineage = lineage))
   }
 
+  /** The input table at `inputPath`, read with [[inputSchema]], so no
+    * schema-inference job runs. First, on the driver, the footer of the
+    * first data file in path order (the file inference would read) must
+    * hold the contract's columns and span fields with the contract's
+    * types; extra ones and any field order are fine, as the read picks the
+    * contract's fields by name.
+    */
+  def readInput(spark: SparkSession, inputPath: String): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    firstDataFile(new Path(inputPath), conf).foreach { f =>
+      requireContract(footerSchema(f, conf), f.toString, inOrder = false)
+    }
+    spark.read.schema(inputSchema).parquet(inputPath)
+  }
+
+  /** The data file under `path` (a directory, file or glob) with the
+    * smallest path, skipping the hidden names Spark's file index skips;
+    * None when nothing matches (the read then reports it).
+    */
+  private def firstDataFile(path: Path, conf: Configuration): Option[Path] = {
+    val fs = path.getFileSystem(conf)
+    def hidden(name: String) = (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+    // listStatus, not listFiles: a recursive listFiles also looks up the
+    // block locations of every file, which costs far more than the listing
+    def files(st: FileStatus): Seq[Path] =
+      if (st.isFile) Seq(st.getPath)
+      else fs.listStatus(st.getPath).toSeq.filterNot(c => hidden(c.getPath.getName)).flatMap(files)
+    Option(fs.globStatus(path)).toSeq.flatten.flatMap(files).minByOption(_.toString)
+  }
+
+  /** The Spark schema of parquet file `f` as inference derives it: the
+    * schema Spark wrote into the footer, else the converted parquet schema.
+    */
+  private def footerSchema(f: Path, conf: Configuration): StructType = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf),
+      HadoopReadOptions.builder(conf, f)
+        .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+    val meta = try reader.getFooter.getFileMetaData finally reader.close()
+    Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+      .getOrElse(new ParquetToSparkSchemaConverter(conf).convert(meta.getSchema))
+  }
+
   /** [[of]] over an input table path. */
   def over(spark: SparkSession, inputPath: String): DataFrame =
-    of(spark.read.parquet(inputPath))
+    of(readInput(spark, inputPath))
 }
 
 object ExtractStrategy extends SparkStrategy {

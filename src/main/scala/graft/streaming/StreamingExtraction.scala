@@ -20,15 +20,6 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamingExtraction {
 
-  /** Input schema per BASELINE.json input_hint. */
-  val inputSchema: StructType = StructType(Seq(
-    StructField("doc_id", StringType),
-    StructField("spans", ArrayType(StructType(Seq(
-      StructField("kind", StringType),
-      StructField("text", StringType),
-      StructField("media_ref", StringType),
-      StructField("offset", IntegerType, nullable = false)))))))
-
   /** Run an AvailableNow ingest of `inputPath` into `outRoot` snapshots.
     * Returns the number of micro-batches processed.
     */
@@ -38,7 +29,7 @@ object StreamingExtraction {
     import spark.implicits._
     var batches = 0L
     val stream = spark.readStream
-      .schema(inputSchema)
+      .schema(graft.plans.ExtractDocs.inputSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(inputPath)
 
