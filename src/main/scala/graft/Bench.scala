@@ -7,9 +7,9 @@ import graft.corpus.Corpus
 /** Driver-contract benchmark: runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR at local[SPARK_GRAFT_CPUS], prints ONE JSON line.
   * The headline extraction throughput (docs/sec, spans/sec end-to-end) is
-  * measured separately from the per-query loop; corpus parquet
-  * materialization is excluded from timing (it stands in for the
-  * pre-existing input table, like /root/testdata for the q_* queries).
+  * measured separately from the per-query loop; the gates' data
+  * prerequisites are materialized before timing (they stand in for
+  * pre-existing input tables, like the testdata dir for the q_* queries).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -22,7 +22,6 @@ object Bench {
       .config("spark.sql.shuffle.partitions", shuffle)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
       // 2+ task waves for the zero-shuffle extraction stage (BENCH.md:
       // one wave means the slowest task sets the wall clock)
       .config("spark.sql.files.maxPartitionBytes",
@@ -33,23 +32,8 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val sf = Corpus.sfName(sfDir)
-    val corpusPath = Corpus.ensure(spark, sf) // excluded from timing
-    Corpus.ensureWeb(spark, sf) // input table for the x_web_* queries
-    // planted-truth goldens + the rev-2 crawl are input-table stand-ins the
-    // web queries would otherwise lazily ensure on first run — materialize
-    // untimed like the corpus itself
-    Corpus.ensureWebMeta(spark, sf)
-    Corpus.ensureWebLinks(spark, sf)
-    Corpus.ensureWebBlocks(spark, sf)
-    Corpus.ensureWebRev2(spark, sf)
-    // pre-materialize exactly what the queries would lazily ensure, so
-    // first-run golden/oracle generation never lands in the timed region
-    // (ADVICE round 1); at the bench sf0.1 the queries skip these anyway
-    if (sf != "sf0.1") {
-      Corpus.ensureGolden(spark, sf)
-      graft.oracle.OpsGolden.ensure(spark, sfDir)
-    }
+    SparkEntry.gates.flatMap(_.needs).distinct.foreach(_.ensure(spark, sfDir))
+    val corpusPath = Corpus.corpusPath(Corpus.sfName(sfDir))
 
     // headline: end-to-end extraction throughput of the one PDF extraction
     // path, the custom plan node.
@@ -120,7 +104,7 @@ object Bench {
     // round-4 artifact gap — BENCH_r04.json parsed as null). The file is
     // the durable machine-readable record; stdout stays the driver contract.
     val contractPath = sys.env.getOrElse(
-      "SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_CONTRACT.json")
+      "SPARK_GRAFT_BENCH_OUT", "BENCH_CONTRACT.json")
     val pw = new java.io.PrintWriter(contractPath, "UTF-8")
     try pw.println(contract) finally pw.close()
     spark.stop()
@@ -147,7 +131,6 @@ object ExtractBench {
       .config("spark.sql.shuffle.partitions", shuffle)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "16g"))
       // input-split size controls task granularity (no exchange
       // rebalances the zero-shuffle extraction downstream)
       .config("spark.sql.files.maxPartitionBytes",

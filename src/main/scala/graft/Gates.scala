@@ -12,7 +12,8 @@ import org.apache.hadoop.fs.{Path => HPath}
   * resume/exactly-once commit path, and snapshot time travel. Each gate runs
   * its pipeline into a scratch dir under `data/gates/<sf>/` and returns the
   * READ-BACK result, so the driver's DuckDB oracle checks what the pipeline
-  * actually persisted, not an in-memory plan.
+  * actually persisted, not an in-memory plan. The corpus, pages and goldens
+  * they read are the prerequisites their gates declare in `SparkEntry`.
   *
   * Determinism contract: every phase is drained as ONE AvailableNow
   * micro-batch (maxFilesPerTrigger ≫ files present), so "first seen" within
@@ -99,8 +100,7 @@ object Gates {
   def resumeTable(spark: SparkSession, sfDir: String): String = synchronized {
     val sf = Corpus.sfName(sfDir)
     resumeCache.getOrElseUpdate(sf, {
-      val corpusPath = Corpus.ensure(spark, sf)
-      if (sf != "sf0.1") Corpus.ensureGolden(spark, sf)
+      val corpusPath = Corpus.corpusPath(sf)
       val work = s"${Corpus.Root}/gates/$sf/resume"
       clean(work)
       spark.read.parquet(corpusPath).where(evenDoc)
@@ -128,7 +128,7 @@ object Gates {
   def webResumeTable(spark: SparkSession, sfDir: String): String = synchronized {
     val sf = Corpus.sfName(sfDir)
     webResumeCache.getOrElseUpdate(sf, {
-      val pagesPath = Corpus.ensureWeb(spark, sf)
+      val pagesPath = Corpus.webPath(sf)
       val work = s"${Corpus.Root}/gates/$sf/web_resume"
       clean(work)
       val pages = spark.read.parquet(pagesPath)
@@ -173,7 +173,7 @@ object Gates {
   def streamWebTable(spark: SparkSession, sfDir: String): String = synchronized {
     val sf = Corpus.sfName(sfDir)
     streamWebCache.getOrElseUpdate(sf, {
-      val pagesPath = Corpus.ensureWeb(spark, sf)
+      val pagesPath = Corpus.webPath(sf)
       val work = s"${Corpus.Root}/gates/$sf/stream_web"
       clean(work)
       val pages = spark.read.parquet(pagesPath)
@@ -242,8 +242,7 @@ object Gates {
     */
   def upsertExtract(spark: SparkSession, sfDir: String): DataFrame = {
     val sf = Corpus.sfName(sfDir)
-    val corpusPath = Corpus.ensure(spark, sf)
-    if (sf != "sf0.1") Corpus.ensureGolden(spark, sf)
+    val corpusPath = Corpus.corpusPath(sf)
     val work = s"${Corpus.Root}/gates/$sf/upsert"
     clean(work)
     import spark.implicits._

@@ -644,8 +644,9 @@ object PlanDump {
       "holds a whole doc's histogram.",
       SparkEntry.queries("q_doc_entropy")(spark, dir))
 
-    // harness-exempt java.nio: PLANS.md is a repo-local builder artifact
-    java.nio.file.Files.write(java.nio.file.Paths.get("/root/repo/PLANS.md"),
+    // harness-exempt java.nio: PLANS.md is a generated document of the
+    // checkout it runs in (the working directory)
+    java.nio.file.Files.write(java.nio.file.Paths.get("PLANS.md"),
       out.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     println(s"[plandump] wrote PLANS.md (${out.length} chars)")
     spark.stop()

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.corpus.Corpus
+import graft.oracle.OpsGolden
 import graft.pipeline.{Extraction, TableIO}
 import graft.plans.{ExtractDocs, TaskLineage}
 import scala.jdk.CollectionConverters._
@@ -100,42 +101,74 @@ object SparkEntry {
     * through the one PDF extraction path, the [[graft.plans.ExtractDocs]]
     * node.
     */
-  private def extracted(spark: SparkSession, sfDir: String): DataFrame = {
-    val sf = Corpus.sfName(sfDir)
-    val path = Corpus.ensure(spark, sf)
-    // materialize oracle outputs for the driver's oracle SQL at the
-    // correctness-gate scales; bench scale skips the sequential oracle
-    if (sf != "sf0.1") Corpus.ensureGolden(spark, sf)
-    ExtractDocs.over(spark, path)
-  }
+  private def extracted(spark: SparkSession, sfDir: String): DataFrame =
+    ExtractDocs.over(spark, corpusAt(sfDir))
+
+  /** The generated PDF corpus at the scale of testdata dir `sfDir`. */
+  private def corpusAt(sfDir: String): String =
+    Corpus.corpusPath(Corpus.sfName(sfDir))
+
+  /** The generated wild-web pages table at the scale of `sfDir`. */
+  private def webPages(spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.parquet(Corpus.webPath(Corpus.sfName(sfDir)))
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    Extraction.explodeSpans(extracted(spark, "sf0.001"))
+    queries("x_extract_spans")(spark, "sf0.001")
 
-  /** One correctness gate: a query over a testdata dir, and the
-    * DuckDB-runnable oracle SQL its dumped output is re-checked with.
-    * Oracle column names/types match the query's output exactly
-    * (integer-exact expressions only; see the query-family note above).
+  /** A gate's data prerequisite: one generated table set under
+    * [[Corpus.Root]], the ensure that writes it and every data dir that
+    * ensure writes (a dependent truth also writes the pages it is planted
+    * in). Oracle-only goldens are skipped at the bench scale, where no
+    * oracle reads them and the sequential oracles would dominate the run.
+    */
+  sealed abstract class Prereq(val dirs: Seq[String], oracleOnly: Boolean = false)(
+      make: (SparkSession, String) => Any) {
+    def ensure(spark: SparkSession, sfDir: String): Unit =
+      if (!oracleOnly || Corpus.sfName(sfDir) != "sf0.1") make(spark, sfDir)
+  }
+
+  object Prereq {
+    private def bySf(f: (SparkSession, String) => String) =
+      (s: SparkSession, dir: String) => f(s, Corpus.sfName(dir))
+    private val web = Seq("web", "golden_web")
+
+    case object PdfCorpus extends Prereq(Seq("corpus"))(bySf(Corpus.ensure))
+    case object PdfGoldens extends Prereq(Seq("golden_spans", "golden_md", "golden_html",
+      "golden_corrected", "golden_totals", "golden_metrics", "golden_htmlmd",
+      "golden_htmlmd_atx", "golden_verify"), oracleOnly = true)(bySf(Corpus.ensureGolden))
+    case object OpsGoldens extends Prereq(Seq("golden_ops"), oracleOnly = true)(OpsGolden.ensure)
+    case object Web extends Prereq(web)(bySf(Corpus.ensureWeb))
+    case object WebLinks extends Prereq("golden_web_links" +: web)(bySf(Corpus.ensureWebLinks))
+    case object WebMeta extends Prereq("golden_web_meta" +: web)(bySf(Corpus.ensureWebMeta))
+    case object WebBlocks extends Prereq("golden_web_blocks" +: web)(bySf(Corpus.ensureWebBlocks))
+    case object WebRev2 extends Prereq(Seq("web_rev2", "golden_web_delta") ++ web)(
+      bySf(Corpus.ensureWebRev2))
+    case object WebRobots extends Prereq(Seq("web_robots"))(bySf(Corpus.ensureWebRobots))
+    case object WebSitemaps extends Prereq(Seq("web_sitemaps"))(bySf(Corpus.ensureWebSitemaps))
+    case object WebWarc extends Prereq("web_warc" +: web)(bySf(Corpus.ensureWarc))
+  }
+  import Prereq._
+
+  /** One correctness gate: a query over a testdata dir, the DuckDB-runnable
+    * oracle SQL its dumped output is re-checked with, and the data its
+    * query and oracle read. Oracle column names/types match the query's
+    * output exactly (integer-exact expressions only; see the query-family
+    * note above).
     */
   final case class Gate(name: String, run: (SparkSession, String) => DataFrame,
-      oracle: String)
+      oracle: String, needs: Seq[Prereq]) {
+    /** Materializes the declared prerequisites, then runs the query. */
+    def apply(spark: SparkSession, sfDir: String): DataFrame = {
+      needs.foreach(_.ensure(spark, sfDir))
+      run(spark, sfDir)
+    }
+  }
 
   object Gate {
-    def of(name: String, oracle: String)(
+    def of(name: String, oracle: String, needs: Prereq*)(
         run: (SparkSession, String) => DataFrame): Gate =
-      Gate(name, run, oracle)
-
-    /** A gate whose oracle reads `golden_ops/`: its query first
-      * materializes the sequential ops oracles at the correctness-gate
-      * scales (skipped at the bench scale, same convention as `extracted`).
-      */
-    def onOpsGolden(name: String, oracle: String)(
-        run: (SparkSession, String) => DataFrame): Gate =
-      Gate(name, (s, dir) => {
-        if (Corpus.sfName(dir) != "sf0.1") graft.oracle.OpsGolden.ensure(s, dir)
-        run(s, dir)
-      }, oracle)
+      Gate(name, run, oracle, needs)
   }
 
   /** Oracle that selects `cols` unchanged from a golden parquet written at
@@ -146,12 +179,12 @@ object SparkEntry {
 
   /** [[fromGolden]] over one [[graft.oracle.OpsGolden]] output. */
   private def fromOpsGolden(name: String, cols: String): String =
-    s"SELECT $cols FROM read_parquet('${graft.oracle.OpsGolden.path("sf0.01", name)}/*.parquet')"
+    s"SELECT $cols FROM read_parquet('${OpsGolden.path("sf0.01", name)}/*.parquet')"
 
   /** `x_extract_spans`, registered again under the custom-node name. */
   private val extractSpans =
     Gate.of("x_extract_spans",
-      fromGolden("golden_spans", "doc_id, kind, text, media_ref, ord")) { (s, dir) =>
+      fromGolden("golden_spans", "doc_id, kind, text, media_ref, ord"), PdfCorpus, PdfGoldens) { (s, dir) =>
       Extraction.explodeSpans(extracted(s, dir))
     }
 
@@ -162,16 +195,16 @@ object SparkEntry {
     // the same spans under the custom-node name, gated by the same
     // golden-spans oracle
     extractSpans.copy(name = "x_extract_spans_custom"),
-    Gate.of("x_extract_markdown", fromGolden("golden_md", "doc_id, markdown")) { (s, dir) =>
+    Gate.of("x_extract_markdown", fromGolden("golden_md", "doc_id, markdown"), PdfCorpus, PdfGoldens) { (s, dir) =>
       extracted(s, dir).select(col("doc_id"), col("markdown"))
     },
-    Gate.of("x_extract_html", fromGolden("golden_html", "doc_id, html")) { (s, dir) =>
+    Gate.of("x_extract_html", fromGolden("golden_html", "doc_id, html"), PdfCorpus, PdfGoldens) { (s, dir) =>
       extracted(s, dir).select(col("doc_id"), col("html"))
     },
     // post-extraction correction cascade over the doc markdown (the CLI-path
     // ordering, batch_processor.py:477–482); LLM boundary disabled → regex only
     Gate.of("x_corrected_markdown",
-      fromGolden("golden_corrected", "doc_id, corrected_md, regex_fired, edit_est")) { (s, dir) =>
+      fromGolden("golden_corrected", "doc_id, corrected_md, regex_fired, edit_est"), PdfCorpus, PdfGoldens) { (s, dir) =>
       import s.implicits._
       extracted(s, dir).select(col("doc_id"), col("markdown")).as[(String, String)]
         .map { case (id, md) =>
@@ -185,7 +218,7 @@ object SparkEntry {
     },
     // html→markdown round-trip (html_generator.py:585–637) over the extracted
     // html surface; golden computed by the sequential oracle
-    Gate.of("x_html_to_markdown", fromGolden("golden_htmlmd", "doc_id, md_from_html")) { (s, dir) =>
+    Gate.of("x_html_to_markdown", fromGolden("golden_htmlmd", "doc_id, md_from_html"), PdfCorpus, PdfGoldens) { (s, dir) =>
       import s.implicits._
       extracted(s, dir).select(col("doc_id"), col("html")).as[(String, String)]
         .map { case (id, html) => (id, graft.parse.HtmlText.htmlToMarkdown(html)) }
@@ -195,7 +228,7 @@ object SparkEntry {
     // (html_generator.py:599–612), dialect-implemented (markdownify not
     // installable here); golden computed by the sequential oracle
     Gate.of("x_html_to_markdown_atx",
-      fromGolden("golden_htmlmd_atx", "doc_id, md_from_html_atx")) { (s, dir) =>
+      fromGolden("golden_htmlmd_atx", "doc_id, md_from_html_atx"), PdfCorpus, PdfGoldens) { (s, dir) =>
       import s.implicits._
       extracted(s, dir).select(col("doc_id"), col("html")).as[(String, String)]
         .map { case (id, html) => (id, graft.parse.HtmlText.htmlToMarkdownAtx(html)) }
@@ -207,7 +240,7 @@ object SparkEntry {
     // oracle, scalar semantics pinned by HtmlVerifySpec's hand-broken vectors
     Gate.of("x_html_verify",
       fromGolden("golden_verify", "doc_id, n_alignment, n_spacing, n_table, " +
-        "n_font_size, n_bold, overall_score, needs_correction, report_json")) { (s, dir) =>
+        "n_font_size, n_bold, overall_score, needs_correction, report_json"), PdfCorpus, PdfGoldens) { (s, dir) =>
       import s.implicits._
       extracted(s, dir).select(col("doc_id"), col("html")).as[(String, String)]
         .map { case (id, html) =>
@@ -229,7 +262,7 @@ object SparkEntry {
         "CAST(count(*) FILTER (WHERE media_ref != '') AS BIGINT) AS n_media, " +
         "CAST(count(DISTINCT kind) AS BIGINT) AS n_kinds, " +
         "CAST(sum(length(text)) AS BIGINT) AS sum_text_chars " +
-        s"FROM read_parquet('${Corpus.Root}/golden_spans/sf0.01/*.parquet') GROUP BY 1") { (s, dir) =>
+        s"FROM read_parquet('${Corpus.Root}/golden_spans/sf0.01/*.parquet') GROUP BY 1", PdfCorpus, PdfGoldens) { (s, dir) =>
       extracted(s, dir).select(col("doc_id"),
         size(col("spans")).cast("long").as("n_spans"),
         size(filter(col("spans"), x => x.getField("media_ref") =!= ""))
@@ -240,7 +273,7 @@ object SparkEntry {
           (acc, x) => acc + length(x.getField("text"))).as("sum_text_chars"))
     },
     Gate.of("x_extract_totals",
-      fromGolden("golden_totals", "total_docs, total_spans, total_failures, avg_conf_pm")) { (s, dir) =>
+      fromGolden("golden_totals", "total_docs, total_spans, total_failures, avg_conf_pm"), PdfCorpus, PdfGoldens) { (s, dir) =>
       extracted(s, dir).agg(
         count(lit(1)).cast("long").as("total_docs"),
         sum(size(col("spans"))).cast("long").as("total_spans"),
@@ -254,11 +287,9 @@ object SparkEntry {
     // exactly as a commit's metrics table is
     Gate.of("x_extract_metrics",
       fromGolden("golden_metrics",
-        "total_pages, total_spans, total_failures, sum_conf_pm, price_krw")) { (s, dir) =>
-      val sf = Corpus.sfName(dir)
-      if (sf != "sf0.1") Corpus.ensureGolden(s, sf)
+        "total_pages, total_spans, total_failures, sum_conf_pm, price_krw"), PdfCorpus, PdfGoldens) { (s, dir) =>
       val lineage = s.sparkContext.collectionAccumulator[TaskLineage]("x_extract_metrics")
-      ExtractDocs.of(Extraction.readInput(s, Corpus.ensure(s, sf)).toDF(), Some(lineage))
+      ExtractDocs.of(Extraction.readInput(s, corpusAt(dir)).toDF(), Some(lineage))
         .write.format("noop").mode("overwrite").save()
       Extraction.metricsTotals(
         TableIO.lineageMetrics(s, lineage.value.asScala.toSeq, "x_extract_metrics", ""))
@@ -288,10 +319,9 @@ object SparkEntry {
         "SELECT doc_id, pages, " +
         "CAST(CASE WHEN pages >= 1000 THEN 35 WHEN pages >= 500 THEN 40 WHEN pages >= 100 THEN 45 ELSE 50 END AS BIGINT) AS unit_krw, " +
         "CAST(pages * (CASE WHEN pages >= 1000 THEN 35 WHEN pages >= 500 THEN 40 WHEN pages >= 100 THEN 45 ELSE 50 END) AS BIGINT) AS price_krw " +
-        "FROM pg") { (s, dir) =>
+        "FROM pg", PdfCorpus) { (s, dir) =>
       import s.implicits._
-      val sf = Corpus.sfName(dir)
-      Extraction.readInput(s, Corpus.ensure(s, sf))
+      Extraction.readInput(s, corpusAt(dir))
         .map(d => (d.doc_id, graft.parse.DocParser.splitPages(d.spans).size.toLong))
         .toDF("doc_id", "pages")
         .where(col("pages") > 0)
@@ -315,10 +345,9 @@ object SparkEntry {
       // Corpus.ensureWeb from WebGen.genPage's layout decisions), NOT an
       // extractor output — the strongest oracle shape in the repo: the
       // distributed extractor must reconstruct the plant from raw markup
-      fromGolden("golden_web", "doc_id, kind, text, media_ref, ord")) { (s, dir) =>
+      fromGolden("golden_web", "doc_id, kind, text, media_ref, ord"), Web) { (s, dir) =>
       import s.implicits._
-      val sf = Corpus.sfName(dir)
-      s.read.parquet(Corpus.ensureWeb(s, sf))
+      webPages(s, dir)
         .select("doc_id", "html").as[(String, String)]
         .flatMap { case (id, html) =>
           graft.parse.MainContent.extract(html)
@@ -334,10 +363,9 @@ object SparkEntry {
         "CAST(count(*) FILTER (WHERE kind = 'heading') AS BIGINT) AS n_heading, " +
         "CAST(count(*) FILTER (WHERE kind = 'media') AS BIGINT) AS n_media, " +
         "CAST(coalesce(sum(length(text)), 0) AS BIGINT) AS main_chars " +
-        s"FROM read_parquet('${Corpus.Root}/golden_web/sf0.01/*.parquet') GROUP BY doc_id") { (s, dir) =>
+        s"FROM read_parquet('${Corpus.Root}/golden_web/sf0.01/*.parquet') GROUP BY doc_id", Web) { (s, dir) =>
       import s.implicits._
-      val sf = Corpus.sfName(dir)
-      s.read.parquet(Corpus.ensureWeb(s, sf))
+      webPages(s, dir)
         .select("doc_id", "html").as[(String, String)]
         .map { case (id, html) =>
           val spans = graft.parse.MainContent.extract(html)
@@ -357,10 +385,9 @@ object SparkEntry {
       // the golden_web_links parquet is the generator's PLANTED outlink truth
       // (each <a href> recorded at layout time with its chrome/content
       // attribution) — the extractor must reconstruct it from raw markup
-      fromGolden("golden_web_links", "doc_id, href, text, from_content, nofollow, ord")) { (s, dir) =>
+      fromGolden("golden_web_links", "doc_id, href, text, from_content, nofollow, ord"), WebLinks) { (s, dir) =>
       import s.implicits._
-      val sf = Corpus.sfName(dir)
-      s.read.parquet(Corpus.ensureWebLinks(s, sf))
+      webPages(s, dir)
         .select("doc_id", "html").as[(String, String)]
         .flatMap { case (id, html) =>
           graft.parse.MainContent.outlinks(html)
@@ -384,10 +411,9 @@ object SparkEntry {
         "CAST(count(*) FILTER (WHERE from_content) AS BIGINT) AS n_content_refs, " +
         "CAST(count(*) FILTER (WHERE NOT nofollow) AS BIGINT) AS n_follow_refs, " +
         "CAST(count(DISTINCT doc_id) AS BIGINT) AS n_pages " +
-        s"FROM read_parquet('${Corpus.Root}/golden_web_links/sf0.01/*.parquet') GROUP BY href") { (s, dir) =>
+        s"FROM read_parquet('${Corpus.Root}/golden_web_links/sf0.01/*.parquet') GROUP BY href", WebLinks) { (s, dir) =>
       import s.implicits._
-      val sf = Corpus.sfName(dir)
-      val perPage = s.read.parquet(Corpus.ensureWebLinks(s, sf))
+      val perPage = webPages(s, dir)
         .select("doc_id", "html").as[(String, String)]
         .flatMap { case (id, html) =>
           graft.parse.MainContent.outlinks(html)
@@ -420,10 +446,10 @@ object SparkEntry {
     Gate.of("q_web_recrawl_delta",
       // planted recrawl-delta truth (the generator's revision rules: updated
       // leads, dropped pages, new ids, re-posts inheriting source change)
-      fromGolden("golden_web_delta", "doc_id, status")) { (s, dir) =>
+      fromGolden("golden_web_delta", "doc_id, status"), WebRev2) { (s, dir) =>
       import s.implicits._
       val sf = Corpus.sfName(dir)
-      val rev2Path = Corpus.ensureWebRev2(s, sf)
+      val rev2Path = Corpus.webRev2Path(sf)
       def sigs(path: String) =
         s.read.parquet(path)
           .select("doc_id", "html").as[(String, String)]
@@ -452,10 +478,9 @@ object SparkEntry {
     // Zero-shuffle per-page map; oracle = the generator's planted flag.
     Gate.of("q_web_soft404",
       // planted soft-404 flag per page (error pages and their re-posts)
-      fromGolden("golden_web_meta", "doc_id, soft404")) { (s, dir) =>
+      fromGolden("golden_web_meta", "doc_id, soft404"), WebMeta) { (s, dir) =>
       import s.implicits._
-      val sf = Corpus.sfName(dir)
-      s.read.parquet(Corpus.ensureWebMeta(s, sf))
+      webPages(s, dir)
         .select("doc_id", "html").as[(String, String)]
         .map { case (id, html) =>
           (id, graft.parse.MainContent.isSoftError(
@@ -476,10 +501,9 @@ object SparkEntry {
       // truth (every block recorded at layout time with tag / keep / image
       // count / normalized text) — the extractor must reconstruct it from raw
       // markup, block for block
-      fromGolden("golden_web_blocks", "doc_id, ord, tag, is_content, n_media, text")) { (s, dir) =>
+      fromGolden("golden_web_blocks", "doc_id, ord, tag, is_content, n_media, text"), WebBlocks) { (s, dir) =>
       import s.implicits._
-      val sf = Corpus.sfName(dir)
-      s.read.parquet(Corpus.ensureWebBlocks(s, sf))
+      webPages(s, dir)
         .select("doc_id", "html").as[(String, String)]
         .flatMap { case (id, html) =>
           val bs = graft.parse.MainContent.blocks(html)
@@ -524,10 +548,10 @@ object SparkEntry {
         "CAST(CASE WHEN tp + fp = 0 THEN 0 ELSE (1000 * tp) // (tp + fp) END AS BIGINT) AS precision_pm, " +
         "CAST(CASE WHEN tp + fn = 0 THEN 0 ELSE (1000 * tp) // (tp + fn) END AS BIGINT) AS recall_pm, " +
         "CAST(CASE WHEN 2 * tp + fp + fn = 0 THEN 0 ELSE (2000 * tp) // (2 * tp + fp + fn) END AS BIGINT) AS f1_pm " +
-        "FROM c") { (s, dir) =>
+        "FROM c", WebMeta, WebBlocks) { (s, dir) =>
       import s.implicits._
       val sf = Corpus.sfName(dir)
-      val seg = s.read.parquet(Corpus.ensureWebBlocks(s, sf))
+      val seg = webPages(s, dir)
         .select("doc_id", "url", "html").as[(String, String, String)]
         .flatMap { case (id, url, html) =>
           val host = graft.ops.Robots.hostPath(url)._1
@@ -580,10 +604,10 @@ object SparkEntry {
         "CAST(CASE WHEN tp + fp = 0 THEN 0 ELSE (1000 * tp) // (tp + fp) END AS BIGINT) AS precision_pm, " +
         "CAST(CASE WHEN tp + fn = 0 THEN 0 ELSE (1000 * tp) // (tp + fn) END AS BIGINT) AS recall_pm, " +
         "CAST(CASE WHEN 2 * tp + fp + fn = 0 THEN 0 ELSE (2000 * tp) // (2 * tp + fp + fn) END AS BIGINT) AS f1_pm " +
-        "FROM c") { (s, dir) =>
+        "FROM c", WebBlocks) { (s, dir) =>
       import s.implicits._
       val sf = Corpus.sfName(dir)
-      val seg = s.read.parquet(Corpus.ensureWebBlocks(s, sf))
+      val seg = webPages(s, dir)
         .select("doc_id", "html").as[(String, String)]
         .flatMap { case (id, html) =>
           graft.parse.MainContent.blocks(html).zipWithIndex.map { case (b, i) =>
@@ -636,10 +660,9 @@ object SparkEntry {
         "SELECT host, text, CAST(count(*) AS BIGINT) AS n_pages, " +
         "CAST(sum(nb) AS BIGINT) AS n_blocks, " +
         "CAST(sum(nc) AS BIGINT) AS n_content_blocks " +
-        "FROM p GROUP BY host, text HAVING count(*) >= 5") { (s, dir) =>
+        "FROM p GROUP BY host, text HAVING count(*) >= 5", WebMeta, WebBlocks) { (s, dir) =>
       import s.implicits._
-      val sf = Corpus.sfName(dir)
-      val blocks = s.read.parquet(Corpus.ensureWebBlocks(s, sf))
+      val blocks = webPages(s, dir)
         .select("doc_id", "url", "html").as[(String, String, String)]
         .flatMap { case (id, u, html) =>
           val host = u.stripPrefix("https://").takeWhile(_ != '/')
@@ -688,11 +711,9 @@ object SparkEntry {
         "CAST(sum(s.chars) AS BIGINT) AS main_chars, " +
         "CAST(sum(l.n_content) AS BIGINT) AS n_content_links, " +
         "CAST(sum(l.n_follow) AS BIGINT) AS n_follow_links " +
-        "FROM m JOIN s USING (doc_id) JOIN l USING (doc_id) GROUP BY m.host") { (s, dir) =>
+        "FROM m JOIN s USING (doc_id) JOIN l USING (doc_id) GROUP BY m.host", WebLinks, WebMeta) { (s, dir) =>
       import s.implicits._
-      val sf = Corpus.sfName(dir)
-      Corpus.ensureWebLinks(s, sf)
-      s.read.parquet(Corpus.ensureWebMeta(s, sf))
+      webPages(s, dir)
         .select("doc_id", "url", "html").as[(String, String, String)]
         .map { case (_, u, html) =>
           val host = u.stripPrefix("https://").takeWhile(_ != '/')
@@ -726,7 +747,7 @@ object SparkEntry {
     Gate.of("q_web_resume",
       // resume gate: the two-snapshot committed union must equal the SAME
       // planted truth — resume correctness reduces to extraction correctness
-      fromGolden("golden_web", "doc_id, kind, text, media_ref, ord")) { (s, dir) =>
+      fromGolden("golden_web", "doc_id, kind, text, media_ref, ord"), Web) { (s, dir) =>
       Gates.webResumeExtract(s, dir)
     },
     // deterministic totals over the web table's per-partition lineage
@@ -739,7 +760,7 @@ object SparkEntry {
       "SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS total_pages, " +
         "CAST(count(*) AS BIGINT) AS total_spans, " +
         "CAST(0 AS BIGINT) AS total_failures " +
-        s"FROM read_parquet('${Corpus.Root}/golden_web/sf0.01/*.parquet')") { (s, dir) =>
+        s"FROM read_parquet('${Corpus.Root}/golden_web/sf0.01/*.parquet')", Web) { (s, dir) =>
       Gates.webMetricsTotals(s, dir)
     },
     // two-phase AvailableNow streaming ingest of the raw crawl through ONE
@@ -749,7 +770,7 @@ object SparkEntry {
     Gate.of("q_stream_web_extract",
       // streaming ingest reduces to the same planted truth: exactly-once per
       // page across the restart, correct extraction per page
-      fromGolden("golden_web", "doc_id, kind, text, media_ref, ord")) { (s, dir) =>
+      fromGolden("golden_web", "doc_id, kind, text, media_ref, ord"), Web) { (s, dir) =>
       Gates.streamWebExtract(s, dir)
     },
     // extract-then-dedup composition: the generator plants content
@@ -766,10 +787,9 @@ object SparkEntry {
       "WITH sig AS (SELECT doc_id, string_agg(kind || chr(31) || text || chr(31) || media_ref, chr(30) ORDER BY ord) AS s " +
         s"FROM read_parquet('${Corpus.Root}/golden_web/sf0.01/*.parquet') GROUP BY doc_id) " +
         "SELECT md5(s) AS content_md5, CAST(count(*) AS BIGINT) AS n_docs, min(doc_id) AS keep_id " +
-        "FROM sig GROUP BY md5(s)") { (s, dir) =>
+        "FROM sig GROUP BY md5(s)", Web) { (s, dir) =>
       import s.implicits._
-      val sf = Corpus.sfName(dir)
-      val sigs = s.read.parquet(Corpus.ensureWeb(s, sf))
+      val sigs = webPages(s, dir)
         .select("doc_id", "html").as[(String, String)]
         .map { case (id, html) =>
           val spans = graft.parse.MainContent.extract(html)
@@ -796,10 +816,9 @@ object SparkEntry {
       // recover exactly this set (no band luck: the posting-list path is
       // deterministic)
       "SELECT CAST(substr(dup_src, 5) AS BIGINT) AS a, CAST(substr(doc_id, 5) AS BIGINT) AS b " +
-        s"FROM read_parquet('${Corpus.Root}/golden_web_meta/sf0.01/*.parquet') WHERE dup_kind <> ''") { (s, dir) =>
+        s"FROM read_parquet('${Corpus.Root}/golden_web_meta/sf0.01/*.parquet') WHERE dup_kind <> ''", WebMeta) { (s, dir) =>
       import s.implicits._
-      val sf = Corpus.sfName(dir)
-      val sigs = s.read.parquet(Corpus.ensureWeb(s, sf))
+      val sigs = webPages(s, dir)
         .select("doc_id", "html").as[(String, String)]
         .map { case (id, html) =>
           val toks = graft.parse.MainContent.extract(html).map(sp =>
@@ -819,10 +838,9 @@ object SparkEntry {
       // planted page-metadata truth (head title / robots-noindex / canonical
       // / pagination links) — non-members carry empty prev/next, so the gate
       // pins absence as hard as presence
-      fromGolden("golden_web_meta", "doc_id, title, noindex, canonical, prev_url, next_url")) { (s, dir) =>
+      fromGolden("golden_web_meta", "doc_id, title, noindex, canonical, prev_url, next_url"), WebMeta) { (s, dir) =>
       import s.implicits._
-      val sf = Corpus.sfName(dir)
-      s.read.parquet(Corpus.ensureWebMeta(s, sf))
+      webPages(s, dir)
         .select("doc_id", "html").as[(String, String)]
         .map { case (id, html) =>
           val m = graft.parse.MainContent.pageMeta(html)
@@ -842,10 +860,9 @@ object SparkEntry {
         "CAST(count(*) FILTER (WHERE noindex) AS BIGINT) AS n_noindex, " +
         "CAST(count(*) FILTER (WHERE NOT noindex) AS BIGINT) AS n_indexable, " +
         "CAST(coalesce(sum(n) FILTER (WHERE NOT noindex), 0) AS BIGINT) AS indexable_spans " +
-        s"FROM read_parquet('${Corpus.Root}/golden_web_meta/sf0.01/*.parquet') m JOIN s USING (doc_id)") { (s, dir) =>
+        s"FROM read_parquet('${Corpus.Root}/golden_web_meta/sf0.01/*.parquet') m JOIN s USING (doc_id)", WebMeta) { (s, dir) =>
       import s.implicits._
-      val sf = Corpus.sfName(dir)
-      s.read.parquet(Corpus.ensureWebMeta(s, sf))
+      webPages(s, dir)
         .select("doc_id", "html").as[(String, String)]
         .map { case (_, html) =>
           val noindex = graft.parse.MainContent.pageMeta(html).noindex
@@ -881,10 +898,10 @@ object SparkEntry {
         "SELECT doc_id, url, " +
         "CASE WHEN host = 'repost-archive.example' THEN path LIKE '/p/1%' " +
         "WHEN host = 'portal-3.law.example' THEN path NOT LIKE '%3' " +
-        "ELSE path NOT LIKE '%7' OR path LIKE '%77' END AS allowed FROM p") { (s, dir) =>
+        "ELSE path NOT LIKE '%7' OR path LIKE '%77' END AS allowed FROM p", Web, WebRobots) { (s, dir) =>
       val sf = Corpus.sfName(dir)
-      val pages = s.read.parquet(Corpus.ensureWeb(s, sf)).select("doc_id", "url")
-      val robots = s.read.parquet(Corpus.ensureWebRobots(s, sf))
+      val pages = webPages(s, dir).select("doc_id", "url")
+      val robots = s.read.parquet(Corpus.webRobotsPath(sf))
       graft.ops.Robots.gate(pages, robots, "graftbot/1.2")
     },
     // sitemap discovery reconciliation: fetched per-host sitemap files
@@ -918,10 +935,10 @@ object SparkEntry {
         "CASE WHEN c.url IS NOT NULL AND l.url IS NOT NULL THEN 'both' " +
         "WHEN c.url IS NULL THEN 'frontier' ELSE 'orphan' END AS status, " +
         "CASE WHEN l.url IS NOT NULL THEN CAST(DATE '2025-01-01' + CAST(l.id % 400 AS INT) AS VARCHAR) ELSE '' END AS lastmod " +
-        "FROM crawled c FULL JOIN listed l ON c.url = l.url") { (s, dir) =>
+        "FROM crawled c FULL JOIN listed l ON c.url = l.url", Web, WebSitemaps) { (s, dir) =>
       val sf = Corpus.sfName(dir)
-      val pages = s.read.parquet(Corpus.ensureWeb(s, sf)).select("url")
-      val maps = s.read.parquet(Corpus.ensureWebSitemaps(s, sf))
+      val pages = webPages(s, dir).select("url")
+      val maps = s.read.parquet(Corpus.webSitemapsPath(sf))
       graft.ops.Sitemaps.reconcile(pages, maps)
     },
     // per-host admission FUNNEL: the crawl-curation dashboard row every
@@ -959,15 +976,15 @@ object SparkEntry {
         "CAST(count(*) FILTER (WHERE soft404v) AS BIGINT) AS n_soft404, " +
         "CAST(count(*) FILTER (WHERE orphan) AS BIGINT) AS n_orphans, " +
         "CAST(coalesce(sum(ys), 0) AS BIGINT) AS yield_spans " +
-        "FROM j GROUP BY host") { (s, dir) =>
+        "FROM j GROUP BY host", WebMeta, WebRobots, WebSitemaps) { (s, dir) =>
       import s.implicits._
       val sf = Corpus.sfName(dir)
-      val pages = s.read.parquet(Corpus.ensureWeb(s, sf))
+      val pages = webPages(s, dir)
       val robots = graft.ops.Robots.gate(pages.select("doc_id", "url"),
-          s.read.parquet(Corpus.ensureWebRobots(s, sf)), "graftbot/1.2")
+          s.read.parquet(Corpus.webRobotsPath(sf)), "graftbot/1.2")
         .select(col("doc_id"), col("allowed"))
       val recon = graft.ops.Sitemaps.reconcile(pages.select("url"),
-          s.read.parquet(Corpus.ensureWebSitemaps(s, sf)))
+          s.read.parquet(Corpus.webSitemapsPath(sf)))
         .where(col("status") =!= "frontier")
         .select(col("url"), (col("status") === "orphan").as("orphan"))
       val perPage = pages.select("doc_id", "url", "html")
@@ -1009,9 +1026,8 @@ object SparkEntry {
         s"FROM read_parquet('${Corpus.Root}/web/sf0.01/*.parquet') WHERE regexp_matches(url, '/case/[0-9]+$$')) " +
         "SELECT c.doc_id, c.cited, c.mentions, coalesce(t.target_id, '') AS target_id, " +
         "coalesce(t.target_id = c.doc_id, FALSE) AS self_cite " +
-        "FROM cites c LEFT JOIN targets t USING (cited)") { (s, dir) =>
-      val sf = Corpus.sfName(dir)
-      val pages = s.read.parquet(Corpus.ensureWeb(s, sf))
+        "FROM cites c LEFT JOIN targets t USING (cited)", Web) { (s, dir) =>
+      val pages = webPages(s, dir)
       graft.ops.Citations.resolve(graft.ops.Citations.extractEdges(pages), pages)
     },
     // WARC archive source (sources/Warc.scala): the crawl read back from
@@ -1027,9 +1043,8 @@ object SparkEntry {
       // files are rendered from the same per-doc generator, so the range-
       // split reader must reproduce every row byte for byte, exactly once
       "SELECT doc_id, url, md5(html) AS html_md5 " +
-        s"FROM read_parquet('${Corpus.Root}/web/sf0.01/*.parquet')") { (s, dir) =>
-      val sf = Corpus.sfName(dir)
-      val warcDir = Corpus.ensureWarc(s, sf)
+        s"FROM read_parquet('${Corpus.Root}/web/sf0.01/*.parquet')", WebWarc) { (s, dir) =>
+      val warcDir = Corpus.webWarcPath(Corpus.sfName(dir))
       graft.sources.Warc.readPages(s, warcDir, maxSplitBytes = 256L << 10)
         .select(col("doc_id"), col("url"),
           md5(encode(col("html"), "UTF-8")).as("html_md5"))
@@ -1048,10 +1063,9 @@ object SparkEntry {
       // planted source, and content equality holds iff the re-post is exact
       "SELECT doc_id, dup_src AS canonical_id, dup_kind = 'exact' AS same_content " +
         s"FROM read_parquet('${Corpus.Root}/golden_web_meta/sf0.01/*.parquet') " +
-        "WHERE canonical <> '' AND canonical <> url") { (s, dir) =>
+        "WHERE canonical <> '' AND canonical <> url", WebMeta) { (s, dir) =>
       import s.implicits._
-      val sf = Corpus.sfName(dir)
-      val withMeta = s.read.parquet(Corpus.ensureWebMeta(s, sf))
+      val withMeta = webPages(s, dir)
         .select("doc_id", "url", "html").as[(String, String, String)]
         .map { case (id, u, html) =>
           val m = graft.parse.MainContent.pageMeta(html)
@@ -1089,11 +1103,10 @@ object SparkEntry {
         "SELECT m.doc_id, m.url, m.next_url, c.head_url, c.pos + 1 " +
         "FROM chain c JOIN m ON m.url = c.next_url), " +
         "lens AS (SELECT head_url, CAST(count(*) AS BIGINT) AS n_parts FROM chain GROUP BY 1) " +
-        "SELECT doc_id, head_url, pos, n_parts FROM chain JOIN lens USING (head_url)") { (s, dir) =>
+        "SELECT doc_id, head_url, pos, n_parts FROM chain JOIN lens USING (head_url)", WebMeta) { (s, dir) =>
       import s.implicits._
-      val sf = Corpus.sfName(dir)
       val meta = graft.ops.HeadMeta.parsed(
-        s.read.parquet(Corpus.ensureWebMeta(s, sf))
+        webPages(s, dir)
           .select("doc_id", "url", "html").as[(String, String, String)]).toDF()
       graft.ops.HeadMeta.paginationChains(meta)
     },
@@ -1109,11 +1122,10 @@ object SparkEntry {
       // one-sided declarer or dropping a validated member breaks the hash
       "SELECT doc_id, alt_group AS grp, alt_lang AS lang " +
         s"FROM read_parquet('${Corpus.Root}/golden_web_meta/sf0.01/*.parquet') " +
-        "WHERE alt_group <> ''") { (s, dir) =>
+        "WHERE alt_group <> ''", WebMeta) { (s, dir) =>
       import s.implicits._
-      val sf = Corpus.sfName(dir)
       val meta = graft.ops.HeadMeta.parsed(
-        s.read.parquet(Corpus.ensureWebMeta(s, sf))
+        webPages(s, dir)
           .select("doc_id", "url", "html").as[(String, String, String)]).toDF()
       graft.ops.HeadMeta.hreflangClusters(meta)
     },
@@ -1129,11 +1141,10 @@ object SparkEntry {
       // the engine's unescape round-trip too)
       "SELECT doc_id, 'NewsArticle' AS ld_type, title AS headline, published " +
         s"FROM read_parquet('${Corpus.Root}/golden_web_meta/sf0.01/*.parquet') " +
-        "WHERE published <> ''") { (s, dir) =>
+        "WHERE published <> ''", WebMeta) { (s, dir) =>
       import s.implicits._
-      val sf = Corpus.sfName(dir)
       val meta = graft.ops.HeadMeta.parsed(
-        s.read.parquet(Corpus.ensureWebMeta(s, sf))
+        webPages(s, dir)
           .select("doc_id", "url", "html").as[(String, String, String)]).toDF()
       graft.ops.HeadMeta.structuredData(meta)
     },
@@ -1159,10 +1170,9 @@ object SparkEntry {
         "SELECT c.head_url, s.kind, s.text, s.media_ref, " +
         "CAST(row_number() OVER (PARTITION BY c.head_url ORDER BY c.pos, s.ord) - 1 AS BIGINT) AS ord " +
         s"FROM chain c JOIN read_parquet('${Corpus.Root}/golden_web/sf0.01/*.parquet') s " +
-        "ON s.doc_id = c.doc_id") { (s, dir) =>
+        "ON s.doc_id = c.doc_id", WebMeta) { (s, dir) =>
       import s.implicits._
-      val sf = Corpus.sfName(dir)
-      val pages = s.read.parquet(Corpus.ensureWebMeta(s, sf))
+      val pages = webPages(s, dir)
       val meta = graft.ops.HeadMeta.parsed(
         pages.select("doc_id", "url", "html").as[(String, String, String)]).toDF()
       val chains = graft.ops.HeadMeta.paginationChains(meta)
@@ -1184,11 +1194,10 @@ object SparkEntry {
         s"FROM read_parquet('${Corpus.Root}/golden_web_meta/sf0.01/*.parquet') " +
         "WHERE alt_group <> '' " +
         "QUALIFY row_number() OVER (PARTITION BY alt_group " +
-        "ORDER BY (alt_lang <> 'ko'), alt_lang, doc_id) = 1") { (s, dir) =>
+        "ORDER BY (alt_lang <> 'ko'), alt_lang, doc_id) = 1", WebMeta) { (s, dir) =>
       import s.implicits._
-      val sf = Corpus.sfName(dir)
       val meta = graft.ops.HeadMeta.parsed(
-        s.read.parquet(Corpus.ensureWebMeta(s, sf))
+        webPages(s, dir)
           .select("doc_id", "url", "html").as[(String, String, String)]).toDF()
       graft.ops.HeadMeta.pickLanguageRepresentative(
         graft.ops.HeadMeta.hreflangClusters(meta), preferred = "ko")
@@ -1202,11 +1211,10 @@ object SparkEntry {
       "SELECT regexp_extract(url, '^https://([^/]+)', 1) AS host, " +
         "substr(published, 1, 7) AS month, CAST(count(*) AS BIGINT) AS n_pages " +
         s"FROM read_parquet('${Corpus.Root}/golden_web_meta/sf0.01/*.parquet') " +
-        "WHERE published <> '' GROUP BY 1, 2") { (s, dir) =>
+        "WHERE published <> '' GROUP BY 1, 2", WebMeta) { (s, dir) =>
       import s.implicits._
-      val sf = Corpus.sfName(dir)
       val meta = graft.ops.HeadMeta.parsed(
-        s.read.parquet(Corpus.ensureWebMeta(s, sf))
+        webPages(s, dir)
           .select("doc_id", "url", "html").as[(String, String, String)]).toDF()
       graft.ops.HeadMeta.structuredData(meta)
         .join(meta.select("doc_id", "url"), Seq("doc_id"))
@@ -1245,11 +1253,10 @@ object SparkEntry {
         "CAST(count(*) FILTER (WHERE declares) AS BIGINT) AS alt_declaring, " +
         "CAST(count(*) FILTER (WHERE alt_group <> '') AS BIGINT) AS alt_validated, " +
         "CAST(count(*) FILTER (WHERE published <> '') AS BIGINT) AS ld_pages " +
-        "FROM e GROUP BY host") { (s, dir) =>
+        "FROM e GROUP BY host", WebMeta) { (s, dir) =>
       import s.implicits._
-      val sf = Corpus.sfName(dir)
       val meta = graft.ops.HeadMeta.parsed(
-        s.read.parquet(Corpus.ensureWebMeta(s, sf))
+        webPages(s, dir)
           .select("doc_id", "url", "html").as[(String, String, String)]).toDF()
       val validated = graft.ops.HeadMeta.hreflangClusters(meta)
         .select(col("doc_id"), lit(true).as("validated"))
@@ -1283,33 +1290,33 @@ object SparkEntry {
     // run (committed-doc left-anti skip) — the committed union must equal
     // the golden span set exactly (exactly-once per doc_id)
     Gate.of("q_resume_extract",
-      fromGolden("golden_spans", "doc_id, kind, text, media_ref, ord")) { (s, dir) =>
+      fromGolden("golden_spans", "doc_id, kind, text, media_ref, ord"), PdfCorpus, PdfGoldens) { (s, dir) =>
       Gates.resumeExtract(s, dir)
     },
     // streaming near-dup candidates through one checkpoint incl. a restart
     // — MinHash-LSH bucket state recovered across phases; pair set is
     // order-independent and equals the sequential batch restatement
-    Gate.onOpsGolden("q_stream_near_dup", fromOpsGolden("streamnd", "a, b, est_pm")) { (s, dir) =>
+    Gate.of("q_stream_near_dup", fromOpsGolden("streamnd", "a, b, est_pm"), OpsGoldens) { (s, dir) =>
       Gates.streamNearDup(s, dir)
     },
     // Iceberg VERSION-AS-OF analog: time-travel scan of snapshot 1 only
     Gate.of("q_snapshot_asof",
       s"SELECT doc_id, kind, text, media_ref, ord FROM read_parquet('${Corpus.Root}/golden_spans/sf0.01/*.parquet') " +
-        "WHERE substr(doc_id, 13, 1) IN ('0','2','4','6','8')") { (s, dir) =>
+        "WHERE substr(doc_id, 13, 1) IN ('0','2','4','6','8')", PdfCorpus, PdfGoldens) { (s, dir) =>
       Gates.snapshotAsOf(s, dir)
     },
     // Iceberg rewrite_data_files / OPTIMIZE analog: compact the committed
     // table into one full-rewrite snapshot, expire the replaced ones, read
     // back — rows must survive compaction byte-exactly
     Gate.of("q_compacted_extract",
-      fromGolden("golden_spans", "doc_id, kind, text, media_ref, ord")) { (s, dir) =>
+      fromGolden("golden_spans", "doc_id, kind, text, media_ref, ord"), PdfCorpus, PdfGoldens) { (s, dir) =>
       Gates.compactedExtract(s, dir)
     },
     // Iceberg v2 merge-on-read analog: upsert stale docs via same-snapshot
     // tombstones, row-level delete + re-ingest, read back — the final
     // table must equal the golden span set exactly
     Gate.of("q_upsert_extract",
-      fromGolden("golden_spans", "doc_id, kind, text, media_ref, ord")) { (s, dir) =>
+      fromGolden("golden_spans", "doc_id, kind, text, media_ref, ord"), PdfCorpus, PdfGoldens) { (s, dir) =>
       Gates.upsertExtract(s, dir)
     },
     // co-located bucketed join (zero-exchange layout; plan pinned in
@@ -1598,10 +1605,10 @@ object SparkEntry {
     },
 
     // ---- dedup / similarity (sequential-oracle golden parquet gate) -----
-    Gate.onOpsGolden("q_ngram_jaccard_pairs",
+    Gate.of("q_ngram_jaccard_pairs",
       // sequential-oracle goldens (graft.oracle.OpsOracle → OpsGolden):
       // non-SQL-expressible dedup/similarity ops, hash-checked via parquet
-      fromOpsGolden("ngram", "a, b, n_inter, n_a, n_b, jaccard_pm")) { (s, dir) =>
+      fromOpsGolden("ngram", "a, b, n_inter, n_a, n_b, jaccard_pm"), OpsGoldens) { (s, dir) =>
       Dedup.ngramJaccardPairs(docsTable(s, dir), n = 3, minJaccardPm = 200)
     },
     // directional shingle containment (Broder's measure — catches a short
@@ -1673,15 +1680,15 @@ object SparkEntry {
         "FROM documents d0 LEFT JOIN mn ON CAST(d0.doc_id AS BIGINT) = mn.doc_id") { (s, dir) =>
       Dedup.containmentKeeper(docsTable(s, dir), n = 3, minContainPm = 900)
     },
-    Gate.onOpsGolden("q_minhash_near_dup",
-      fromOpsGolden("minhash", "a, b, jaccard_pm")) { (s, dir) =>
+    Gate.of("q_minhash_near_dup",
+      fromOpsGolden("minhash", "a, b, jaccard_pm"), OpsGoldens) { (s, dir) =>
       Dedup.minHashNearDup(docsTable(s, dir), n = 3, minJaccardPm = 200)
     },
     // LSH-recall eval: the minhash tier scored against the exhaustive
     // n-gram truth at the same threshold — precision pinned at 1000‰ by
     // the verify step (found ⊆ truth), recall is what (k, bands) trades;
     // the oracle recomputes the same confusion counts over the two goldens
-    Gate.onOpsGolden("q_near_dup_eval",
+    Gate.of("q_near_dup_eval",
       s"WITH t AS (SELECT a, b FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/ngram/*.parquet')), " +
         s"f AS (SELECT a, b FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/minhash/*.parquet')), " +
         "n AS (SELECT (SELECT count(*) FROM t) AS n_true, " +
@@ -1690,18 +1697,18 @@ object SparkEntry {
         "SELECT CAST(n_true AS BIGINT) AS n_true, CAST(n_found AS BIGINT) AS n_found, " +
         "CAST(n_correct AS BIGINT) AS n_correct, " +
         "CAST((n_correct * 1000) // greatest(n_found, 1) AS BIGINT) AS precision_pm, " +
-        "CAST((n_correct * 1000) // greatest(n_true, 1) AS BIGINT) AS recall_pm FROM n") { (s, dir) =>
+        "CAST((n_correct * 1000) // greatest(n_true, 1) AS BIGINT) AS recall_pm FROM n", OpsGoldens) { (s, dir) =>
       Dedup.nearDupEval(docsTable(s, dir), n = 3, minJaccardPm = 200)
     },
     // cross-source duplication matrix: where near-dups come from — the
     // curation diagnostic that finds mirror/scraper source pairs. The pair
     // set (small, the dedup stage's output) is explicitly broadcast into
     // the doc-metadata joins, so the corpus-sized side never reshuffles.
-    Gate.onOpsGolden("q_dup_source_matrix",
+    Gate.of("q_dup_source_matrix",
       s"WITH p AS (SELECT a, b FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/minhash/*.parquet')), " +
         "j AS (SELECT least(da.source, db.source) AS source_lo, greatest(da.source, db.source) AS source_hi " +
         "FROM p JOIN documents da ON p.a = da.doc_id JOIN documents db ON p.b = db.doc_id) " +
-        "SELECT source_lo, source_hi, CAST(count(*) AS BIGINT) AS n_pairs FROM j GROUP BY 1, 2") { (s, dir) =>
+        "SELECT source_lo, source_hi, CAST(count(*) AS BIGINT) AS n_pairs FROM j GROUP BY 1, 2", OpsGoldens) { (s, dir) =>
       val docs = docsTable(s, dir)
       val src = docs.select(col("doc_id").cast("long").as("doc_id"),
         col("source"))
@@ -1716,8 +1723,8 @@ object SparkEntry {
     },
     // near-dup pairs → connected components → canonical-representative pick:
     // the row set a dedup pipeline actually consumes (WHERE is_keep = 1)
-    Gate.onOpsGolden("q_dedup_clusters",
-      fromOpsGolden("clusters", "doc_id, cluster_id, n_members, is_keep")) { (s, dir) =>
+    Gate.of("q_dedup_clusters",
+      fromOpsGolden("clusters", "doc_id, cluster_id, n_members, is_keep"), OpsGoldens) { (s, dir) =>
       val docs = docsTable(s, dir)
       Dedup.dedupClusters(docs,
         Dedup.minHashNearDup(docs, n = 3, minJaccardPm = 200))
@@ -1725,26 +1732,26 @@ object SparkEntry {
     // same cluster contract through the alternating large-star/small-star
     // component algorithm (O(log² n) rounds — the long-chain-graph scale
     // path); gated by the SAME union-find golden as q_dedup_clusters
-    Gate.onOpsGolden("q_dedup_clusters_star",
-      fromOpsGolden("clusters", "doc_id, cluster_id, n_members, is_keep")) { (s, dir) =>
+    Gate.of("q_dedup_clusters_star",
+      fromOpsGolden("clusters", "doc_id, cluster_id, n_members, is_keep"), OpsGoldens) { (s, dir) =>
       val docs = docsTable(s, dir)
       Dedup.dedupClusters(docs,
         Dedup.minHashNearDup(docs, n = 3, minJaccardPm = 200), star = true)
     },
-    Gate.onOpsGolden("q_simhash_near_dup", fromOpsGolden("simhash", "a, b, hamming")) { (s, dir) =>
+    Gate.of("q_simhash_near_dup", fromOpsGolden("simhash", "a, b, hamming"), OpsGoldens) { (s, dir) =>
       Dedup.simHashNearDup(docsTable(s, dir), maxHamming = 7)
         .select(col("a"), col("b"), col("hamming").cast("long").as("hamming"))
     },
     // pairwise source-overlap estimation (mixture-contamination datasheet):
     // one k-min signature per source over its shingle UNION, agreement
     // estimator in-row on the |sources|-row broadcast self-join
-    Gate.onOpsGolden("q_source_overlap",
-      fromOpsGolden("srcover", "a, b, n_agree, jaccard_pm")) { (s, dir) =>
+    Gate.of("q_source_overlap",
+      fromOpsGolden("srcover", "a, b, n_agree, jaccard_pm"), OpsGoldens) { (s, dir) =>
       Dedup.sourceOverlap(docsTable(s, dir), n = 3, k = 64)
     },
     // winnowing-fingerprint substring-overlap pairs (MOSS): the df cap
     // drops boilerplate fingerprints BEFORE the pair expansion
-    Gate.onOpsGolden("q_winnow_dup", fromOpsGolden("winnow", "a, b, n_shared")) { (s, dir) =>
+    Gate.of("q_winnow_dup", fromOpsGolden("winnow", "a, b, n_shared"), OpsGoldens) { (s, dir) =>
       Dedup.winnowNearDup(docsTable(s, dir), k = 8, w = 16,
         minShared = 2, maxDf = 32)
     },
@@ -1774,7 +1781,7 @@ object SparkEntry {
     // integer micro-unit PageRank (10 iterations, damping 0.85): the
     // quality prior; bit-deterministic at any parallelism, gated by the
     // sequential-oracle golden
-    Gate.onOpsGolden("q_pagerank", fromOpsGolden("pagerank", "doc_id, rank_micro")) { (s, dir) =>
+    Gate.of("q_pagerank", fromOpsGolden("pagerank", "doc_id, rank_micro"), OpsGoldens) { (s, dir) =>
       val docs = docsTable(s, dir)
       Graph.pageRank(docs.select(col("doc_id")), Graph.linkEdges(docs))
     },
@@ -1822,14 +1829,14 @@ object SparkEntry {
     // HITS hubs & authorities (5 iterations): link-farm vs canonical-
     // content separation; integer micro-unit L1 normalization per step,
     // bit-deterministic, gated by the sequential-oracle golden
-    Gate.onOpsGolden("q_hits", fromOpsGolden("hits", "doc_id, auth_micro, hub_micro")) { (s, dir) =>
+    Gate.of("q_hits", fromOpsGolden("hits", "doc_id, auth_micro, hub_micro"), OpsGoldens) { (s, dir) =>
       val docs = docsTable(s, dir)
       Graph.hits(docs.select(col("doc_id")), Graph.linkEdges(docs))
     },
     // TrustRank: restart + dangling mass personalized to a trusted seed
     // set (the src0 docs) — authority flows outward from seeds, the spam-
     // demotion prior; same iterate, seed-gated teleport
-    Gate.onOpsGolden("q_trustrank", fromOpsGolden("trustrank", "doc_id, rank_micro")) { (s, dir) =>
+    Gate.of("q_trustrank", fromOpsGolden("trustrank", "doc_id, rank_micro"), OpsGoldens) { (s, dir) =>
       val docs = docsTable(s, dir)
       Graph.pageRank(docs.select(col("doc_id")), Graph.linkEdges(docs),
         seeds = Some(docs.where(col("source") === "src0").select(col("doc_id"))))
@@ -1837,12 +1844,12 @@ object SparkEntry {
     // authority mass by source: PageRank rolled up to the corpus-mixing
     // grain — how much link authority each source contributes (DuckDB
     // restates the rollup independently over the pagerank golden)
-    Gate.onOpsGolden("q_source_authority",
+    Gate.of("q_source_authority",
       "SELECT d.source, CAST(count(*) AS BIGINT) AS n_docs, " +
         "CAST(sum(p.rank_micro) AS BIGINT) AS sum_rank_micro, " +
         "CAST(max(p.rank_micro) AS BIGINT) AS max_rank_micro " +
         s"FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/pagerank/*.parquet') p " +
-        "JOIN documents d USING (doc_id) GROUP BY 1") { (s, dir) =>
+        "JOIN documents d USING (doc_id) GROUP BY 1", OpsGoldens) { (s, dir) =>
       val docs = docsTable(s, dir)
       val pr = Graph.pageRank(docs.select(col("doc_id")), Graph.linkEdges(docs))
       docs.select(col("doc_id"), col("source")).join(pr, Seq("doc_id"))
@@ -2059,8 +2066,8 @@ object SparkEntry {
     // (doc_id % 3 != 0) near-dedups against the committed corpus's
     // nearDupIndex WITHOUT touching the committed text — candidates via
     // LSH band keys, verified by integer-exact signature agreement
-    Gate.onOpsGolden("q_incremental_near_dup",
-      fromOpsGolden("incnd", "doc_id, match_id, agree_pm, is_new")) { (s, dir) =>
+    Gate.of("q_incremental_near_dup",
+      fromOpsGolden("incnd", "doc_id, match_id, agree_pm, is_new"), OpsGoldens) { (s, dir) =>
       val docs = docsTable(s, dir)
       Dedup.incrementalNearNew(
         docs.where(col("doc_id") % 3 =!= 0),
@@ -2106,14 +2113,14 @@ object SparkEntry {
     // duplicated spans themselves, gated against a sequential SUFFIX-ARRAY
     // golden (independent construction — the engine uses the equivalent
     // stride-1 window union)
-    Gate.onOpsGolden("q_exact_substr",
-      fromOpsGolden("exactsub", "doc_id, start_tok, end_tok, len_toks")) { (s, dir) =>
+    Gate.of("q_exact_substr",
+      fromOpsGolden("exactsub", "doc_id, start_tok, end_tok, len_toks"), OpsGoldens) { (s, dir) =>
       Dedup.exactSubstrSpans(docsTable(s, dir), minLen = 20)
     },
     // SemDeDup cluster-then-dedup over the embeddings (+ the same planted
     // perturbed copies as q_emb_near_dup, so true semantic dups exist)
-    Gate.onOpsGolden("q_semantic_dedup",
-      fromOpsGolden("semdedup", "vec_id, cell, dup_of, keep")) { (s, dir) =>
+    Gate.of("q_semantic_dedup",
+      fromOpsGolden("semdedup", "vec_id, cell, dup_of, keep"), OpsGoldens) { (s, dir) =>
       val embs = embTable(s, dir)
       Similarity.semanticDedup(
         embs.select(col("vec_id").cast("long"), col("embedding"))
@@ -2122,8 +2129,8 @@ object SparkEntry {
     },
     // benchmark decontamination: planted eval set = mid-document excerpts
     // of every 97th doc; flag every doc sharing a 5-gram with any of them
-    Gate.onOpsGolden("q_decontam",
-      fromOpsGolden("decontam", "doc_id, n_overlap, contaminated")) { (s, dir) =>
+    Gate.of("q_decontam",
+      fromOpsGolden("decontam", "doc_id, n_overlap, contaminated"), OpsGoldens) { (s, dir) =>
       val docs = docsTable(s, dir)
       val bench = docs.where(col("doc_id") % 97 === 0)
         .select(col("doc_id").as("bench_id"),
@@ -2133,14 +2140,14 @@ object SparkEntry {
     // BPE tokenizer training: learn the first 40 merges from corpus word
     // counts (the tokenize stage of the pipeline; merge loop is driver-side
     // over the bounded word-count table, the industrial split)
-    Gate.onOpsGolden("q_bpe_merges",
-      fromOpsGolden("bpe", "rank, \"left\", \"right\", n_occ")) { (s, dir) =>
+    Gate.of("q_bpe_merges",
+      fromOpsGolden("bpe", "rank, \"left\", \"right\", n_occ"), OpsGoldens) { (s, dir) =>
       TextOps.bpeMerges(docsTable(s, dir), nMerges = 40, maxVocab = 1 << 16)
     },
     // WordPiece (BERT) trainer: same merge loop, likelihood-scored by exact
     // BigInt cross-multiplication — the other industrial tokenizer trainer
-    Gate.onOpsGolden("q_wordpiece_merges",
-      fromOpsGolden("wpm", "rank, \"left\", \"right\", n_occ, l_cnt, r_cnt")) { (s, dir) =>
+    Gate.of("q_wordpiece_merges",
+      fromOpsGolden("wpm", "rank, \"left\", \"right\", n_occ, l_cnt, r_cnt"), OpsGoldens) { (s, dir) =>
       TextOps.wordpieceMerges(docsTable(s, dir), nMerges = 40, maxVocab = 1 << 16)
     },
     // the remaining Gopher A1.1 text rules (bullet/ellipsis line fractions,
@@ -2168,8 +2175,8 @@ object SparkEntry {
     },
     // tokenizer inference with the merges q_bpe_merges trains: collect the
     // bounded merge table driver-side (nMerges rows), broadcast, pure map
-    Gate.onOpsGolden("q_bpe_encode",
-      fromOpsGolden("bpeenc", "doc_id, n_words, n_pieces, pieces_md5")) { (s, dir) =>
+    Gate.of("q_bpe_encode",
+      fromOpsGolden("bpeenc", "doc_id, n_words, n_pieces, pieces_md5"), OpsGoldens) { (s, dir) =>
       val merges = TextOps.bpeMerges(docsTable(s, dir), nMerges = 40,
           maxVocab = 1 << 16)
         .orderBy("rank").collect().map(r => (r.getString(1), r.getString(2))).toSeq
@@ -2180,7 +2187,7 @@ object SparkEntry {
     // multilingual mixture and vocab-size decisions; composes the encode
     // stream with the doc spine in one plan (encode is pure map work, the
     // only exchange is the per-source aggregate)
-    Gate.onOpsGolden("q_tokenizer_fertility",
+    Gate.of("q_tokenizer_fertility",
       // fertility composes the bpeenc golden with the live documents table in
       // plain ANSI aggregates (integer // division == Spark div on the
       // non-negative sums here)
@@ -2194,7 +2201,7 @@ object SparkEntry {
         "CAST(sum(s.n_chars) AS BIGINT) AS n_chars, " +
         "CAST(sum(e.n_pieces) * 1000 // sum(e.n_words) AS BIGINT) AS fertility_pm, " +
         "CAST(sum(s.n_chars) * 1000 // sum(e.n_pieces) AS BIGINT) AS chars_per_piece_pm " +
-        "FROM e JOIN s USING (doc_id) GROUP BY source") { (s, dir) =>
+        "FROM e JOIN s USING (doc_id) GROUP BY source", OpsGoldens) { (s, dir) =>
       val merges = TextOps.bpeMerges(docsTable(s, dir), nMerges = 40,
           maxVocab = 1 << 16)
         .orderBy("rank").collect().map(r => (r.getString(1), r.getString(2))).toSeq
@@ -2218,8 +2225,8 @@ object SparkEntry {
     // continuations — the BERT-style counterpart of q_bpe_encode (and the
     // segmentation rule that DIVERGES from BPE's rank-replay; OpsSpec pins a
     // textbook divergence vector). Bounded vocab broadcast, pure map.
-    Gate.onOpsGolden("q_wordpiece_encode",
-      fromOpsGolden("wpenc", "doc_id, n_words, n_pieces, pieces_md5")) { (s, dir) =>
+    Gate.of("q_wordpiece_encode",
+      fromOpsGolden("wpenc", "doc_id, n_words, n_pieces, pieces_md5"), OpsGoldens) { (s, dir) =>
       val docs = docsTable(s, dir)
       TextOps.wordpieceEncode(docs,
         TextOps.wordpieceVocab(docs, nMerges = 40, maxVocab = 1 << 16))
@@ -2228,7 +2235,7 @@ object SparkEntry {
     // pieces selected globally by hard-EM segmentation usage (exact BigInt
     // Viterbi), not accreted pairwise like BPE/WordPiece. Same scale shape:
     // one capped word-count shuffle, then a bounded driver loop.
-    Gate.onOpsGolden("q_unigram_vocab", fromOpsGolden("ugv", "rank, piece, n_occ")) { (s, dir) =>
+    Gate.of("q_unigram_vocab", fromOpsGolden("ugv", "rank, piece, n_occ"), OpsGoldens) { (s, dir) =>
       TextOps.unigramVocab(docsTable(s, dir), vocabSize = 120,
         maxPieceLen = 5, seedSize = 400, emIters = 3, maxVocab = 1 << 16)
     },
@@ -2236,8 +2243,8 @@ object SparkEntry {
     // Viterbi per word (the segmentation that can differ from BOTH BPE's
     // rank-replay and WordPiece's greedy longest-match — OpsSpec pins a
     // three-way divergence vector). Bounded vocab broadcast, pure map.
-    Gate.onOpsGolden("q_unigram_encode",
-      fromOpsGolden("ugenc", "doc_id, n_words, n_pieces, pieces_md5")) { (s, dir) =>
+    Gate.of("q_unigram_encode",
+      fromOpsGolden("ugenc", "doc_id, n_words, n_pieces, pieces_md5"), OpsGoldens) { (s, dir) =>
       val docs = docsTable(s, dir)
       val vocab = TextOps.unigramVocab(docs, vocabSize = 120,
           maxPieceLen = 5, seedSize = 400, emIters = 3, maxVocab = 1 << 16)
@@ -2268,8 +2275,8 @@ object SparkEntry {
     // multinomial Naive Bayes classifier trained on a labeled seed set
     // (every 3rd doc; positive = source 'src0') and applied corpus-wide —
     // integer micro-nat log-likelihoods, bit-exact at any parallelism
-    Gate.onOpsGolden("q_doc_nb_quality",
-      fromOpsGolden("nb", "doc_id, n_toks, lp1_micro, lp0_micro, margin_micro, nb_label")) { (s, dir) =>
+    Gate.of("q_doc_nb_quality",
+      fromOpsGolden("nb", "doc_id, n_toks, lp1_micro, lp0_micro, margin_micro, nb_label"), OpsGoldens) { (s, dir) =>
       val docs = docsTable(s, dir)
       val labeled = docs.where(col("doc_id") % 3 === 0)
         .select(col("doc_id"),
@@ -2295,11 +2302,11 @@ object SparkEntry {
     },
     // quality-aware canonical keeper: within each minhash near-dup cluster
     // keep the LONGEST member (ties → lowest id), not the lowest id
-    Gate.onOpsGolden("q_dedup_best_keeper",
+    Gate.of("q_dedup_best_keeper",
       s"WITH c AS (SELECT doc_id, cluster_id FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/clusters/*.parquet')), " +
         "j AS (SELECT c.doc_id, c.cluster_id, length(d.text) AS sc FROM c JOIN documents d USING (doc_id)), " +
         "r AS (SELECT doc_id, cluster_id, row_number() OVER (PARTITION BY cluster_id ORDER BY sc DESC, doc_id ASC) AS rn FROM j) " +
-        "SELECT doc_id, cluster_id, CAST(CASE WHEN rn = 1 THEN 1 ELSE 0 END AS BIGINT) AS keep FROM r") { (s, dir) =>
+        "SELECT doc_id, cluster_id, CAST(CASE WHEN rn = 1 THEN 1 ELSE 0 END AS BIGINT) AS keep FROM r", OpsGoldens) { (s, dir) =>
       val docs = docsTable(s, dir)
       Dedup.dedupClustersBy(docs,
         Dedup.minHashNearDup(docs, n = 3, minJaccardPm = 200),
@@ -2385,8 +2392,8 @@ object SparkEntry {
     // family (corpus audit / decontamination triage / seed-set search);
     // query terms ship map-side, only term HITS ever shuffle, scores are
     // integer micro-nats via the codegen bm25_micro expression
-    Gate.onOpsGolden("q_bm25_topk",
-      fromOpsGolden("bm25", "q_id, doc_id, rank, score_micro")) { (s, dir) =>
+    Gate.of("q_bm25_topk",
+      fromOpsGolden("bm25", "q_id, doc_id, rank, score_micro"), OpsGoldens) { (s, dir) =>
       Retrieval.bm25TopK(docsTable(s, dir), Retrieval.GateQueries, k = 10)
         .select(col("q_id"), col("doc_id"),
           col("rank").cast("long").as("rank"), col("score_micro"))
@@ -2396,7 +2403,7 @@ object SparkEntry {
     // table broadcasts into the corpus scan, relevance only evaluated on
     // ranked candidates; DuckDB recomputes relevance from raw text over
     // the bm25 golden
-    Gate.onOpsGolden("q_retrieval_mrr",
+    Gate.of("q_retrieval_mrr",
       s"WITH r AS (SELECT q_id, doc_id, rank FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/bm25/*.parquet')), " +
         "q AS (SELECT * FROM (VALUES (0, 'join hash batch'), (1, 'customer filter'), " +
         "(2, 'scan column row'), (3, 'slow small join'), (4, 'zzz_absent'), " +
@@ -2410,7 +2417,7 @@ object SparkEntry {
         "CAST(coalesce(a.n_rel_topk, 0) AS BIGINT) AS n_rel_topk, " +
         "CAST(coalesce(a.fr, 0) AS BIGINT) AS first_rel_rank, " +
         "CAST(CASE WHEN a.fr IS NOT NULL THEN 1000000 // a.fr ELSE 0 END AS BIGINT) AS rr_micro " +
-        "FROM q LEFT JOIN agg a USING (q_id)") { (s, dir) =>
+        "FROM q LEFT JOIN agg a USING (q_id)", OpsGoldens) { (s, dir) =>
       val docs = docsTable(s, dir)
       Retrieval.mrrEval(docs,
         Retrieval.bm25TopK(docs, Retrieval.GateQueries, k = 10),
@@ -2466,7 +2473,7 @@ object SparkEntry {
     // embedding (a real system's (text, vector) query pairs, derived
     // deterministically from the corpus here); the DuckDB oracle
     // recomputes the whole fusion in ANSI SQL over the two goldens
-    Gate.onOpsGolden("q_hybrid_rrf_topk",
+    Gate.of("q_hybrid_rrf_topk",
       s"WITH s AS (SELECT q_id, doc_id, rank FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/bm25/*.parquet')), " +
         s"d AS (SELECT q_id, n_id AS doc_id, rank FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/ann_brute/*.parquet')), " +
         "u AS (SELECT q_id, doc_id, 1000000 // (60 + rank) AS c FROM s " +
@@ -2476,7 +2483,7 @@ object SparkEntry {
         "(PARTITION BY q_id ORDER BY rrf_micro DESC, doc_id ASC) AS rank FROM f) " +
         "SELECT CAST(q_id AS BIGINT) AS q_id, CAST(doc_id AS BIGINT) AS doc_id, " +
         "CAST(rank AS BIGINT) AS rank, CAST(rrf_micro AS BIGINT) AS rrf_micro " +
-        "FROM r WHERE rank <= 10") { (s, dir) =>
+        "FROM r WHERE rank <= 10", OpsGoldens) { (s, dir) =>
       val sparse = Retrieval.bm25TopK(docsTable(s, dir),
           Retrieval.GateQueries, k = 10)
         .select(col("q_id"), col("doc_id"), col("rank"))
@@ -2485,8 +2492,8 @@ object SparkEntry {
       Retrieval.rrfFuse(Seq(sparse, dense), k = 10)
     },
     // per-source token-distribution KL drift vs the corpus (micro-nats)
-    Gate.onOpsGolden("q_source_kl",
-      fromOpsGolden("srckl", "source, n_toks, kl_micro_scaled, kl_micro_per_tok")) { (s, dir) =>
+    Gate.of("q_source_kl",
+      fromOpsGolden("srckl", "source, n_toks, kl_micro_scaled, kl_micro_per_tok"), OpsGoldens) { (s, dir) =>
       TextOps.sourceKl(docsTable(s, dir))
     },
     // Count-Min sketch point queries for a fixed token set (10 live corpus
@@ -2512,7 +2519,7 @@ object SparkEntry {
     // model score (NB), token-shape signals (Gopher) and the blocklist in
     // ONE plan: the two in-row signal sets ride a single scan projection
     // and make exactly one exchange into the NB aggregate's partitioning
-    Gate.onOpsGolden("q_quality_ensemble",
+    Gate.of("q_quality_ensemble",
       "WITH t AS (SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[]) " +
         "ELSE regexp_split_to_array(trim(text), '[ \\t\\n\\x0B\\f\\r]+') END AS toks FROM documents), " +
         "s AS (SELECT doc_id, len(toks) AS n, " +
@@ -2523,7 +2530,7 @@ object SparkEntry {
         s"m AS (SELECT doc_id, nb_label FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/nb/*.parquet')) " +
         "SELECT CAST(g.doc_id AS BIGINT) AS doc_id, " +
         "(m.nb_label = 1 AND g.blockedpm <= 25 AND g.n >= 10 AND g.meanpm BETWEEN 3000 AND 10000) AS keep " +
-        "FROM g JOIN m ON g.doc_id = m.doc_id") { (s, dir) =>
+        "FROM g JOIN m ON g.doc_id = m.doc_id", OpsGoldens) { (s, dir) =>
       val docs = docsTable(s, dir)
       val labeled = docs.where(col("doc_id") % 3 === 0)
         .select(col("doc_id"),
@@ -2534,8 +2541,8 @@ object SparkEntry {
     // deterministic mojibake planted (%3: UTF-8-as-CP1252 'tÃ¡ble',
     // %7: CP1252-gap 'â€™'), plus a GENUINE accent on %5 docs that must
     // survive untouched and veto repair on docs carrying both
-    Gate.onOpsGolden("q_doc_mojibake",
-      fromOpsGolden("moji", "doc_id, changed, n_chars_before, n_chars_after, text_md5")) { (s, dir) =>
+    Gate.of("q_doc_mojibake",
+      fromOpsGolden("moji", "doc_id, changed, n_chars_before, n_chars_after, text_md5"), OpsGoldens) { (s, dir) =>
       val planted = docsTable(s, dir)
         .withColumn("text", when(col("doc_id") % 3 === 0,
           regexp_replace(col("text"), " table ", " tÃ¡ble "))
@@ -2550,29 +2557,29 @@ object SparkEntry {
     },
     // DSIR importance weights (Xie et al. 2023): hashed-bigram importance
     // log-weight of every doc toward the src0 target distribution
-    Gate.onOpsGolden("q_doc_dsir",
-      fromOpsGolden("dsir", "doc_id, n_feats, dsir_micro, dsir_micro_per_feat")) { (s, dir) =>
+    Gate.of("q_doc_dsir",
+      fromOpsGolden("dsir", "doc_id, n_feats, dsir_micro, dsir_micro_per_feat"), OpsGoldens) { (s, dir) =>
       TextOps.dsirWeights(docsTable(s, dir), col("source") === "src0")
     },
     // CCNet-style bigram-LM perplexity quality score, trained on the corpus
     // itself (integer micro-nats end to end — bit-stable at any parallelism)
-    Gate.onOpsGolden("q_doc_lm_score",
-      fromOpsGolden("lm", "doc_id, n_trans, lp_micro_tot, lp_micro_per_tok")) { (s, dir) =>
+    Gate.of("q_doc_lm_score",
+      fromOpsGolden("lm", "doc_id, n_trans, lp_micro_tot, lp_micro_per_tok"), OpsGoldens) { (s, dir) =>
       TextOps.lmScore(docsTable(s, dir), vocabSize = 1 << 14, maxBigrams = 1 << 16)
     },
     // token-distribution Shannon entropy per doc (micro-nats) — the
     // histogram-shaped gibberish/spam signal next to the LM scores; per-type
     // terms round to longs BEFORE summing (codegen entropy_term_micro), so
     // the gate is the exact sequential restatement
-    Gate.onOpsGolden("q_doc_entropy",
-      fromOpsGolden("entropy", "doc_id, n_toks, n_types, h_micro_tot, h_micro_per_tok")) { (s, dir) =>
+    Gate.of("q_doc_entropy",
+      fromOpsGolden("entropy", "doc_id, n_toks, n_types, h_micro_tot, h_micro_per_tok"), OpsGoldens) { (s, dir) =>
       TextOps.tokenEntropy(docsTable(s, dir))
     },
     // CCNet head/middle/tail terciles per source: milli-nat-binned
     // value-at-rank cutoffs (bin-bounded per-source window), head = the
     // training-quality slice — the oracle restates the binning, ranks and
     // bucket rule in SQL over the lm golden
-    Gate.onOpsGolden("q_ccnet_buckets",
+    Gate.of("q_ccnet_buckets",
       "WITH lp AS (SELECT doc_id, (lp_micro_per_tok + 100000000) // 1000 AS lp_bin " +
         s"FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/lm/*.parquet')), " +
         "s AS (SELECT l.doc_id, d.source, l.lp_bin FROM lp l JOIN documents d USING (doc_id)), " +
@@ -2588,14 +2595,14 @@ object SparkEntry {
         "FROM cum c JOIN n USING (source) GROUP BY 1) " +
         "SELECT s.doc_id, s.source, CAST(s.lp_bin AS BIGINT) AS lp_bin, " +
         "CASE WHEN s.lp_bin > t.v2 THEN 'head' WHEN s.lp_bin > t.v1 THEN 'middle' " +
-        "ELSE 'tail' END AS bucket FROM s JOIN cuts t USING (source)") { (s, dir) =>
+        "ELSE 'tail' END AS bucket FROM s JOIN cuts t USING (source)", OpsGoldens) { (s, dir) =>
       TextOps.perplexityBuckets(docsTable(s, dir),
         vocabSize = 1 << 14, maxBigrams = 1 << 16)
     },
     // trigram stupid-backoff LM (Brants 2007) — the sharper perplexity
     // filter; caps tightened so all three backoff levels fire at the gate
-    Gate.onOpsGolden("q_doc_lm_backoff",
-      fromOpsGolden("sblm", "doc_id, n_trans, lp_micro_tot, lp_micro_per_tok")) { (s, dir) =>
+    Gate.of("q_doc_lm_backoff",
+      fromOpsGolden("sblm", "doc_id, n_trans, lp_micro_tot, lp_micro_per_tok"), OpsGoldens) { (s, dir) =>
       TextOps.backoffLmScore(docsTable(s, dir), vocabSize = 16,
         maxTrigrams = 1024, maxBigrams = 128, alphaPm = 400)
     },
@@ -2618,8 +2625,8 @@ object SparkEntry {
     // temperature-based (α=0.3) mixture: targets ∝ n_s^α from the stats
     // pass (mT5-style tail upweighting), then the same hash-Bernoulli
     // sampler — targets and sampler share one deterministic arithmetic
-    Gate.onOpsGolden("q_temperature_mixture",
-      fromOpsGolden("tempmix", "doc_id, source, mix_ppm, rate_ppm, keep")) { (s, dir) =>
+    Gate.of("q_temperature_mixture",
+      fromOpsGolden("tempmix", "doc_id, source, mix_ppm, rate_ppm, keep"), OpsGoldens) { (s, dir) =>
       val docs = docsTable(s, dir)
       TextOps.mixtureSample(docs,
         TextOps.temperatureTargets(docs, alphaPm = 300))
@@ -2660,8 +2667,8 @@ object SparkEntry {
     },
     // content-defined (gear-hash) chunking — the edit-robust CAS chunker,
     // via the native codegen cdc_chunks expression; zero shuffle
-    Gate.onOpsGolden("q_doc_cdc_chunks",
-      fromOpsGolden("cdc", "doc_id, chunk_no, n_chars, chunk_md5")) { (s, dir) =>
+    Gate.of("q_doc_cdc_chunks",
+      fromOpsGolden("cdc", "doc_id, chunk_no, n_chars, chunk_md5"), OpsGoldens) { (s, dir) =>
       TextOps.cdcChunks(docsTable(s, dir))
     },
     // one-row corpus datasheet (Gebru et al. 2021 "Datasheets for
@@ -2701,8 +2708,8 @@ object SparkEntry {
     // composed training-shard manifest: chunk over-length docs into 64/8
     // overlapping token windows, then pack the chunks into 128-token
     // sequences — the two new ops composing end-to-end
-    Gate.onOpsGolden("q_chunk_pack",
-      fromOpsGolden("chunkpack", "item_id, n_tokens, bucket, seq_id, pos")) { (s, dir) =>
+    Gate.of("q_chunk_pack",
+      fromOpsGolden("chunkpack", "item_id, n_tokens, bucket, seq_id, pos"), OpsGoldens) { (s, dir) =>
       val chunks = TextOps.chunkDocs(docsTable(s, dir), maxTokens = 64, overlap = 8)
       Packing.packItems(
         chunks.select((col("doc_id") * 1000000L + col("chunk_no")).as("item_id"),
@@ -2713,8 +2720,8 @@ object SparkEntry {
           col("pos").cast("long").as("pos"))
     },
     // sequence packing: best-fit-decreasing into 128-token training rows
-    Gate.onOpsGolden("q_pack_sequences",
-      fromOpsGolden("packing", "doc_id, n_tokens, bucket, seq_id, pos")) { (s, dir) =>
+    Gate.of("q_pack_sequences",
+      fromOpsGolden("packing", "doc_id, n_tokens, bucket, seq_id, pos"), OpsGoldens) { (s, dir) =>
       Packing.packSequences(docsTable(s, dir), capacity = 128, nBuckets = 16)
         .select(col("doc_id"), col("n_tokens").cast("long").as("n_tokens"),
           col("bucket").cast("long").as("bucket"), col("seq_id"),
@@ -2725,14 +2732,14 @@ object SparkEntry {
     // deterministic shard manifest. What a user of the reference's
     // pipeline would actually run nightly; every stage is the operator
     // gated individually elsewhere, composed here under one oracle.
-    Gate.onOpsGolden("q_training_manifest",
+    Gate.of("q_training_manifest",
       "WITH s AS (SELECT seq_id, count(*) AS n_items, sum(n_tokens) AS sum_tokens " +
         s"FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/manifest/*.parquet') GROUP BY 1), " +
         "h AS (SELECT seq_id, n_items, sum_tokens, md5('shard:' || seq_id) AS ord FROM s) " +
         "SELECT seq_id, CAST(n_items AS BIGINT) AS n_items, CAST(sum_tokens AS BIGINT) AS sum_tokens, " +
         "CAST(('0x' || substr(ord, 1, 8))::BIGINT % 8 AS BIGINT) AS shard, " +
         "CAST(row_number() OVER (PARTITION BY ('0x' || substr(ord, 1, 8))::BIGINT % 8 " +
-        "ORDER BY ord, seq_id) AS BIGINT) AS shard_pos FROM h") { (s, dir) =>
+        "ORDER BY ord, seq_id) AS BIGINT) AS shard_pos FROM h", OpsGoldens) { (s, dir) =>
       val docs = docsTable(s, dir)
       val keepers = Dedup.exact(docs)
         .select(col("keep_id").cast("long").as("doc_id"))
@@ -2747,43 +2754,43 @@ object SparkEntry {
       Packing.shardManifest(packed, nShards = 8)
     },
     // deterministic training-order shard manifest over the packed sequences
-    Gate.onOpsGolden("q_train_shards",
+    Gate.of("q_train_shards",
       "WITH s AS (SELECT seq_id, count(*) AS n_items, sum(n_tokens) AS sum_tokens " +
         s"FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/packing/*.parquet') GROUP BY 1), " +
         "h AS (SELECT seq_id, n_items, sum_tokens, md5('shard:' || seq_id) AS ord FROM s) " +
         "SELECT seq_id, CAST(n_items AS BIGINT) AS n_items, CAST(sum_tokens AS BIGINT) AS sum_tokens, " +
         "CAST(('0x' || substr(ord, 1, 8))::BIGINT % 8 AS BIGINT) AS shard, " +
         "CAST(row_number() OVER (PARTITION BY ('0x' || substr(ord, 1, 8))::BIGINT % 8 " +
-        "ORDER BY ord, seq_id) AS BIGINT) AS shard_pos FROM h") { (s, dir) =>
+        "ORDER BY ord, seq_id) AS BIGINT) AS shard_pos FROM h", OpsGoldens) { (s, dir) =>
       Packing.shardManifest(
         Packing.packSequences(docsTable(s, dir), capacity = 128, nBuckets = 16),
         nShards = 8)
     },
     // float scores surface as per-mille longs (driver hashing is
     // integer-exact; the ranking itself is computed on full doubles)
-    Gate.onOpsGolden("q_ann_brute_topk",
-      fromOpsGolden("ann_brute", "q_id, n_id, rank, score_pm")) { (s, dir) =>
+    Gate.of("q_ann_brute_topk",
+      fromOpsGolden("ann_brute", "q_id, n_id, rank, score_pm"), OpsGoldens) { (s, dir) =>
       Similarity.bruteTopK(embTable(s, dir), nQueries = 20, k = 5)
         .select(col("q_id"), col("n_id"), col("rank").cast("long").as("rank"),
           floor(col("score") * 1000).cast("long").as("score_pm"))
     },
-    Gate.onOpsGolden("q_ann_lsh_topk",
-      fromOpsGolden("ann_lsh", "q_id, n_id, rank, score_pm")) { (s, dir) =>
+    Gate.of("q_ann_lsh_topk",
+      fromOpsGolden("ann_lsh", "q_id, n_id, rank, score_pm"), OpsGoldens) { (s, dir) =>
       Similarity.lshTopK(embTable(s, dir), nQueries = 20, k = 5)
         .select(col("q_id"), col("n_id"), col("rank").cast("long").as("rank"),
           floor(col("score") * 1000).cast("long").as("score_pm"))
     },
     // compressed-search path: top-k over int8 codes, integer dot scores
-    Gate.onOpsGolden("q_ann_q8_topk",
-      fromOpsGolden("ann_q8", "q_id, n_id, rank, score_int")) { (s, dir) =>
+    Gate.of("q_ann_q8_topk",
+      fromOpsGolden("ann_q8", "q_id, n_id, rank, score_int"), OpsGoldens) { (s, dir) =>
       Similarity.quantizedTopK(embTable(s, dir), nQueries = 20, k = 5)
         .select(col("q_id"), col("n_id"), col("rank").cast("long").as("rank"),
           col("score").cast("long").as("score_int"))
     },
     // nCells pinned to the gate scale explicitly (nCells = 0 auto-derives
     // ≈√N at corpus scale; an explicit value always wins)
-    Gate.onOpsGolden("q_ann_ivf_topk",
-      fromOpsGolden("ann_ivf", "q_id, n_id, rank, score_pm")) { (s, dir) =>
+    Gate.of("q_ann_ivf_topk",
+      fromOpsGolden("ann_ivf", "q_id, n_id, rank, score_pm"), OpsGoldens) { (s, dir) =>
       Similarity.ivfTopK(embTable(s, dir), nQueries = 20, k = 5, nCells = 32)
         .select(col("q_id"), col("n_id"), col("rank").cast("long").as("rank"),
           floor(col("score") * 1000).cast("long").as("score_pm"))
@@ -2791,8 +2798,8 @@ object SparkEntry {
     // same IVF plan over a k-means-trained codebook (3 Lloyd rounds of the
     // content-hash init; micro-unit integer means → partitioning-invariant
     // and sequential-oracle-reproducible)
-    Gate.onOpsGolden("q_ann_ivf_kmeans_topk",
-      fromOpsGolden("ann_ivf_km", "q_id, n_id, rank, score_pm")) { (s, dir) =>
+    Gate.of("q_ann_ivf_kmeans_topk",
+      fromOpsGolden("ann_ivf_km", "q_id, n_id, rank, score_pm"), OpsGoldens) { (s, dir) =>
       Similarity.ivfTopK(embTable(s, dir), nQueries = 20, k = 5, nCells = 32,
           trainIters = 3)
         .select(col("q_id"), col("n_id"), col("rank").cast("long").as("rank"),
@@ -2802,8 +2809,8 @@ object SparkEntry {
     // (m=8 sub-bytes per vector instead of 64 floats), asymmetric
     // table-lookup scoring; both codebooks content-hash-seeded + micro-unit
     // Lloyd-trained → bit-reproducible by the sequential oracle
-    Gate.onOpsGolden("q_ann_ivfpq_topk",
-      fromOpsGolden("ann_ivfpq", "q_id, n_id, rank, score_pm")) { (s, dir) =>
+    Gate.of("q_ann_ivfpq_topk",
+      fromOpsGolden("ann_ivfpq", "q_id, n_id, rank, score_pm"), OpsGoldens) { (s, dir) =>
       Similarity.ivfpqTopK(embTable(s, dir), nQueries = 20, k = 5, nCells = 32,
           nProbe = 4, m = 8, ks = 16, pqIters = 2)
         .select(col("q_id"), col("n_id"), col("rank").cast("long").as("rank"),
@@ -2811,8 +2818,8 @@ object SparkEntry {
     },
     // PQ shortlist + exact-cosine re-rank (the two-stage serving shape:
     // codes produce 4k candidates, only those rejoin the float corpus)
-    Gate.onOpsGolden("q_ann_ivfpq_rerank",
-      fromOpsGolden("ann_ivfpq_rr", "q_id, n_id, rank, score_pm")) { (s, dir) =>
+    Gate.of("q_ann_ivfpq_rerank",
+      fromOpsGolden("ann_ivfpq_rr", "q_id, n_id, rank, score_pm"), OpsGoldens) { (s, dir) =>
       Similarity.ivfpqRerankTopK(embTable(s, dir), nQueries = 20, k = 5,
           nCells = 32, nProbe = 4, m = 8, ks = 16, pqIters = 2,
           shortlistFactor = 4)
@@ -2822,7 +2829,7 @@ object SparkEntry {
     // near-dups are PLANTED (perturbed copies of the first 20 vectors):
     // the driver corpus has no true embedding near-duplicates, so recall is
     // measured against a known ground truth instead of an empty set
-    Gate.onOpsGolden("q_emb_near_dup", fromOpsGolden("embdup", "a, b, score_pm")) { (s, dir) =>
+    Gate.of("q_emb_near_dup", fromOpsGolden("embdup", "a, b, score_pm"), OpsGoldens) { (s, dir) =>
       val embs = embTable(s, dir)
       Similarity.cosineNearDup(
         embs.select(col("vec_id").cast("long"), col("embedding"))
@@ -2835,7 +2842,7 @@ object SparkEntry {
     // verified near-dup positives: deterministic md5-mod negatives with
     // anchor/positive/collision skip — the embedding-trainer feed; DuckDB
     // recomputes the whole derivation over the embdup golden
-    Gate.onOpsGolden("q_contrastive_pairs",
+    Gate.of("q_contrastive_pairs",
       s"WITH p AS (SELECT a AS anchor, b AS positive FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/embdup/*.parquet')), " +
         "nv AS (SELECT count(*) AS n FROM embeddings), " +
         "an AS (SELECT DISTINCT anchor FROM p), " +
@@ -2851,7 +2858,7 @@ object SparkEntry {
         "rk AS (SELECT anchor, negative, row_number() OVER " +
         "(PARTITION BY anchor ORDER BY j) AS neg_rank FROM firstj) " +
         "SELECT p.anchor, p.positive, rk.negative, CAST(rk.neg_rank AS BIGINT) AS neg_rank " +
-        "FROM p JOIN rk USING (anchor) WHERE rk.neg_rank <= 2") { (s, dir) =>
+        "FROM p JOIN rk USING (anchor) WHERE rk.neg_rank <= 2", OpsGoldens) { (s, dir) =>
       val embs = embTable(s, dir)
       val positives = Similarity.cosineNearDup(
         embs.select(col("vec_id").cast("long"), col("embedding"))
@@ -2863,8 +2870,8 @@ object SparkEntry {
     // semantic decontamination: eval set = perturbed copies of the first 15
     // corpus embeddings (planted leaks); eval side broadcast, threshold
     // filter below the aggregate so only qualifying pairs ever shuffle
-    Gate.onOpsGolden("q_semantic_decontam",
-      fromOpsGolden("semdecon", "vec_id, eval_id, score_pm")) { (s, dir) =>
+    Gate.of("q_semantic_decontam",
+      fromOpsGolden("semdecon", "vec_id, eval_id, score_pm"), OpsGoldens) { (s, dir) =>
       val embs = embTable(s, dir)
       Similarity.semanticDecontam(embs,
         Similarity.perturbed(embs, n = 15), minCosinePm = 990)
@@ -2872,37 +2879,34 @@ object SparkEntry {
     // JL ±1 random projection (the pre-ANN shrink): seeded md5-parity sign
     // matrix rebuilt per partition, micro-first integer arithmetic — zero
     // shuffle; output exploded to scalar rows for the gate
-    Gate.onOpsGolden("q_emb_project",
-      fromOpsGolden("rproj", "vec_id, dim, out_micro")) { (s, dir) =>
+    Gate.of("q_emb_project",
+      fromOpsGolden("rproj", "vec_id, dim, out_micro"), OpsGoldens) { (s, dir) =>
       Similarity.randomProject(embTable(s, dir), outDim = 8, seed = 42)
         .select(col("vec_id"), posexplode(col("proj")).as(Seq("dim", "out_micro")))
         .select(col("vec_id"), col("dim").cast("long").as("dim"), col("out_micro"))
     },
-    Gate.onOpsGolden("q_media_features",
-      fromOpsGolden("media", "doc_id, media_ref, n_bytes, content_h64")) { (s, dir) =>
-      val sf = Corpus.sfName(dir)
+    Gate.of("q_media_features",
+      fromOpsGolden("media", "doc_id, media_ref, n_bytes, content_h64"), PdfCorpus, OpsGoldens) { (s, dir) =>
       Multimodal.extractFeatures(
-        Multimodal.fromCorpus(s, Corpus.ensure(s, sf))).toDF()
+        Multimodal.fromCorpus(s, corpusAt(dir))).toDF()
         .select(col("doc_id"), col("media_ref"),
           col("n_bytes").cast("long").as("n_bytes"), col("content_h64"))
     },
     // media-asset reuse: fetch/decode dedup by content address
-    Gate.onOpsGolden("q_media_reuse",
+    Gate.of("q_media_reuse",
       "SELECT media_ref, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs, " +
         "CAST(count(*) AS BIGINT) AS n_spans, CAST(min(n_bytes) AS BIGINT) AS n_bytes, " +
         "min(doc_id) AS keep_doc " +
-        s"FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/media/*.parquet') GROUP BY 1") { (s, dir) =>
-      val sf = Corpus.sfName(dir)
-      Multimodal.mediaReuse(Multimodal.fromCorpus(s, Corpus.ensure(s, sf)))
+        s"FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/media/*.parquet') GROUP BY 1", PdfCorpus, OpsGoldens) { (s, dir) =>
+      Multimodal.mediaReuse(Multimodal.fromCorpus(s, corpusAt(dir)))
     },
     // perceptual-hash near-duplicate assets: aHash at the scan (bytes never
     // shuffle), SimHash-style Hamming banding with the hot-bucket cap,
     // exact bit_count verify — the "re-encoded image" dedup the exact
     // content hash (q_media_reuse) cannot catch; plants = deterministic
     // 2-byte-bumped copies of the mod-7 residue-class assets
-    Gate.onOpsGolden("q_media_phash_dup", fromOpsGolden("phash", "a, b, hamming")) { (s, dir) =>
-      val sf = Corpus.sfName(dir)
-      val media = Multimodal.fromCorpus(s, Corpus.ensure(s, sf))
+    Gate.of("q_media_phash_dup", fromOpsGolden("phash", "a, b, hamming"), PdfCorpus, OpsGoldens) { (s, dir) =>
+      val media = Multimodal.fromCorpus(s, corpusAt(dir))
       Multimodal.phashNearDup(
         media.union(Multimodal.perturbedAssets(media)), maxHamming = 6)
         .select(col("a"), col("b"), col("hamming").cast("long").as("hamming"))
@@ -2911,10 +2915,9 @@ object SparkEntry {
     // perceptual dedup recall alive at 10^12 assets, where the classic
     // 512-key bands would ALL overflow the bucket cap — same exact-recall
     // pigeonhole, gated against its own sequential restatement
-    Gate.onOpsGolden("q_media_phash_dup_mih",
-      fromOpsGolden("phash_mih", "a, b, hamming")) { (s, dir) =>
-      val sf = Corpus.sfName(dir)
-      val media = Multimodal.fromCorpus(s, Corpus.ensure(s, sf))
+    Gate.of("q_media_phash_dup_mih",
+      fromOpsGolden("phash_mih", "a, b, hamming"), PdfCorpus, OpsGoldens) { (s, dir) =>
+      val media = Multimodal.fromCorpus(s, corpusAt(dir))
       Multimodal.phashNearDup(
         media.union(Multimodal.perturbedAssets(media)), maxHamming = 6,
         bandsPerKey = 3)
@@ -2923,12 +2926,11 @@ object SparkEntry {
     // video-style frame sampling: decode → resize-pool → every-2nd-frame
     // sample, bounded at 8 frames/asset — the multimodal training-pipeline
     // chain with real Spark plumbing and a stubbed codec
-    Gate.onOpsGolden("q_media_frames",
+    Gate.of("q_media_frames",
       "SELECT doc_id, media_ref, CAST(n_frames AS INT) AS n_frames, " +
         "CAST(frame_no AS INT) AS frame_no, frame_md5, pooled_micro " +
-        s"FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/frames/*.parquet')") { (s, dir) =>
-      val sf = Corpus.sfName(dir)
-      Multimodal.frameSample(Multimodal.fromCorpus(s, Corpus.ensure(s, sf)))
+        s"FROM read_parquet('${Corpus.Root}/golden_ops/sf0.01/frames/*.parquet')", PdfCorpus, OpsGoldens) { (s, dir) =>
+      Multimodal.frameSample(Multimodal.fromCorpus(s, corpusAt(dir)))
         .toDF()
     },
 
@@ -3067,6 +3069,6 @@ object SparkEntry {
 
   /** Name-keyed views of [[gates]], the shape `Verify` and `Bench` consume. */
   val queries: Map[String, (SparkSession, String) => DataFrame] =
-    gates.map(g => g.name -> g.run).toMap
+    gates.map(g => g.name -> (g(_, _))).toMap
   val oracleSql: Map[String, String] = gates.map(g => g.name -> g.oracle).toMap
 }

@@ -12,7 +12,12 @@ import java.nio.file.{Files, Paths} // harness-exempt: the corpus/golden CACHE i
   */
 object Corpus {
 
-  val Root = "/root/repo/data"
+  /** `data/` under the working directory, made absolute once on the driver.
+    * The working directory is the checkout root for the driver and for
+    * sbt's forked run and test (the convention Spark's `spark-warehouse/`
+    * follows), so each checkout reads and writes only its own data.
+    */
+  val Root: String = Paths.get("data").toAbsolutePath.toString
 
   def corpusPath(sf: String): String = s"$Root/corpus/$sf"
   def goldenSpansPath(sf: String): String = s"$Root/golden_spans/$sf"

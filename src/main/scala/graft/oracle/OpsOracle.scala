@@ -1789,8 +1789,9 @@ object OpsOracle {
 }
 
 /** Materializes the sequential ops oracles as golden parquet under
-  * data/golden_ops/<sf>/<name> (the same pattern as Corpus.ensureGolden);
-  * the driver's oracle SQL reads them via read_parquet().
+  * data/golden_ops/<sf>/<name>; the driver's oracle SQL reads them via
+  * read_parquet(). A gate whose oracle reads them declares the
+  * `OpsGoldens` prerequisite (`SparkEntry.Prereq`).
   */
 object OpsGolden {
 
