@@ -146,7 +146,7 @@ object Gates {
     * correctly, through the two-snapshot commit path).
     */
   def webResumeExtract(spark: SparkSession, sfDir: String): DataFrame =
-    graft.pipeline.WebExtraction.explodeSpans(spark,
+    graft.pipeline.Extraction.explodeSpans(
       TableIO.readCommitted(spark, webResumeTable(spark, sfDir)).get)
 
   /** Deterministic totals over the web table's per-partition lineage metrics
@@ -155,13 +155,10 @@ object Gates {
     * and a paragraph, so pages_parsed == distinct planted doc_ids — a
     * generator invariant the oracle leans on.)
     */
-  def webMetricsTotals(spark: SparkSession, sfDir: String): DataFrame = {
-    TableIO.readMetrics(spark, webResumeTable(spark, sfDir)).get
-      .agg(
-        sum(col("pages_parsed")).cast("long").as("total_pages"),
-        sum(col("spans_emitted")).cast("long").as("total_spans"),
-        sum(col("parse_failures")).cast("long").as("total_failures"))
-  }
+  def webMetricsTotals(spark: SparkSession, sfDir: String): DataFrame =
+    graft.pipeline.Extraction.metricsTotals(
+        TableIO.readMetrics(spark, webResumeTable(spark, sfDir)).get)
+      .select("total_pages", "total_spans", "total_failures")
 
   /** Two-phase streaming web ingest through ONE checkpoint (kill-restart
     * between phases): phase 1 drains the even-half files under
@@ -194,7 +191,7 @@ object Gates {
     * the planted generator truth (same oracle as the batch resume gate).
     */
   def streamWebExtract(spark: SparkSession, sfDir: String): DataFrame =
-    graft.pipeline.WebExtraction.explodeSpans(spark,
+    graft.pipeline.Extraction.explodeSpans(
       TableIO.readCommitted(spark, streamWebTable(spark, sfDir)).get)
 
   private def copyTree(src: String, dst: String): Unit = {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.corpus.Corpus
 import graft.pipeline.{Extraction, TableIO}
@@ -14,13 +14,7 @@ import graft.plans.ExtractDocs
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Verify.session()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
@@ -44,7 +38,8 @@ object PlanDump {
     emit("# PLANS -- executed physical plans of the headline queries")
     emit("")
     emit("Generated by `runMain graft.PlanDump` (AQE-final plans after one")
-    emit("execution, sf0.001 corpus + sf0.01 testdata, local[8]). What to")
+    emit(s"execution, sf0.001 corpus + sf0.01 testdata, local[${Verify.cpus}] with")
+    emit(s"${Verify.cpus} shuffle partitions, the session `graft.Verify` runs). What to")
     emit("look for is called out per plan.")
     emit("")
 
@@ -66,6 +61,15 @@ object PlanDump {
       "exchange so AQE sizes the output files. No page shuffle, no " +
       "aggregate: the per-task lineage is counted inside the node.",
       TableIO.extractForCommit(Extraction.readInput(spark, corpus),
+        spark.sparkContext.collectionAccumulator[graft.plans.TaskLineage]("plan-dump")))
+
+    dump("Web commit data plan (TableIO.webForCommit)",
+      "What `TableIO.commitWeb` writes, under the same hint: Scan → the web " +
+      "parse (MapPartitions) at input-split parallelism, then ONE " +
+      "`REBALANCE_PARTITIONS_BY_NONE` exchange. No cached parse and no " +
+      "metrics aggregate: the per-task lineage is counted while the pages " +
+      "parse, as the PDF node counts it.",
+      TableIO.webForCommit(spark.read.parquet(Corpus.ensureWeb(spark, "sf0.001")),
         spark.sparkContext.collectionAccumulator[graft.plans.TaskLineage]("plan-dump")))
 
     dump("Broadcast dimension join + top-k (q_top_customers)",

@@ -17,10 +17,10 @@ import graft.plans.ExtractDocs
 object ScaleCheck {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Verify.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", (cpus.toInt * 4).toString)
+      .config("spark.sql.shuffle.partitions", (cpus * 4).toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
@@ -59,7 +59,7 @@ object ScaleCheck {
       import spark.implicits._
       val pages = spark.read.parquet(Corpus.ensureWeb(spark, sf))
         .select(col("doc_id").cast("string"), col("html")).as[(String, String)]
-      val webOut = graft.pipeline.WebExtraction.explodeSpans(spark,
+      val webOut = graft.pipeline.Extraction.explodeSpans(
         graft.pipeline.WebExtraction.assemble(
           graft.pipeline.WebExtraction.parse(pages)))
       bad += diff(webOut,

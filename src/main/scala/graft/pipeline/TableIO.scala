@@ -6,7 +6,6 @@ import graft.plans.{ExtractDocs, TaskLineage}
 import org.apache.spark.sql.{SparkSession, DataFrame, Dataset, Encoders, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
-import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.CollectionAccumulator
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
@@ -18,7 +17,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * `iceberg-spark-runtime` is a config change, not a redesign).
   *
   * Layout:
-  *   <root>/snap-<id>/data/      parquet output (doc_id, spans, markdown)
+  *   <root>/snap-<id>/data/      parquet output: the PDF node's rows
+  *                               (doc_id, spans, markdown, html, conf_pm),
+  *                               or a web page's (doc_id, spans)
   *   <root>/snap-<id>/deletes/   parquet doc_id tombstones (upserts, deletes)
   *   <root>/snap-<id>/metrics/   parquet metrics (per-task lineage)
   *   <root>/snap-<id>/manifest.json   commit marker, written ATOMICALLY last:
@@ -213,44 +214,73 @@ object TableIO {
                    runId: String): Option[String] =
     commitDocs(spark, Extraction.readInput(spark, inputPath), outRoot, runId)
 
-  /** Extract + commit a document Dataset: a table scan, or a streaming
-    * `foreachBatch` micro-batch whose plan flows straight into the parse
-    * without a staging materialization. Docs already committed under
-    * `outRoot` are left-anti-joined away first; the new snapshot's parent is
-    * the head whose table that anti-join read.
+  /** Extract + commit the docs of a Dataset not yet committed under
+    * `outRoot`: a table scan, or a streaming `foreachBatch` micro-batch
+    * whose plan flows straight into the parse without a staging
+    * materialization.
     */
   def commitDocs(spark: SparkSession, docs: Dataset[Doc],
-                 outRoot: String, runId: String): Option[String] = {
+                 outRoot: String, runId: String): Option[String] =
+    commitRemaining(spark, docs.toDF(), pdfPlan, outRoot, runId)
+
+  /** Raw-HTML analog of [[commitDocs]] over `(doc_id, html)` pages: the
+    * crawl front end and the PDF pipeline share one resume discipline.
+    */
+  def commitWeb(spark: SparkSession, pages: DataFrame, outRoot: String,
+                runId: String): Option[String] =
+    commitRemaining(spark, pages, webPlan, outRoot, runId)
+
+  /** An extraction surface's plan over its input; it reports one
+    * [[TaskLineage]] per non-empty task into the accumulator.
+    */
+  private type Surface = (DataFrame, CollectionAccumulator[TaskLineage]) => DataFrame
+  private val pdfPlan: Surface = (docs, lineage) => ExtractDocs.of(docs, Some(lineage))
+  private val webPlan: Surface = (pages, lineage) => WebExtraction.assemble(WebExtraction.parse(
+    pages.select(col("doc_id").cast("string"), col("html"))
+      .as(Encoders.tuple(Encoders.STRING, Encoders.STRING)), Some(lineage)))
+
+  /** The data plan of a commit: the surface's plan under a REBALANCE hint.
+    * The parse runs at the input's split parallelism with no page shuffle;
+    * the one exchange lets AQE size the output files (without it every
+    * input split writes its own small file).
+    */
+  private def forCommit(input: DataFrame, surface: Surface,
+                        lineage: CollectionAccumulator[TaskLineage]): DataFrame =
+    surface(input, lineage).hint("rebalance")
+
+  /** The PDF commit's data plan: the [[ExtractDocs]] node over `docs`. */
+  def extractForCommit(docs: Dataset[Doc], lineage: CollectionAccumulator[TaskLineage]): DataFrame =
+    forCommit(docs.toDF(), pdfPlan, lineage)
+
+  /** The web commit's data plan: the web parse over `pages`. */
+  def webForCommit(pages: DataFrame, lineage: CollectionAccumulator[TaskLineage]): DataFrame =
+    forCommit(pages, webPlan, lineage)
+
+  /** The one commit body of both surfaces: rows of `input` whose doc_id is
+    * already committed under `outRoot` are left-anti-joined away, and the
+    * rest, if any, is extracted into ONE new snapshot whose parent is the
+    * head whose table that anti-join read.
+    */
+  private def commitRemaining(spark: SparkSession, input: DataFrame, surface: Surface,
+                              outRoot: String, runId: String): Option[String] = {
     val snaps = committedSnapshots(outRoot)
-    val remaining = readChain(spark, liveChain(snaps)) match {
-      case Some(done) =>
-        docs.join(done.select("doc_id"), Seq("doc_id"), "left_anti")
-          .as[Doc](Encoders.product[Doc])
-      case None => docs
-    }
+    val remaining = readChain(spark, liveChain(snaps))
+      .fold(input)(done => input.join(done.select("doc_id"), Seq("doc_id"), "left_anti"))
     if (remaining.isEmpty) return None
     Some(commitSnapshot(outRoot, snaps, runId) { (dir, snapshotId) =>
-      writeExtraction(spark, remaining, dir, runId, snapshotId)
+      writeExtraction(spark, remaining, surface, dir, runId, snapshotId)
     })
   }
 
-  /** The data plan of an extraction commit: the [[ExtractDocs]] node over
-    * `docs`, reporting per-task lineage into `lineage`, under a REBALANCE
-    * hint. The parse runs at the input's split parallelism with no page
-    * shuffle; the one exchange lets AQE size the output files (without it
-    * every input split writes its own small file).
+  /** One pass of the surface's plan writes the snapshot's data; the lineage
+    * it counted on the way becomes the metrics table, built on the driver
+    * afterwards.
     */
-  def extractForCommit(docs: Dataset[Doc],
-                       lineage: CollectionAccumulator[TaskLineage]): DataFrame =
-    ExtractDocs.of(docs.toDF(), Some(lineage)).hint("rebalance")
-
-  /** One pass of the node writes the snapshot's data; the lineage it counted
-    * on the way becomes the metrics table, built on the driver afterwards.
-    */
-  private def writeExtraction(spark: SparkSession, docs: Dataset[Doc], dir: Path,
-                              runId: String, snapshotId: String): Seq[(String, StructType)] = {
+  private def writeExtraction(spark: SparkSession, input: DataFrame, surface: Surface,
+                              dir: Path, runId: String,
+                              snapshotId: String): Seq[(String, StructType)] = {
     val lineage = spark.sparkContext.collectionAccumulator[TaskLineage]("extract lineage")
-    val data = writeDir(extractForCommit(docs, lineage), dir, "data")
+    val data = writeDir(forCommit(input, surface, lineage), dir, "data")
     Seq(data, writeDir(
       lineageMetrics(spark, lineage.value.asScala.toSeq, runId, snapshotId).coalesce(1),
       dir, "metrics"))
@@ -266,33 +296,6 @@ object TableIO {
     reports.groupBy(_.partition_id).values.map(_.head).toSeq.sortBy(_.partition_id)
       .toDF()
       .select(lit(runId).as("run_id"), lit(snapshotId).as("snapshot_id"), col("*"))
-  }
-
-  /** Raw-HTML analog of [[commitDocs]]: main-content-extract the web pages
-    * `(doc_id, html)` not yet committed under `outRoot` and commit ONE new
-    * snapshot (nested span data + per-partition lineage metrics) atomically.
-    * Same exactly-once story — a killed run leaves no visible output, a
-    * resumed run left-anti-skips committed doc_ids — so the crawl front end
-    * and the PDF pipeline share one checkpoint/resume discipline.
-    */
-  def commitWeb(spark: SparkSession, pages: DataFrame, outRoot: String,
-                runId: String): Option[String] = {
-    import spark.implicits._
-    val snaps = committedSnapshots(outRoot)
-    val remaining = readChain(spark, liveChain(snaps)) match {
-      case Some(done) =>
-        pages.join(done.select("doc_id"), Seq("doc_id"), "left_anti")
-      case None => pages
-    }
-    if (remaining.isEmpty) return None
-    Some(commitSnapshot(outRoot, snaps, runId) { (dir, snapshotId) =>
-      val parsed = WebExtraction.parse(
-          remaining.select(col("doc_id").cast("string"), col("html")).as[(String, String)])
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try Seq(writeDir(WebExtraction.assemble(parsed), dir, "data"),
-              writeDir(WebExtraction.metrics(parsed, runId, snapshotId), dir, "metrics"))
-      finally parsed.unpersist()
-    })
   }
 
   /** Writes `df` as the snapshot directory `name`; returns the name with the
@@ -365,7 +368,7 @@ object TableIO {
                  outRoot: String, runId: String): Option[String] = {
     if (docs.isEmpty) return None
     Some(commitSnapshot(outRoot, committedSnapshots(outRoot), runId) { (dir, snapshotId) =>
-      writeExtraction(spark, docs, dir, runId, snapshotId) :+
+      writeExtraction(spark, docs.toDF(), pdfPlan, dir, runId, snapshotId) :+
         writeDir(docs.select(col("doc_id")).distinct(), dir, "deletes")
     })
   }

@@ -210,23 +210,36 @@ object ExtractStrategy extends SparkStrategy {
 }
 
 /** One task's running counts; feeds both the SQL metrics and the lineage
-  * report, so every page is counted once.
+  * report, so every page is counted once. Both extraction surfaces count
+  * through it: the node per doc, the web parse per page. Time stays in
+  * nanoseconds until [[lineage]] floors the task's sum once.
   */
-private final class TaskCounts {
+private[graft] final class TaskCounts {
   var docs, pages, spans, failures, confPm, parseNs, rowIoNs = 0L
   var docLo, docHi: String = _
 
-  def add(docId: String, pageResults: Seq[PageResult], ns: Long): Unit = {
+  def add(docId: String, pages: Long, spans: Long, failures: Long, confPm: Long,
+          ns: Long): Unit = {
     if (docs == 0 || docId < docLo) docLo = docId
     if (docs == 0 || docId > docHi) docHi = docId
     docs += 1
-    pages += pageResults.length
-    pageResults.foreach { p =>
+    this.pages += pages
+    this.spans += spans
+    this.failures += failures
+    this.confPm += confPm
+    parseNs += ns
+  }
+
+  def add(docId: String, pageResults: Seq[PageResult], ns: Long): Unit = {
+    var spans, failures, confPm = 0L
+    val it = pageResults.iterator // a loop, so the locals are not boxed into a closure
+    while (it.hasNext) {
+      val p = it.next()
       if (p.parseFailed) failures += 1
       confPm += p.confPm
       spans += p.spans.length
     }
-    parseNs += ns
+    add(docId, pageResults.length, spans, failures, confPm, ns)
   }
 
   def lineage(partitionId: Int): TaskLineage =

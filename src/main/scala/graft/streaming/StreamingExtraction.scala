@@ -27,29 +27,11 @@ object StreamingExtraction {
                          checkpoint: String, runId: String,
                          maxFilesPerTrigger: Int = 8): Long = {
     import spark.implicits._
-    var batches = 0L
-    val stream = spark.readStream
-      .schema(graft.plans.ExtractDocs.inputSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inputPath)
-
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the micro-batch plan feeds TableIO's commit path DIRECTLY, so the
-        // resume/commit semantics (committed-doc skip, atomic manifest) are
-        // identical in batch and streaming modes with no staging
-        // materialization — the former staging parquet copy doubled the
-        // write I/O per batch and needed a per-filesystem cleanup
-        val docs = batch.select("doc_id", "spans").as[graft.model.Doc]
-        TableIO.commitDocs(spark, docs, outRoot, s"$runId-b$batchId")
-        batches += 1
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    batches
+    ingest(spark, graft.plans.ExtractDocs.inputSchema, inputPath, checkpoint,
+        maxFilesPerTrigger) { (batch, batchId) =>
+      TableIO.commitDocs(spark, batch.select("doc_id", "spans").as[graft.model.Doc],
+        outRoot, s"$runId-b$batchId")
+    }
   }
 
   /** Raw-HTML pages schema (the wild-web front end's input table). */
@@ -59,29 +41,40 @@ object StreamingExtraction {
 
   /** AvailableNow ingest of raw web pages into committed snapshots via
     * [[TableIO.commitWeb]] — the crawl front end as a tailing ingester, with
-    * the same end-to-end exactly-once story as the PDF path: streaming
-    * checkpoint (source offsets) + committed-doc skip make batch replays and
-    * restarts idempotent per doc_id.
+    * the same end-to-end exactly-once story as the PDF path.
     */
   def ingestWebAvailableNow(spark: SparkSession, inputPath: String,
                             outRoot: String, checkpoint: String, runId: String,
-                            maxFilesPerTrigger: Int = 8): Long = {
+                            maxFilesPerTrigger: Int = 8): Long =
+    ingest(spark, webInputSchema, inputPath, checkpoint, maxFilesPerTrigger) {
+      (batch, batchId) => TableIO.commitWeb(spark, batch, outRoot, s"$runId-b$batchId")
+    }
+
+  /** Streams the `schema` table at `inputPath` under `Trigger.AvailableNow`
+    * and hands each micro-batch to `commit`. The micro-batch plan feeds
+    * TableIO's commit path DIRECTLY, so the resume/commit semantics
+    * (committed-doc skip, atomic manifest) are identical in batch and
+    * streaming modes with no staging materialization. Returns the number
+    * of micro-batches.
+    */
+  private def ingest(spark: SparkSession, schema: StructType, inputPath: String,
+                     checkpoint: String, maxFilesPerTrigger: Int)
+                    (commit: (DataFrame, Long) => Option[String]): Long = {
     var batches = 0L
-    val stream = spark.readStream
-      .schema(webInputSchema)
+    spark.readStream
+      .schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(inputPath)
-
-    val q = stream.writeStream
+      .writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        TableIO.commitWeb(spark, batch, outRoot, s"$runId-b$batchId")
+        commit(batch, batchId)
         batches += 1
         ()
       }
       .start()
-    q.awaitTermination()
+      .awaitTermination()
     batches
   }
 }

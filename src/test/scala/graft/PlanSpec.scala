@@ -38,6 +38,16 @@ class PlanSpec extends AnyFunSuite with Matchers {
     plan should not include "Aggregate"
   }
 
+  test("web commit data plan: the parse under one rebalance exchange, no aggregate or cache") {
+    val lineage = spark.sparkContext.collectionAccumulator[graft.plans.TaskLineage]("plan-spec-web")
+    val df = TableIO.webForCommit(spark.read.parquet(Corpus.ensureWeb(spark, "sf0.001")), lineage)
+    val plan = df.queryExecution.executedPlan.toString
+    plan should include("REBALANCE_PARTITIONS")
+    plan.linesIterator.count(_.contains("Exchange")) shouldBe 1
+    plan should not include "Aggregate"
+    plan should not include "InMemoryTableScan"
+  }
+
   test("x_extract_metrics data plan: the node with no exchange") {
     // capture the plans the gate executes; its totals come from the node's
     // lineage, so the pass itself is its one noop write

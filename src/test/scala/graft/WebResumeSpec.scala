@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 import graft.model.OutSpan
 import graft.corpus.{CorpusGen, WebGen}
-import graft.pipeline.{TableIO, WebExtraction}
+import graft.pipeline.TableIO
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -64,7 +64,8 @@ class WebResumeSpec extends AnyFunSuite with Matchers {
     val m = TableIO.readMetrics(spark, s"$tmp/out").get
     m.columns shouldBe Array("run_id", "snapshot_id", "partition_id",
       "doc_lo", "doc_hi", "pages_parsed", "spans_emitted", "parse_failures",
-      "wall_ms")
+      "sum_conf_pm", "wall_ms")
+    m.agg(sum($"sum_conf_pm")).as[Long].head() shouldBe 0L
     m.agg(sum($"pages_parsed")).as[Long].head() shouldBe spec.docs.toLong
     m.agg(sum($"spans_emitted")).as[Long].head() shouldBe
       pages.map(_.truth.size.toLong).sum
@@ -75,12 +76,11 @@ class WebResumeSpec extends AnyFunSuite with Matchers {
   }
 
   test("web metrics sum page nanoseconds before flooring to wall_ms") {
-    // four 600 µs pages: 2.4 ms in all, but 0 if each page were floored first
-    val rows = (0 until 4).map(i => WebExtraction.WebRes(s"web-$i", Seq.empty,
-      failed = false, part_id = 0, wall_ns = 600000L))
-    val m = WebExtraction.metrics(rows.toDS(), "r", "s")
-    m.schema("wall_ms").dataType shouldBe org.apache.spark.sql.types.LongType
-    m.select($"wall_ms").as[Long].collect() shouldBe Array(2L)
+    // four 600 µs pages: 2.4 ms in all, but 0 if each page were floored
+    // first; both surfaces count their pages through the one TaskCounts
+    val counts = new graft.plans.TaskCounts
+    (0 until 4).foreach(i => counts.add(s"web-$i", 1, 0, 0, 0, 600000L))
+    counts.lineage(0).wall_ms shouldBe 2L
   }
 
   test("empty-content pages still commit (resume can never re-extract them forever)") {
