@@ -145,14 +145,10 @@ object ExtractBench {
     for (r <- 1 to repeats) {
       val t0 = System.nanoTime()
       val out =
-        if (mode == "web") {
-          import spark.implicits._
-          graft.pipeline.WebExtraction.assemble(
-            graft.pipeline.WebExtraction.parse(
-              spark.read.parquet(corpusPath)
-                .select(col("doc_id").cast("string"), col("html"))
-                .as[(String, String)]))
-        } else graft.plans.ExtractDocs.over(spark, corpusPath)
+        if (mode == "web")
+          graft.plans.ExtractDocs.of(spark.read.parquet(corpusPath)
+            .withColumn("doc_id", col("doc_id").cast("string")), kernel = graft.plans.ExtractDocs.Web)
+        else graft.plans.ExtractDocs.over(spark, corpusPath)
       val row = out.agg(count(lit(1)), sum(size(col("spans")))).head()
       val (docs, spans) = (row.getLong(0), row.getLong(1))
       val sec = (System.nanoTime() - t0) / 1e9

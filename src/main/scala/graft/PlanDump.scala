@@ -64,11 +64,11 @@ object PlanDump {
         spark.sparkContext.collectionAccumulator[graft.plans.TaskLineage]("plan-dump")))
 
     dump("Web commit data plan (TableIO.webForCommit)",
-      "What `TableIO.commitWeb` writes, under the same hint: Scan → the web " +
-      "parse (MapPartitions) at input-split parallelism, then ONE " +
-      "`REBALANCE_PARTITIONS_BY_NONE` exchange. No cached parse and no " +
-      "metrics aggregate: the per-task lineage is counted while the pages " +
-      "parse, as the PDF node counts it.",
+      "What `TableIO.commitWeb` writes, under the same hint: Scan → the " +
+      "same ExtractDocs node with its web kernel at input-split " +
+      "parallelism, then ONE `REBALANCE_PARTITIONS_BY_NONE` exchange. No " +
+      "typed map, no cached parse and no metrics aggregate: the node counts " +
+      "the per-task lineage while the pages parse, as under the PDF kernel.",
       TableIO.webForCommit(spark.read.parquet(Corpus.ensureWeb(spark, "sf0.001")),
         spark.sparkContext.collectionAccumulator[graft.plans.TaskLineage]("plan-dump")))
 
@@ -507,22 +507,23 @@ object PlanDump {
 
     dump("Raw-HTML main-content extraction (x_web_main_content)",
       "The wild-web front end is ONE embarrassingly parallel stage: Scan " +
-      "parquet (doc_id, html) → MapPartitions (lexer → block features → " +
-      "label → smooth → spans) → flatten. Zero exchanges — the same scaling " +
-      "shape as the custom-node PDF extraction; input-split sizing is the " +
-      "only parallelism knob that matters.",
+      "parquet (doc_id, html) → the ExtractDocs node with its web kernel " +
+      "(lexer → block features → label → smooth → spans) → explode. Zero " +
+      "exchanges — the PDF extraction's node and scaling shape; input-split " +
+      "sizing is the only parallelism knob that matters.",
       { val webPath = Corpus.ensureWeb(spark, "sf0.001")
         SparkEntry.queries("x_web_main_content")(spark,
           "/root/testdata/sf0.001") })
 
     dump("Committed-skip web resume (TableIO.commitWeb phase 2)",
-      "The resume anti-join: the raw crawl joins the committed table's " +
-      "doc_id projection LEFT ANTI — only (doc_id) crosses from the " +
+      "The resumed commit's data plan: the raw crawl joins the committed " +
+      "table's doc_id projection LEFT ANTI — only (doc_id) crosses from the " +
       "committed side (ReadSchema prunes spans), and at gate scale AQE " +
       "broadcasts it (BuildRight BroadcastHashJoin LeftAnti), so the crawl " +
-      "itself never shuffles. At corpus scale the same plan degrades " +
-      "gracefully to a sorted shuffle join on doc_id — both sides " +
-      "range-clustered by the writer.",
+      "itself never shuffles — and the ExtractDocs node with its web kernel " +
+      "parses the remainder under the commit's one rebalance exchange. At " +
+      "corpus scale the same plan degrades gracefully to a sorted shuffle " +
+      "join on doc_id — both sides range-clustered by the writer.",
       { val webPath = Corpus.ensureWeb(spark, "sf0.001")
         val tmp = java.nio.file.Files.createTempDirectory("plandump-web").toString
         val pages = spark.read.parquet(webPath)
@@ -530,7 +531,8 @@ object PlanDump {
           pages.where(substring($"doc_id", 13, 1).isin("0", "2", "4", "6", "8")),
           s"$tmp/table", "pd-w1")
         val done = graft.pipeline.TableIO.readCommitted(spark, s"$tmp/table").get
-        pages.join(done.select("doc_id"), Seq("doc_id"), "left_anti") })
+        TableIO.webForCommit(pages.join(done.select("doc_id"), Seq("doc_id"), "left_anti"),
+          spark.sparkContext.collectionAccumulator[graft.plans.TaskLineage]("plan-dump")) })
 
     dump("Extract-then-near-dup over span-hash shingles (q_web_near_dup)",
       "The crawl never shuffles: ONE zero-shuffle extract map reduces each " +

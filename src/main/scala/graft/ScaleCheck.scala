@@ -60,8 +60,7 @@ object ScaleCheck {
       val pages = spark.read.parquet(Corpus.ensureWeb(spark, sf))
         .select(col("doc_id").cast("string"), col("html")).as[(String, String)]
       val webOut = graft.pipeline.Extraction.explodeSpans(
-        graft.pipeline.WebExtraction.assemble(
-          graft.pipeline.WebExtraction.parse(pages)))
+        graft.plans.ExtractDocs.of(pages.toDF(), kernel = graft.plans.ExtractDocs.Web))
       bad += diff(webOut,
         spark.read.parquet(Corpus.goldenWebPath(sf)), s"$sf web")
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{SparkSession, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.corpus.Corpus
 import graft.oracle.OpsGolden
-import graft.pipeline.{Extraction, TableIO}
+import graft.pipeline.{Extraction, TableIO, WebExtraction}
 import graft.plans.{ExtractDocs, TaskLineage}
 import scala.jdk.CollectionConverters._
 import graft.ops.{TextOps, Dedup, Similarity, Multimodal, Packing, Sketches, UrlOps, Retrieval, Graph}
@@ -98,8 +98,8 @@ object SparkEntry {
     fnv64(sp.kind + "\u001f" + sp.text + "\u001f" + sp.media_ref)
 
   /** Extraction over the synthesized corpus at the scale matching sfDir,
-    * through the one PDF extraction path, the [[graft.plans.ExtractDocs]]
-    * node.
+    * through the one extraction path, the [[graft.plans.ExtractDocs]]
+    * node with its PDF kernel.
     */
   private def extracted(spark: SparkSession, sfDir: String): DataFrame =
     ExtractDocs.over(spark, corpusAt(sfDir))
@@ -111,6 +111,15 @@ object SparkEntry {
   /** The generated wild-web pages table at the scale of `sfDir`. */
   private def webPages(spark: SparkSession, sfDir: String): DataFrame =
     spark.read.parquet(Corpus.webPath(Corpus.sfName(sfDir)))
+
+  /** The web pages' extracted spans, one `(doc_id, kind, text, media_ref,
+    * ord)` row each: the web extraction [[TableIO.commitWeb]] commits.
+    */
+  private def webSpans(spark: SparkSession, sfDir: String): DataFrame = {
+    import spark.implicits._
+    Extraction.explodeSpans(WebExtraction.parse(
+      webPages(spark, sfDir).select("doc_id", "html").as[(String, String)]))
+  }
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
@@ -336,24 +345,18 @@ object SparkEntry {
     // raw-HTML main-content extraction (north rule: "HTML boilerplate strip
     // … DOM heuristics — text-density, link-density, tag-depth") over the
     // wild-web pages table: block segmentation + integer feature scoring +
-    // jusText-style context smoothing + media-span linking, all inside ONE
-    // zero-shuffle typed map (parse/MainContent.scala). The oracle is the
-    // generator's PLANTED truth (corpus/WebGen.scala) — decided at layout
-    // time, fully independent of the extractor.
+    // jusText-style context smoothing + media-span linking
+    // (parse/MainContent.scala), run by the ExtractDocs node's web kernel in
+    // ONE zero-shuffle pass — the same plan TableIO.commitWeb writes. The
+    // oracle is the generator's PLANTED truth (corpus/WebGen.scala) — decided
+    // at layout time, fully independent of the extractor.
     Gate.of("x_web_main_content",
       // the golden_web parquet is the generator's PLANTED truth (written by
       // Corpus.ensureWeb from WebGen.genPage's layout decisions), NOT an
       // extractor output — the strongest oracle shape in the repo: the
       // distributed extractor must reconstruct the plant from raw markup
       fromGolden("golden_web", "doc_id, kind, text, media_ref, ord"), Web) { (s, dir) =>
-      import s.implicits._
-      webPages(s, dir)
-        .select("doc_id", "html").as[(String, String)]
-        .flatMap { case (id, html) =>
-          graft.parse.MainContent.extract(html)
-            .map(sp => (id, sp.kind, sp.text, sp.media_ref, sp.order))
-        }
-        .toDF("doc_id", "kind", "text", "media_ref", "ord")
+      webSpans(s, dir)
     },
     // per-page content-shape rollup (span/heading/media counts + content
     // mass) computed IN the same per-page map — the acceptance stats a
@@ -1176,12 +1179,7 @@ object SparkEntry {
       val meta = graft.ops.HeadMeta.parsed(
         pages.select("doc_id", "url", "html").as[(String, String, String)]).toDF()
       val chains = graft.ops.HeadMeta.paginationChains(meta)
-      val spans = pages.select("doc_id", "html").as[(String, String)]
-        .flatMap { case (id, html) =>
-          graft.parse.MainContent.extract(html)
-            .map(sp => (id, sp.kind, sp.text, sp.media_ref, sp.order))
-        }.toDF("doc_id", "kind", "text", "media_ref", "ord")
-      graft.ops.HeadMeta.assembleChains(spans, chains)
+      graft.ops.HeadMeta.assembleChains(webSpans(s, dir), chains)
     },
     // language-representative pick: ONE member per validated hreflang
     // cluster admitted to the (Korean) training mix -- preferred language

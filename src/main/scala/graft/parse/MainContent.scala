@@ -53,9 +53,9 @@ import scala.collection.mutable.ArrayBuffer
   *     order.
   *
   * Everything is a pure function of the page string: the corpus-scale run
-  * is one zero-shuffle typed map over (doc_id, html) rows, embarrassingly
-  * parallel at any executor count — the same scaling shape as the PDF
-  * parse stage.
+  * is the `ExtractDocs` node's web kernel, one zero-shuffle pass over
+  * (doc_id, html) rows, embarrassingly parallel at any executor count — the
+  * same node and scaling shape as the PDF parse stage.
   */
 object MainContent {
 

@@ -4,8 +4,8 @@ import graft.model.Doc
 import org.apache.spark.sql.{SparkSession, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-/** Extraction helpers around the one PDF extraction path, the
-  * [[graft.plans.ExtractDocs]] node: input reading, the exploded per-span
+/** Extraction helpers around the one extraction path, the
+  * [[graft.plans.ExtractDocs]] node: PDF input reading, the exploded per-span
   * view, the deterministic totals over a metrics table, and the pricing
   * policy.
   *

@@ -3,7 +3,7 @@ package graft.pipeline
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.model.Doc
 import graft.plans.{ExtractDocs, TaskLineage}
-import org.apache.spark.sql.{SparkSession, DataFrame, Dataset, Encoders, SaveMode}
+import org.apache.spark.sql.{SparkSession, DataFrame, Dataset, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.util.CollectionAccumulator
@@ -17,9 +17,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * `iceberg-spark-runtime` is a config change, not a redesign).
   *
   * Layout:
-  *   <root>/snap-<id>/data/      parquet output: the PDF node's rows
-  *                               (doc_id, spans, markdown, html, conf_pm),
-  *                               or a web page's (doc_id, spans)
+  *   <root>/snap-<id>/data/      parquet output: the node's rows, under the
+  *                               PDF kernel (doc_id, spans, markdown, html,
+  *                               conf_pm), under the web kernel (doc_id, spans)
   *   <root>/snap-<id>/deletes/   parquet doc_id tombstones (upserts, deletes)
   *   <root>/snap-<id>/metrics/   parquet metrics (per-task lineage)
   *   <root>/snap-<id>/manifest.json   commit marker, written ATOMICALLY last:
@@ -221,66 +221,64 @@ object TableIO {
     */
   def commitDocs(spark: SparkSession, docs: Dataset[Doc],
                  outRoot: String, runId: String): Option[String] =
-    commitRemaining(spark, docs.toDF(), pdfPlan, outRoot, runId)
+    commitRemaining(spark, docs.toDF(), ExtractDocs.Pdf, outRoot, runId)
 
   /** Raw-HTML analog of [[commitDocs]] over `(doc_id, html)` pages: the
     * crawl front end and the PDF pipeline share one resume discipline.
     */
   def commitWeb(spark: SparkSession, pages: DataFrame, outRoot: String,
                 runId: String): Option[String] =
-    commitRemaining(spark, pages, webPlan, outRoot, runId)
+    commitRemaining(spark, stringKeyed(pages), ExtractDocs.Web, outRoot, runId)
 
-  /** An extraction surface's plan over its input; it reports one
-    * [[TaskLineage]] per non-empty task into the accumulator.
-    */
-  private type Surface = (DataFrame, CollectionAccumulator[TaskLineage]) => DataFrame
-  private val pdfPlan: Surface = (docs, lineage) => ExtractDocs.of(docs, Some(lineage))
-  private val webPlan: Surface = (pages, lineage) => WebExtraction.assemble(WebExtraction.parse(
-    pages.select(col("doc_id").cast("string"), col("html"))
-      .as(Encoders.tuple(Encoders.STRING, Encoders.STRING)), Some(lineage)))
+  /** Web pages with their doc_id cast to the web kernel's string key. */
+  private def stringKeyed(pages: DataFrame): DataFrame =
+    pages.withColumn("doc_id", col("doc_id").cast("string"))
 
-  /** The data plan of a commit: the surface's plan under a REBALANCE hint.
-    * The parse runs at the input's split parallelism with no page shuffle;
-    * the one exchange lets AQE size the output files (without it every
-    * input split writes its own small file).
+  /** The data plan of a commit: the node with the surface's kernel, which
+    * reports one [[TaskLineage]] per non-empty task into `lineage`, under a
+    * REBALANCE hint. The parse runs at the input's split parallelism with
+    * no page shuffle; the one exchange lets AQE size the output files
+    * (without it every input split writes its own small file).
     */
-  private def forCommit(input: DataFrame, surface: Surface,
+  private def forCommit(input: DataFrame, kernel: ExtractDocs.Kernel,
                         lineage: CollectionAccumulator[TaskLineage]): DataFrame =
-    surface(input, lineage).hint("rebalance")
+    ExtractDocs.of(input, Some(lineage), kernel).hint("rebalance")
 
   /** The PDF commit's data plan: the [[ExtractDocs]] node over `docs`. */
   def extractForCommit(docs: Dataset[Doc], lineage: CollectionAccumulator[TaskLineage]): DataFrame =
-    forCommit(docs.toDF(), pdfPlan, lineage)
+    forCommit(docs.toDF(), ExtractDocs.Pdf, lineage)
 
-  /** The web commit's data plan: the web parse over `pages`. */
+  /** The web commit's data plan: the node's web kernel over `pages`. */
   def webForCommit(pages: DataFrame, lineage: CollectionAccumulator[TaskLineage]): DataFrame =
-    forCommit(pages, webPlan, lineage)
+    forCommit(stringKeyed(pages), ExtractDocs.Web, lineage)
 
-  /** The one commit body of both surfaces: rows of `input` whose doc_id is
+  /** The one commit body of both surfaces, also of their streaming
+    * ingests: rows of `input` (`kernel`'s input columns) whose doc_id is
     * already committed under `outRoot` are left-anti-joined away, and the
-    * rest, if any, is extracted into ONE new snapshot whose parent is the
-    * head whose table that anti-join read.
+    * rest, if any, is extracted with `kernel` into ONE new snapshot whose
+    * parent is the head whose table that anti-join read.
     */
-  private def commitRemaining(spark: SparkSession, input: DataFrame, surface: Surface,
-                              outRoot: String, runId: String): Option[String] = {
+  private[graft] def commitRemaining(spark: SparkSession, input: DataFrame,
+                                     kernel: ExtractDocs.Kernel, outRoot: String,
+                                     runId: String): Option[String] = {
     val snaps = committedSnapshots(outRoot)
     val remaining = readChain(spark, liveChain(snaps))
       .fold(input)(done => input.join(done.select("doc_id"), Seq("doc_id"), "left_anti"))
     if (remaining.isEmpty) return None
     Some(commitSnapshot(outRoot, snaps, runId) { (dir, snapshotId) =>
-      writeExtraction(spark, remaining, surface, dir, runId, snapshotId)
+      writeExtraction(spark, remaining, kernel, dir, runId, snapshotId)
     })
   }
 
-  /** One pass of the surface's plan writes the snapshot's data; the lineage
+  /** One pass of the node with `kernel` writes the snapshot's data; the lineage
     * it counted on the way becomes the metrics table, built on the driver
     * afterwards.
     */
-  private def writeExtraction(spark: SparkSession, input: DataFrame, surface: Surface,
+  private def writeExtraction(spark: SparkSession, input: DataFrame, kernel: ExtractDocs.Kernel,
                               dir: Path, runId: String,
                               snapshotId: String): Seq[(String, StructType)] = {
     val lineage = spark.sparkContext.collectionAccumulator[TaskLineage]("extract lineage")
-    val data = writeDir(forCommit(input, surface, lineage), dir, "data")
+    val data = writeDir(forCommit(input, kernel, lineage), dir, "data")
     Seq(data, writeDir(
       lineageMetrics(spark, lineage.value.asScala.toSeq, runId, snapshotId).coalesce(1),
       dir, "metrics"))
@@ -368,7 +366,7 @@ object TableIO {
                  outRoot: String, runId: String): Option[String] = {
     if (docs.isEmpty) return None
     Some(commitSnapshot(outRoot, committedSnapshots(outRoot), runId) { (dir, snapshotId) =>
-      writeExtraction(spark, docs.toDF(), pdfPlan, dir, runId, snapshotId) :+
+      writeExtraction(spark, docs.toDF(), ExtractDocs.Pdf, dir, runId, snapshotId) :+
         writeDir(docs.select(col("doc_id")).distinct(), dir, "deletes")
     })
   }

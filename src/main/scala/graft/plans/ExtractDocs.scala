@@ -1,7 +1,7 @@
 package graft.plans
 
-import graft.model.{InSpan, Kind, PageResult}
-import graft.parse.DocParser
+import graft.model.{InSpan, Kind, OutSpan, PageResult}
+import graft.parse.{DocParser, MainContent}
 import java.nio.charset.StandardCharsets
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
@@ -13,6 +13,7 @@ import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkStrategy
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{UnsafeArrayWriter, UnsafeRowWriter}
@@ -26,24 +27,34 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.CollectionAccumulator
+import scala.util.Try
 
 /** Whole-operator extraction as a custom plan node — tier (c) of the
   * custom-operator ladder (compose built-ins > Expression > LogicalPlan +
   * Strategy + SparkPlan > mapPartitions). The physical node consumes the
-  * input table's InternalRows DIRECTLY (no Doc/InSpan Encoder round-trip —
-  * a typed `Dataset[Doc]` map deserializes every span through `mapobjects`,
-  * which this skips) and emits output rows in one map, zero shuffles. It is
-  * the only PDF extraction path: the gates, the commits and the streaming
-  * ingest all run it.
+  * input table's InternalRows DIRECTLY (no Encoder round-trip — a typed
+  * `Dataset[Doc]` map deserializes every span through `mapobjects`, which
+  * this skips) and emits output rows in one map, zero shuffles. It is the
+  * only extraction path: the gates, the commits and the streaming ingest of
+  * both surfaces run it, each with its [[ExtractDocs.Kernel]].
   *
-  * Child contract: output columns (doc_id STRING, spans ARRAY<STRUCT<kind,
-  * text, media_ref STRING, offset INT>>) in that order — any plan: a parquet
-  * scan, a resume's left-anti-joined `Dataset[Doc]`, a streaming micro-batch.
-  * A row whose spans array, a span or a span field is null parses as
-  * [[DocParser.MalformedDoc]]: one error span and one counted parse failure
-  * under its doc_id. A null doc_id still fails the task, because such a row
-  * has no key to carry an error span, and what a resume should do with it is
-  * not settled.
+  * PDF kernel ([[ExtractDocs.Pdf]]): the child's columns are (doc_id STRING,
+  * spans ARRAY<STRUCT<kind, text, media_ref STRING, offset INT>>) in that
+  * order — any plan: a parquet scan, a resume's left-anti-joined
+  * `Dataset[Doc]`, a streaming micro-batch. It writes the 5 columns of
+  * [[ExtractDocs.schema]]. A row whose spans array, a span or a span field is
+  * null parses as [[DocParser.MalformedDoc]]: one error span and one counted
+  * parse failure under its doc_id.
+  *
+  * Web kernel ([[ExtractDocs.Web]]): the child's columns are (doc_id STRING,
+  * html STRING) in that order; it writes (doc_id, spans) with the same span
+  * type, one row per page, from [[MainContent.extract]]. A page whose
+  * extraction throws (a null html does) becomes one error span carrying the
+  * exception's simple name and one counted parse failure.
+  *
+  * Under either kernel a null doc_id fails the task, because such a row has
+  * no key to carry an error span, and what a resume should do with it is not
+  * settled.
   *
   * Output contract: each task writes its rows in place into ONE reused
   * [[UnsafeRow]], so a row is valid only until the iterator's next `next()`;
@@ -55,9 +66,10 @@ import org.apache.spark.util.CollectionAccumulator
   */
 final case class ExtractDocs(
     child: LogicalPlan,
+    kernel: ExtractDocs.Kernel,
     // constructor param so exprIds survive tree copies (LogicalRDD pattern)
-    output: Seq[Attribute] = DataTypeUtils.toAttributes(ExtractDocs.schema),
-    lineage: Option[CollectionAccumulator[TaskLineage]] = None)
+    output: Seq[Attribute],
+    lineage: Option[CollectionAccumulator[TaskLineage]])
   extends UnaryNode {
   override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
     org.apache.spark.sql.catalyst.expressions.AttributeSet(output)
@@ -68,7 +80,7 @@ final case class ExtractDocs(
   override def references: org.apache.spark.sql.catalyst.expressions.AttributeSet =
     child.outputSet
   // the accumulator is plumbing, not a plan argument
-  override protected def stringArgs: Iterator[Any] = Iterator(output)
+  override protected def stringArgs: Iterator[Any] = Iterator(kernel, output)
   override protected def withNewChildInternal(newChild: LogicalPlan): ExtractDocs =
     copy(child = newChild)
 }
@@ -108,6 +120,71 @@ object ExtractDocs {
       StructField("media_ref", StringType),
       StructField("offset", IntegerType, nullable = false)))))))
 
+  /** An extraction kernel: its input contract `inputSchema` (the child's
+    * columns, read by ordinal in this order), its output layout `schema`
+    * (field 0 is doc_id, field 1 the spans) and its per-row work. The node
+    * around it owns the rest: the task loop, the doc_id check and the one
+    * completion listener that reports the counts.
+    */
+  sealed abstract class Kernel(val inputSchema: StructType, val schema: StructType) {
+    /** Parses `row`, whose non-null doc_id is `docId`, counts it into
+      * `counts` and writes its output row with `io`.
+      */
+    private[plans] def run(docId: UTF8String, row: InternalRow, io: RowIo,
+                           counts: TaskCounts): UnsafeRow
+  }
+
+  /** A PDF doc: its pages parsed and assembled whole ([[DocParser]]). */
+  case object Pdf extends Kernel(ExtractDocs.inputSchema, ExtractDocs.schema) {
+    private[plans] def run(docId: UTF8String, row: InternalRow, io: RowIo,
+                           counts: TaskCounts): UnsafeRow = {
+      val t0 = System.nanoTime()
+      val spans = if (row.isNullAt(1)) null else io.readSpans(row.getArray(1))
+      val t1 = System.nanoTime()
+      val pages = DocParser.inPageOrder(DocParser.parseSplit(
+        if (spans == null) DocParser.MalformedDoc else DocParser.splitPages(spans)))
+      val t2 = System.nanoTime()
+      val out = io.writeDoc(docId, pages)
+      val t3 = System.nanoTime()
+      // parseTime (and lineage wall_ms) spans split, page parse and the doc
+      // assembly, which the row write does while it encodes; rowIoTime is
+      // decode plus that write, so the two overlap in the write
+      counts.add(RowIo.string(docId), pages, t3 - t1)
+      counts.rowIoNs += (t1 - t0) + (t3 - t2)
+      out
+    }
+  }
+
+  /** A raw-HTML page: its main content ([[MainContent.extract]]). Its layout
+    * is the PDF layout's first two fields.
+    */
+  case object Web extends Kernel(
+      StructType(Seq(ExtractDocs.inputSchema("doc_id"), StructField("html", StringType))),
+      StructType(ExtractDocs.schema.take(2))) {
+    private[plans] def run(docId: UTF8String, row: InternalRow, io: RowIo,
+                           counts: TaskCounts): UnsafeRow = {
+      val t0 = System.nanoTime()
+      val html = if (row.isNullAt(1)) null else RowIo.string(row.getUTF8String(1))
+      val t1 = System.nanoTime()
+      // a page whose extraction throws a non-fatal exception (a null html
+      // does; Try catches only those) degrades to one error span, exactly
+      // like a poisoned PDF page (reference tasks.py:301–314: a metric tick,
+      // never a job abort)
+      val page = Try(MainContent.extract(html))
+      val spans = page.fold(
+        e => Vector(OutSpan(Kind.Error, e.getClass.getSimpleName, "", 0)), identity)
+      val t2 = System.nanoTime()
+      // a span's order is its index, as MainContent.extract numbers them
+      val out = io.writeSpans(docId, spans.length)(f => spans.indices.foreach(i => f(spans(i), i)))
+      val t3 = System.nanoTime()
+      // parseTime (and lineage wall_ms) is the extraction; a page has no OCR
+      // confidence, so it adds no confidence mass
+      counts.add(RowIo.string(docId), 1, spans.length, if (page.isFailure) 1 else 0, 0, t2 - t1)
+      counts.rowIoNs += (t1 - t0) + (t3 - t2)
+      out
+    }
+  }
+
   /** Where `got` breaks the contract type `want`, if it does: a contract
     * field missing (fields are found by name) or of another type.
     * Nullability is not part of the contract. `inOrder` also requires each
@@ -130,28 +207,33 @@ object ExtractDocs {
     case _ => Some(s"$at is ${got.simpleString}, not ${want.simpleString}")
   }
 
-  private def requireContract(got: StructType, where: String, inOrder: Boolean): Unit =
-    breach(inputSchema, got, "", inOrder).foreach { b =>
+  private def requireContract(want: StructType, got: StructType, where: String,
+                              inOrder: Boolean): Unit =
+    breach(want, got, "", inOrder).foreach { b =>
       throw new IllegalArgumentException(
-        s"ExtractDocs input contract: $where must hold ${inputSchema.simpleString}; $b")
+        s"ExtractDocs input contract: $where must hold ${want.simpleString}; $b")
     }
 
-  /** Build the extraction DataFrame over any `(doc_id, spans)` DataFrame via
-    * the custom node. Registers the strategy on the session (idempotent).
+  /** Build the extraction DataFrame of `kernel` over the kernel's input
+    * columns of `input`, picked by name, via the custom node. Registers the
+    * strategy on the session (idempotent).
     */
-  def of(docs: DataFrame,
-         lineage: Option[CollectionAccumulator[TaskLineage]] = None): DataFrame = {
-    val spark = docs.sparkSession
+  def of(input: DataFrame,
+         lineage: Option[CollectionAccumulator[TaskLineage]] = None,
+         kernel: Kernel = Pdf): DataFrame = {
+    val spark = input.sparkSession
     if (!spark.experimental.extraStrategies.contains(ExtractStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ ExtractStrategy
     if (!spark.experimental.extraOptimizations.contains(PushDocIdFilterThroughExtract))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ PushDocIdFilterThroughExtract
-    val child = docs.select("doc_id", "spans")
-    requireContract(child.schema, "the child", inOrder = true) // the node reads by ordinal
+    val child = input.select(kernel.inputSchema.fieldNames.toSeq.map(col): _*)
+    // the node reads by ordinal
+    requireContract(kernel.inputSchema, child.schema, "the child", inOrder = true)
     org.apache.spark.sql.GraftColumnBridge.ofRows(spark, ExtractDocs(
-      org.apache.spark.sql.GraftColumnBridge.logicalPlan(child), lineage = lineage))
+      org.apache.spark.sql.GraftColumnBridge.logicalPlan(child), kernel,
+      DataTypeUtils.toAttributes(kernel.schema), lineage))
   }
 
   /** The input table at `inputPath`, read with [[inputSchema]], so no
@@ -164,7 +246,7 @@ object ExtractDocs {
   def readInput(spark: SparkSession, inputPath: String): DataFrame = {
     val conf = spark.sessionState.newHadoopConf()
     firstDataFile(new Path(inputPath), conf).foreach { f =>
-      requireContract(footerSchema(f, conf), f.toString, inOrder = false)
+      requireContract(inputSchema, footerSchema(f, conf), f.toString, inOrder = false)
     }
     spark.read.schema(inputSchema).parquet(inputPath)
   }
@@ -204,14 +286,14 @@ object ExtractDocs {
 
 object ExtractStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case e: ExtractDocs => ExtractDocsExec(e.output, planLater(e.child), e.lineage) :: Nil
+    case e: ExtractDocs => ExtractDocsExec(e.kernel, e.output, planLater(e.child), e.lineage) :: Nil
     case _ => Nil
   }
 }
 
 /** One task's running counts; feeds both the SQL metrics and the lineage
-  * report, so every page is counted once. Both extraction surfaces count
-  * through it: the node per doc, the web parse per page. Time stays in
+  * report, so every page is counted once. Each kernel counts one input row
+  * per call: a PDF doc with its pages, or a web page. Time stays in
   * nanoseconds until [[lineage]] floors the task's sum once.
   */
 private[graft] final class TaskCounts {
@@ -311,10 +393,10 @@ final class Utf8Sink(initialBytes: Int) extends Appendable {
 }
 
 /** The node's row I/O, one per task: reads an input row's spans and writes
-  * the output row in place with Spark's unsafe writers, through one reused
-  * [[UnsafeRow]] and one UTF-8 scratch buffer.
+  * the output row, of `fields` fields, in place with Spark's unsafe writers,
+  * through one reused [[UnsafeRow]] and one UTF-8 scratch buffer.
   */
-private final class RowIo {
+private final class RowIo(fields: Int) {
   import RowIo._
 
   private val utf8 = new Utf8Sink(ScratchBytes)
@@ -324,7 +406,7 @@ private final class RowIo {
   newWriters()
 
   private def newWriters(): Unit = {
-    row = new UnsafeRowWriter(ExtractDocs.schema.length, RowBytes)
+    row = new UnsafeRowWriter(fields, RowBytes)
     spansOut = new UnsafeArrayWriter(row, 8) // struct elements: offset and size
     spanOut = new UnsafeRowWriter(spansOut, ExtractDocs.spanType.length)
   }
@@ -347,19 +429,38 @@ private final class RowIo {
     scala.collection.immutable.ArraySeq.unsafeWrapArray(spans)
   }
 
-  /** The output row of a doc, from its pages in page order. Valid until the
-    * next call.
+  /** The PDF layout's output row of a doc, from its pages in page order.
+    * Valid until the next call.
     */
-  def write(docId: UTF8String, sorted: Seq[PageResult]): UnsafeRow = {
+  def writeDoc(docId: UTF8String, sorted: Seq[PageResult]): UnsafeRow = {
+    var n = 0
+    sorted.foreach(n += _.spans.length)
+    writeSpans(docId, n)(DocParser.foreachSpan(sorted))
+    utf8.clear()
+    DocParser.writeMarkdown(sorted, utf8)
+    row.write(2, utf8.bytes, 0, utf8.length)
+    utf8.clear()
+    DocParser.writeHtml(sorted, utf8)
+    row.write(3, utf8.bytes, 0, utf8.length)
+    row.write(4, DocParser.confPm(sorted))
+    row.getRow
+  }
+
+  /** The span array writer of both layouts: starts the output row with
+    * field 0, `docId`, and field 1, the array of the `n` spans that `each`
+    * hands to its argument in array order, each with its index, which is
+    * also its order field. Returns the row as written so far (the web
+    * layout's whole row), valid until the next call.
+    */
+  def writeSpans(docId: UTF8String, n: Int)(each: ((OutSpan, Int) => Unit) => Unit): UnsafeRow = {
     if (row.getBuffer.length > MaxKeptBytes) newWriters()
+    utf8.shrink(MaxKeptBytes)
     row.reset()
     row.zeroOutNullBytes()
     row.write(0, docId)
     val spansAt = row.cursor()
-    var n = 0
-    sorted.foreach(n += _.spans.length)
     spansOut.initialize(n)
-    DocParser.foreachSpan(sorted) { (s, order) =>
+    each { (s, order) =>
       val at = spansOut.cursor()
       spanOut.resetRowWriter()
       text(spanOut, 0, s.kind)
@@ -369,14 +470,6 @@ private final class RowIo {
       spansOut.setOffsetAndSizeFromPreviousCursor(order, at)
     }
     row.setOffsetAndSizeFromPreviousCursor(1, spansAt)
-    utf8.clear()
-    DocParser.writeMarkdown(sorted, utf8)
-    row.write(2, utf8.bytes, 0, utf8.length)
-    utf8.clear()
-    DocParser.writeHtml(sorted, utf8)
-    row.write(3, utf8.bytes, 0, utf8.length)
-    row.write(4, DocParser.confPm(sorted))
-    utf8.shrink(MaxKeptBytes)
     row.getRow
   }
 
@@ -392,8 +485,8 @@ private object RowIo {
   val ScratchBytes = 16 << 10
   /** The row buffer's starting size. */
   val RowBytes = 64 << 10
-  /** A buffer that grew past this for a huge doc is dropped afterwards, so a
-    * task keeps at most this much per buffer.
+  /** A buffer that grew past this for a huge doc is dropped before the
+    * next row, so a task keeps at most this much per buffer.
     */
   val MaxKeptBytes = 1 << 20
 
@@ -428,7 +521,8 @@ private object RowIo {
   def threadAllocatedBytes: Long = threads.getCurrentThreadAllocatedBytes
 }
 
-final case class ExtractDocsExec(output: Seq[Attribute], child: SparkPlan,
+final case class ExtractDocsExec(kernel: ExtractDocs.Kernel, output: Seq[Attribute],
+                                 child: SparkPlan,
                                  lineage: Option[CollectionAccumulator[TaskLineage]])
     extends UnaryExecNode {
 
@@ -437,7 +531,7 @@ final case class ExtractDocsExec(output: Seq[Attribute], child: SparkPlan,
   override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
     org.apache.spark.sql.catalyst.expressions.AttributeSet(output)
 
-  override protected def stringArgs: Iterator[Any] = Iterator(output)
+  override protected def stringArgs: Iterator[Any] = Iterator(kernel, output)
 
   override lazy val metrics: Map[String, SQLMetric] = Map(
     "pages" -> SQLMetrics.createMetric(sparkContext, "pages parsed"),
@@ -454,10 +548,10 @@ final case class ExtractDocsExec(output: Seq[Attribute], child: SparkPlan,
     val (pagesM, spansM, failuresM, parseTimeM, rowIoTimeM, allocM) = (longMetric("pages"),
       longMetric("spans"), longMetric("parseFailures"), longMetric("parseTime"),
       longMetric("rowIoTime"), longMetric("allocBytes"))
-    val lineage = this.lineage
+    val (kernel, lineage) = (this.kernel, this.lineage)
     child.execute().mapPartitionsWithIndex { (partitionId, rows) =>
       val alloc0 = RowIo.threadAllocatedBytes
-      val io = new RowIo
+      val io = new RowIo(kernel.schema.length)
       val counts = new TaskCounts
       // completion listeners run on the task thread before the task's
       // accumulator updates are collected, and a failed task's are dropped
@@ -472,22 +566,9 @@ final case class ExtractDocsExec(output: Seq[Attribute], child: SparkPlan,
       }
       rows.map { row =>
         // manual decode — no Encoder machinery
-        require(!row.isNullAt(0), "ExtractDocs child contract: doc_id must be non-null")
-        val t0 = System.nanoTime()
         val docId = row.getUTF8String(0)
-        val spans = if (row.isNullAt(1)) null else io.readSpans(row.getArray(1))
-        val t1 = System.nanoTime()
-        val pages = DocParser.inPageOrder(DocParser.parseSplit(
-          if (spans == null) DocParser.MalformedDoc else DocParser.splitPages(spans)))
-        val t2 = System.nanoTime()
-        val out = io.write(docId, pages)
-        val t3 = System.nanoTime()
-        // parseTime (and lineage wall_ms) spans split, page parse and the doc
-        // assembly, which the row write now does while it encodes; rowIoTime
-        // is decode plus that write, so the two overlap in the write
-        counts.add(RowIo.string(docId), pages, t3 - t1)
-        counts.rowIoNs += (t1 - t0) + (t3 - t2)
-        out: InternalRow
+        require(docId != null, "ExtractDocs child contract: doc_id must be non-null")
+        kernel.run(docId, row, io, counts): InternalRow
       }
     }
   }

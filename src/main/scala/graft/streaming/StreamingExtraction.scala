@@ -1,8 +1,8 @@
 package graft.streaming
 
 import graft.pipeline.TableIO
+import graft.plans.ExtractDocs
 import org.apache.spark.sql.{SparkSession, DataFrame}
-import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.Trigger
 
 /** Structured-Streaming ingest for the extraction pipeline — the Spark analog
@@ -10,8 +10,9 @@ import org.apache.spark.sql.streaming.Trigger
   * no event time, no watermarks needed).
   *
   * `readStream` over the input table directory; each micro-batch runs the
-  * SAME batch commit (the `ExtractDocs` node, via `TableIO.commitDocs`)
-  * inside `foreachBatch` and commits one TableIO snapshot. `Trigger.AvailableNow` drains everything
+  * SAME batch commit (the `ExtractDocs` node, via the one commit body
+  * `TableIO.commitRemaining`) inside `foreachBatch` and commits one TableIO
+  * snapshot. `Trigger.AvailableNow` drains everything
   * currently present and stops — the "process the snapshot, resumably" mode
   * the north rule asks for; a continuous trigger turns the same job into a
   * tailing ingester. Spark's streaming checkpoint (source offsets) plus
@@ -25,51 +26,38 @@ object StreamingExtraction {
     */
   def ingestAvailableNow(spark: SparkSession, inputPath: String, outRoot: String,
                          checkpoint: String, runId: String,
-                         maxFilesPerTrigger: Int = 8): Long = {
-    import spark.implicits._
-    ingest(spark, graft.plans.ExtractDocs.inputSchema, inputPath, checkpoint,
-        maxFilesPerTrigger) { (batch, batchId) =>
-      TableIO.commitDocs(spark, batch.select("doc_id", "spans").as[graft.model.Doc],
-        outRoot, s"$runId-b$batchId")
-    }
-  }
-
-  /** Raw-HTML pages schema (the wild-web front end's input table). */
-  val webInputSchema: StructType = StructType(Seq(
-    StructField("doc_id", StringType),
-    StructField("html", StringType)))
+                         maxFilesPerTrigger: Int = 8): Long =
+    ingest(spark, ExtractDocs.Pdf, inputPath, outRoot, checkpoint, runId, maxFilesPerTrigger)
 
   /** AvailableNow ingest of raw web pages into committed snapshots via
-    * [[TableIO.commitWeb]] — the crawl front end as a tailing ingester, with
-    * the same end-to-end exactly-once story as the PDF path.
+    * [[TableIO.commitWeb]]'s body — the crawl front end as a tailing
+    * ingester, with the same end-to-end exactly-once story as the PDF path.
     */
   def ingestWebAvailableNow(spark: SparkSession, inputPath: String,
                             outRoot: String, checkpoint: String, runId: String,
                             maxFilesPerTrigger: Int = 8): Long =
-    ingest(spark, webInputSchema, inputPath, checkpoint, maxFilesPerTrigger) {
-      (batch, batchId) => TableIO.commitWeb(spark, batch, outRoot, s"$runId-b$batchId")
-    }
+    ingest(spark, ExtractDocs.Web, inputPath, outRoot, checkpoint, runId, maxFilesPerTrigger)
 
-  /** Streams the `schema` table at `inputPath` under `Trigger.AvailableNow`
-    * and hands each micro-batch to `commit`. The micro-batch plan feeds
-    * TableIO's commit path DIRECTLY, so the resume/commit semantics
-    * (committed-doc skip, atomic manifest) are identical in batch and
-    * streaming modes with no staging materialization. Returns the number
-    * of micro-batches.
+  /** Streams the table of `kernel`'s input contract at `inputPath` under
+    * `Trigger.AvailableNow` and commits each micro-batch with `kernel`. The
+    * micro-batch plan feeds TableIO's commit path DIRECTLY, so the
+    * resume/commit semantics (committed-doc skip, atomic manifest) are
+    * identical in batch and streaming modes with no staging
+    * materialization. Returns the number of micro-batches.
     */
-  private def ingest(spark: SparkSession, schema: StructType, inputPath: String,
-                     checkpoint: String, maxFilesPerTrigger: Int)
-                    (commit: (DataFrame, Long) => Option[String]): Long = {
+  private def ingest(spark: SparkSession, kernel: ExtractDocs.Kernel, inputPath: String,
+                     outRoot: String, checkpoint: String, runId: String,
+                     maxFilesPerTrigger: Int): Long = {
     var batches = 0L
     spark.readStream
-      .schema(schema)
+      .schema(kernel.inputSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(inputPath)
       .writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commit(batch, batchId)
+        TableIO.commitRemaining(spark, batch, kernel, outRoot, s"$runId-b$batchId")
         batches += 1
         ()
       }

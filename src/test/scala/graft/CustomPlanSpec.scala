@@ -59,6 +59,24 @@ class CustomPlanSpec extends AnyFunSuite with Matchers {
     metric("allocBytes") should be > 0L
   }
 
+  test("SQL metrics, web kernel: one pass counts the crawl's pages and planted spans") {
+    val pages = spark.read.parquet(Corpus.ensureWeb(spark, "sf0.001"))
+    val df = graft.pipeline.WebExtraction.parse(pages.select("doc_id", "html").as[(String, String)])
+    df.collect()
+    val node = df.queryExecution.executedPlan.collectFirst {
+      case e: graft.plans.ExtractDocsExec => e }.get
+    node.kernel shouldBe ExtractDocs.Web
+    def metric(k: String): Long = node.metrics(k).value
+
+    metric("pages") shouldBe pages.count()
+    // golden_web holds one row per planted span
+    metric("spans") shouldBe spark.read.parquet(Corpus.goldenWebPath("sf0.001")).count()
+    metric("parseFailures") shouldBe 0L
+    metric("parseTime") should be > 0L
+    metric("rowIoTime") should be > 0L
+    metric("allocBytes") should be > 0L
+  }
+
   test("doc_id predicate is pushed through the custom node into the parquet scan") {
     import org.apache.spark.sql.functions._
     val path = Corpus.ensure(spark, "sf0.001")

@@ -42,6 +42,10 @@ class PlanSpec extends AnyFunSuite with Matchers {
     val lineage = spark.sparkContext.collectionAccumulator[graft.plans.TaskLineage]("plan-spec-web")
     val df = TableIO.webForCommit(spark.read.parquet(Corpus.ensureWeb(spark, "sf0.001")), lineage)
     val plan = df.queryExecution.executedPlan.toString
+    // the node with its web kernel, not a typed map with an Encoder round-trip
+    plan should include("ExtractDocs Web")
+    plan should not include "DeserializeToObject"
+    plan should not include "MapPartitions"
     plan should include("REBALANCE_PARTITIONS")
     plan.linesIterator.count(_.contains("Exchange")) shouldBe 1
     plan should not include "Aggregate"

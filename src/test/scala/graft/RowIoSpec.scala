@@ -7,7 +7,7 @@ import graft.model._
 import graft.oracle.Oracle
 import graft.parse.{DocParser, PageParser}
 import graft.plans.{ExtractDocs, ExtractDocsExec, Utf8Sink}
-import graft.pipeline.TableIO
+import graft.pipeline.{TableIO, WebExtraction}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -221,5 +221,29 @@ class RowIoSpec extends AnyFunSuite with Matchers {
     val e = intercept[Exception](ExtractDocs.of(df).collect())
     Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(t => String.valueOf(t.getMessage).contains("doc_id must be non-null")) shouldBe true
+  }
+
+  test("a null doc_id fails both surfaces' extraction and commit with the contract message") {
+    def failsContract(what: String)(run: => Any): Unit = withClue(s"$what: ") {
+      val e = intercept[Exception](run)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("doc_id must be non-null")) shouldBe true
+    }
+    val tmp = java.nio.file.Files.createTempDirectory("graft-null-id").toString
+    val html = "<html><body><p>" + "One sentence of page text. " * 20 + "</p></body></html>"
+    // alone in its task, and after a keyed row in the same task
+    for ((ids, i) <- Seq(Seq(null), Seq("web-ok", null)).zipWithIndex) {
+      val pages = spark.sparkContext.parallelize(ids.map(id => (id: String, html)), 1)
+        .toDF("doc_id", "html")
+      failsContract(s"web parse $i")(
+        WebExtraction.parse(pages.as[(String, String)]).toDF().collect())
+      failsContract(s"web commit $i")(TableIO.commitWeb(spark, pages, s"$tmp/web-$i", "n1"))
+      TableIO.readCommitted(spark, s"$tmp/web-$i") shouldBe None
+      val docs = spark.createDataFrame(spark.sparkContext.parallelize(
+        ids.map(id => row(id, Seq(Row(Kind.PageBreak, "page:1", "", 0)))), 1), inSchema)
+      failsContract(s"pdf commit $i")(
+        TableIO.commitDocs(spark, docs.as[Doc], s"$tmp/pdf-$i", "n1"))
+      TableIO.readCommitted(spark, s"$tmp/pdf-$i") shouldBe None
+    }
   }
 }

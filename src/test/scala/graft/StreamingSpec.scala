@@ -70,37 +70,6 @@ class StreamingSpec extends AnyFunSuite with Matchers {
     for (p <- pages) withClue(s"page ${p.doc_id}: ") { got(p.doc_id) shouldBe p.truth }
   }
 
-  test("watermarked tumbling-window counts emit exactly the closed windows") {
-    import graft.streaming.StreamingMetrics
-    import org.apache.spark.sql.functions._
-    val tmp = Files.createTempDirectory("graft-wm").toString
-    val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-      .select($"ts", $"event_type")
-    // time-ordered files → the watermark advances batch over batch
-    val sorted = events.orderBy($"ts").collect()
-    sorted.grouped(sorted.length / 4 + 1).zipWithIndex.foreach { case (chunk, i) =>
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(chunk.toSeq, 1), events.schema)
-        .write.mode("overwrite").parquet(s"$tmp/in/f-$i")
-    }
-    StreamingMetrics.ingest(spark, s"$tmp/in/f-*", s"$tmp/out", s"$tmp/ckpt",
-      events.schema)
-
-    val got = spark.read.parquet(s"$tmp/out")
-      .select(unix_micros($"w_end").as("w_end_us"), $"event_type", $"n")
-      .as[(Long, String, Long)].collect().toSet
-    // closed == window end <= final watermark (max event time - 1h)
-    val wmUs = events.agg(max(unix_micros($"ts".cast("timestamp"))))
-      .as[Long].head() - 3600L * 1000000L
-    val expected = StreamingMetrics
-      .windowedCounts(events, "1 day", "1 hour") // watermark is a no-op in batch
-      .select(unix_micros($"w_end").as("w_end_us"), $"event_type", $"n")
-      .as[(Long, String, Long)].collect().toSet
-      .filter(_._1 <= wmUs)
-    expected.nonEmpty shouldBe true
-    got shouldBe expected
-  }
-
   test("streaming near-dup: cross-batch and cross-restart candidates == sequential restatement") {
     import graft.streaming.StreamingNearDup
     import graft.streaming.StreamingNearDup.NdIn

@@ -96,4 +96,29 @@ class WebResumeSpec extends AnyFunSuite with Matchers {
     // ...so a re-run skips it instead of re-extracting
     TableIO.commitWeb(spark, blank, s"$tmp/out", "b2") shouldBe None
   }
+
+  test("a page with a null html becomes one error span and one counted failure") {
+    val tmp = Files.createTempDirectory("graft-web-null-html").toString
+    val ok = pages.take(3)
+    val input = spark.sparkContext.parallelize(
+      ok.map(p => (p.doc_id, p.html)) :+ (("web-null-html", null: String)), 1).toDF("doc_id", "html")
+    val thrown = scala.util.Try(graft.parse.MainContent.extract(null)).failed.get
+    val errorSpans = Seq(OutSpan(graft.model.Kind.Error, thrown.getClass.getSimpleName, "", 0))
+    def check(got: Map[String, Seq[OutSpan]]): Unit = {
+      got("web-null-html") shouldBe errorSpans
+      for (p <- ok) withClue(s"page ${p.doc_id}: ") { got(p.doc_id) shouldBe p.truth }
+    }
+
+    val parsed = graft.pipeline.WebExtraction.parse(input.as[(String, String)])
+      .as[(String, Seq[OutSpan])]
+    check(parsed.collect().toMap)
+    parsed.queryExecution.executedPlan.collectFirst {
+      case e: graft.plans.ExtractDocsExec => e.metrics("parseFailures").value } shouldBe Some(1L)
+
+    TableIO.commitWeb(spark, input, s"$tmp/out", "n1").isDefined shouldBe true
+    check(TableIO.readCommitted(spark, s"$tmp/out").get
+      .select($"doc_id", $"spans").as[(String, Seq[OutSpan])].collect().toMap)
+    TableIO.readMetrics(spark, s"$tmp/out").get
+      .agg(sum($"parse_failures")).as[Long].head() shouldBe 1L
+  }
 }
