@@ -110,50 +110,3 @@ object Bench {
     spark.stop()
   }
 }
-
-/** Extraction-only benchmark for the two-parallelism scaling evidence
-  * (BASELINE.md: throughput at local[N] vs local[4N] on the SAME input).
-  * Usage: runMain graft.ExtractBench <corpusPath> [repeats] [mode]
-  * mode: custom (default; the PDF extraction node) | web (raw-HTML
-  * main-content extraction over the wild-web pages table — pass the web
-  * parquet dir, e.g. data/web/sf0.1)
-  */
-object ExtractBench {
-  def main(args: Array[String]): Unit = {
-    val corpusPath = args.headOption.getOrElse(Corpus.corpusPath("sf0.1"))
-    val repeats = if (args.length > 1) args(1).toInt else 1
-    val mode = if (args.length > 2) args(2) else "custom"
-    require(mode == "custom" || mode == "web", s"unknown mode '$mode' (custom | web)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", (cpus.toInt * 4).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // input-split size controls task granularity (no exchange
-      // rebalances the zero-shuffle extraction downstream)
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "128m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // materialize the input table if absent (generation excluded from timing)
-    if (mode == "web") Corpus.ensureWeb(spark, Corpus.sfName(corpusPath))
-    else Corpus.ensure(spark, Corpus.sfName(corpusPath))
-
-    for (r <- 1 to repeats) {
-      val t0 = System.nanoTime()
-      val out =
-        if (mode == "web")
-          graft.plans.ExtractDocs.of(spark.read.parquet(corpusPath)
-            .withColumn("doc_id", col("doc_id").cast("string")), kernel = graft.plans.ExtractDocs.Web)
-        else graft.plans.ExtractDocs.over(spark, corpusPath)
-      val row = out.agg(count(lit(1)), sum(size(col("spans")))).head()
-      val (docs, spans) = (row.getLong(0), row.getLong(1))
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"""{"bench":"extract","mode":"$mode%s","cpus":$cpus%s,"run":$r,"docs":$docs,"spans":$spans,"secs":$sec%.3f,"docs_per_sec":${docs / sec}%.2f,"spans_per_sec":${spans / sec}%.1f}""")
-    }
-    spark.stop()
-  }
-}

@@ -121,6 +121,17 @@ object SparkEntry {
       webPages(spark, sfDir).select("doc_id", "html").as[(String, String)]))
   }
 
+  /** Each page's extracted span signature, one `(doc_id, sig)` row per page
+    * of `pages`: every span's kind, text and media_ref joined by U+001F, the
+    * spans joined by U+001E in order, over the node's web extraction.
+    */
+  private def webSignatures(spark: SparkSession, pages: DataFrame): DataFrame = {
+    import spark.implicits._
+    WebExtraction.parse(pages.select("doc_id", "html").as[(String, String)])
+      .select(col("doc_id"), concat_ws("\u001e", transform(col("spans"),
+        sp => concat_ws("\u001f", sp("kind"), sp("text"), sp("media_ref")))).as("sig"))
+  }
+
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("x_extract_spans")(spark, "sf0.001")
@@ -438,7 +449,7 @@ object SparkEntry {
     // incremental RECRAWL delta — the primitive that lets a 10^12-page
     // corpus update without reprocessing: crawl A and crawl B each reduce
     // to (doc_id, md5 of the EXTRACTED span signature) in their own
-    // zero-shuffle map (raw markup never crosses a shuffle; chrome churn
+    // zero-shuffle pass of the node's web kernel (raw markup never crosses a shuffle; chrome churn
     // between crawls is invisible because the signature is post-
     // boilerplate), then ONE full-outer join keyed on doc_id classifies
     // added / removed / changed. At corpus scale both sides sort-merge on
@@ -450,17 +461,10 @@ object SparkEntry {
       // planted recrawl-delta truth (the generator's revision rules: updated
       // leads, dropped pages, new ids, re-posts inheriting source change)
       fromGolden("golden_web_delta", "doc_id, status"), WebRev2) { (s, dir) =>
-      import s.implicits._
       val sf = Corpus.sfName(dir)
       val rev2Path = Corpus.webRev2Path(sf)
-      def sigs(path: String) =
-        s.read.parquet(path)
-          .select("doc_id", "html").as[(String, String)]
-          .map { case (id, html) =>
-            val spans = graft.parse.MainContent.extract(html)
-            (id, spans.map(sp => sp.kind + "" + sp.text + "" +
-              sp.media_ref).mkString(""))
-          }.toDF("doc_id", "sig").select(col("doc_id"), md5(col("sig")).as("sig"))
+      def sigs(path: String) = webSignatures(s, s.read.parquet(path))
+        .select(col("doc_id"), md5(col("sig")).as("sig"))
       val a = sigs(Corpus.webPath(sf)).withColumnRenamed("sig", "sig_a")
       val b = sigs(rev2Path).withColumnRenamed("sig", "sig_b")
       a.join(b, Seq("doc_id"), "full_outer")
@@ -781,7 +785,7 @@ object SparkEntry {
     // another page's article), so raw-HTML hashing can never pair them —
     // dedup keyed on the EXTRACTED span signature catches every plant.
     // This is why boilerplate removal precedes dedup in every corpus
-    // pipeline (C4/CCNet); plan shape = the per-page map + Dedup.exact's
+    // pipeline (C4/CCNet); plan shape = the node's web pass + Dedup.exact's
     // one map-side-combined shuffle of (md5, doc_id), no text moves
     Gate.of("q_web_content_dedup",
       // extract-then-dedup over the planted truth: per-page span signature
@@ -791,15 +795,7 @@ object SparkEntry {
         s"FROM read_parquet('${Corpus.Root}/golden_web/sf0.01/*.parquet') GROUP BY doc_id) " +
         "SELECT md5(s) AS content_md5, CAST(count(*) AS BIGINT) AS n_docs, min(doc_id) AS keep_id " +
         "FROM sig GROUP BY md5(s)", Web) { (s, dir) =>
-      import s.implicits._
-      val sigs = webPages(s, dir)
-        .select("doc_id", "html").as[(String, String)]
-        .map { case (id, html) =>
-          val spans = graft.parse.MainContent.extract(html)
-          (id, spans.map(sp => sp.kind + "\u001f" + sp.text + "\u001f" + sp.media_ref)
-            .mkString("\u001e"))
-        }.toDF("doc_id", "text")
-      graft.ops.Dedup.exact(sigs)
+      graft.ops.Dedup.exact(webSignatures(s, webPages(s, dir)).withColumnRenamed("sig", "text"))
     },
     // extract-then-NEAR-dup: the generator's NEAR re-posts (editor note
     // prepended, trailing paragraph dropped) defeat BOTH raw-HTML hashing

@@ -29,8 +29,13 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * Readers read each directory with the schema its manifest records
   * (Iceberg and Delta keep the table schema in their metadata the same
   * way), so planning a scan reads no data file and starts no
-  * schema-inference job. A manifest without schemas, written before they
-  * were recorded, is read by inference.
+  * schema-inference job. One reader serves `data`, `deletes` and `metrics`
+  * ([[readRuns]]): it plans ONE parquet scan per run of consecutive
+  * snapshots with the same recorded schema, as Delta's reader plans one scan
+  * over the files its log names, so the scan count does not grow with the
+  * number of commits. A snapshot that wrote deletes starts a new run, so
+  * tombstones still hide only strictly older rows. A manifest without
+  * schemas, written before they were recorded, is read alone by inference.
   *
   * A snapshot without a manifest is uncommitted garbage and is never read —
   * that is the exactly-once story: a killed run leaves no visible output, a
@@ -156,12 +161,13 @@ object TableIO {
   /** The snapshots whose data constitutes the CURRENT table. */
   def liveSnapshots(root: String): Seq[Snapshot] = liveChain(committedSnapshots(root))
 
-  /** Union of the live snapshots' data — the "table scan" — with
-    * merge-on-read equality deletes applied: a snapshot's `deletes` parquet
-    * (doc_id tombstones, Iceberg v2 equality-delete analog) removes matching
-    * rows from every STRICTLY OLDER snapshot in the chain. Delete files are
-    * sparse by construction, so the anti-join broadcasts; compaction
-    * materializes deletes away (a full rewrite carries no tombstones).
+  /** The live snapshots' data — the "table scan", one parquet scan per run
+    * of same-schema snapshots ([[readRuns]]) — with merge-on-read equality
+    * deletes applied: a snapshot's `deletes` parquet (doc_id tombstones,
+    * Iceberg v2 equality-delete analog) removes matching rows from every
+    * STRICTLY OLDER snapshot in the chain, which is why a snapshot that wrote
+    * deletes starts a new run. Compaction materializes deletes away (a full
+    * rewrite carries no tombstones).
     */
   def readCommitted(spark: SparkSession, root: String): Option[DataFrame] =
     readChain(spark, liveChain(committedSnapshots(root)))
@@ -173,38 +179,52 @@ object TableIO {
     if (s.schemas.nonEmpty) s.schemas.contains(name)
     else fsFor(s.dir).exists(new Path(s.dir, name))
 
-  /** The `name` directories of `snaps`, read with the schema their
-    * manifests recorded (None: inference, for manifests without schemas).
-    * All of `snaps` must carry the same recorded schema for `name`.
+  /** The `name` directories of `snaps` (oldest first) with an `_ord` column,
+    * or None if none wrote `name`. One scan per RUN: consecutive snapshots
+    * that recorded the same schema for `name` are read with one
+    * `spark.read.schema(st).parquet(dirs: _*)`, so the scan count follows
+    * schema changes, upserts and deletes, not the number of commits. Runs
+    * with different schemas union by name.
+    *
+    * `_ord` is the number of snapshots, up to and including the run's, that
+    * wrote `deletes`. So a snapshot that wrote deletes starts a run, and a
+    * row's `_ord` is below a tombstone's exactly when the row's snapshot is
+    * strictly older: the merge-on-read rule of [[readChain]].
+    *
+    * A manifest without schemas is read alone, by inference: one inferred
+    * scan over several directories reads one footer and loses the columns
+    * that later snapshots added.
     */
-  private def readDirs(spark: SparkSession, snaps: Seq[Snapshot], name: String): DataFrame = {
-    val reader = snaps.head.schemas.get(name).fold(spark.read)(st => spark.read.schema(st))
-    reader.parquet(snaps.map(s => new Path(s.dir, name).toString): _*)
-  }
-
-  private def readChain(spark: SparkSession, chain: Seq[Snapshot]): Option[DataFrame] = {
-    val withData = chain.zipWithIndex.filter { case (s, _) => wrote(s, "data") }
-    if (withData.isEmpty) return None
+  private def readRuns(spark: SparkSession, snaps: Seq[Snapshot], name: String): Option[DataFrame] = {
+    val ords = snaps.scanLeft(0)((o, s) => if (wrote(s, "deletes")) o + 1 else o).tail
+    // a manifest without schemas keys a run of its own (Left(id))
+    val keyed = snaps.zip(ords).collect {
+      case (s, o) if wrote(s, name) => ((o, s.schemas.get(name).toRight(s.id)), s)
+    }
+    val runs = keyed.foldRight(List.empty[((Int, Either[String, StructType]), List[Snapshot])]) {
+      case ((k, s), (k1, run) :: rest) if k == k1 => (k, s :: run) :: rest
+      case ((k, s), acc) => (k, List(s)) :: acc
+    }
     // allowMissingColumns = schema evolution (Iceberg add-column analog):
     // snapshots written before a column existed surface it as NULL; readers
     // never rewrite old data to pick up a widened schema
-    val data = withData.map { case (s, ord) =>
-      readDirs(spark, Seq(s), "data").withColumn("_ord", lit(ord))
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
-    val dels = chain.zipWithIndex
-      .filter { case (s, _) => wrote(s, "deletes") }
-      .map { case (s, ord) =>
-        readDirs(spark, Seq(s), "deletes")
-          .select(col("doc_id").as("_del_id"), lit(ord).as("_del_ord"))
-      }
-    val merged =
-      if (dels.isEmpty) data
-      else data.join(
-        org.apache.spark.sql.functions.broadcast(dels.reduce(_ unionByName _)),
-        col("doc_id") === col("_del_id") && col("_ord") < col("_del_ord"),
-        "left_anti")
-    Some(merged.drop("_ord"))
+    runs.map { case ((ord, st), run) =>
+      st.fold(_ => spark.read, spark.read.schema(_))
+        .parquet(run.map(s => new Path(s.dir, name).toString): _*)
+        .withColumn("_ord", lit(ord))
+    }.reduceOption(_.unionByName(_, allowMissingColumns = true))
   }
+
+  /** The table `chain` holds: its data with its tombstones applied. Delete
+    * files are sparse by construction, so the anti-join broadcasts.
+    */
+  private def readChain(spark: SparkSession, chain: Seq[Snapshot]): Option[DataFrame] =
+    readRuns(spark, chain, "data").map { data =>
+      readRuns(spark, chain, "deletes").fold(data) { dels =>
+        data.join(broadcast(dels.select(col("doc_id").as("_del_id"), col("_ord").as("_del_ord"))),
+          col("doc_id") === col("_del_id") && col("_ord") < col("_del_ord"), "left_anti")
+      }.drop("_ord")
+    }
 
   /** Run the extraction over `inputPath`, skipping docs already committed
     * under `outRoot`, and commit a new snapshot atomically. Returns the
@@ -390,8 +410,9 @@ object TableIO {
     })
   }
 
-  /** Time-travel scan (Iceberg `VERSION AS OF` analog): union of the
-    * committed snapshot chain up to and including `snapshotId`, walking the
+  /** Time-travel scan (Iceberg `VERSION AS OF` analog): the table of the
+    * committed snapshot chain up to and including `snapshotId`, read as
+    * [[readCommitted]] reads the live chain, walking the
     * manifest parent lineage backwards — directory order is presentation,
     * the parent chain is the source of truth. None if the id is unknown or
     * uncommitted (including snapshots already removed by
@@ -446,14 +467,10 @@ object TableIO {
     expired.map(_.id)
   }
 
-  /** All committed metrics rows: one scan per distinct recorded metrics
-    * schema (one in a table written by one pipeline), unioned by name.
+  /** All committed metrics rows, replaced snapshots' too (lineage is per
+    * original run): one scan per run of consecutive snapshots with the same
+    * recorded metrics schema, as [[readRuns]] reads it.
     */
-  def readMetrics(spark: SparkSession, root: String): Option[DataFrame] = {
-    val snaps = committedSnapshots(root).filter(wrote(_, "metrics"))
-    if (snaps.isEmpty) None
-    else Some(snaps.map(_.schemas.get("metrics")).distinct
-      .map(sc => readDirs(spark, snaps.filter(_.schemas.get("metrics") == sc), "metrics"))
-      .reduce(_.unionByName(_, allowMissingColumns = true)))
-  }
+  def readMetrics(spark: SparkSession, root: String): Option[DataFrame] =
+    readRuns(spark, committedSnapshots(root), "metrics").map(_.drop("_ord"))
 }

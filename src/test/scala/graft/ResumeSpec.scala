@@ -6,7 +6,8 @@ import graft.model._
 import graft.corpus.CorpusGen
 import graft.oracle.Oracle
 import graft.pipeline.TableIO
-import org.apache.spark.sql.{Row, SaveMode}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -123,6 +124,38 @@ class ResumeSpec extends AnyFunSuite with Matchers {
     m.agg(sum($"pages_parsed"), sum($"spans_emitted"), sum($"parse_failures"),
         sum($"sum_conf_pm")).as[(Long, Long, Long, Long)].head() shouldBe
       ((stats.map(_._1).sum, stats.map(_._2).sum, stats.map(_._3).sum, stats.map(_._4).sum))
+  }
+
+  test("the committed read plans one parquet scan per same-schema run, not one per commit") {
+    val tmp = Files.createTempDirectory("graft-runs").toString
+    val all = CorpusGen.genAll(spec).toSeq.take(14)
+    def stale(d: Doc): Doc = d.copy(spans = d.spans.take(math.max(1, d.spans.length / 2)))
+    def commit(d: Doc, run: String): Unit =
+      TableIO.commitDocs(spark, spark.createDataset(Seq(d)), s"$tmp/out", run).isDefined shouldBe true
+    // the directory kind each parquet relation of the analyzed plan reads,
+    // with the number of snapshot directories it lists
+    def scans(df: DataFrame): Seq[(String, Int)] =
+      df.queryExecution.analyzed.collectLeaves().collect { case l: LogicalRelation =>
+        val dirs = l.relation.asInstanceOf[HadoopFsRelation].location.rootPaths.map(_.getName)
+        dirs.distinct.ensuring(_.size == 1).head -> dirs.size
+      }.sorted
+    def table(): Map[String, Extracted] = TableIO.readCommitted(spark, s"$tmp/out").get
+      .as[Extracted].collect().map(e => e.doc_id -> e).toMap
+    def golden(docs: Seq[Doc]) = docs.map(d => d.doc_id -> Oracle.golden(d)).toMap
+
+    // twelve one-doc commits, the first a stale version of its doc
+    commit(stale(all.head), "c0")
+    all.slice(1, 12).zipWithIndex.foreach { case (d, i) => commit(d, s"c${i + 1}") }
+    scans(TableIO.readCommitted(spark, s"$tmp/out").get) shouldBe Seq("data" -> 12)
+    table()(all.head.doc_id) should not be Oracle.golden(all.head)
+
+    // an upsert starts a run (its tombstones hide only older rows); the two
+    // commits after it join its run
+    TableIO.upsertDocs(spark, spark.createDataset(all.take(2)), s"$tmp/out", "up").isDefined shouldBe true
+    all.slice(12, 14).zipWithIndex.foreach { case (d, i) => commit(d, s"c${i + 12}") }
+    scans(TableIO.readCommitted(spark, s"$tmp/out").get) shouldBe
+      Seq("data" -> 3, "data" -> 12, "deletes" -> 1)
+    table() shouldBe golden(all)
   }
 
   test("compaction: full-rewrite snapshot preserves rows, bounds files, keeps time travel until expiry") {
