@@ -271,10 +271,14 @@ object Dedup {
     * approximate dedup tier: [[minHashNearDup]]'s pair set scored against
     * the exhaustive [[ngramJaccardPairs]] truth at the SAME threshold.
     * One row: (n_true, n_found, n_correct, precision_pm, recall_pm).
-    * Because the minhash path exact-verifies its candidates, found ⊆ truth
-    * and precision is 1000‰ by construction — reporting it is the live
-    * assertion that the verify step really is in the pipeline; recall is
-    * the metric the (k, bands) dial actually trades, and the number a
+    * The minhash path exact-verifies its candidates, so found ⊆ truth and
+    * precision is 1000‰ wherever the truth op's `maxDf` cap does not bind.
+    * Where it binds, a pair whose every shared shingle has df > maxDf is
+    * missing from the truth, yet the uncapped LSH tier can still find and
+    * verify it, so precision can read below 1000‰ on boilerplate-heavy
+    * corpora with the verify step intact. Below the cap, reporting it is the
+    * live assertion that the verify step really is in the pipeline; recall
+    * is the metric the (k, bands) dial actually trades, and the number a
     * curation run quotes before trusting the cheap tier at corpus scale.
     *
     * Scale shape: both inputs are the dedup stage's (small) pair outputs;

@@ -10,6 +10,9 @@ import org.apache.spark.util.CollectionAccumulator
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 
 /** Iceberg-style snapshot layer over Parquet (SURVEY.md §7.1: no Iceberg
   * runtime jar ships in this sandbox, so snapshots + atomic commit + committed-
@@ -21,7 +24,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *                               PDF kernel (doc_id, spans, markdown, html,
   *                               conf_pm), under the web kernel (doc_id, spans)
   *   <root>/snap-<id>/deletes/   parquet doc_id tombstones (upserts, deletes)
-  *   <root>/snap-<id>/metrics/   parquet metrics (per-task lineage)
+  *   <root>/snap-<id>/metrics/   parquet metrics (per-task lineage), one
+  *                               file the driver writes with Spark's parquet
+  *                               writer: the rows are already on the driver,
+  *                               so no Spark job runs for them
   *   <root>/snap-<id>/manifest.json   commit marker, written ATOMICALLY last:
   *     snapshot id, parent, run id, the ids a full rewrite replaces, and the
   *     Spark schema JSON of each directory the snapshot wrote
@@ -291,17 +297,16 @@ object TableIO {
   }
 
   /** One pass of the node with `kernel` writes the snapshot's data; the lineage
-    * it counted on the way becomes the metrics table, built on the driver
-    * afterwards.
+    * it counted on the way becomes the metrics table, which the driver writes
+    * afterwards without a Spark job ([[writeOnDriver]]).
     */
   private def writeExtraction(spark: SparkSession, input: DataFrame, kernel: ExtractDocs.Kernel,
                               dir: Path, runId: String,
                               snapshotId: String): Seq[(String, StructType)] = {
     val lineage = spark.sparkContext.collectionAccumulator[TaskLineage]("extract lineage")
     val data = writeDir(forCommit(input, kernel, lineage), dir, "data")
-    Seq(data, writeDir(
-      lineageMetrics(spark, lineage.value.asScala.toSeq, runId, snapshotId).coalesce(1),
-      dir, "metrics"))
+    Seq(data, writeOnDriver(spark,
+      lineageMetrics(spark, lineage.value.asScala.toSeq, runId, snapshotId), dir, "metrics"))
   }
 
   /** Per-task lineage reports → the metrics table (FIXTURES.md §3): one row
@@ -324,9 +329,33 @@ object TableIO {
     name -> df.schema
   }
 
+  /** Writes `local`, a DataFrame over rows the driver holds (a local
+    * relation, whose collect runs no job), as the snapshot directory `name`:
+    * one parquet file written on the driver by Spark's own parquet writer,
+    * with the session's codec and the footer schema a Spark job would write,
+    * but no job, no commit protocol and no `_SUCCESS` marker. Like
+    * `SaveMode.Overwrite`, it first clears the directory, where a killed
+    * attempt at the same snapshot id may have left files. Returns the name
+    * with the schema its manifest records.
+    */
+  private def writeOnDriver(spark: SparkSession, local: DataFrame, dir: Path,
+                            name: String): (String, StructType) = {
+    val out = new Path(dir, name)
+    fsFor(out).delete(out, true)
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, local.schema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val file = new Path(out, "part-00000" + factory.getFileExtension(ctx))
+    val writer = factory.newInstance(file.toString, local.schema, ctx)
+    try local.queryExecution.executedPlan.executeCollect().foreach(writer.write)
+    finally writer.close()
+    name -> local.schema
+  }
+
   /** Allocates the next snapshot id after `snaps`, lets `write` fill the
-    * snapshot directory (returning what it wrote, via [[writeDir]]) and
-    * commits it with the head of `snaps` as parent. Returns the id.
+    * snapshot directory (returning what it wrote, via [[writeDir]] or
+    * [[writeOnDriver]]) and commits it with the head of `snaps` as parent.
+    * Returns the id.
     */
   private def commitSnapshot(root: String, snaps: Seq[Snapshot], runId: String,
                              replaces: Seq[String] = Nil)

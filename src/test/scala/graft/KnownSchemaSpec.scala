@@ -191,6 +191,34 @@ class KnownSchemaSpec extends AnyFunSuite with Matchers {
       docs.take(2).map(_.doc_id + "-evo").sorted.toArray
   }
 
+  test("a commit writes its lineage metrics on the driver: no job, one file, no marker") {
+    val tmp = Files.createTempDirectory("graft-commit-jobs").toString
+    writeDocs(s"$tmp/in1", docs.take(10))
+    writeDocs(s"$tmp/in", docs)
+    val out = s"$tmp/out"
+    def commit(in: String, run: String) =
+      jobsOf(TableIO.commitDocs(spark, Extraction.readInput(spark, in), out, run))
+    // the jobs of a commit: the isEmpty check (with the committed doc_ids'
+    // broadcast on resume), then the data write (broadcast, the rebalance
+    // exchange, the write); the metrics file adds none
+    val (fresh, freshJobs) = commit(s"$tmp/in1", "run1")
+    val (resume, resumeJobs) = commit(s"$tmp/in", "run2")
+    val (noop, noopJobs) = commit(s"$tmp/in", "run3")
+    withClue(s"fresh commit jobs $freshJobs: ")(freshJobs.size shouldBe 3)
+    withClue(s"resume commit jobs $resumeJobs: ")(resumeJobs.size shouldBe 5)
+    withClue(s"no-op resume jobs $noopJobs: ")(noopJobs.size shouldBe 2)
+    noop shouldBe None
+
+    for (id <- Seq(fresh, resume).flatten) withClue(s"snapshot $id: ") {
+      Files.list(Paths.get(out, s"snap-$id", "metrics")).iterator().asScala
+        .map(_.getFileName.toString).filterNot(_.startsWith(".")).toSeq
+        .shouldBe(Seq("part-00000.snappy.parquet"))
+    }
+    val m = TableIO.readMetrics(spark, out).get
+    m.agg(sum(col("pages_parsed"))).as[Long].head() shouldBe
+      docs.map(d => graft.parse.DocParser.splitPages(d.spans).size.toLong).sum
+  }
+
   test("the input contract fails on the driver; extra columns and reordered span fields read") {
     val tmp = Files.createTempDirectory("graft-contract").toString
     writeDocs(s"$tmp/good", docs)

@@ -2322,6 +2322,31 @@ class OpsSpec extends AnyFunSuite with Matchers {
     Dedup.ngramJaccardPairs(df, n = 3, minJaccardPm = 200).count() shouldBe 0L
   }
 
+  test("containment gate corpora: distinct hashed shingles == distinct string shingles per doc") {
+    // the q_containment_* DuckDB oracles count each doc's shingle set as
+    // n-gram STRINGS, the engine as 64-bit xxhash64 values; they agree only
+    // while no two n-grams of a doc hash alike
+    for (sf <- Seq("sf0.001", "sf0.01")) {
+      val d = spark.read.parquet(s"/root/testdata/$sf/documents.parquet")
+      val hashed = Dedup.shingles(d, 3).groupBy("doc_id")
+        .agg(countDistinct($"shingle").as("n_hashed"))
+      val toks = split(trim($"text"), TextOps.WsPlus)
+      val nToks = org.apache.spark.sql.functions.size(toks)
+      val strings = d.where(nToks >= 3)
+        .select($"doc_id".cast("long").as("doc_id"), explode(transform(sequence(lit(0), nToks - 3),
+          i => concat_ws(" ", slice(toks, i + 1, lit(3))))).as("ng"))
+        .groupBy("doc_id").agg(countDistinct($"ng").as("n_strings"))
+      val differ = hashed.join(strings, Seq("doc_id"), "full_outer")
+        .where(!($"n_hashed" <=> $"n_strings"))
+        .as[(Long, Option[Long], Option[Long])].collect()
+      withClue(s"$sf documents whose distinct 3-gram hashes and strings differ " +
+          s"(doc_id, hashed, strings), a hash collision the containment oracles " +
+          s"cannot see: ${differ.mkString(", ")}: ") {
+        differ shouldBe empty
+      }
+    }
+  }
+
   test("nearDupEval scores the LSH tier against the exhaustive truth") {
     val truth = Dedup.ngramJaccardPairs(docs, 3, 200)
       .select($"a", $"b").as[(Long, Long)].collect().toSet

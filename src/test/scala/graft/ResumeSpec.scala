@@ -11,6 +11,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** Checkpoint/resume + metrics (north rule: resumable from snapshot
   * checkpoints with per-partition lineage; exactly-once per doc_id).
@@ -313,6 +314,28 @@ class ResumeSpec extends AnyFunSuite with Matchers {
     val s = TableIO.runAndCommit(spark, s"$tmp/input", s"$tmp/out", "r")
     s.isDefined shouldBe true
     TableIO.readCommitted(spark, s"$tmp/out").get.count() shouldBe 5
+  }
+
+  test("a retried commit replaces what a killed attempt left in its metrics directory") {
+    val tmp = Files.createTempDirectory("graft-stale-metrics").toString
+    val all = CorpusGen.genAll(CorpusGen.Spec(6, 4)).toSeq
+    writeInput(s"$tmp/input", all)
+    // a killed attempt of run "retry" wrote metrics but no manifest; the
+    // retry allocates the same snapshot id. The stale file also takes the
+    // name of the file the commit writes.
+    val id = "000000-retry"
+    val metrics = java.nio.file.Paths.get(tmp, "out", s"snap-$id", "metrics")
+    val stale = graft.plans.TaskLineage(0, "stale", "stale", 99L, 99L, 0L, 0L, 1L)
+    TableIO.lineageMetrics(spark, Seq(stale), "retry", id).write.parquet(metrics.toString)
+    val part = Files.list(metrics).iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    Files.move(part, metrics.resolve("part-00000.snappy.parquet"))
+
+    TableIO.runAndCommit(spark, s"$tmp/input", s"$tmp/out", "retry") shouldBe Some(id)
+    val m = TableIO.readMetrics(spark, s"$tmp/out").get
+    m.where($"doc_lo" === "stale").count() shouldBe 0L
+    m.agg(sum($"pages_parsed")).as[Long].head() shouldBe
+      all.map(d => graft.parse.DocParser.splitPages(d.spans).size.toLong).sum
   }
 
   test("metrics: per-partition lineage rows with correct totals") {
